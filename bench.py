@@ -21,6 +21,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+# picovdb_spark first: its import picks the OpenBLAS core type, which
+# must happen before pyspark loads NumPy for the driver to get it too
+import picovdb_spark  # noqa: F401
 from pyspark.sql import functions as F
 
 from picovdb_spark.operators.dedup import (
@@ -33,7 +36,7 @@ from picovdb_spark.operators.merge import merge_upsert
 from picovdb_spark.operators.similarity import batch_query
 from picovdb_spark.operators.textops import quality_score, token_stats
 from picovdb_spark.schema import K_VECTOR, load_embeddings_store, load_table
-from picovdb_spark.session import get_spark
+from picovdb_spark.session import get_spark, openblas_core_name
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 N_BATCH_QUERIES = int(os.environ.get("SPARK_GRAFT_BENCH_NQ", "1000"))
@@ -1253,17 +1256,12 @@ def bench_queries(spark):
         # block-nested-loop GEMM, neither side collected or broadcast
         # (the gate checks the float64 oracle form at sf0.01; this row
         # evidences the scale tier in the float32 SERVING form — the
-        # same convention as every other serving row, and this
-        # harness's dgemm runs 11–18× slower than sgemm). 2k queries ×
-        # 1M corpus × 128 dims, k=10 ≈ 5.1·10¹¹ FLOPs; the size-aware
-        # grid (lb=1) shuffles the 1M side ONCE (~0.6 GB as
-        # array<float>). Row size calibration: this VM's PARALLEL
-        # sgemm aggregate at k=128 shapes measured ~13 GF (21 procs ×
-        # 0.6 GF; one quiet thread does 15 GF alone — host FP
-        # contention), so exact-scan cost here is ~17-25 ms/query
-        # against 1M vectors; 10k queries measured 174 s wall, all
-        # GEMM-bound (phase-profiled: shuffle+Arrow 3.6 s, +convert
-        # 15 s, +GEMM 149 s).
+        # same convention as every other serving row; sgemm runs ~2×
+        # the dgemm rate). 2k queries × 1M corpus × 128 dims, k=10 ≈
+        # 5.1·10¹¹ FLOPs; the size-aware grid (lb=1) shuffles the 1M
+        # side ONCE (~0.6 GB as array<float>). The row is GEMM-bound
+        # (phase-profiled at 10k queries: shuffle+Arrow 3.6 s,
+        # +convert 15 s, +GEMM 149 s).
         from picovdb_spark.operators.similarity import knn_join_blocked
 
         left = scale_state["emb1m"].filter(F.col("vec_id") < 2_000)
@@ -1524,6 +1522,11 @@ def main() -> None:
     warm.mapInPandas(lambda it: it, schema="id long").write.mode("overwrite").format(
         "noop"
     ).save()
+    # which OpenBLAS kernels the Python workers run (the GEMM rows' rate
+    # depends on it); one untimed task, before any timed row
+    EXTRA_STATS["worker_blas_core"] = (
+        spark.sparkContext.parallelize([0], 1).map(lambda _: openblas_core_name()).first()
+    )
 
     # Repeated-query serving workloads report the MEDIAN of 3 passes:
     # they model steady-state q/s (the regime the baseline's figure is
@@ -1781,10 +1784,8 @@ def main() -> None:
         # second fresh child (stage-isolated rows re-isolate when
         # flagged), and the wave band lives in `settled_ranges`.
         "scale500k_prepare": (45.0, 120.0),
-        # GEMM-bound; the spread is the host's parallel-FP collapse
-        # mechanism (quiet sgemm ~15 GF/thread, but ~13 GF AGGREGATE
-        # when ~21 workers run concurrently at k=128 shapes — see the
-        # bench row comment). Measured full quiet↔wave span on
+        # GEMM-bound; host FP contention cuts every concurrent
+        # worker's GEMM rate at once. Measured full quiet↔wave span on
         # identical code: 17.4 s in-suite / 24.5 s settled (r7 driver,
         # quiet) ↔ 54–165 s (r7 local runs inside waves). The envelope
         # covers BOTH regimes; the row's own evidence is the published

@@ -2415,9 +2415,9 @@ def semantic_dedup_pairs(
         cl = int(pdf["cluster"].iloc[0])
         chunk_rows = max(1, chunk_elems // s)
         # float32 prefilter + float64 refine (r12): the full s²·d scan
-        # runs in SINGLE precision (this host's sgemm measured 11-18×
-        # dgemm — knn_join_blocked docstring), and only the sparse
-        # candidate set is re-scored exactly in double. No pair can be
+        # runs in SINGLE precision (sgemm ~2× dgemm — knn_join_blocked
+        # docstring), and only the sparse candidate set is re-scored
+        # exactly in double. No pair can be
         # missed: for unit vectors the float32 dot's total error
         # (cast + accumulation) is bounded by (d+4)·u with u = 2⁻²⁴,
         # and a true cosine just below `threshold` can still ROUND up

@@ -69,10 +69,9 @@ def _subspace_codes_f32(
     Why: the per-subspace distance GEMMs and their (n, k) elementwise
     expansion were the encode kernel's wall, and they ran in float64
     purely because the store vectors arrive as float64 — the argmin
-    itself needs far less precision than that. This host's sgemm and
-    half-width elementwise traffic make the prescan 2.4-7.8× the f64
-    loop at the bench shapes (guide §4: right-precision math inside the
-    kernel; A/B in OPTIMIZATION_r12.md).
+    itself needs far less precision than that. sgemm runs at ~2× the
+    dgemm rate, and the elementwise expansion moves half the bytes
+    (right-precision math inside the kernel; A/B in OPTIMIZATION_r12.md).
 
     Correctness: the prescan score g = |c|² - 2 x·c (float32; the
     per-row |x|² constant cannot move an argmin and is dropped; the ×2

@@ -37,7 +37,6 @@ DuckDB oracle.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable, Iterable, Iterator
 from typing import Any
 
@@ -150,22 +149,6 @@ def _normalized_queries(queries: DataFrame, query_id: str, vector_col: str) -> D
         F.col(query_id).cast("string").alias("query_id"),
         l2_normalize(F.col(vector_col)).alias("__qv"),
     )
-
-
-# Input-stream prefetch depth (Arrow batches) for the GEMM kernel's
-# double-buffering pump thread; 0 (default) disables the thread.
-# A/B-measured OFF on local[32]: neither the in-memory nor the
-# disk-parquet tier showed a win (the JVM writer thread + socket buffer
-# already overlap enough locally), so the default avoids the extra
-# thread per task. Raise it when the input stream is genuinely slow
-# relative to the GEMM — e.g. object-store reads on a real cluster —
-# via PICOVDB_SPARK_GEMM_PREFETCH on the DRIVER (read at plan-build
-# time and shipped in the task closure, so the env var only needs to be
-# set where the plan is constructed), or by setting this module
-# attribute programmatically. None = unset (env var supplies the
-# default); an explicit 0 disables prefetch even when the env var is
-# set — the sentinel keeps "module attribute wins" true for 0.
-GEMM_PREFETCH_DEPTH: int | None = None
 
 
 # Ceiling on the driver-resident float64 query matrix (bytes). Query
@@ -481,9 +464,9 @@ def knn_join_blocked(
     `batch_query(score_dtype=)` and the reference's own precision:
     vectors shuffle as array<float> (half the bytes), normalization
     stays float64 before the cast (`collect_normalized_queries`'s
-    sequence), and the GEMM runs single-precision — measured 11–18×
-    faster on this harness's BLAS (dgemm 0.8–1.4 GF vs sgemm 15 GF
-    single-thread), and the only honest choice at the 1M-row tier.
+    sequence), and the GEMM runs single-precision — about 2× the
+    dgemm rate (one thread, AVX-512 OpenBLAS kernels: sgemm ~80 GF vs
+    dgemm ~40 GF at k=128), and half the bytes at the 1M-row tier.
 
     Block sizing: with BOTH `left_blocks`/`right_blocks` unspecified,
     auto-sizing runs two `count()` jobs to learn the |L|/|R| ratio —
@@ -816,72 +799,6 @@ def _gemm_topk(
     )
     pad = 1.5 * 10.0 ** (-round_to)
     dtype = np.float32 if use32 else np.float64
-    # precedence: a programmatic module-attribute override wins when
-    # SET (including an explicit 0, which disables prefetch); the env
-    # var supplies the default otherwise. Parse loudly — a malformed
-    # value should name the setting, not surface as a bare ValueError
-    # three calls deep.
-    if GEMM_PREFETCH_DEPTH is not None:
-        prefetch_depth = int(GEMM_PREFETCH_DEPTH)
-    else:
-        raw = os.environ.get("PICOVDB_SPARK_GEMM_PREFETCH", "0")
-        try:
-            prefetch_depth = int(raw)
-        except ValueError as exc:
-            raise ValueError(
-                f"PICOVDB_SPARK_GEMM_PREFETCH must be an integer, got {raw!r}"
-            ) from exc
-
-    def prefetched(it: Iterator, depth: int = 2) -> Iterator:
-        if depth <= 0:
-            yield from it
-            return
-        # Double-buffer the Arrow input stream: a pump thread reads the
-        # next batch off the worker socket while the main thread is in
-        # the GEMM (BLAS releases the GIL, so the socket read + Arrow
-        # decode genuinely overlap the matmul). Only pays off when a
-        # task's partition spans >1 Arrow batch; costs one thread spawn
-        # otherwise.
-        import queue
-        import threading
-
-        q: queue.Queue = queue.Queue(maxsize=depth)
-        done = object()
-        stop = threading.Event()
-
-        def offer(item) -> bool:
-            # bounded put that gives up when the consumer is gone — a
-            # plain q.put would block FOREVER if score_batches dies
-            # mid-stream, leaving a live thread draining this task's
-            # input socket inside a REUSED Python worker
-            while not stop.is_set():
-                try:
-                    q.put(item, timeout=0.1)
-                    return True
-                except queue.Full:
-                    continue
-            return False
-
-        def pump() -> None:
-            try:
-                for item in it:
-                    if not offer(item):
-                        return
-                offer(done)
-            except BaseException as exc:  # propagate into the consumer
-                offer(exc)
-
-        threading.Thread(target=pump, daemon=True).start()
-        try:
-            while True:
-                item = q.get()
-                if item is done:
-                    return
-                if isinstance(item, BaseException):
-                    raise item
-                yield item
-        finally:
-            stop.set()
 
     def score_batches(batches: Iterator) -> Iterator:
         b_qids, b_qmat = bc.value
@@ -896,7 +813,7 @@ def _gemm_topk(
         acc_i: list = []  # store ids
         acc_s: list = []  # scores (raw f32 for use32, rounded f64 else)
         n_batches = 0
-        for batch in prefetched(batches, depth=prefetch_depth):
+        for batch in batches:
             n = batch.num_rows
             if n == 0:
                 continue

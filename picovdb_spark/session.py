@@ -50,7 +50,7 @@ _DEFAULT_CONFS = {
 def _openblas_handle():
     """ctypes handle + symbol suffix for the OpenBLAS numpy links against
     (manylinux wheels ship it in numpy.libs, ILP64 builds suffix control
-    symbols with '64_'). Returns (lib, set_fn, get_fn) or None."""
+    symbols with '64_'). Returns (lib, set_fn, get_fn, core_fn) or None."""
     import ctypes
     import glob
 
@@ -67,10 +67,21 @@ def _openblas_handle():
         for suffix in ("64_", "", "_64"):
             set_fn = getattr(lib, f"openblas_set_num_threads{suffix}", None)
             get_fn = getattr(lib, f"openblas_get_num_threads{suffix}", None)
-            if set_fn is not None and get_fn is not None:
+            core_fn = getattr(lib, f"openblas_get_corename{suffix}", None)
+            if set_fn is not None and get_fn is not None and core_fn is not None:
                 get_fn.restype = ctypes.c_int
-                return lib, set_fn, get_fn
+                core_fn.argtypes = []
+                core_fn.restype = ctypes.c_char_p
+                return lib, set_fn, get_fn, core_fn
     return None
+
+
+def openblas_core_name() -> str | None:
+    """Name of the OpenBLAS kernel set this process's NumPy runs (e.g.
+    "SkylakeX", "Prescott"); None when NumPy is not linked to OpenBLAS.
+    Call it inside a task to learn what the Python workers run."""
+    handle = _openblas_handle()
+    return None if handle is None else handle[3]().decode()
 
 
 @contextmanager
@@ -96,7 +107,7 @@ def driver_blas_threads(n: int | None = None):
     if handle is None:
         yield
         return
-    _, set_fn, get_fn = handle
+    _, set_fn, get_fn, _ = handle
     prev = get_fn()
     set_fn(int(n or os.cpu_count() or 1))
     try:
