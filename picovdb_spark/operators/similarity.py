@@ -283,6 +283,14 @@ def batch_query(
     score per query. `_metrics_` is rounded to `round_to` decimals; the
     adaptive over-fetch of the reference (Q10) is unnecessary here because
     all filters are applied before the LIMIT.
+
+    Broadcast lifetime: each GEMM call broadcasts its query matrix, and
+    PySpark keeps that broadcast's pickle file in the driver's temp dir
+    until `destroy()` is called or the session stops. Nothing here
+    destroys it, because re-running the returned DataFrame reads it
+    again. A 1000 × 1024 batch leaves 8 MB per call (4 MB with
+    `score_dtype="float32"`), so a long-lived session serving many
+    batches accumulates them.
     """
     from picovdb_spark.operators.topk import topk_per_query
 
@@ -749,8 +757,8 @@ def _gemm_topk(
     argpartition, pico_vdb.py:680-713) but distributed: each partition
     computes scores for its slice of the store and emits only its local
     top-k per query, so the shuffle carries O(partitions × num_q × k)
-    rows. The query matrix rides along as a closure → broadcast once per
-    executor, not per task.
+    rows. The query matrix goes out as an explicit `sparkContext.broadcast`
+    made on every call, so each executor fetches it once, not per task.
 
     The vector block is reconstructed by flattening the Arrow list column
     and reshaping — zero per-row Python work; the only copy is the dtype
