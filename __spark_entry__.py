@@ -2799,8 +2799,8 @@ def _ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     store = load_embeddings_store(spark, sf_dir)
     index = PqIndex.build(store, m=16, k=64, seed=42, storage="checkpoint")
     out = index.query(_queries_df(spark, sf_dir), top_k=10, refine_k=store.count())
-    # metadata recovery via broadcast of the tiny top-k side (the same
-    # join-back shape as the GEMM path; oracle emits label too)
+    # metadata recovery via broadcast of the tiny top-k side (oracle
+    # emits label too)
     return F.broadcast(out).join(store.select(K_ID, "label"), on=K_ID).select(
         "query_id", K_ID, "label", K_METRICS, "rank"
     )

@@ -36,6 +36,7 @@ from picovdb_spark.functions.text import (
     word_shingles,
 )
 from picovdb_spark.functions.vector import dot, l2_normalize
+from picovdb_spark.operators.similarity import prescan_error_bound
 
 
 def exact_dedup(docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -2417,19 +2418,16 @@ def semantic_dedup_pairs(
         # float32 prefilter + float64 refine (r12): the full s²·d scan
         # runs in SINGLE precision (sgemm ~2× dgemm — knn_join_blocked
         # docstring), and only the sparse candidate set is re-scored
-        # exactly in double. No pair can be
-        # missed: for unit vectors the float32 dot's total error
-        # (cast + accumulation) is bounded by (d+4)·u with u = 2⁻²⁴,
-        # and a true cosine just below `threshold` can still ROUND up
-        # to it from half a rounding quantum below — the margin covers
-        # both, with a 4× safety factor on the error term. Emitted
-        # values are float64 np.round exactly as before (f64 dot error
-        # ~1e-14 against the 0.5·10⁻ʳᵒᵘⁿᵈ quantum — no boundary risk,
-        # unlike float32 where this class of flip is real; see
-        # operators/resident.py).
+        # exactly in double. No pair can be missed: the float32 dot of
+        # two float64 unit vectors is within prescan_error_bound(d) of
+        # the exact cosine, and a true cosine just below `threshold`
+        # can still ROUND up to it from half a rounding quantum below —
+        # the margin covers both. Emitted values are float64 np.round
+        # exactly as before (f64 dot error ~1e-14 against the
+        # 0.5·10⁻ʳᵒᵘⁿᵈ quantum — no boundary risk, unlike float32 where
+        # this class of flip is real; see operators/resident.py).
         m32 = np.ascontiguousarray(m, dtype=np.float32)
-        d = m.shape[1]
-        margin = 4.0 * (d + 4) * 2.0**-24 + 10.0**-round_to
+        margin = prescan_error_bound(m.shape[1]) + 10.0**-round_to
         pre_thr = threshold - margin
         outs = []
         for lo in range(0, s, chunk_rows):

@@ -23,8 +23,7 @@ Spark shape (mirrors operators/ann.py IVF):
                    query), score = Σ_sub table[sub, code]; partition-
                    local tie-complete top-R, k-row shuffle, optional
                    exact refine via a broadcast join of the tiny
-                   candidate set back to the store (the same join-back
-                   shape as similarity._gemm_topk).
+                   candidate set back to the store.
 
 Scoring is INNER PRODUCT on unit-normalized inputs (== cosine), matching
 the engine's metric everywhere. With `refine_k >= store size` the result

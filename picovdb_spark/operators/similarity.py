@@ -13,26 +13,30 @@ Two physical strategies for the similarity scan:
   expression inside whole-stage codegen. Catalyst pushes the metadata
   prefilters into the Parquet scan; WindowGroupLimit pre-truncates
   per-partition before the top-k shuffle.
-- ``method="gemm"``: `mapInArrow` over store partitions running one
-  NumPy GEMM per Arrow batch against the broadcast query matrix,
-  emitting only each partition's local top-k (query_id, _id_, score)
-  triples — O(num_q × k) rows per partition into the final shuffle
-  instead of O(num_q × n). Metadata is joined back onto the tiny result.
-  This is the 100 TB path: scan stays columnar, the vector block is a
-  zero-copy Arrow→NumPy reshape (no per-row Python loop), shuffle is
-  bounded by k.
+- ``method="gemm"``: `mapInArrow` over store partitions against the
+  broadcast query matrix, emitting only each partition's local top-k
+  rows — O(num_q × k) rows per partition into the final shuffle instead
+  of O(num_q × n). Each row leaves the scoring task with its metadata
+  (Arrow `take` on the task's own input), so the answer is one pass over
+  the store and one Spark job. This is the 100 TB path: scan stays
+  columnar, the vector block is a zero-copy Arrow→NumPy reshape (no
+  per-row Python loop), shuffle is bounded by k.
 
-  `score_dtype` picks the kernel precision: ``"float64"`` (default)
-  matches the DuckDB oracle bit-for-bit after rounding; ``"float32"``
-  is the throughput mode — the same precision the reference scores in
-  (its store matrix is float32, pico_vdb.py:62-75), ~2× the GEMM rate
-  and half the memory traffic. The float32 kernel selects candidates
-  with a one-ulp-of-rounding pad so the post-GEMM rounding can't drop
-  a boundary tie.
+  `score_dtype` picks the kernel precision. ``"float64"`` (default)
+  matches the DuckDB oracle after rounding, and is certified rather
+  than brute-forced: one float32 GEMM prescans the block, a derived
+  bound M(d) on |prescan − exact| (`prescan_error_bound`) keeps every
+  row that could still reach the rounded k-th score, and only those
+  rows are rescored in float64 with a non-BLAS sum. ``"float32"`` is
+  the throughput mode — the same precision the reference scores in
+  (its store matrix is float32, pico_vdb.py:62-75) — and selects on raw
+  float32 scores with a one-quantum-and-a-half pad so the post-GEMM
+  rounding can't drop a boundary tie.
 
 Both paths rank on the score ROUNDED to `round_to` decimals (ties broken
-by id) so results are identical across paths and reproducible in the
-DuckDB oracle.
+by id; a NaN score, from a NaN in a vector, ranks greatest, as in
+Spark's sort order) so results are identical across paths and
+reproducible in the DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -177,6 +181,125 @@ def _unit_rows(mat):
     return mat / norms[:, None]
 
 
+# Rows whose float32 squared norm falls below this are never pruned by a
+# float32 prescan: their squares may have underflowed, so the prescan
+# says nothing about the exact score. At or above it, the absolute
+# underflow error is ≤ d·2⁻¹²⁰ after scaling — far inside the bound's
+# headroom.
+F32_MIN_NORM2 = 2.0**-60
+
+
+def prescan_error_bound(d: int) -> float:
+    """M(d): a bound on |float32 prescan − float64 exact| of one cosine
+    score over `d` dimensions. THE margin of every float32 prescan that
+    a float64 rescore then decides (`_gemm_topk`, the semantic-dedup
+    pair prefilter).
+
+    Setting: the exact score is q·v/‖v‖ with q a float64 unit vector;
+    the prescan is fl32(q)·fl32(v) from a float32 GEMM, times the
+    float32 inverse norm of fl32(v). With u = 2⁻²⁴ and γ_d = d·u/(1−d·u):
+
+    - rounding q to float32: ≤ u (Cauchy–Schwarz, both sides unit);
+    - rounding an `array<double>` store row to float32 turns its
+      direction by ≤ 2u;
+    - the float32 dot over d terms, in any order, with or without FMA:
+      ≤ γ_d·Σ|q_j v_j| ≤ γ_d·(1+u) after scaling;
+    - the float32 norm: the sum of squares carries a relative error
+      ≤ γ_d, sqrt halves it, and sqrt, reciprocal and the scaling
+      multiply add ≤ 3u on a score of magnitude ≤ 1+u;
+    - the float64 rescore and `np.round`'s scaling: < 2⁻⁴⁹, below u.
+
+    First order that is 1.5γ_d + 6u ≤ 1.6·d·u + 6u for d·u ≤ 1/16.
+    M(d) = 4(d+4)·u covers it with 2.5× headroom, which also absorbs the
+    second-order terms and subnormal underflow in rows whose float32
+    squared norm is ≥ `F32_MIN_NORM2`. Past d = 2²⁰ the first-order
+    argument no longer holds, and the bound is infinite: keep every row.
+    Pre-normalized inputs (no norm term) are covered a fortiori.
+    """
+    if d > 1 << 20:
+        return float("inf")
+    return 4.0 * (d + 4) * 2.0**-24
+
+
+def _exact_scores(q, v, qi, vi):
+    """float64 score of query row `q[qi[p]]` against unit store row
+    `v[vi[p]]` for every pair p — the one rescoring routine of the
+    float64 kernel. The sum is NumPy's pairwise reduction over each
+    row, never a BLAS dot, so a score is the same bits under every
+    OpenBLAS kernel set and however the pairs are chunked. Chunks keep
+    the two gathered blocks in L2 (256 KB each)."""
+    import numpy as np
+
+    out = np.empty(len(qi))
+    step = max(1, (1 << 15) // max(1, q.shape[1]))
+    for lo in range(0, len(qi), step):
+        hi = lo + step
+        out[lo:hi] = (q[qi[lo:hi]] * v[vi[lo:hi]]).sum(axis=1)
+    return out
+
+
+def _prescan(q32, src):
+    """float32 prescan of unit query rows `q32` against store block
+    `src` (float32 or float64 rows, any norm): one sgemm scaled by each
+    row's float32 inverse norm; an exactly-zero row scores as e₀
+    (pico_vdb.py:62-67). Returns (scores (nq, n) float32, sure (n,)
+    bool). Where `sure`, |score − exact| ≤ `prescan_error_bound(d)`;
+    elsewhere (NaN/inf entries, float32 squared norm outside
+    [`F32_MIN_NORM2`, float32 max]) the score means nothing."""
+    import numpy as np
+
+    v32 = src if src.dtype == np.float32 else src.astype(np.float32)
+    with np.errstate(over="ignore", invalid="ignore"):
+        norm2 = np.einsum("ij,ij->i", v32, v32)
+    sure = (norm2 >= F32_MIN_NORM2) & (norm2 <= np.finfo(np.float32).max)
+    pre = q32 @ v32.T
+    pre *= np.float32(1.0) / np.sqrt(np.where(sure, norm2, np.float32(1.0)))
+    zero = np.flatnonzero(norm2 == 0.0)
+    if len(zero):
+        # exactly-zero source rows are e₀; a row whose float32 squares
+        # merely underflowed stays unsure
+        zero = zero[~src[zero].any(axis=1)]
+        pre[:, zero] = q32[:, :1]
+        sure[zero] = True
+    return pre, sure
+
+
+def _kth_lower_bound(scores, k):
+    """Per row, a lower bound on the k-th largest of `scores` (nq, n):
+    the k-th largest of the column-wise maxima of 8 contiguous column
+    slices. Each of those k maxima is a distinct entry, so k entries
+    are ≥ it. One max pass plus a partition over n/8 columns — ~6×
+    cheaper than partitioning the whole matrix, for ~0.5% more
+    candidates at 1000 × 6250. Needs k ≥ 1."""
+    import numpy as np
+
+    n = scores.shape[1]
+    m = -(-n // 8)
+    if m < k:
+        return np.partition(scores, n - k, axis=1)[:, n - k]
+    mx = scores[:, :m].copy()
+    for lo in range(m, n, m):
+        w = min(m, n - lo)
+        np.maximum(mx[:, :w], scores[:, lo : lo + w], out=mx[:, :w])
+    return np.partition(mx, m - k, axis=1)[:, m - k]
+
+
+def _group_topk(qi, key, k, pad=0.0):
+    """Tie-complete per-query top-k over candidate pairs: positions of
+    every candidate whose `key` is ≥ its query's k-th largest key − pad.
+    One lexsort, no per-query Python loop."""
+    import numpy as np
+
+    if len(qi) == 0:
+        return np.empty(0, dtype=np.intp)
+    order = np.lexsort((-key, qi))
+    qs, ks = qi[order], key[order]
+    starts = np.flatnonzero(np.r_[True, qs[1:] != qs[:-1]])
+    counts = np.diff(np.r_[starts, len(qs)])
+    thr = np.repeat(ks[starts + np.minimum(k, counts) - 1], counts)
+    return order[ks >= thr - pad]
+
+
 def normalize_query_matrix(qids, qmat):
     """L2-normalize a driver-resident query matrix in place-compatible
     NumPy (float64, zero ⇒ e₀ — pico_vdb.py:585-590). Shared by the
@@ -282,7 +405,15 @@ def batch_query(
     Returns (query_id, _id_, <metadata…>, _metrics_, rank) — descending
     score per query. `_metrics_` is rounded to `round_to` decimals; the
     adaptive over-fetch of the reference (Q10) is unnecessary here because
-    all filters are applied before the LIMIT.
+    all filters are applied before the LIMIT. The GEMM path answers in
+    one store pass and one Spark job: the scoring task emits each
+    selected row with its own metadata (see `_gemm_topk`), so a store
+    holding two rows with the same `_id_` returns each at most once per
+    query, with its own score and metadata, exactly as the SQL path
+    does. Its default float64 scores come from a float32 prescan pruned
+    by the derived bound `prescan_error_bound` and an exact float64
+    rescore of the survivors: the rows and scores equal a float64 scan
+    of every row, under any BLAS kernel set.
 
     Broadcast lifetime: each GEMM call broadcasts its query matrix, and
     PySpark keeps that broadcast's pickle file in the driver's temp dir
@@ -314,7 +445,7 @@ def batch_query(
         method = "gemm"
 
     if method == "gemm":
-        top = _gemm_topk(
+        out = _gemm_topk(
             cand,
             queries,
             query_id=query_id,
@@ -324,23 +455,8 @@ def batch_query(
             rank_col=rank_col,
             normalized=normalized,
             score_dtype=score_dtype,
+            include_vector=include_vector,
         )
-        meta_cols = [c for c in cand.columns if c not in (K_DELETED,)]
-        if not include_vector:
-            meta_cols = [c for c in meta_cols if c != K_VECTOR]
-        if meta_cols == [K_ID]:
-            # no metadata to recover — skip the join-back entirely (saves
-            # a second pass over the store for bare (id, vector) stores)
-            out = top.select("query_id", K_ID, K_METRICS, rank_col)
-        else:
-            # tiny result (num_q × k rows): broadcast it so recovering the
-            # metadata is a broadcast hash join against the store scan — no
-            # shuffle of the big side.
-            out = cand.select(*meta_cols).join(F.broadcast(top), on=K_ID, how="inner")
-            ordered = [
-                "query_id", K_ID, *[c for c in meta_cols if c != K_ID], K_METRICS, rank_col
-            ]
-            out = out.select(*ordered)
     elif method == "sql":
         qn = _normalized_queries(queries, query_id, vector_col)
         # Normalize each store vector ONCE, below the join — inside the
@@ -741,7 +857,7 @@ def hard_negatives(
 
 def _gemm_topk(
     cand: DataFrame,
-    queries: DataFrame,
+    queries: DataFrame | tuple,
     *,
     query_id: str = "query_id",
     vector_col: str = K_VECTOR,
@@ -750,153 +866,197 @@ def _gemm_topk(
     rank_col: str = "rank",
     normalized: bool = False,
     score_dtype: str = "float64",
+    include_vector: bool = False,
 ) -> DataFrame:
-    """Partition-local NumPy GEMM + local top-k, then global top-k.
+    """Partition-local top-k scan with metadata, then global top-k:
+    `batch_query`'s GEMM branch, returning its final columns.
 
     Mirrors the reference's vectorized scan (`scores = Q @ V.T` +
-    argpartition, pico_vdb.py:680-713) but distributed: each partition
-    computes scores for its slice of the store and emits only its local
-    top-k per query, so the shuffle carries O(partitions × num_q × k)
-    rows. The query matrix goes out as an explicit `sparkContext.broadcast`
-    made on every call, so each executor fetches it once, not per task.
+    argpartition, pico_vdb.py:680-713) but distributed: each task scores
+    its slice of the store and emits only its local top-k per query, so
+    the shuffle carries O(partitions × num_q × k) rows. The query matrix
+    goes out as an explicit `sparkContext.broadcast` made on every call,
+    so each executor fetches it once, not per task. The task's input is
+    (id, vector, *metadata); the selected rows leave it with their
+    metadata by Arrow `take`, so no second store scan joins it back.
 
-    The vector block is reconstructed by flattening the Arrow list column
-    and reshaping — zero per-row Python work; the only copy is the dtype
-    cast. `score_dtype="float64"` rounds the full score matrix and
-    selects tie-complete on the ROUNDED values (bit-identical to the
-    DuckDB oracle, round-1 pinned behavior). `"float32"` GEMMs in single
-    precision (the reference's own precision) and selects on RAW scores
-    with a pad of 1.5·10^-round_to, so every row whose rounded score
-    could reach the rounded kth value is still emitted; the global
-    ranking then applies the exact (rounded desc, id asc) order.
-    `normalized=True` additionally skips the row-norm pass in the
-    float32 kernel (stores normalize on ingest; float64 keeps its
-    round-1 always-normalize behavior for oracle stability).
+    `score_dtype="float64"` (default) answers each Arrow batch in one
+    certified pass (filter-and-refine):
+
+    1. prescan: one float32 GEMM of the float32 queries against the
+       float32 block, scaled by each row's float32 inverse norm (an
+       all-zero row scores as e₀, pico_vdb.py:62-67);
+    2. keep every row whose prescan is ≥ the query's k-th prescan
+       − 2·M(d) − 10^-round_to, M = `prescan_error_bound`: the k-th
+       exact score is ≥ k-th prescan − M, and a row whose rounded score
+       ties or beats the rounded k-th is within 10^-round_to of it, so
+       its prescan is within 2M + 10^-round_to of the k-th prescan.
+       Any lower bound on the k-th prescan keeps a superset; the kernel
+       uses `_kth_lower_bound`, which is cheaper than a full partition.
+       Rows the prescan cannot vouch for — NaN/inf entries, a float32
+       squared norm outside [`F32_MIN_NORM2`, float32 max] — are always
+       kept and never set the k-th prescan; a query holding NaN keeps
+       every row;
+    3. rescore the kept rows in float64 (`_unit_rows`, then
+       `_exact_scores`: a non-BLAS sum, so the result does not depend
+       on the BLAS kernel) and select tie-complete on the ROUNDED exact
+       scores, a NaN score ranking greatest (Spark's order) and emitted
+       as NaN.
+
+    No full-block float64 cast, dgemm or full-matrix rounding runs; the
+    output equals rounding a float64 score of every row.
+
+    `"float32"` GEMMs in single precision (the reference's own
+    precision) and selects on RAW scores with a pad of 1.5·10^-round_to,
+    so every row whose rounded score could reach the rounded kth value
+    is still emitted. `normalized=True` skips its row-norm pass (stores
+    normalize on ingest); the float64 kernel always normalizes.
+
+    Either way the global ranking applies the exact (rounded desc, id
+    asc) order.
     """
+    from functools import partial
+
     import numpy as np
     import pyarrow as pa
+
+    from picovdb_spark.operators.topk import topk_per_query
 
     use32 = score_dtype in ("float32", "f32")
     if not use32 and score_dtype not in ("float64", "f64"):
         raise ValueError(f"unknown score_dtype: {score_dtype!r}")
+
+    meta = [
+        c for c in cand.columns
+        if c not in (K_DELETED, K_ID) and (include_vector or c != K_VECTOR)
+    ]
+    emit_cols = [K_ID, *meta]
+    out_schema = T.StructType(
+        [
+            T.StructField("query_id", T.StringType()),
+            *[T.StructField(c, cand.schema[c].dataType) for c in emit_cols],
+            T.StructField(K_METRICS, T.DoubleType()),
+        ]
+    )
 
     spark = cand.sparkSession
     if isinstance(queries, DataFrame):
         qids, qmat = collect_normalized_queries(queries, query_id, vector_col)
     else:
         qids, qmat = normalize_query_matrix(*queries)
-    if qmat.size == 0:
-        return spark.createDataFrame(
-            [], schema=f"query_id string, {K_ID} string, {K_METRICS} double, {rank_col} int"
-        )
+    if qmat.size == 0 or top_k <= 0:
+        empty = T.StructType([*out_schema.fields, T.StructField(rank_col, T.IntegerType())])
+        return spark.createDataFrame([], schema=empty)
     bc = spark.sparkContext.broadcast((qids, qmat.astype(np.float32) if use32 else qmat))
 
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.StringType()),
-            T.StructField(K_ID, T.StringType()),
-            T.StructField(K_METRICS, T.DoubleType()),
-        ]
-    )
-    pa_schema = pa.schema(
-        [
-            pa.field("query_id", pa.string()),
-            pa.field(K_ID, pa.string()),
-            pa.field(K_METRICS, pa.float64()),
-        ]
-    )
     pad = 1.5 * 10.0 ** (-round_to)
-    dtype = np.float32 if use32 else np.float64
+    margin = 2.0 * prescan_error_bound(qmat.shape[1]) + 10.0 ** (-round_to)
+
+    def select64(q64, q32, qbad, batch):
+        """(query idx, row idx, rounded exact score) of the batch's
+        tie-complete top-k: prescan, prune, rescore, select."""
+        n = batch.num_rows
+        vals = batch.column(1).flatten().to_numpy(zero_copy_only=False)
+        src = vals.reshape(n, -1)  # zero-copy, float32 or float64
+        pre, sure = _prescan(q32, src)
+        unsure = ~sure
+        any_unsure = unsure.any()
+        if any_unsure:
+            pre[:, unsure] = -np.inf
+        # threshold rounded DOWN to float32, so the float32 comparison
+        # keeps at least what the float64 rule keeps
+        thr = np.nextafter(
+            (_kth_lower_bound(pre, min(top_k, n)).astype(np.float64) - margin).astype(np.float32),
+            np.float32(-np.inf),
+        )
+        keep = pre >= thr[:, None]
+        if any_unsure:
+            keep[:, unsure] = True
+        if qbad.any():
+            keep[qbad] = True
+        qi, vi = np.divmod(np.flatnonzero(keep), n)
+        rows, at = np.unique(vi, return_inverse=True)
+        unit = np.empty((len(rows), src.shape[1]))
+        step = max(1, (1 << 16) // src.shape[1])  # cache-sized row chunks
+        for lo in range(0, len(rows), step):
+            unit[lo : lo + step] = _unit_rows(src[rows[lo : lo + step]].astype(np.float64))
+        with np.errstate(invalid="ignore"):
+            score = np.round(_exact_scores(q64, unit, qi, at), round_to)
+        pick = _group_topk(qi, np.where(np.isnan(score), np.inf, score), top_k)
+        return qi[pick], vi[pick], score[pick]
+
+    def select32(q32, batch):
+        """(query idx, row idx, raw float32 score) of the batch's padded
+        top-k on raw scores."""
+        n = batch.num_rows
+        vals = batch.column(1).flatten().to_numpy(zero_copy_only=False)
+        if normalized:
+            # read-only zero-copy view is fine — we never write it
+            vmat = np.asarray(vals.reshape(n, -1), dtype=np.float32)
+        else:
+            vmat = vals.reshape(n, -1).astype(np.float32)  # owned, writable
+            norms = np.sqrt((vmat * vmat).sum(axis=1))
+            zero = norms == 0.0
+            if zero.any():  # zero vector ⇒ e₀ (pico_vdb.py:62-67)
+                vmat[zero] = 0.0
+                vmat[zero, 0] = 1.0
+                norms[zero] = 1.0
+            vmat /= norms[:, None]
+        scores = q32 @ vmat.T  # (nq, n)
+        kk = min(top_k, n)
+        kth = np.partition(scores, n - kk, axis=1)[:, n - kk]
+        qi, vi = np.nonzero(scores >= (kth - pad)[:, None])
+        return qi, vi, scores[qi, vi]
 
     def score_batches(batches: Iterator) -> Iterator:
         b_qids, b_qmat = bc.value
-        # Per-batch GEMM + local top-k, accumulated and emitted ONCE at
-        # task end. Single emit keeps the shuffle at O(num_q × k) per
-        # TASK regardless of how many Arrow batches the task's partition
-        # splits into (per-batch emit would multiply shuffle rows by the
-        # batch count), and lets a small
-        # `spark.sql.execution.arrow.maxRecordsPerBatch` pipeline the
-        # JVM→Python Arrow stream against the BLAS compute.
+        if use32:
+            select = partial(select32, b_qmat)
+        else:
+            qbad = ~np.isfinite(b_qmat).all(axis=1)
+            select = partial(select64, b_qmat, b_qmat.astype(np.float32), qbad)
+        # Per-batch selection, accumulated and emitted ONCE at task end.
+        # Single emit keeps the shuffle at O(num_q × k) per TASK however
+        # many Arrow batches the task's partition splits into, and lets a
+        # small `spark.sql.execution.arrow.maxRecordsPerBatch` pipeline
+        # the JVM→Python Arrow stream against the BLAS compute.
         acc_q: list = []  # query indices into b_qids
-        acc_i: list = []  # store ids
         acc_s: list = []  # scores (raw f32 for use32, rounded f64 else)
-        n_batches = 0
+        acc_rows: list = []  # the selected rows' emitted columns
         for batch in batches:
-            n = batch.num_rows
-            if n == 0:
+            if batch.num_rows == 0:
                 continue
-            flat = batch.column(1).flatten()
-            vals = flat.to_numpy(zero_copy_only=False)
-            skip_norm = use32 and normalized
-            if skip_norm:
-                # read-only zero-copy view is fine — we never write it
-                vmat = np.asarray(vals.reshape(n, -1), dtype=dtype)
-            else:
-                vmat = vals.reshape(n, -1).astype(dtype)  # owned, writable
-                norms = np.sqrt((vmat * vmat).sum(axis=1))
-                zero = norms == 0.0
-                if zero.any():  # zero vector ⇒ e₀ (pico_vdb.py:62-67)
-                    vmat[zero] = 0.0
-                    vmat[zero, 0] = 1.0
-                    norms[zero] = 1.0
-                vmat /= norms[:, None]
-            scores = b_qmat @ vmat.T  # (nq, n)
-            kk = min(top_k, n)
-            if use32:
-                # partial top-k on RAW float32 scores, padded so rounding
-                # can't drop a boundary tie; round only at final emit
-                kth = np.partition(scores, n - kk, axis=1)[:, n - kk]
-                qi, vi = np.nonzero(scores >= (kth - pad)[:, None])
-                sel = scores[qi, vi]
-            else:
-                # tie-complete on ROUNDED scores (argpartition ≈
-                # pico_vdb.py:705-707): emit every row scoring >= the
-                # kk-th rounded value so a rounded tie at the boundary
-                # can't drop the id-ordered winner the oracle would keep
-                scores = np.round(scores, round_to)
-                kth = np.partition(scores, n - kk, axis=1)[:, n - kk]
-                qi, vi = np.nonzero(scores >= kth[:, None])
-                sel = scores[qi, vi]
-            ids = batch.column(0).to_numpy(zero_copy_only=False)
+            qi, vi, sel = select(batch)
             acc_q.append(qi)
-            acc_i.append(ids[vi])
             acc_s.append(sel)
-            n_batches += 1
-        if not n_batches:
+            acc_rows.append(batch.select(emit_cols).take(pa.array(vi)))
+        if not acc_q:
             return
         qi = np.concatenate(acc_q)
-        sid = np.concatenate(acc_i)
         sel = np.concatenate(acc_s)
-        if n_batches > 1:
+        rows = pa.Table.from_batches(acc_rows)
+        if len(acc_q) > 1:
             # Re-select across the task's batches so multi-batch tasks
-            # shuffle no more than single-batch ones. Each batch kept its
-            # full top-kk, and the k-th largest of a union is >= the k-th
-            # largest of any member, so the union of per-batch candidates
-            # contains every row the task-level selection needs — the
-            # task-level kth computed over candidates equals the kth over
-            # all task rows, and the per-batch keep condition (>= its own
-            # smaller kth, minus pad for f32) is a superset of the
-            # task-level one. Grouped threshold via one lexsort.
-            order = np.lexsort((-sel, qi))
-            qi, sid, sel = qi[order], sid[order], sel[order]
-            starts = np.flatnonzero(np.r_[True, qi[1:] != qi[:-1]])
-            counts = np.diff(np.r_[starts, len(qi)])
-            kth_pos = starts + np.minimum(top_k, counts) - 1
-            thr = np.repeat(sel[kth_pos], counts)
-            keep = sel >= (thr - pad if use32 else thr)
-            qi, sid, sel = qi[keep], sid[keep], sel[keep]
+            # shuffle no more than single-batch ones. The k-th largest of
+            # a union is >= the k-th largest of any member, so each
+            # batch's tie-complete candidates (padded for f32) hold every
+            # row the task-level selection keeps.
+            key = sel if use32 else np.where(np.isnan(sel), np.inf, sel)
+            pick = _group_topk(qi, key, top_k, pad if use32 else 0.0)
+            qi, sel, rows = qi[pick], sel[pick], rows.take(pa.array(pick))
         if use32:
             sel = np.round(sel.astype(np.float64), round_to)
-        yield pa.RecordBatch.from_arrays(
+        out = pa.Table.from_arrays(
             [
                 pa.array(b_qids[qi], type=pa.string()),
-                pa.array(sid, type=pa.string()),
+                *rows.columns,
                 pa.array(sel, type=pa.float64()),
             ],
-            schema=pa_schema,
+            names=["query_id", *emit_cols, K_METRICS],
         )
+        yield from out.to_batches()
 
-    local = cand.select(K_ID, vector_col).mapInArrow(score_batches, schema=out_schema)
-    from picovdb_spark.operators.topk import topk_per_query
-
+    in_cols = [K_ID, vector_col, *[c for c in meta if c != vector_col]]
+    local = cand.select(*in_cols).mapInArrow(score_batches, schema=out_schema)
+    # (query_id, _id_, *meta, _metrics_) plus the appended rank column
     return topk_per_query(local, top_k, rank_col=rank_col)

@@ -31,7 +31,8 @@ def topk_per_query(
     """Keep the `top_k` highest-scoring rows per query, descending, ties
     broken by id. Emits an optional 1-based `rank` column."""
     w = Window.partitionBy(query_col).orderBy(F.col(score_col).desc(), F.col(id_col).asc())
-    out = scored.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") <= top_k)
-    if rank_col:
-        out = out.withColumn(rank_col, F.col("__rn"))
-    return out.drop("__rn")
+    # two DataFrame ops when the rank is kept: each op is one eager
+    # analysis on the JVM, a fixed cost of every call
+    rn = rank_col or "__rn"
+    out = scored.withColumn(rn, F.row_number().over(w)).filter(F.col(rn) <= top_k)
+    return out if rank_col else out.drop(rn)
