@@ -3236,8 +3236,8 @@ def _docs_top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_register("ann_ivf_resident_topk", _topk_oracle(10))
 def _ann_ivf_resident(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster-routed resident IVF serving at FULL probe width: the
-    routed kernel (driver probe routing + per-cluster-segment GEMM +
-    tie-padded partial top-k; operators/resident.py:ResidentIvfStore)
+    routed kernel (driver probe routing + per-cluster-segment certified
+    top-k; operators/resident.py:ResidentIvfStore)
     degenerates to exact top-k when every cluster is probed, so the
     whole serving path is hash-checked against the exact SQL oracle.
     The pruning regime (nprobe << n_centroids) is benchmarked as

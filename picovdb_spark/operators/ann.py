@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from picovdb_spark.operators.kernels import _unit_rows, certified_topk, emit_topk
 from picovdb_spark.schema import K_DELETED, K_ID, K_METRICS, K_VECTOR
 
 CLUSTER_COL = "__cluster"
@@ -82,17 +83,6 @@ def sample_matrix(
         return np.empty((0, 0))
     flat = col.flatten().to_numpy(zero_copy_only=False)
     return flat.reshape(n, -1).astype(np.float64)
-
-
-def _normalize_rows(m: np.ndarray) -> np.ndarray:
-    norms = np.sqrt((m * m).sum(axis=1))
-    zero = norms == 0.0
-    if zero.any():  # zero vector ⇒ e₀ (store invariant, pico_vdb.py:62-67)
-        m = m.copy()
-        m[zero] = 0.0
-        m[zero, 0] = 1.0
-        norms[zero] = 1.0
-    return m / norms[:, None]
 
 
 def kmeans_mean_update(x: np.ndarray, assign: np.ndarray, prev: np.ndarray) -> np.ndarray:
@@ -163,7 +153,7 @@ def fit_centroids(
         )
     if sample.size == 0:
         raise ValueError("cannot fit IVF centroids on an empty store")
-    x = _normalize_rows(sample).astype(np.float32)
+    x = _unit_rows(sample).astype(np.float32)
     # f32 fit: clustering tolerates it (assignments are argmax over well-
     # separated scores), query-time scoring keeps its own precision
     k = min(n_centroids, len(x))
@@ -177,8 +167,8 @@ def fit_centroids(
     with driver_blas_threads():
         for _ in range(n_iter):
             assign = np.argmax(x @ cent.T, axis=1)  # cosine on unit vectors
-            cent = _normalize_rows(kmeans_mean_update(x, assign, cent))
-    return _normalize_rows(cent.astype(np.float64))
+            cent = _unit_rows(kmeans_mean_update(x, assign, cent))
+    return _unit_rows(cent.astype(np.float64))
 
 
 def assign_clusters(
@@ -196,7 +186,7 @@ def assign_clusters(
         for pdf in batches:
             if pdf.empty:
                 continue
-            v = _normalize_rows(stack_vectors(pdf[vector_col]))
+            v = _unit_rows(stack_vectors(pdf[vector_col]))
             pdf = pdf.copy()
             pdf[CLUSTER_COL] = np.argmax(v @ cent.T, axis=1).astype("int32")
             yield pdf
@@ -376,13 +366,21 @@ def ann_query(
     """IVF batch top-k: each query scores only its `nprobe` nearest
     clusters. Same output shape as `batch_query`; recall < 1.0 by design
     (equivalence-band tested like FAISS-vs-NumPy,
-    tests/test_task14_faiss_vs_numpy_results.py).
+    tests/test_task14_faiss_vs_numpy_results.py). At `nprobe >=
+    n_centroids` every row is probed and the answer is exactly
+    `batch_query`'s.
 
     Physical plan: probe sets are computed driver-side from the tiny
     (nq × k_centroids) GEMM; the store scan is filtered to the union of
     probed clusters (partition pruning on a cluster-partitioned store),
-    then one mapInPandas GEMM masks, per query, rows outside the query's
-    own probe set before the partial top-k. Shuffle is O(parts × nq × k).
+    then one `mapInArrow` task per partition runs the certified top-k
+    kernel (`kernels.certified_topk`) with each query's probe set as its
+    `allowed` mask. Shuffle is O(parts × nq × k). With
+    `include_metadata`, the selected rows leave the scoring task with
+    their metadata by Arrow `take` (the FAISS path's result shape,
+    pico_vdb.py:732-751), so no second index scan joins it back; a
+    store holding two rows with the same `_id_` returns each at most
+    once per query, with its own metadata, as `batch_query` does.
 
     Regime note: pruning scales with |probe union| / n_centroids. A
     LARGE query batch saturates the union (nq × nprobe ≫ n_centroids ⇒
@@ -396,13 +394,27 @@ def ann_query(
     from picovdb_spark.operators.topk import topk_per_query
 
     spark = index.df.sparkSession
+    vec_col = index.vector_col  # plain string local — the closure must not
+    # capture `index` itself (it holds a DataFrame, unpicklable on workers)
     # user metadata named "rank" wins the name; ranking yields to _rank_
     rank_col = "_rank_" if "rank" in index.df.columns else "rank"
+    meta = (
+        [c for c in index.df.columns if c not in (K_ID, vec_col, CLUSTER_COL, K_DELETED)]
+        if include_metadata
+        else []
+    )
+    emit_cols = [K_ID, *meta]
+    out_schema = T.StructType(
+        [
+            T.StructField("query_id", T.StringType()),
+            *[T.StructField(c, index.df.schema[c].dataType) for c in emit_cols],
+            T.StructField(K_METRICS, T.DoubleType()),
+        ]
+    )
     qids, qmat = collect_normalized_queries(queries, query_id, vector_col)
-    if qmat.size == 0:
-        return spark.createDataFrame(
-            [], schema=f"query_id string, {K_ID} string, {K_METRICS} double, {rank_col} int"
-        )
+    if qmat.size == 0 or top_k <= 0:
+        empty = T.StructType([*out_schema.fields, T.StructField(rank_col, T.IntegerType())])
+        return spark.createDataFrame([], schema=empty)
     cent = index.centroids
     nprobe = min(nprobe, len(cent))
     # (nq, n_cent) driver-side GEMM → per-query probe sets, as a dense
@@ -415,59 +427,26 @@ def ann_query(
     np.put_along_axis(probe_bool, probes, True, axis=1)
     bc = spark.sparkContext.broadcast((qids, qmat, probe_bool))
 
-    # Partition pruning: only probed clusters are scanned at all.
-    cand = index.df.filter(F.col(CLUSTER_COL).isin(probed_union))
-    vec_col = index.vector_col  # plain string local — the closure must not
-    # capture `index` itself (it holds a DataFrame, unpicklable on workers)
-
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.StringType()),
-            T.StructField(K_ID, T.StringType()),
-            T.StructField(K_METRICS, T.DoubleType()),
-        ]
-    )
-
     def score(batches: Iterator) -> Iterator:
-        import pandas as pd
+        b_qids, q64, b_probes = bc.value
+        q32 = q64.astype(np.float32)
 
-        b_qids, b_qmat, b_probes = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            v = _normalize_rows(stack_vectors(pdf[vec_col]))
-            clusters = pdf[CLUSTER_COL].to_numpy().astype(np.int64)
-            scores = np.round(b_qmat @ v.T, round_to)  # (nq, n_rows)
-            # mask rows outside each query's probe set: (nq, n_rows)
-            # boolean via fancy indexing, no Python loop
-            scores[~b_probes[:, clusters]] = -np.inf
-            n = scores.shape[1]
-            kk = min(top_k, n)
-            # tie-complete partial top-k (see similarity._gemm_topk)
-            kth = np.partition(scores, n - kk, axis=1)[:, n - kk]
-            qi, vi = np.nonzero((scores >= kth[:, None]) & (scores > -np.inf))
-            ids = pdf[K_ID].to_numpy()
-            yield pd.DataFrame(
-                {
-                    "query_id": b_qids[qi],
-                    K_ID: ids[vi],
-                    K_METRICS: scores[qi, vi],
-                }
+        def select(batch):
+            vals = batch.column(1).flatten().to_numpy(zero_copy_only=False)
+            src = vals.reshape(batch.num_rows, -1)
+            clusters = batch.column(2).to_numpy(zero_copy_only=False)
+            return certified_topk(
+                q64, q32, src, top_k, round_to, allowed=b_probes[:, clusters]
             )
 
-    local = cand.select(K_ID, vec_col, CLUSTER_COL).mapInPandas(score, schema=out_schema)
+        yield from emit_topk(batches, select, emit_cols, b_qids, top_k)
+
+    # Partition pruning: only probed clusters are scanned at all.
+    cand = index.df.filter(F.col(CLUSTER_COL).isin(probed_union))
+    local = cand.select(K_ID, vec_col, CLUSTER_COL, *meta).mapInArrow(score, schema=out_schema)
     out = topk_per_query(local, top_k, rank_col=rank_col)
     if better_than is not None:
         out = out.filter(F.col(K_METRICS) >= F.lit(float(better_than)))
-    if include_metadata:
-        # FAISS-path parity (pico_vdb.py:732-751): results carry the
-        # metadata; tiny result broadcast against the index scan
-        meta_cols = [c for c in index.df.columns if c not in (vec_col, CLUSTER_COL)]
-        if len(meta_cols) > 1:
-            out = index.df.select(*meta_cols).join(F.broadcast(out), on=K_ID, how="inner")
-            out = out.select(
-                "query_id", K_ID, *[c for c in meta_cols if c != K_ID], K_METRICS, rank_col
-            )
     return out
 
 
@@ -511,7 +490,7 @@ def rp_signatures(
         for pdf in batches:
             if pdf.empty:
                 continue
-            v = _normalize_rows(stack_vectors(pdf[vector_col]))
+            v = _unit_rows(stack_vectors(pdf[vector_col]))
             bits = (v @ p.T) > 0  # (n, n_bits)
             weights = 1 << np.arange(rows_per_band, dtype=np.int64)
             frames = []

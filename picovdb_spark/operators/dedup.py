@@ -36,7 +36,7 @@ from picovdb_spark.functions.text import (
     word_shingles,
 )
 from picovdb_spark.functions.vector import dot, l2_normalize
-from picovdb_spark.operators.similarity import prescan_error_bound
+from picovdb_spark.operators.kernels import prescan_error_bound
 
 
 def exact_dedup(docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -1038,13 +1038,14 @@ def _near_dup_lsh(
     def _cos(va, vb):
         import numpy as np
 
-        from picovdb_spark.operators.ann import _normalize_rows, stack_vectors
+        from picovdb_spark.operators.ann import stack_vectors
+        from picovdb_spark.operators.kernels import _unit_rows
 
-        # _normalize_rows applies the store's zero→e₀ invariant, so a
+        # _unit_rows applies the store's zero→e₀ invariant, so a
         # pair of zero vectors scores 1.0 exactly like the gemm/sql
         # paths (which normalize via l2_normalize) — not 0.0
-        ma = _normalize_rows(stack_vectors(va))
-        mb = _normalize_rows(stack_vectors(vb))
+        ma = _unit_rows(stack_vectors(va))
+        mb = _unit_rows(stack_vectors(vb))
         return pd.Series(np.einsum("ij,ij->i", ma, mb))
 
     _cos.__annotations__ = {"va": pd.Series, "vb": pd.Series, "return": pd.Series}

@@ -44,7 +44,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from picovdb_spark.operators.ann import _normalize_rows, stack_vectors
+from picovdb_spark.operators.ann import stack_vectors
+from picovdb_spark.operators.kernels import _exact_scores, _unit_rows
 from picovdb_spark.schema import K_ID, K_METRICS, K_VECTOR
 
 # Diagnostic toggle for the encode kernel's float32 prescan (below).
@@ -151,7 +152,7 @@ def fit_pq(
         )
     if sample.size == 0:
         raise ValueError("cannot fit PQ codebooks on an empty store")
-    x = _normalize_rows(sample)
+    x = _unit_rows(sample)
     dim = x.shape[1]
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
@@ -240,7 +241,7 @@ def pq_encode(
         for pdf in batches:
             if pdf.empty:
                 continue
-            v = _normalize_rows(stack_vectors(pdf[vector_col]))
+            v = _unit_rows(stack_vectors(pdf[vector_col]))
             if prescan:
                 codes = _subspace_codes_f32(
                     v, v.astype(np.float32), books, neg2bT, cnorm2, margins
@@ -306,8 +307,9 @@ def exact_rescore(
 ) -> DataFrame:
     """Rescore a tiny (query_id, id) candidate set EXACTLY against the
     store's raw vectors: broadcast join of the candidates (the store is
-    never shuffled), then a float64 dot kernel. Shared by the PQ and
-    IVF-PQ refine paths."""
+    never shuffled), then the exact kernels' float64 rescore
+    (`kernels._exact_scores`). Shared by the PQ and IVF-PQ refine
+    paths."""
     spark = store.sparkSession
     joined = store.select(id_col, vector_col).join(
         F.broadcast(candidates.select("query_id", id_col)), on=id_col
@@ -330,11 +332,11 @@ def exact_rescore(
         for pdf in batches:
             if pdf.empty:
                 continue
-            v = _normalize_rows(stack_vectors(pdf[vector_col]))
+            v = _unit_rows(stack_vectors(pdf[vector_col]))
             qidx = np.fromiter(
                 (b_qindex[str(q)] for q in pdf["query_id"]), dtype=np.int64
             )
-            s = np.round((v * b_qmat[qidx]).sum(axis=1), round_to)
+            s = np.round(_exact_scores(b_qmat, v, qidx, np.arange(len(v))), round_to)
             yield pd.DataFrame(
                 {
                     "query_id": pdf["query_id"].astype(str),
@@ -375,8 +377,10 @@ def adc_local_candidates(
     global `topk_per_query` is exact, so results are identical.
 
     Tie semantics: selection on RAW float32 ADC scores padded by
-    1.5·10^-round_to so a rounded boundary tie can't be dropped (the
-    same rule as similarity._gemm_topk)."""
+    1.5·10^-round_to so a rounded boundary tie can't be dropped. ADC
+    scores are approximate by design and every candidate is rescored
+    exactly afterwards (`exact_rescore`), so the pad only widens the
+    candidate set."""
     import pyarrow as pa  # noqa: F401  (workers import lazily)
 
     from picovdb_spark.operators.ann import CLUSTER_COL

@@ -1,4 +1,4 @@
-"""Resident serving mode: executor-local float32 shards for repeated
+"""Resident serving mode: executor-local store shards for repeated
 query batches.
 
 The reference sustains ~1000 q/s because its store matrix lives in
@@ -10,13 +10,16 @@ pays.
 
 `ResidentGemmStore` is the Spark analog of "the index shard lives on the
 serving node": `materialize()` runs one job that writes each partition's
-(ids, unit-normalized float32 matrix) to node-local shared memory
-(`/dev/shm`, falling back to the local tmpdir), and `query()` jobs map
-over a *pruned* scan of the cached store — only a constant byte per row
-crosses the JVM→Python boundary — while the kernel `np.load`s its
-partition's block with `mmap_mode="r"`: after first touch the pages sit
-in the OS page cache, shared by every worker process on the node, so a
-query pass costs one GEMM and a k-row shuffle, nothing else.
+(ids, raw rows in the store's element type, float32 squared norms) to
+node-local shared memory (`/dev/shm`, falling back to the local
+tmpdir), and `query()` jobs map over a *pruned* scan of the cached
+store — only a constant byte per row crosses the JVM→Python boundary —
+while the kernel `np.load`s its partition's block with `mmap_mode="r"`:
+after first touch the pages sit in the OS page cache, shared by every
+worker process on the node, so a query pass costs one certified top-k
+(`kernels.certified_topk`) and a k-row shuffle, nothing else. Float
+blocks therefore answer exactly what `batch_query` answers, bit for
+bit; int8 blocks are an approximate footprint mode.
 
 Cluster semantics: blocks are node-local. Tasks are scheduled by cache
 locality (PROCESS/NODE_LOCAL against the cached store), so on a
@@ -44,6 +47,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from picovdb_spark.operators.kernels import _group_topk, _unit_rows, certified_topk, f32_norm2
 from picovdb_spark.schema import K_ID, K_METRICS, K_VECTOR
 
 _SHM_ROOT_CANDIDATES = ("/dev/shm", tempfile.gettempdir())
@@ -120,6 +124,62 @@ def _probe_missing_blocks(
 _MISSING_BLOCK_MARKER = "[resident-block-missing]"
 
 
+def _load_block(blk_dir: str, pid: int, need, *, block_pids=frozenset(), local=False):
+    """Partition `pid`'s block files as {name: array}, or None when
+    materialize wrote no block for it (`pid` not in `block_pids`, the
+    query path) and none is there. Every artifact is checked up front: a partition that lost
+    only a sidecar must fail like a lost block (silently skipping would
+    drop its vectors from every answer) — in a distributed task with
+    `_MISSING_BLOCK_MARKER`, which the auto-re-arm matches on. The rows
+    are mmap'd: pages shared node-wide via the OS page cache, no copy."""
+    paths = {a: os.path.join(blk_dir, f"{a}_{pid}.npy") for a in need}
+    if not local and pid not in block_pids and not os.path.exists(paths["mat"]):
+        return None
+    lost = sorted(a for a, p in paths.items() if not os.path.exists(p))
+    if lost and local:
+        raise RuntimeError(
+            f"resident block artifact(s) {lost} for partition {pid} not "
+            f"visible from this process ({blk_dir}) — query_local() "
+            "serves from node-local blocks and must run co-resident "
+            "with them (a serving node); re-materialize() or use "
+            "query() for the distributed path"
+        )
+    if lost:
+        raise RuntimeError(
+            f"{_MISSING_BLOCK_MARKER} artifact(s) {lost} for partition {pid} "
+            f"under {blk_dir} — store closed, partitioning changed since "
+            "materialize(), or this task ran on a node that never "
+            "materialized; re-materialize() or use batch_query()"
+        )
+    return {
+        a: np.load(p, mmap_mode="r" if a == "mat" else None, allow_pickle=a == "ids")
+        for a, p in paths.items()
+    }
+
+
+def _remove_blocks(frame: DataFrame, blk_dir: str) -> None:
+    """Best-effort removal of a store's block dir: one pass over
+    `frame`'s partitions (the executors that wrote the blocks, by cache
+    locality), then on the driver. A node whose executor is gone keeps
+    its tmpfs blocks until reboot, which is why the dir name carries a
+    unique token (stale dirs are identifiable and never collide with a
+    new store's)."""
+
+    def rm(batches: Iterator) -> Iterator:
+        import pyarrow as pa
+
+        shutil.rmtree(blk_dir, ignore_errors=True)
+        yield pa.RecordBatch.from_arrays([pa.array([1])], names=["ok"])
+        for _ in batches:
+            pass
+
+    try:
+        frame.select(F.lit(True).alias("__probe")).mapInArrow(rm, schema="ok long").count()
+    except Exception:
+        pass  # session gone — driver-side cleanup still runs
+    shutil.rmtree(blk_dir, ignore_errors=True)
+
+
 def _serve_with_rearm(store, out: DataFrame, probe_skipped: bool, retry):
     """Auto-re-arm for `on_missing="fallback"` stores whose CACHED
     healthy probe skipped the per-batch check this call: execute the
@@ -168,43 +228,81 @@ def _serve_with_rearm(store, out: DataFrame, probe_skipped: bool, retry):
         return retry()
 
 
-def _normalize_local_query(vector) -> "np.ndarray":
-    """Float64 normalize with the zero⇒e₀ store invariant — the exact
-    sequence of `collect_normalized_queries` (so in-process scores agree
-    with the distributed path to the last bit before the dtype cast).
-    Shared by both stores' `query_local`."""
-    q = np.asarray(vector, dtype=np.float64).ravel()
-    nrm = float(np.sqrt((q * q).sum()))
-    if nrm == 0.0:
-        q = np.zeros_like(q)
-        q[0] = 1.0
-        return q
-    return q / nrm
+# schema of a resident query task's hits
+_HITS = f"query_id string, {K_ID} string, {K_METRICS} double"
 
 
-def _local_topk(scores, ids, *, top_k: int, better_than, round_to: int) -> list[dict]:
-    """Rounded-score tie-complete selection, then (score desc, id asc) —
-    the `topk_per_query` rule, shared by both stores' `query_local`."""
-    scores = np.round(np.asarray(scores).astype(np.float64), round_to)
-    ids = np.asarray(ids, dtype=object)
-    if better_than is not None:
-        keep = scores >= float(better_than)
-        scores, ids = scores[keep], ids[keep]
-    kk = min(top_k, len(scores))
-    if kk == 0:
-        return []
-    kth = np.partition(scores, len(scores) - kk)[len(scores) - kk]
-    cand = np.flatnonzero(scores >= kth)
-    order = sorted(cand, key=lambda i: (-scores[i], str(ids[i])))[:kk]
+def _hits_batch(qids, ids, scores):
+    """A resident query task's (query_id, _id_, _metrics_) Arrow batch."""
+    import pyarrow as pa
+
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(qids, type=pa.string()),
+            pa.array(ids, type=pa.string()),
+            pa.array(scores, type=pa.float64()),
+        ],
+        names=["query_id", K_ID, K_METRICS],
+    )
+
+
+def _write_block(blk_dir: str, pid: int, mat, as_int8: bool, normalized: bool, **sidecars):
+    """Write partition `pid`'s block atomically under `blk_dir`: the
+    `sidecars` (ids, clus), then either the raw rows with their float32
+    squared norms or, for int8, the codes and scales of the rows
+    normalized in float32 (taken as unit when `normalized`)."""
+    if as_int8:
+        unit = mat.astype(np.float32)
+        sidecars["mat"], sidecars["scales"] = _quantize_rows_int8(
+            unit if normalized else _unit_rows(unit)
+        )
+    else:
+        sidecars["mat"], sidecars["norm2"] = mat, f32_norm2(mat)
+    os.makedirs(blk_dir, exist_ok=True)
+    for name, arr in sidecars.items():
+        tmp = os.path.join(blk_dir, f".{name}_{pid}.tmp.npy")
+        np.save(tmp, arr, allow_pickle=(name == "ids"))
+        os.replace(tmp, os.path.join(blk_dir, f"{name}_{pid}.npy"))
+
+
+def _block_artifacts(as_int8: bool, *extra: str) -> tuple[str, ...]:
+    """Every per-partition file a block holds: float blocks keep the raw
+    rows plus their float32 squared norms, int8 blocks codes plus
+    per-row scales."""
+    return ("mat", "ids", *extra, "scales" if as_int8 else "norm2")
+
+
+def _padded_topk(scores, k: int, round_to: int):
+    """The int8 blocks' selection on approximate float32 scores (nq, n):
+    every row within 1.5·10^-round_to of the raw k-th score, so no row
+    whose ROUNDED score ties the k-th is dropped. Returns (query idx,
+    row idx, rounded score)."""
+    n = scores.shape[1]
+    kk = min(k, n)
+    kth = np.partition(scores, n - kk, axis=1)[:, n - kk]
+    qi, vi = np.nonzero(scores >= (kth - 1.5 * 10.0 ** (-round_to))[:, None])
+    return qi, vi, np.round(scores[qi, vi].astype(np.float64), round_to)
+
+
+def _rank_local(ids, scores, *, top_k: int, better_than) -> list[dict]:
+    """One query's final ranking from rounded candidate scores: (NaN
+    first, score desc, id asc), the first `top_k`, then the post-ranking
+    `better_than` filter — `topk_per_query` plus `batch_query`'s
+    threshold, shared by both stores' `query_local`. NaN passes the
+    threshold, as in Spark's ordering."""
+    pick = _group_topk(np.zeros(len(scores), dtype=np.intp), scores, top_k)
+    key = np.where(np.isnan(scores), np.inf, scores)
+    order = sorted(pick, key=lambda i: (-key[i], str(ids[i])))[:top_k]
     return [
         {K_ID: str(ids[i]), K_METRICS: float(scores[i]), "rank": r + 1}
         for r, i in enumerate(order)
+        if better_than is None or not scores[i] < float(better_than)
     ]
 
 
 class ResidentGemmStore:
-    """Pin a store's vectors node-locally as unit float32 blocks and
-    serve repeated top-k query batches against them.
+    """Pin a store's vectors node-locally as blocks and serve repeated
+    top-k query batches against them.
 
     Usage::
 
@@ -213,8 +311,12 @@ class ResidentGemmStore:
         hits = rs.query(queries_df, top_k=10)   # cheap, repeatable
         rs.close()                              # drop the shm blocks
 
-    Scores are float32 (the reference's own precision), rounded to
-    `round_to`; ranking ties break by id exactly like `batch_query`.
+    Float blocks (`block_dtype="float32"`, the default) hold the store's
+    raw rows in its own element type plus their float32 squared norms,
+    and both `query` and `query_local` run the certified top-k kernel
+    (`kernels.certified_topk`): rows, scores and ranks equal
+    `batch_query`'s bit for bit. `block_dtype="int8"` is an approximate
+    footprint mode.
     """
 
     def __init__(
@@ -242,7 +344,7 @@ class ResidentGemmStore:
         # runs over the block partitions; if any expected block is gone
         # (preempted node, reaped tmpfs) the batch is served by the
         # exact store scan (`batch_query(method="gemm")`) instead of
-        # failing — identical results for float32 blocks; for int8
+        # failing — identical results for float blocks; for int8
         # blocks the degraded batch gets EXACT scores instead of the
         # quantized ones (better quality, not bit-stable across the
         # transition). "fail" (default) keeps the serving-tier
@@ -251,7 +353,8 @@ class ResidentGemmStore:
         self.on_missing = on_missing
         # "int8": blocks hold symmetric per-row int8 codes + a float32
         # scale column (max|x|/127 — the same rule as
-        # functions.vector.quantize_int8) — 4× more store per serving
+        # functions.vector.quantize_int8) of the unit rows (normalized
+        # in float32 unless `normalized`) — 4× more store per serving
         # node at ~1e-3 cosine error on unit vectors. Scoring rescales
         # the integer dot: score = scale_i · (q · codes_i). An
         # APPROXIMATE serving mode by construction — accuracy is
@@ -288,9 +391,10 @@ class ResidentGemmStore:
     # ------------------------------------------------------------ lifecycle
 
     def materialize(self) -> int:
-        """One job over the store: each task normalizes its partition to a
-        float32 block and writes (ids.npy, mat.npy) atomically under the
-        node-local resident dir. Returns the total row count."""
+        """One job over the store: each task writes its partition's block
+        (ids.npy, mat.npy and norm2.npy, or int8 codes in mat.npy and
+        scales.npy) atomically under the node-local resident dir.
+        Returns the total row count."""
         # re-materializing must invalidate the in-process serving cache:
         # unlinked files stay readable through live mmaps, so a stale
         # cache would silently keep serving the PREVIOUS materialization
@@ -312,33 +416,14 @@ class ResidentGemmStore:
                 if n == 0:
                     continue
                 vals = batch.column(1).flatten().to_numpy(zero_copy_only=False)
-                mat = vals.reshape(n, -1).astype(np.float32)
-                if not pre_normalized:
-                    norms = np.sqrt((mat * mat).sum(axis=1))
-                    zero = norms == 0.0
-                    if zero.any():  # zero vector ⇒ e₀ (pico_vdb.py:62-67)
-                        mat[zero] = 0.0
-                        mat[zero, 0] = 1.0
-                        norms[zero] = 1.0
-                    mat /= norms[:, None]
                 ids_parts.append(batch.column(0).to_numpy(zero_copy_only=False))
-                mat_parts.append(mat)
+                mat_parts.append(vals.reshape(n, -1))
             rows = 0
             if mat_parts:
                 ids = np.concatenate(ids_parts)
                 mat = np.ascontiguousarray(np.vstack(mat_parts))
                 rows = len(ids)
-                artifacts = [("ids", ids)]
-                if as_int8:
-                    codes, scales = _quantize_rows_int8(mat)
-                    artifacts += [("mat", codes), ("scales", scales)]
-                else:
-                    artifacts += [("mat", mat)]
-                os.makedirs(blk_dir, exist_ok=True)
-                for name, arr in artifacts:
-                    tmp = os.path.join(blk_dir, f".{name}_{pid}.tmp.npy")
-                    np.save(tmp, arr, allow_pickle=(name == "ids"))
-                    os.replace(tmp, os.path.join(blk_dir, f"{name}_{pid}.npy"))
+                _write_block(blk_dir, pid, mat, as_int8, pre_normalized, ids=ids)
             yield pa.RecordBatch.from_arrays(
                 [pa.array([pid], type=pa.int32()), pa.array([rows], type=pa.int64())],
                 names=["pid", "rows"],
@@ -355,29 +440,9 @@ class ResidentGemmStore:
         return self.n_rows
 
     def close(self) -> None:
-        """Remove the shm blocks. Cleanup runs distributed (one pass over
-        the store's partitions — the same executors that wrote blocks,
-        by cache locality) AND on the driver; best-effort by nature: a
-        node whose executor is gone keeps its tmpfs blocks until reboot,
-        which is why the dir name carries a unique token (stale dirs are
-        identifiable and never collide with a new store's)."""
-        blk_dir = self.dir
-
-        def rm(batches: Iterator) -> Iterator:
-            import pyarrow as pa
-
-            shutil.rmtree(blk_dir, ignore_errors=True)
-            yield pa.RecordBatch.from_arrays([pa.array([1])], names=["ok"])
-            for _ in batches:
-                pass
-
-        try:
-            self.store.select(F.lit(True).alias("__probe")).mapInArrow(
-                rm, schema="ok long"
-            ).count()
-        except Exception:
-            pass  # session gone — driver-side cleanup still runs
-        shutil.rmtree(self.dir, ignore_errors=True)
+        """Remove the shm blocks, distributed and on the driver
+        (`_remove_blocks`)."""
+        _remove_blocks(self.store, self.dir)
         # drop the in-process serving cache AND the materialized marker:
         # the cache's mmaps point at removed files, and a closed store
         # must fail loudly ("not materialized") from every entry point —
@@ -415,7 +480,8 @@ class ResidentGemmStore:
     ) -> DataFrame:
         """Batch top-k cosine against the resident blocks. Output shape
         matches `batch_query(method="gemm")`: (query_id, _id_, _metrics_,
-        rank), score rounded to `round_to`, ties by id."""
+        rank), score rounded to `round_to`, ties by id; on float blocks
+        the rows equal `batch_query`'s."""
         from picovdb_spark.operators.similarity import collect_normalized_queries
         from picovdb_spark.operators.topk import topk_per_query
 
@@ -428,14 +494,11 @@ class ResidentGemmStore:
             self.on_missing == "fallback" and self._probe_ok and self.auto_rearm
         )
         if self.on_missing == "fallback" and not self._probe_ok:
-            artifacts = ("mat", "ids") + (
-                ("scales",) if self.block_dtype == "int8" else ()
-            )
             missing = _probe_missing_blocks(
                 self.store.select(F.lit(True).alias("__probe")),
                 self.dir,
-                getattr(self, "block_pids", frozenset()),
-                artifacts,
+                self.block_pids,
+                _block_artifacts(self.block_dtype == "int8"),
             )
             if not missing and self.probe_cache:
                 # healthy: remember it — per-batch probes cost one extra
@@ -459,7 +522,7 @@ class ResidentGemmStore:
                 # to the resident path (no metadata join-back); the query
                 # side realigns its vector column to the store's so
                 # batch_query's single vector_col fits both. NOTE for
-                # int8 blocks: this serves EXACT float32 scores for the
+                # int8 blocks: this serves EXACT scores for the
                 # degraded batch, not the quantized ~1e-3-error scores
                 # the resident path returns — better quality, but not
                 # bit-stable across the transition.
@@ -475,8 +538,6 @@ class ResidentGemmStore:
                     top_k=top_k,
                     better_than=better_than,
                     method="gemm",
-                    normalized=self.normalized,
-                    score_dtype="float32",
                     round_to=round_to,
                     query_id=query_id,
                     vector_col=self.vector_col,
@@ -485,80 +546,43 @@ class ResidentGemmStore:
         qids, qmat = collect_normalized_queries(
             queries, query_id, vector_col or self.vector_col
         )
-        if qmat.size == 0:
+        if qmat.size == 0 or top_k <= 0:
             return spark.createDataFrame(
-                [], schema=f"query_id string, {K_ID} string, {K_METRICS} double, rank int"
+                [], schema=f"{_HITS}, rank int"
             )
-        bc = spark.sparkContext.broadcast((qids, qmat.astype(np.float32)))
+        bc = spark.sparkContext.broadcast((qids, qmat))
         blk_dir = self.dir
-        block_pids = getattr(self, "block_pids", None)
+        block_pids = self.block_pids
         as_int8 = self.block_dtype == "int8"
-        pad = 1.5 * 10.0 ** (-round_to)
+        need = _block_artifacts(as_int8)
 
         def score_block(batches: Iterator) -> Iterator:
-            import pyarrow as pa
             from pyspark import TaskContext
 
             pid = TaskContext.get().partitionId()
             for batch in batches:  # drain the (constant-column) input
                 pass
-            mat_path = os.path.join(blk_dir, f"mat_{pid}.npy")
-            if block_pids is not None and pid not in block_pids:
-                if not os.path.exists(mat_path):
-                    return  # legitimately empty: materialize wrote no block
-            # every artifact the loads below touch, checked up front: a
-            # partition that lost only its ids/scales sidecar must fail
-            # with the SAME canonical message the auto-re-arm matches on
-            # (silently skipping would drop its vectors from every answer)
-            need = ["mat", "ids"] + (["scales"] if as_int8 else [])
-            lost = [
-                a
-                for a in need
-                if not os.path.exists(os.path.join(blk_dir, f"{a}_{pid}.npy"))
-            ]
-            if lost:
-                raise RuntimeError(
-                    f"[resident-block-missing] artifact(s) {lost} for "
-                    f"partition {pid} under {blk_dir} — store closed, "
-                    "partitioning changed since materialize(), or this task "
-                    "ran on a node that never materialized; re-materialize() "
-                    "or use batch_query()"
-                )
-            # mmap: pages shared node-wide via the OS page cache — no copy
-            mat = np.load(mat_path, mmap_mode="r")
-            ids = np.load(os.path.join(blk_dir, f"ids_{pid}.npy"), allow_pickle=True)
-            b_qids, b_qmat = bc.value
+            blk = _load_block(blk_dir, pid, need, block_pids=block_pids)
+            if blk is None:
+                return  # legitimately empty: materialize wrote no block
+            mat, ids, side = blk["mat"], blk["ids"], blk[need[-1]]
+            b_qids, q64 = bc.value
+            q32 = q64.astype(np.float32)
             if as_int8:
                 # rescaled integer dot: score = scale_i · (q · codes_i).
                 # The f32 cast materializes the block per pass (CPU cost);
                 # the int8 win is the 4× smaller RESIDENT footprint
-                scales = np.load(os.path.join(blk_dir, f"scales_{pid}.npy"))
-                scores = (b_qmat @ mat.T.astype(np.float32)) * scales[None, :]
+                scores = (q32 @ mat.T.astype(np.float32)) * side[None, :]
+                qi, vi, sel = _padded_topk(scores, top_k, round_to)
             else:
-                scores = b_qmat @ mat.T  # float32 (nq, n_block)
-            n = scores.shape[1]
-            kk = min(top_k, n)
-            # raw-score selection with a rounding pad — tie-complete after
-            # rounding (see similarity._gemm_topk)
-            kth = np.partition(scores, n - kk, axis=1)[:, n - kk]
-            qi, vi = np.nonzero(scores >= (kth - pad)[:, None])
-            sel = np.round(scores[qi, vi].astype(np.float64), round_to)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(b_qids[qi], type=pa.string()),
-                    pa.array(ids[vi], type=pa.string()),
-                    pa.array(sel, type=pa.float64()),
-                ],
-                names=["query_id", K_ID, K_METRICS],
-            )
+                qi, vi, sel = certified_topk(q64, q32, mat, top_k, round_to, norm2=side)
+            yield _hits_batch(b_qids[qi], ids[vi], sel)
 
         # pruned probe of the cached store: the columnar cache serves only
         # the constant column (no vector bytes cross JVM→Python); the scan
         # keeps the store's partition ids and cache locality
         probe = self.store.select(F.lit(True).alias("__probe"))
-        local = probe.mapInArrow(
-            score_block, schema=f"query_id string, {K_ID} string, {K_METRICS} double"
-        )
+        local = probe.mapInArrow(score_block, schema=_HITS)
         out = topk_per_query(local, top_k)
         if better_than is not None:
             out = out.filter(F.col(K_METRICS) >= F.lit(float(better_than)))
@@ -580,58 +604,43 @@ class ResidentGemmStore:
 
     def _local_blocks(self):
         """mmap every resident block from THIS process; loaded once,
-        cached. int8 blocks are cast to float32 ONCE here — a per-query
-        cast would re-materialize the whole store every call, and unlike
-        the IVF store there is no probed subset to cache hot segments
-        of. The serving process therefore trades store-sized RAM for
-        GEMV speed; the 4× int8 density still applies to the shm blocks
-        the DISTRIBUTED path reads."""
+        cached, as ([(rows, norm2 or None)] per block, all ids). int8
+        blocks are cast to scaled float32 ONCE here — a per-query cast
+        would re-materialize the whole store every call, and unlike the
+        IVF store there is no probed subset to cache hot segments of.
+        The serving process therefore trades store-sized RAM for GEMV
+        speed; the 4× int8 density still applies to the shm blocks the
+        DISTRIBUTED path reads."""
         cached = getattr(self, "_local_cache", None)
         if cached is not None:
             return cached
         if self.n_rows is None:
             raise RuntimeError("resident store not materialized — call materialize()")
-        artifacts = ("mat", "ids") + (
-            ("scales",) if self.block_dtype == "int8" else ()
-        )
-        mats, id_parts = [], []
+        as_int8 = self.block_dtype == "int8"
+        blocks, id_parts = [], []
         for pid in sorted(self.block_pids):
-            paths = {
-                name: os.path.join(self.dir, f"{name}_{pid}.npy") for name in artifacts
-            }
-            lost = sorted(n for n, p in paths.items() if not os.path.exists(p))
-            if lost:
-                raise RuntimeError(
-                    f"resident block artifact(s) {lost} for partition {pid} not "
-                    f"visible from this process ({self.dir}) — query_local() "
-                    "serves from node-local blocks and must run co-resident "
-                    "with them (a serving node); re-materialize() or use "
-                    "query() for the distributed path"
-                )
-            mat = np.load(paths["mat"], mmap_mode="r")
-            ids = np.load(paths["ids"], allow_pickle=True)
-            if self.block_dtype == "int8":
-                scales = np.load(paths["scales"])
+            blk = _load_block(self.dir, pid, _block_artifacts(as_int8), local=True)
+            mat = blk["mat"]
+            if as_int8:
                 # float32 copy scaled ONCE: (codes * scale_i) is exactly
                 # what the distributed kernel's per-query rescale yields,
                 # modulo multiplication order — see query_local docstring.
                 # In-place multiply: the copy-then-multiply form would
                 # transiently hold TWO float32 stores.
                 mat = np.ascontiguousarray(mat, dtype=np.float32)
-                mat *= scales[:, None]
+                mat *= blk["scales"][:, None]
+                blocks.append((mat, None))
             else:
                 # prefault: touch one element per row so first queries
                 # measure GEMV, not page-in
                 float(np.asarray(mat[:, 0]).astype(np.float32).sum())
-            mats.append(mat)
-            id_parts.append(ids)
-        ids_all = (
-            np.concatenate(id_parts) if id_parts else np.empty(0, dtype=object)
-        )
+                blocks.append((mat, blk["norm2"]))
+            id_parts.append(blk["ids"])
         # ids pre-concatenated once: blocks are immutable after load, and
         # a per-query concatenate of a store-sized object array is pure
         # hot-loop waste
-        self._local_cache = (mats, ids_all)
+        ids_all = np.concatenate(id_parts) if id_parts else np.empty(0, dtype=object)
+        self._local_cache = (blocks, ids_all)
         return self._local_cache
 
     def query_local(
@@ -642,26 +651,32 @@ class ResidentGemmStore:
         better_than: float | None = None,
         round_to: int = 6,
     ) -> list[dict]:
-        """Exact single-query serving WITHOUT a Spark job: one GEMV over
-        every node-local block — the EXACT-path analog of
-        `ResidentIvfStore.query_local` (which routes), and the serving
-        twin of the reference's in-process exact scan
-        (pico_vdb.py:680-713, its "100 single queries = 0.8-1.5 s" bench
-        regime). Same blocks, semantics, and tie rule as `query()`; a
-        score can differ by one float32 ulp at the rounding boundary
-        because GEMV and the distributed batched GEMM accumulate in
-        different orders (and, for int8, the scale multiplies the f32
-        copy once here vs per-dot there) — tolerance-pinned in tests.
+        """Exact single-query serving WITHOUT a Spark job: one certified
+        top-k (`kernels.certified_topk`) over every node-local block —
+        the EXACT-path analog of `ResidentIvfStore.query_local` (which
+        routes), and the serving twin of the reference's in-process
+        exact scan (pico_vdb.py:680-713, its "100 single queries =
+        0.8-1.5 s" bench regime). On float blocks the answer equals
+        `query()` and `batch_query` bit for bit. int8 blocks select with
+        the padded rule on approximate scores (`_padded_topk`), and a
+        score can differ from `query()`'s by one float32 ulp (the scale
+        multiplies the f32 copy once here vs per-dot there) —
+        tolerance-pinned in tests.
 
         Returns [{'_id_', '_metrics_', 'rank'}, ...] best-first."""
-        mats, ids_all = self._local_blocks()
-        if not mats:
+        blocks, ids_all = self._local_blocks()
+        if not blocks or top_k <= 0:
             return []
-        q32 = _normalize_local_query(vector).astype(np.float32)
-        scores = np.concatenate([mat @ q32 for mat in mats])
-        return _local_topk(
-            scores, ids_all, top_k=top_k, better_than=better_than, round_to=round_to
-        )
+        q64 = _unit_rows(np.asarray(vector, dtype=np.float64).reshape(1, -1))
+        q32 = q64.astype(np.float32)
+        mats = [mat for mat, _ in blocks]
+        if self.block_dtype == "int8":
+            scores = np.concatenate([mat @ q32[0] for mat in mats])
+            _, vi, score = _padded_topk(scores[None, :], top_k, round_to)
+        else:
+            norms = [norm2 for _, norm2 in blocks]
+            _, vi, score = certified_topk(q64, q32, mats, top_k, round_to, norm2=norms)
+        return _rank_local(ids_all[vi], score, top_k=top_k, better_than=better_than)
 
 
 class ResidentIvfStore:
@@ -681,18 +696,21 @@ class ResidentIvfStore:
        broadcasts with the query matrix. A task then scores each of its
        cluster segments against ONLY the queries probing that cluster —
        total scored work is `nprobe / n_centroids` of the exact pass,
-       while the per-(query, cluster) tie-padded partial top-k keeps the
-       global merge identical to the exact kernel's.
+       while the per-(query, cluster) certified top-k
+       (`kernels.certified_topk`) keeps the global merge identical to
+       the exact kernel's.
 
-    Full probe (`nprobe >= n_centroids`) routes every query to every
-    cluster and is therefore EXACTLY the brute-force result — that is
-    the oracle-checked configuration; partial-probe recall is a pytest
-    band (mirrors the reference's tests/test_task14 FAISS-vs-numpy
-    recall assertions).
+    Float blocks (`dtype="float32"` or `"float64"`, the same mode) hold
+    the store's raw rows in its own element type plus their float32
+    squared norms. Full probe (`nprobe >= n_centroids`) routes every
+    query to every cluster, and `query` and `query_local` then equal
+    `batch_query` bit for bit — that is the oracle-checked
+    configuration; partial-probe recall is a pytest band (mirrors the
+    reference's tests/test_task14 FAISS-vs-numpy recall assertions).
 
     Scale: the routing table is O(nq * nprobe) ints and the query
-    matrix O(nq * dim) float32 — both broadcast-sized by construction
-    (a 1M-query batch at dim 1024 is 4 GB and should be chunked by the
+    matrix O(nq * dim) float64 — both broadcast-sized by construction
+    (a 1M-query batch at dim 1024 is 8 GB and should be chunked by the
     caller). Blocks are whole inverted lists, so skewed clusters skew
     blocks; `n_blocks` > n_centroids spreads nothing (a cluster is
     atomic here) — keep n_centroids >= ~8x parallelism, the standard
@@ -721,7 +739,8 @@ class ResidentIvfStore:
         # 4× more inverted lists per serving node at ~1e-3 cosine error;
         # queries stay float32 and scores are rescaled integer dots.
         # Approximate by construction: recall-band tested, not
-        # oracle-checked (float32/float64 remain the exact modes).
+        # oracle-checked. "float32" and "float64" are one exact mode:
+        # raw rows in the store's element type, certified scoring.
         # `local_cache_bytes` bounds query_local's hot-segment float32
         # cache in int8 mode (0 disables): the STORE keeps its 4× density
         # in shm; the serving process trades up to this much RAM to skip
@@ -774,11 +793,12 @@ class ResidentIvfStore:
     def materialize(self) -> int:
         """Fit (or accept) centroids, assign clusters executor-side,
         repartition by cluster, and write per-partition blocks of whole
-        inverted lists: (ids.npy, mat.npy unit-normalized in `dtype` —
-        float32 serving default, float64 for oracle-exact parity with
-        the double-scoring SQL path, int8 codes + scales.npy for 4x
-        density — clus.npy sorted int32). One shuffle of the vector column — the same cost as any
-        IVF build's cluster-layout write (ann.IvfIndex.write)."""
+        inverted lists: ids.npy, clus.npy (sorted int32) and either the
+        raw rows (mat.npy) with their float32 squared norms (norm2.npy)
+        or, for int8, the codes of the float32-normalized rows with
+        scales.npy for 4x density. One shuffle of the vector column —
+        the same cost as any IVF build's cluster-layout write
+        (ann.IvfIndex.write)."""
         from picovdb_spark.operators.ann import assign_clusters, fit_centroids
 
         # re-materializing must invalidate the in-process serving caches:
@@ -807,17 +827,13 @@ class ResidentIvfStore:
         self._blocks_df = blocks
         blk_dir = self.dir
         vec_col, id_col = self.vector_col, self.id_col
-        blk_dtype = self.dtype
+        as_int8 = self.dtype == "int8"
 
         def write_block(batches: Iterator) -> Iterator:
             import pyarrow as pa
             from pyspark import TaskContext
 
             pid = TaskContext.get().partitionId()
-            as_int8 = blk_dtype == "int8"
-            # int8 blocks normalize in float32 and quantize AFTER the
-            # cluster sort; exact modes normalize in the block dtype
-            work_dtype = "float32" if as_int8 else blk_dtype
             ids_parts, mat_parts, clus_parts = [], [], []
             for batch in batches:
                 n = batch.num_rows
@@ -825,16 +841,8 @@ class ResidentIvfStore:
                     continue
                 cols = {name: i for i, name in enumerate(batch.schema.names)}
                 vals = batch.column(cols[vec_col]).flatten().to_numpy(zero_copy_only=False)
-                mat = vals.reshape(n, -1).astype(work_dtype)
-                norms = np.sqrt((mat * mat).sum(axis=1))
-                zero = norms == 0.0
-                if zero.any():  # zero vector => e0 (pico_vdb.py:62-67)
-                    mat[zero] = 0.0
-                    mat[zero, 0] = 1.0
-                    norms[zero] = 1.0
-                mat /= norms[:, None]
                 ids_parts.append(batch.column(cols[id_col]).to_numpy(zero_copy_only=False))
-                mat_parts.append(mat)
+                mat_parts.append(vals.reshape(n, -1))
                 clus_parts.append(
                     batch.column(cols["__cluster"]).to_numpy(zero_copy_only=False)
                 )
@@ -846,17 +854,7 @@ class ResidentIvfStore:
                 order = np.argsort(clus, kind="stable")
                 ids, mat, clus = ids[order], np.ascontiguousarray(mat[order]), clus[order]
                 rows = len(ids)
-                artifacts = [("ids", ids), ("clus", clus)]
-                if as_int8:
-                    codes, scales = _quantize_rows_int8(mat)
-                    artifacts += [("mat", codes), ("scales", scales)]
-                else:
-                    artifacts += [("mat", mat)]
-                os.makedirs(blk_dir, exist_ok=True)
-                for name, arr in artifacts:
-                    tmp = os.path.join(blk_dir, f".{name}_{pid}.tmp.npy")
-                    np.save(tmp, arr, allow_pickle=(name == "ids"))
-                    os.replace(tmp, os.path.join(blk_dir, f"{name}_{pid}.npy"))
+                _write_block(blk_dir, pid, mat, as_int8, False, ids=ids, clus=clus)
             yield pa.RecordBatch.from_arrays(
                 [pa.array([pid], type=pa.int32()), pa.array([rows], type=pa.int64())],
                 names=["pid", "rows"],
@@ -868,23 +866,8 @@ class ResidentIvfStore:
         return self.n_rows
 
     def close(self) -> None:
-        blk_dir = self.dir
-
-        def rm(batches: Iterator) -> Iterator:
-            import pyarrow as pa
-
-            shutil.rmtree(blk_dir, ignore_errors=True)
-            yield pa.RecordBatch.from_arrays([pa.array([1])], names=["ok"])
-            for _ in batches:
-                pass
-
         if self._blocks_df is not None:
-            try:
-                self._blocks_df.select(F.lit(True).alias("__probe")).mapInArrow(
-                    rm, schema="ok long"
-                ).count()
-            except Exception:
-                pass
+            _remove_blocks(self._blocks_df, self.dir)
             try:
                 self._blocks_df.unpersist()
             except Exception:
@@ -927,12 +910,7 @@ class ResidentIvfStore:
         """Routed batch top-k over the probed clusters only. Output shape
         matches `ResidentGemmStore.query` / `batch_query(method="gemm")`:
         (query_id, _id_, _metrics_, rank); with `nprobe >= n_centroids`
-        the result equals exact top-k (identical ids and ranks; scores
-        can differ by one final-rounding quantum in float32 mode, where
-        BLAS kernel dispatch is shape-dependent and the per-cluster
-        segment GEMMs use different shapes than a whole-block scan —
-        see tests/test_resident.py::test_resident_ivf_full_probe_equals_exact;
-        float64 mode is equal after round_to for any practical input)."""
+        float blocks return exactly `batch_query`'s rows and scores."""
         from picovdb_spark.operators.similarity import collect_normalized_queries
         from picovdb_spark.operators.topk import topk_per_query
 
@@ -943,14 +921,11 @@ class ResidentIvfStore:
             self.on_missing == "fallback" and self._probe_ok and self.auto_rearm
         )
         if self.on_missing == "fallback" and not self._probe_ok:
-            artifacts = ("mat", "ids", "clus") + (
-                ("scales",) if self.dtype == "int8" else ()
-            )
             missing = _probe_missing_blocks(
                 self._blocks_df.select(F.lit(True).alias("__probe")),
                 self.dir,
                 self.block_pids,
-                artifacts,
+                _block_artifacts(self.dtype == "int8", "clus"),
             )
             if not missing and self.probe_cache:
                 self._probe_ok = True
@@ -976,7 +951,6 @@ class ResidentIvfStore:
                     ),
                     top_k=top_k,
                     method="gemm",
-                    score_dtype="float32" if self.dtype != "float64" else "float64",
                     round_to=round_to,
                     query_id=query_id,
                     vector_col=self.vector_col,
@@ -985,14 +959,11 @@ class ResidentIvfStore:
         qids, qmat = collect_normalized_queries(
             queries, query_id, vector_col or self.vector_col
         )
-        if qmat.size == 0:
+        if qmat.size == 0 or top_k <= 0:
             return spark.createDataFrame(
-                [], schema=f"query_id string, {K_ID} string, {K_METRICS} double, rank int"
+                [], schema=f"{_HITS}, rank int"
             )
-        # queries stay full-precision in int8 mode (asymmetric scoring:
-        # float query · int8 codes, rescaled)
-        q_dtype = "float32" if self.dtype == "int8" else self.dtype
-        q32 = np.ascontiguousarray(qmat.astype(q_dtype))
+        q32 = qmat.astype(np.float32)
         k = len(self._cent32)
         npb = min(nprobe, k)
         nq = len(q32)
@@ -1006,47 +977,24 @@ class ResidentIvfStore:
         starts = np.searchsorted(sort_c, np.arange(k))
         ends = np.searchsorted(sort_c, np.arange(k), side="right")
 
-        bc = spark.sparkContext.broadcast((qids, q32, sort_q, starts, ends))
+        bc = spark.sparkContext.broadcast((qids, qmat, sort_q, starts, ends))
         blk_dir = self.dir
         block_pids = self.block_pids
         as_int8 = self.dtype == "int8"
-        pad = 1.5 * 10.0 ** (-round_to)
+        need = _block_artifacts(as_int8, "clus")
 
         def score_block(batches: Iterator) -> Iterator:
-            import pyarrow as pa
             from pyspark import TaskContext
 
             pid = TaskContext.get().partitionId()
             for batch in batches:
                 pass
-            mat_path = os.path.join(blk_dir, f"mat_{pid}.npy")
-            if pid not in block_pids:
-                if not os.path.exists(mat_path):
-                    return
-            # all artifacts checked up front — see ResidentGemmStore's
-            # kernel for why a lost sidecar must raise the same
-            # canonical sentinel-tagged message the auto-re-arm matches
-            need = ["mat", "ids", "clus"] + (["scales"] if as_int8 else [])
-            lost = [
-                a
-                for a in need
-                if not os.path.exists(os.path.join(blk_dir, f"{a}_{pid}.npy"))
-            ]
-            if lost:
-                raise RuntimeError(
-                    f"[resident-block-missing] IVF artifact(s) {lost} for "
-                    f"partition {pid} under {blk_dir} — store closed, "
-                    "partitioning changed since materialize(), or this task "
-                    "ran on a node that never materialized; re-materialize() "
-                    "or use ann_query()"
-                )
-            mat = np.load(mat_path, mmap_mode="r")
-            ids = np.load(os.path.join(blk_dir, f"ids_{pid}.npy"), allow_pickle=True)
-            clus = np.load(os.path.join(blk_dir, f"clus_{pid}.npy"))
-            scales = (
-                np.load(os.path.join(blk_dir, f"scales_{pid}.npy")) if as_int8 else None
-            )
-            b_qids, b_q32, b_sq, b_st, b_en = bc.value
+            blk = _load_block(blk_dir, pid, need, block_pids=block_pids)
+            if blk is None:
+                return
+            mat, ids, clus, side = blk["mat"], blk["ids"], blk["clus"], blk[need[-1]]
+            b_qids, b_q64, b_sq, b_st, b_en = bc.value
+            b_q32 = b_q64.astype(np.float32)
             seg_clusters, seg_starts = np.unique(clus, return_index=True)
             seg_bounds = np.append(seg_starts, len(clus))
             out_q, out_v, out_s = [], [], []
@@ -1055,38 +1003,28 @@ class ResidentIvfStore:
                 if len(qidx) == 0:
                     continue
                 s, e = seg_bounds[ci], seg_bounds[ci + 1]
-                if scales is not None:
+                if as_int8:
                     # rescaled integer dot: score = scale_i · (q · codes_i)
                     scores = (
                         b_q32[qidx] @ mat[s:e].T.astype(np.float32)
-                    ) * scales[s:e][None, :]
+                    ) * side[s:e][None, :]
+                    qi, vi, score = _padded_topk(scores, top_k, round_to)
                 else:
-                    scores = b_q32[qidx] @ mat[s:e].T  # (nq_c, n_seg)
-                n = scores.shape[1]
-                kk = min(top_k, n)
-                kth = np.partition(scores, n - kk, axis=1)[:, n - kk]
-                qi, vi = np.nonzero(scores >= (kth - pad)[:, None])
+                    qi, vi, score = certified_topk(
+                        b_q64[qidx], b_q32[qidx], mat[s:e], top_k, round_to, norm2=side[s:e]
+                    )
                 out_q.append(qidx[qi])
                 out_v.append(vi + s)
-                out_s.append(scores[qi, vi])
+                out_s.append(score)
             if not out_q:
                 return
             oq = np.concatenate(out_q)
             ov = np.concatenate(out_v)
-            osc = np.round(np.concatenate(out_s).astype(np.float64), round_to)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(b_qids[oq], type=pa.string()),
-                    pa.array(ids[ov], type=pa.string()),
-                    pa.array(osc, type=pa.float64()),
-                ],
-                names=["query_id", K_ID, K_METRICS],
-            )
+            osc = np.concatenate(out_s)
+            yield _hits_batch(b_qids[oq], ids[ov], osc)
 
         probe = self._blocks_df.select(F.lit(True).alias("__probe"))
-        local = probe.mapInArrow(
-            score_block, schema=f"query_id string, {K_ID} string, {K_METRICS} double"
-        )
+        local = probe.mapInArrow(score_block, schema=_HITS)
         return _serve_with_rearm(
             self,
             topk_per_query(local, top_k),
@@ -1112,32 +1050,16 @@ class ResidentIvfStore:
             return cached
         if self.n_rows is None:
             raise RuntimeError("resident IVF store not materialized — call materialize()")
-        artifacts = ("mat", "ids", "clus") + (
-            ("scales",) if self.dtype == "int8" else ()
-        )
+        artifacts = _block_artifacts(self.dtype == "int8", "clus")
         blocks, segmap = [], {}
         for pid in sorted(self.block_pids):
-            paths = {
-                name: os.path.join(self.dir, f"{name}_{pid}.npy") for name in artifacts
-            }
-            lost = sorted(n for n, p in paths.items() if not os.path.exists(p))
-            if lost:
-                raise RuntimeError(
-                    f"resident IVF block artifact(s) {lost} for partition {pid} "
-                    f"not visible from this process ({self.dir}) — query_local() "
-                    "serves from node-local blocks and must run co-resident "
-                    "with them (a serving node); re-materialize() or use "
-                    "query() for the distributed path"
-                )
-            mat = np.load(paths["mat"], mmap_mode="r")
+            blk = _load_block(self.dir, pid, artifacts, local=True)
+            mat, clus = blk["mat"], blk["clus"]
             # prefault: touch one element per row (rows span >= a page at
             # serving dims) so first queries measure GEMV, not page-in
             float(np.asarray(mat[:, 0]).astype(np.float32).sum())
-            ids = np.load(paths["ids"], allow_pickle=True)
-            clus = np.load(paths["clus"])
-            scales = np.load(paths["scales"]) if self.dtype == "int8" else None
             bi = len(blocks)
-            blocks.append((mat, ids, scales))
+            blocks.append((mat, blk["ids"], blk[artifacts[-1]]))
             seg_clusters, seg_starts = np.unique(clus, return_index=True)
             bounds = np.append(seg_starts, len(clus))
             for ci, c in enumerate(seg_clusters):
@@ -1179,57 +1101,50 @@ class ResidentIvfStore:
         round_to: int = 6,
     ) -> list[dict]:
         """Single-query serving WITHOUT a Spark job: route on the
-        centroids, GEMV only the probed clusters' segments of the
-        node-local blocks, merge top-k in-process. This is the serving-
-        tier analog of the reference's in-process FAISS path
-        (pico_vdb.py:716-751) — same latency class (milliseconds), same
-        data as `query()` (identical blocks, semantics, tie rule; a
-        score can differ by one ulp at the rounding boundary because
-        GEMV and the distributed batched GEMM accumulate float32 in
-        different orders — tolerance-pinned in tests/test_resident.py).
+        centroids, run the certified top-k (`kernels.certified_topk`)
+        over only the probed clusters' segments of the node-local
+        blocks, merge top-k in-process. This is the serving-tier analog
+        of the reference's in-process FAISS path (pico_vdb.py:716-751) —
+        same latency class (milliseconds), same data and answer as
+        `query()` (identical blocks, routing, kernel and tie rule; bit
+        for bit on float blocks; int8 scores can differ by one float32
+        ulp, tolerance-pinned in tests/test_resident.py).
 
         Requires every block to be visible from this process (true in
         local mode and on a serving node holding the store's shards; a
         partial node must use the distributed `query()`). Returns
         [{'_id_', '_metrics_', 'rank'}, ...] best-first."""
         blocks, segmap = self._local_blocks()
-        # normalize in float64 THEN cast — the exact sequence of
-        # collect_normalized_queries + query()'s astype, so scores agree
-        # to the last bit with the distributed path
-        q = _normalize_local_query(vector).astype(
-            "float32" if self.dtype == "int8" else self.dtype
-        )
+        if top_k <= 0:
+            return []
+        q64 = _unit_rows(np.asarray(vector, dtype=np.float64).reshape(1, -1))
+        q32 = q64.astype(np.float32)
         k = len(self._cent32)
         npb = min(nprobe, k)
-        # route on the FLOAT centroids, exactly like query()'s routing
-        # GEMM — casting them to the block dtype would truncate every
-        # component to 0 in int8 mode (|x| < 1) and probe arbitrary
-        # clusters
-        cscores = self._cent32 @ q
+        # route on the FLOAT centroids with the float32 query, exactly
+        # like query()'s routing GEMM — casting them to the block dtype
+        # would truncate every component to 0 in int8 mode (|x| < 1) and
+        # probe arbitrary clusters
+        cscores = self._cent32 @ q32[0]
         probed = np.argpartition(-cscores, npb - 1)[:npb]
-        cand_ids: list[np.ndarray] = []
-        cand_scores: list[np.ndarray] = []
+        segs, sides, seg_ids = [], [], []
         for c in probed:
             for bi, s, e in segmap.get(int(c), ()):
-                mat, ids, scales = blocks[bi]
-                if scales is not None:
-                    # int8 segment: GEMV needs float32, and the cast is
-                    # ~4× the GEMV itself — serve hot segments from a
-                    # byte-bounded FIFO cache (the store keeps its 4×
-                    # int8 density; only this process's hot set is f32).
-                    # Scales multiply AFTER the dot, same order as the
-                    # distributed kernel, so scores agree to the ulp.
-                    seg = self._hot_segment(bi, s, e, mat)
-                    cand_scores.append((seg @ q) * scales[s:e])
-                else:
-                    cand_scores.append(mat[s:e] @ q)
-                cand_ids.append(ids[s:e])
-        if not cand_ids:
+                mat, ids, side = blocks[bi]
+                # an int8 segment is served from a byte-bounded FIFO cache
+                # of float32 casts (the cast is ~4× the GEMV itself; the
+                # store keeps its 4× int8 density, only this process's hot
+                # set is f32)
+                segs.append(self._hot_segment(bi, s, e, mat) if self.dtype == "int8" else mat[s:e])
+                sides.append(side[s:e])
+                seg_ids.append(ids[s:e])
+        if not segs:
             return []
-        return _local_topk(
-            np.concatenate(cand_scores),
-            np.concatenate(cand_ids),
-            top_k=top_k,
-            better_than=better_than,
-            round_to=round_to,
-        )
+        if self.dtype == "int8":
+            # scales multiply AFTER the dot, same order as the
+            # distributed kernel, so scores agree to the ulp
+            scores = np.concatenate([(seg @ q32[0]) * sc for seg, sc in zip(segs, sides)])
+            _, vi, score = _padded_topk(scores[None, :], top_k, round_to)
+        else:
+            _, vi, score = certified_topk(q64, q32, segs, top_k, round_to, norm2=sides)
+        return _rank_local(np.concatenate(seg_ids)[vi], score, top_k=top_k, better_than=better_than)

@@ -22,16 +22,12 @@ Two physical strategies for the similarity scan:
   columnar, the vector block is a zero-copy Arrow→NumPy reshape (no
   per-row Python loop), shuffle is bounded by k.
 
-  `score_dtype` picks the kernel precision. ``"float64"`` (default)
-  matches the DuckDB oracle after rounding, and is certified rather
-  than brute-forced: one float32 GEMM prescans the block, a derived
-  bound M(d) on |prescan − exact| (`prescan_error_bound`) keeps every
-  row that could still reach the rounded k-th score, and only those
-  rows are rescored in float64 with a non-BLAS sum. ``"float32"`` is
-  the throughput mode — the same precision the reference scores in
-  (its store matrix is float32, pico_vdb.py:62-75) — and selects on raw
-  float32 scores with a one-quantum-and-a-half pad so the post-GEMM
-  rounding can't drop a boundary tie.
+  Each task answers its batches with the certified top-k kernel
+  (`operators/kernels.py`, shared by every exact scorer): one float32
+  GEMM prescans the block, a derived bound M(d) on |prescan − exact|
+  (`prescan_error_bound`) keeps every row that could still reach the
+  rounded k-th score, and only those rows are rescored in float64 with
+  a non-BLAS sum. The answer equals a float64 scan of every row.
 
 Both paths rank on the score ROUNDED to `round_to` decimals (ties broken
 by id; a NaN score, from a NaN in a vector, ranks greatest, as in
@@ -49,6 +45,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from picovdb_spark.functions.vector import dot, l2_normalize
+from picovdb_spark.operators.kernels import _unit_rows, certified_topk, emit_topk, f32_norm2
 from picovdb_spark.schema import K_DELETED, K_ID, K_METRICS, K_VECTOR
 
 WhereClause = dict[str, Any] | Column | Callable[[dict], bool] | None
@@ -163,143 +160,6 @@ def _normalized_queries(queries: DataFrame, query_id: str, vector_col: str) -> D
 MAX_QUERY_MATRIX_BYTES = 8 << 30
 
 
-def _unit_rows(mat):
-    """Row-wise L2 normalize a float64 matrix with the store's zero ⇒ e₀
-    rule (pico_vdb.py:62-67) — THE normalize kernel shared by the
-    driver-side query paths and the blocked kNN join's cell kernel, so
-    the rule can never desynchronize between them. Copies before the e₀
-    substitution (the input may alias a caller's array)."""
-    import numpy as np
-
-    norms = np.sqrt((mat * mat).sum(axis=1))
-    zero = norms == 0.0
-    if zero.any():
-        mat = mat.copy()
-        mat[zero] = 0.0
-        mat[zero, 0] = 1.0
-        norms[zero] = 1.0
-    return mat / norms[:, None]
-
-
-# Rows whose float32 squared norm falls below this are never pruned by a
-# float32 prescan: their squares may have underflowed, so the prescan
-# says nothing about the exact score. At or above it, the absolute
-# underflow error is ≤ d·2⁻¹²⁰ after scaling — far inside the bound's
-# headroom.
-F32_MIN_NORM2 = 2.0**-60
-
-
-def prescan_error_bound(d: int) -> float:
-    """M(d): a bound on |float32 prescan − float64 exact| of one cosine
-    score over `d` dimensions. THE margin of every float32 prescan that
-    a float64 rescore then decides (`_gemm_topk`, the semantic-dedup
-    pair prefilter).
-
-    Setting: the exact score is q·v/‖v‖ with q a float64 unit vector;
-    the prescan is fl32(q)·fl32(v) from a float32 GEMM, times the
-    float32 inverse norm of fl32(v). With u = 2⁻²⁴ and γ_d = d·u/(1−d·u):
-
-    - rounding q to float32: ≤ u (Cauchy–Schwarz, both sides unit);
-    - rounding an `array<double>` store row to float32 turns its
-      direction by ≤ 2u;
-    - the float32 dot over d terms, in any order, with or without FMA:
-      ≤ γ_d·Σ|q_j v_j| ≤ γ_d·(1+u) after scaling;
-    - the float32 norm: the sum of squares carries a relative error
-      ≤ γ_d, sqrt halves it, and sqrt, reciprocal and the scaling
-      multiply add ≤ 3u on a score of magnitude ≤ 1+u;
-    - the float64 rescore and `np.round`'s scaling: < 2⁻⁴⁹, below u.
-
-    First order that is 1.5γ_d + 6u ≤ 1.6·d·u + 6u for d·u ≤ 1/16.
-    M(d) = 4(d+4)·u covers it with 2.5× headroom, which also absorbs the
-    second-order terms and subnormal underflow in rows whose float32
-    squared norm is ≥ `F32_MIN_NORM2`. Past d = 2²⁰ the first-order
-    argument no longer holds, and the bound is infinite: keep every row.
-    Pre-normalized inputs (no norm term) are covered a fortiori.
-    """
-    if d > 1 << 20:
-        return float("inf")
-    return 4.0 * (d + 4) * 2.0**-24
-
-
-def _exact_scores(q, v, qi, vi):
-    """float64 score of query row `q[qi[p]]` against unit store row
-    `v[vi[p]]` for every pair p — the one rescoring routine of the
-    float64 kernel. The sum is NumPy's pairwise reduction over each
-    row, never a BLAS dot, so a score is the same bits under every
-    OpenBLAS kernel set and however the pairs are chunked. Chunks keep
-    the two gathered blocks in L2 (256 KB each)."""
-    import numpy as np
-
-    out = np.empty(len(qi))
-    step = max(1, (1 << 15) // max(1, q.shape[1]))
-    for lo in range(0, len(qi), step):
-        hi = lo + step
-        out[lo:hi] = (q[qi[lo:hi]] * v[vi[lo:hi]]).sum(axis=1)
-    return out
-
-
-def _prescan(q32, src):
-    """float32 prescan of unit query rows `q32` against store block
-    `src` (float32 or float64 rows, any norm): one sgemm scaled by each
-    row's float32 inverse norm; an exactly-zero row scores as e₀
-    (pico_vdb.py:62-67). Returns (scores (nq, n) float32, sure (n,)
-    bool). Where `sure`, |score − exact| ≤ `prescan_error_bound(d)`;
-    elsewhere (NaN/inf entries, float32 squared norm outside
-    [`F32_MIN_NORM2`, float32 max]) the score means nothing."""
-    import numpy as np
-
-    v32 = src if src.dtype == np.float32 else src.astype(np.float32)
-    with np.errstate(over="ignore", invalid="ignore"):
-        norm2 = np.einsum("ij,ij->i", v32, v32)
-    sure = (norm2 >= F32_MIN_NORM2) & (norm2 <= np.finfo(np.float32).max)
-    pre = q32 @ v32.T
-    pre *= np.float32(1.0) / np.sqrt(np.where(sure, norm2, np.float32(1.0)))
-    zero = np.flatnonzero(norm2 == 0.0)
-    if len(zero):
-        # exactly-zero source rows are e₀; a row whose float32 squares
-        # merely underflowed stays unsure
-        zero = zero[~src[zero].any(axis=1)]
-        pre[:, zero] = q32[:, :1]
-        sure[zero] = True
-    return pre, sure
-
-
-def _kth_lower_bound(scores, k):
-    """Per row, a lower bound on the k-th largest of `scores` (nq, n):
-    the k-th largest of the column-wise maxima of 8 contiguous column
-    slices. Each of those k maxima is a distinct entry, so k entries
-    are ≥ it. One max pass plus a partition over n/8 columns — ~6×
-    cheaper than partitioning the whole matrix, for ~0.5% more
-    candidates at 1000 × 6250. Needs k ≥ 1."""
-    import numpy as np
-
-    n = scores.shape[1]
-    m = -(-n // 8)
-    if m < k:
-        return np.partition(scores, n - k, axis=1)[:, n - k]
-    mx = scores[:, :m].copy()
-    for lo in range(m, n, m):
-        w = min(m, n - lo)
-        np.maximum(mx[:, :w], scores[:, lo : lo + w], out=mx[:, :w])
-    return np.partition(mx, m - k, axis=1)[:, m - k]
-
-
-def _group_topk(qi, key, k, pad=0.0):
-    """Tie-complete per-query top-k over candidate pairs: positions of
-    every candidate whose `key` is ≥ its query's k-th largest key − pad.
-    One lexsort, no per-query Python loop."""
-    import numpy as np
-
-    if len(qi) == 0:
-        return np.empty(0, dtype=np.intp)
-    order = np.lexsort((-key, qi))
-    qs, ks = qi[order], key[order]
-    starts = np.flatnonzero(np.r_[True, qs[1:] != qs[:-1]])
-    counts = np.diff(np.r_[starts, len(qs)])
-    thr = np.repeat(ks[starts + np.minimum(k, counts) - 1], counts)
-    return order[ks >= thr - pad]
-
-
 def normalize_query_matrix(qids, qmat):
     """L2-normalize a driver-resident query matrix in place-compatible
     NumPy (float64, zero ⇒ e₀ — pico_vdb.py:585-590). Shared by the
@@ -410,18 +270,19 @@ def batch_query(
     selected row with its own metadata (see `_gemm_topk`), so a store
     holding two rows with the same `_id_` returns each at most once per
     query, with its own score and metadata, exactly as the SQL path
-    does. Its default float64 scores come from a float32 prescan pruned
-    by the derived bound `prescan_error_bound` and an exact float64
-    rescore of the survivors: the rows and scores equal a float64 scan
-    of every row, under any BLAS kernel set.
+    does. Its scores come from the certified top-k kernel
+    (`kernels.certified_topk`): a float32 prescan pruned by the derived
+    bound `prescan_error_bound` and an exact float64 rescore of the
+    survivors, so the rows and scores equal a float64 scan of every
+    row, under any BLAS kernel set. `score_dtype` accepts "float64"
+    (default) and "float32"; both run that one kernel.
 
     Broadcast lifetime: each GEMM call broadcasts its query matrix, and
     PySpark keeps that broadcast's pickle file in the driver's temp dir
     until `destroy()` is called or the session stops. Nothing here
     destroys it, because re-running the returned DataFrame reads it
-    again. A 1000 × 1024 batch leaves 8 MB per call (4 MB with
-    `score_dtype="float32"`), so a long-lived session serving many
-    batches accumulates them.
+    again. A 1000 × 1024 batch leaves 8 MB per call, so a long-lived
+    session serving many batches accumulates them.
     """
     from picovdb_spark.operators.topk import topk_per_query
 
@@ -453,7 +314,6 @@ def batch_query(
             top_k=top_k,
             round_to=round_to,
             rank_col=rank_col,
-            normalized=normalized,
             score_dtype=score_dtype,
             include_vector=include_vector,
         )
@@ -562,13 +422,15 @@ def knn_join_blocked(
     side replicates across the right blocks and vice versa, so shuffle
     volume is |L|·right_blocks + |R|·left_blocks rows — choose the
     block counts to trade replication against per-task GEMM size
-    (defaults: √parallelism each, giving ~parallelism tasks). Each
-    (left block, right block) cell runs one Arrow-batched NumPy GEMM
-    and emits a tie-complete local top-k per left row (every row whose
-    ROUNDED score ties the kth — same rule as `_gemm_topk`'s float64
-    path), and a global `topk_per_query` merges the per-cell candidates
-    into the exact final ranking. Candidate volume into the merge is
-    O(|L| · right_blocks · k).
+    (defaults: √parallelism each, giving ~parallelism tasks). Vectors
+    shuffle in their input element type, with no widening cast. Each
+    (left block, right block) cell answers its left rows with the
+    certified top-k kernel (`kernels.certified_topk`: float32 prescan,
+    exact float64 rescore of the survivors; `exclude_self` is its
+    `allowed` mask), emitting a tie-complete local top-k per left row,
+    and a global `topk_per_query` merges the per-cell candidates into
+    the exact final ranking: the float64 answer, under any BLAS kernel
+    set. Candidate volume into the merge is O(|L| · right_blocks · k).
 
     At 100 TB this is the EXACT baseline for corpus×corpus similarity;
     the sublinear paths (IVF/LSH routing in operators/ann.py,
@@ -582,15 +444,8 @@ def knn_join_blocked(
     scales with |L|·|R| while the blocked kernel amortizes it into
     BLAS calls.
 
-    `score_dtype`: "float64" (default) scores in double — bit-parity
-    with the broadcast baseline and the DuckDB oracle (the gate form).
-    "float32" is the SERVING form, the same convention as
-    `batch_query(score_dtype=)` and the reference's own precision:
-    vectors shuffle as array<float> (half the bytes), normalization
-    stays float64 before the cast (`collect_normalized_queries`'s
-    sequence), and the GEMM runs single-precision — about 2× the
-    dgemm rate (one thread, AVX-512 OpenBLAS kernels: sgemm ~80 GF vs
-    dgemm ~40 GF at k=128), and half the bytes at the 1M-row tier.
+    `score_dtype` is "float64" (default) or its alias "float32"; both
+    run the one certified kernel.
 
     Block sizing: with BOTH `left_blocks`/`right_blocks` unspecified,
     auto-sizing runs two `count()` jobs to learn the |L|/|R| ratio —
@@ -609,7 +464,7 @@ def knn_join_blocked(
         if v is not None and v < 1:
             raise ValueError(f"block counts must be >= 1, got {name}={v}")
     if score_dtype not in ("float32", "float64"):
-        raise ValueError(f"score_dtype must be float32|float64, got {score_dtype!r}")
+        raise ValueError(f"score_dtype must be float64 (or float32), got {score_dtype!r}")
     if left_blocks is None or right_blocks is None:
         # Size-aware grid. Shuffle volume is |L|·rb + |R|·lb rows, so
         # for a fixed cell count lb·rb ≈ P the optimum is
@@ -646,17 +501,16 @@ def knn_join_blocked(
     # halves in different partitions and the cogroup emits nothing for
     # them (caught at sf0.1; invisible at sf0.001 where AQE coalesced
     # the whole exchange into one partition).
-    arr_t = "array<float>" if score_dtype == "float32" else "array<double>"
     l2 = left.select(
         F.col(left_id).cast("string").alias("query_id"),
-        F.col(left_vec).cast(arr_t).alias("__qv"),
+        F.col(left_vec).alias("__qv"),
         F.pmod(F.xxhash64(F.col(left_id).cast("string")), F.lit(left_blocks)).alias("__lb"),
     ).withColumn(
         "__rb", F.explode(F.array(*[F.lit(b).cast("long") for b in range(right_blocks)]))
     )
     r2 = right.select(
         F.col(right_id).cast("string").alias(K_ID),
-        F.col(right_vec).cast(arr_t).alias("__rv"),
+        F.col(right_vec).alias("__rv"),
         F.pmod(F.xxhash64(F.col(right_id).cast("string")), F.lit(right_blocks)).alias("__rb"),
     ).withColumn(
         "__lb", F.explode(F.array(*[F.lit(b).cast("long") for b in range(left_blocks)]))
@@ -665,7 +519,6 @@ def knn_join_blocked(
     kk = int(k)
     skip_self = bool(exclude_self)
     rnd = int(round_to)
-    as_f32 = score_dtype == "float32"
 
     def cell_topk(ltbl, rtbl):
         # Arrow in/out (not pandas): a pandas round-trip would conflate
@@ -687,81 +540,50 @@ def knn_join_blocked(
             # rank <= 0 filter (not an executor-side partition error)
             return empty
 
-        def unit(col):
+        def rows(col):
             vec = col.combine_chunks()
             if vec.null_count:
                 # a null list row silently vanishes in flatten() and
                 # shifts every later row in the reshape — fail loudly
                 raise ValueError("knn_join_blocked: null vectors in input")
-            vals = vec.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
-            out = _unit_rows(vals.reshape(len(vec), -1))
-            # float32 mode truncates AFTER the float64 normalize — the
-            # same sequence collect_normalized_queries feeds _gemm_topk,
-            # so the two serving paths can never disagree on a vector
-            return out.astype(np.float32) if as_f32 else out
+            return vec.flatten().to_numpy(zero_copy_only=False).reshape(len(vec), -1)
 
-        lm, rm = unit(ltbl.column("__qv")), unit(rtbl.column("__rv"))
+        q64 = _unit_rows(rows(ltbl.column("__qv")).astype(np.float64))
+        q32 = q64.astype(np.float32)
+        src = rows(rtbl.column("__rv"))
+        norm2 = f32_norm2(src)
         lids = np.asarray(ltbl.column("query_id").to_pylist(), dtype=object)
         rids = np.asarray(rtbl.column(K_ID).to_pylist(), dtype=object)
         # right-id → column positions for the self mask: O(L + R) dict
-        # probes. The former `lids[:, None] == rids[None, :]` was an
-        # O(L·R) OBJECT-dtype equality — hundreds of millions of
-        # Python-interpreter comparisons per 1M-tier cell (the measured
-        # stall: 21 workers pinned for minutes), plus an L×R bool copy.
+        # probes, never an O(L·R) object-dtype equality
         rpos: dict | None = None
         if skip_self:
             rpos = {}
             for j, rid in enumerate(rids):
                 rpos.setdefault(rid, []).append(j)
-        n = rm.shape[0]
-        take = min(kk, n)
+        n = src.shape[0]
         out_q, out_i, out_s = [], [], []
-        # Chunk the LEFT rows so the float64 score matrix stays ~256 MB:
-        # a whole-cell GEMM at the 1M tier is (L/lb)×(R/rb)×8 bytes —
-        # 2.2 GB on the default grid at 10k×1M, and ×2 with the
-        # selection copy, which thrashes 20+ concurrent workers. Per-row
-        # top-k is independent of the chunking, so results are
-        # bit-identical to the unchunked form.
-        chunk = max(1, int(256e6 // ((4 if as_f32 else 8) * n)))
-        pad = 1.5 * 10.0 ** (-rnd)
-        for c0 in range(0, lm.shape[0], chunk):
-            lc = lm[c0 : c0 + chunk]
-            scores = lc @ rm.T
-            # RAW-score selection with a rounding pad, rounding only the
-            # SELECTED values — the same tie-complete contract and proof
-            # as _gemm_topk (every row whose rounded score ties the kth
-            # survives; the global merge applies the exact rounded
-            # ranking). The former full-matrix np.round + np.where pair
-            # was ~2/3 of this kernel's non-GEMM cost at the 1M tier
-            # (two extra passes + copies over L/lb × R/rb doubles).
-            if np.isnan(np.min(scores)):
-                # NaN ranks GREATEST (Spark's sort ordering, matching
-                # the broadcast baseline) and must still be EMITTED as
-                # NaN: substitute +inf in a selection copy, emit from
-                # the raw matrix. Rare path — one reduction pass guards
-                # it, not a full isnan materialization.
-                sel = np.where(np.isnan(scores), np.inf, scores)
-            else:
-                # alias, no copy: the only mutation below is the -inf
-                # self-mask, and masked positions are never emitted
-                sel = scores
+        # Chunk the LEFT rows so the per-chunk prescan and masks stay
+        # ~256 MB: a whole-cell matrix at the 1M tier is (L/lb)×(R/rb)
+        # entries, which thrashes 20+ concurrent workers. Per-row top-k
+        # is independent of the chunking, so results are bit-identical
+        # to the unchunked form.
+        chunk = max(1, int(256e6 // (8 * n)))
+        for c0 in range(0, len(q64), chunk):
+            c1 = min(c0 + chunk, len(q64))
+            allowed = None
             if rpos is not None:
-                for qi in range(lc.shape[0]):
+                allowed = np.ones((c1 - c0, n), dtype=bool)
+                for qi in range(c1 - c0):
                     cols = rpos.get(lids[c0 + qi])
                     if cols:
-                        sel[qi, cols] = -np.inf
-            kth = np.partition(sel, n - take, axis=1)[:, n - take]
-            for qi in range(sel.shape[0]):
-                keep = np.flatnonzero(
-                    (sel[qi] >= kth[qi] - pad) & (sel[qi] > -np.inf)
-                )
-                out_q.append(np.repeat(lids[c0 + qi], len(keep)))
-                out_i.append(rids[keep])
-                # float64 BEFORE rounding in both modes (the f32 path's
-                # raw scores round in double, exactly _gemm_topk's rule)
-                out_s.append(np.round(scores[qi][keep].astype(np.float64), rnd))
-        if not out_q:
-            return empty
+                        allowed[qi, cols] = False
+            qi, vi, score = certified_topk(
+                q64[c0:c1], q32[c0:c1], src, kk, rnd, norm2=norm2, allowed=allowed
+            )
+            out_q.append(lids[c0 + qi])
+            out_i.append(rids[vi])
+            out_s.append(score)
         return pa.table(
             {
                 "query_id": pa.array(np.concatenate(out_q), type=pa.string()),
@@ -864,7 +686,6 @@ def _gemm_topk(
     top_k: int,
     round_to: int,
     rank_col: str = "rank",
-    normalized: bool = False,
     score_dtype: str = "float64",
     include_vector: bool = False,
 ) -> DataFrame:
@@ -877,53 +698,21 @@ def _gemm_topk(
     the shuffle carries O(partitions × num_q × k) rows. The query matrix
     goes out as an explicit `sparkContext.broadcast` made on every call,
     so each executor fetches it once, not per task. The task's input is
-    (id, vector, *metadata); the selected rows leave it with their
-    metadata by Arrow `take`, so no second store scan joins it back.
+    (id, vector, *metadata); each Arrow batch is answered by
+    `kernels.certified_topk` (rows of any norm, normalized in the
+    kernel), and the selected rows leave the task with their metadata by
+    Arrow `take` (`kernels.emit_topk`), so no second store scan joins it
+    back. The global ranking applies the exact (rounded desc, id asc)
+    order.
 
-    `score_dtype="float64"` (default) answers each Arrow batch in one
-    certified pass (filter-and-refine):
-
-    1. prescan: one float32 GEMM of the float32 queries against the
-       float32 block, scaled by each row's float32 inverse norm (an
-       all-zero row scores as e₀, pico_vdb.py:62-67);
-    2. keep every row whose prescan is ≥ the query's k-th prescan
-       − 2·M(d) − 10^-round_to, M = `prescan_error_bound`: the k-th
-       exact score is ≥ k-th prescan − M, and a row whose rounded score
-       ties or beats the rounded k-th is within 10^-round_to of it, so
-       its prescan is within 2M + 10^-round_to of the k-th prescan.
-       Any lower bound on the k-th prescan keeps a superset; the kernel
-       uses `_kth_lower_bound`, which is cheaper than a full partition.
-       Rows the prescan cannot vouch for — NaN/inf entries, a float32
-       squared norm outside [`F32_MIN_NORM2`, float32 max] — are always
-       kept and never set the k-th prescan; a query holding NaN keeps
-       every row;
-    3. rescore the kept rows in float64 (`_unit_rows`, then
-       `_exact_scores`: a non-BLAS sum, so the result does not depend
-       on the BLAS kernel) and select tie-complete on the ROUNDED exact
-       scores, a NaN score ranking greatest (Spark's order) and emitted
-       as NaN.
-
-    No full-block float64 cast, dgemm or full-matrix rounding runs; the
-    output equals rounding a float64 score of every row.
-
-    `"float32"` GEMMs in single precision (the reference's own
-    precision) and selects on RAW scores with a pad of 1.5·10^-round_to,
-    so every row whose rounded score could reach the rounded kth value
-    is still emitted. `normalized=True` skips its row-norm pass (stores
-    normalize on ingest); the float64 kernel always normalizes.
-
-    Either way the global ranking applies the exact (rounded desc, id
-    asc) order.
+    `score_dtype` is "float64" or its alias "float32"; anything else
+    raises.
     """
-    from functools import partial
-
     import numpy as np
-    import pyarrow as pa
 
     from picovdb_spark.operators.topk import topk_per_query
 
-    use32 = score_dtype in ("float32", "f32")
-    if not use32 and score_dtype not in ("float64", "f64"):
+    if score_dtype not in ("float64", "f64", "float32", "f32"):
         raise ValueError(f"unknown score_dtype: {score_dtype!r}")
 
     meta = [
@@ -947,114 +736,18 @@ def _gemm_topk(
     if qmat.size == 0 or top_k <= 0:
         empty = T.StructType([*out_schema.fields, T.StructField(rank_col, T.IntegerType())])
         return spark.createDataFrame([], schema=empty)
-    bc = spark.sparkContext.broadcast((qids, qmat.astype(np.float32) if use32 else qmat))
-
-    pad = 1.5 * 10.0 ** (-round_to)
-    margin = 2.0 * prescan_error_bound(qmat.shape[1]) + 10.0 ** (-round_to)
-
-    def select64(q64, q32, qbad, batch):
-        """(query idx, row idx, rounded exact score) of the batch's
-        tie-complete top-k: prescan, prune, rescore, select."""
-        n = batch.num_rows
-        vals = batch.column(1).flatten().to_numpy(zero_copy_only=False)
-        src = vals.reshape(n, -1)  # zero-copy, float32 or float64
-        pre, sure = _prescan(q32, src)
-        unsure = ~sure
-        any_unsure = unsure.any()
-        if any_unsure:
-            pre[:, unsure] = -np.inf
-        # threshold rounded DOWN to float32, so the float32 comparison
-        # keeps at least what the float64 rule keeps
-        thr = np.nextafter(
-            (_kth_lower_bound(pre, min(top_k, n)).astype(np.float64) - margin).astype(np.float32),
-            np.float32(-np.inf),
-        )
-        keep = pre >= thr[:, None]
-        if any_unsure:
-            keep[:, unsure] = True
-        if qbad.any():
-            keep[qbad] = True
-        qi, vi = np.divmod(np.flatnonzero(keep), n)
-        rows, at = np.unique(vi, return_inverse=True)
-        unit = np.empty((len(rows), src.shape[1]))
-        step = max(1, (1 << 16) // src.shape[1])  # cache-sized row chunks
-        for lo in range(0, len(rows), step):
-            unit[lo : lo + step] = _unit_rows(src[rows[lo : lo + step]].astype(np.float64))
-        with np.errstate(invalid="ignore"):
-            score = np.round(_exact_scores(q64, unit, qi, at), round_to)
-        pick = _group_topk(qi, np.where(np.isnan(score), np.inf, score), top_k)
-        return qi[pick], vi[pick], score[pick]
-
-    def select32(q32, batch):
-        """(query idx, row idx, raw float32 score) of the batch's padded
-        top-k on raw scores."""
-        n = batch.num_rows
-        vals = batch.column(1).flatten().to_numpy(zero_copy_only=False)
-        if normalized:
-            # read-only zero-copy view is fine — we never write it
-            vmat = np.asarray(vals.reshape(n, -1), dtype=np.float32)
-        else:
-            vmat = vals.reshape(n, -1).astype(np.float32)  # owned, writable
-            norms = np.sqrt((vmat * vmat).sum(axis=1))
-            zero = norms == 0.0
-            if zero.any():  # zero vector ⇒ e₀ (pico_vdb.py:62-67)
-                vmat[zero] = 0.0
-                vmat[zero, 0] = 1.0
-                norms[zero] = 1.0
-            vmat /= norms[:, None]
-        scores = q32 @ vmat.T  # (nq, n)
-        kk = min(top_k, n)
-        kth = np.partition(scores, n - kk, axis=1)[:, n - kk]
-        qi, vi = np.nonzero(scores >= (kth - pad)[:, None])
-        return qi, vi, scores[qi, vi]
+    bc = spark.sparkContext.broadcast((qids, qmat))
 
     def score_batches(batches: Iterator) -> Iterator:
-        b_qids, b_qmat = bc.value
-        if use32:
-            select = partial(select32, b_qmat)
-        else:
-            qbad = ~np.isfinite(b_qmat).all(axis=1)
-            select = partial(select64, b_qmat, b_qmat.astype(np.float32), qbad)
-        # Per-batch selection, accumulated and emitted ONCE at task end.
-        # Single emit keeps the shuffle at O(num_q × k) per TASK however
-        # many Arrow batches the task's partition splits into, and lets a
-        # small `spark.sql.execution.arrow.maxRecordsPerBatch` pipeline
-        # the JVM→Python Arrow stream against the BLAS compute.
-        acc_q: list = []  # query indices into b_qids
-        acc_s: list = []  # scores (raw f32 for use32, rounded f64 else)
-        acc_rows: list = []  # the selected rows' emitted columns
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            qi, vi, sel = select(batch)
-            acc_q.append(qi)
-            acc_s.append(sel)
-            acc_rows.append(batch.select(emit_cols).take(pa.array(vi)))
-        if not acc_q:
-            return
-        qi = np.concatenate(acc_q)
-        sel = np.concatenate(acc_s)
-        rows = pa.Table.from_batches(acc_rows)
-        if len(acc_q) > 1:
-            # Re-select across the task's batches so multi-batch tasks
-            # shuffle no more than single-batch ones. The k-th largest of
-            # a union is >= the k-th largest of any member, so each
-            # batch's tie-complete candidates (padded for f32) hold every
-            # row the task-level selection keeps.
-            key = sel if use32 else np.where(np.isnan(sel), np.inf, sel)
-            pick = _group_topk(qi, key, top_k, pad if use32 else 0.0)
-            qi, sel, rows = qi[pick], sel[pick], rows.take(pa.array(pick))
-        if use32:
-            sel = np.round(sel.astype(np.float64), round_to)
-        out = pa.Table.from_arrays(
-            [
-                pa.array(b_qids[qi], type=pa.string()),
-                *rows.columns,
-                pa.array(sel, type=pa.float64()),
-            ],
-            names=["query_id", *emit_cols, K_METRICS],
-        )
-        yield from out.to_batches()
+        b_qids, q64 = bc.value
+        q32 = q64.astype(np.float32)
+
+        def select(batch):
+            vals = batch.column(1).flatten().to_numpy(zero_copy_only=False)
+            src = vals.reshape(batch.num_rows, -1)  # zero-copy, float32 or float64
+            return certified_topk(q64, q32, src, top_k, round_to)
+
+        yield from emit_topk(batches, select, emit_cols, b_qids, top_k)
 
     in_cols = [K_ID, vector_col, *[c for c in meta if c != vector_col]]
     local = cand.select(*in_cols).mapInArrow(score_batches, schema=out_schema)

@@ -4,7 +4,7 @@ Builds the same 100k x 1024 pre-normalized corpus as bench.py and times
 N successive passes of the exact workload, printing each wall time, so
 kernel changes can be measured without running the whole suite.
 
-Usage: python scripts/perf_ref100k.py [n_passes] [float32|float64]
+Usage: python scripts/perf_ref100k.py [n_passes]
 """
 
 from __future__ import annotations
@@ -26,7 +26,6 @@ from picovdb_spark.session import get_spark
 
 def main() -> None:
     n_passes = int(sys.argv[1]) if len(sys.argv) > 1 else 4
-    dtype = sys.argv[2] if len(sys.argv) > 2 else "float32"
     spark = get_spark("perf_ref100k")
     n, dim, parts = 100_000, 1024, 32
     schema = T.StructType(
@@ -58,10 +57,10 @@ def main() -> None:
     for i in range(n_passes):
         t0 = time.perf_counter()
         batch_query(
-            store, queries, top_k=10, method="gemm", normalized=True, score_dtype=dtype
+            store, queries, top_k=10, method="gemm", normalized=True
         ).write.mode("overwrite").format("noop").save()
         dt = time.perf_counter() - t0
-        print(f"pass {i}: {dt:.3f}s  ({1000 / dt:.0f} q/s)  dtype={dtype}", flush=True)
+        print(f"pass {i}: {dt:.3f}s  ({1000 / dt:.0f} q/s)", flush=True)
 
 
 if __name__ == "__main__":

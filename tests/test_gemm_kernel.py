@@ -1,12 +1,15 @@
-"""The float64 GEMM kernel of `batch_query`: a float32 prescan certified
-by `prescan_error_bound`, float64 rescoring of the survivors, and the
-metadata the scoring task emits with each row.
+"""The certified top-k kernel (`operators/kernels.py`): a float32 prescan
+certified by `prescan_error_bound`, float64 rescoring of the survivors,
+and the metadata `batch_query`'s scoring task emits with each row.
 
-The kernel must return exactly the rows and scores of a brute force that
-rescores EVERY store row with the same float64 routine (`_unit_rows` +
-`_exact_scores`), on inputs built to sit on the prescan's weak spots:
-duplicate rows, rows one ulp apart, scores on a rounding boundary, zero
-vectors, double-precision stores and multi-batch tasks."""
+Every exact scorer built on it — `batch_query` with either score_dtype,
+`knn_join_blocked`, `ann_query` at full probe and both resident stores'
+`query` and `query_local` — must return exactly the rows and scores of a
+brute force that rescores EVERY store row with the same float64 routine
+(`_exact_cosines`), on inputs built to sit on the
+prescan's weak spots: duplicate rows, rows one ulp apart, scores on a
+rounding boundary, zero vectors, NaN rows, double-precision stores and
+multi-batch tasks."""
 
 import datetime as dt
 import json
@@ -23,34 +26,36 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from picovdb_spark import _openblas_core
-from picovdb_spark.operators.similarity import (
+from picovdb_spark.operators.kernels import (
     F32_MIN_NORM2,
-    _exact_scores,
+    _exact_cosines,
     _prescan,
     _unit_rows,
-    batch_query,
-    normalize_query_matrix,
     prescan_error_bound,
 )
+from picovdb_spark.operators.similarity import batch_query, normalize_query_matrix
 from picovdb_spark.schema import K_ID, K_METRICS
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 MAX_BATCH = "spark.sql.execution.arrow.maxRecordsPerBatch"
 
 
-def brute_force(qids, qmat, ids, vecs, top_k, round_to=6):
+def brute_force(qids, qmat, ids, vecs, top_k, round_to=6, exclude_self=False):
     """Rescore every row with the kernel's float64 routine; rank by
-    (NaN first, rounded score desc, id asc)."""
+    (NaN first, rounded score desc, id asc). `exclude_self` drops the
+    rows whose id equals the query's."""
     qids, q = normalize_query_matrix(qids, qmat)
-    unit = _unit_rows(np.asarray(vecs, dtype=np.float64))
-    nq, n = len(q), len(unit)
+    vecs = np.asarray(vecs)
+    nq, n = len(q), len(vecs)
     qi, vi = np.repeat(np.arange(nq), n), np.tile(np.arange(n), nq)
     with np.errstate(invalid="ignore"):
-        score = np.round(_exact_scores(q, unit, qi, vi), round_to).reshape(nq, n)
+        score = np.round(_exact_cosines(q, vecs, qi, vi), round_to).reshape(nq, n)
     out = []
     for a in range(nq):
         neg = np.where(np.isnan(score[a]), -np.inf, -score[a])  # NaN sorts first
         order = sorted(range(n), key=lambda j: (neg[j], ids[j]))
+        if exclude_self:
+            order = [j for j in order if ids[j] != qids[a]]
         for rank, j in enumerate(order[:top_k], start=1):
             out.append((qids[a], ids[j], repr(float(score[a, j])), rank))
     return sorted(out)
@@ -58,6 +63,18 @@ def brute_force(qids, qmat, ids, vecs, top_k, round_to=6):
 
 def rows_of(df):
     return sorted((r["query_id"], r[K_ID], repr(r[K_METRICS]), r["rank"]) for r in df.collect())
+
+
+def local_rows(qid, hits):
+    """`query_local`'s hits in `rows_of`'s form."""
+    return [(qid, h[K_ID], repr(h[K_METRICS]), h["rank"]) for h in hits]
+
+
+def query_frame(spark, qids, qmat):
+    """Queries as an array<double> frame: every scorer reads the same
+    float64 values the (ids, matrix) form carries."""
+    rows = [(q, [float(x) for x in v]) for q, v in zip(qids, qmat)]
+    return spark.createDataFrame(rows, "query_id string, _vector_ array<double>")
 
 
 def vector_store(spark, ids, vecs, double=False, partitions=1):
@@ -156,6 +173,117 @@ def test_kernel_equals_brute_force_on_adversarial_ties(
     finally:
         spark.conf.set(MAX_BATCH, old)
     assert got == brute_force(qids, qmat, ids, vecs, top_k)
+
+
+def full_probe_index(store, n_centroids, seed):
+    from picovdb_spark.operators.ann import IvfIndex
+
+    return IvfIndex.build(store, n_centroids=n_centroids, seed=seed)
+
+
+def resident_rows(rs, qdf, qids, qmat, top_k, **kw):
+    """(`query` rows, `query_local` rows) of a materialized resident store."""
+    dist = rows_of(rs.query(qdf, top_k=top_k, **kw))
+    local = sorted(
+        r for q, v in zip(qids, qmat) for r in local_rows(q, rs.query_local(v, top_k=top_k, **kw))
+    )
+    return dist, local
+
+
+def knn_rows(qdf, store, top_k, **kw):
+    from picovdb_spark.operators.similarity import knn_join_blocked
+
+    return rows_of(
+        knn_join_blocked(
+            qdf, store, k=top_k, left_id="query_id", right_id=K_ID,
+            left_vec="_vector_", right_vec="_vector_", **kw,
+        )
+    )
+
+
+def test_nan_rows_answer_like_sql_in_every_scorer(spark):
+    """One partition holding ≥ top_k NaN rows: the padded and
+    full-matrix selection rules returned no rows at all. Every scorer
+    now gives `method="sql"`'s answer: the NaN rows first, by id."""
+    from picovdb_spark.operators.ann import ann_query
+    from picovdb_spark.operators.resident import ResidentGemmStore, ResidentIvfStore
+
+    clean = [("a", [1.0, 0.0]), ("b", [0.9, 0.1]), ("c", [0.0, 1.0])]
+    nan = [(f"n{i}", [float("nan"), 1.0]) for i in range(3)]
+    schema = f"{K_ID} string, _vector_ array<float>"
+    store = spark.createDataFrame(clean + nan, schema).coalesce(1)
+    qids, qmat = ["q"], np.array([[1.0, 0.0]])
+    qdf = query_frame(spark, qids, qmat)
+    want = rows_of(batch_query(store, qdf, top_k=2, method="sql"))
+    assert [(r[1], r[2]) for r in want] == [("n0", "nan"), ("n1", "nan")]
+
+    got = {}
+    for dt in ("float64", "float32"):
+        got[f"gemm/{dt}"] = rows_of(batch_query(store, qdf, top_k=2, score_dtype=dt))
+        got[f"knn/{dt}"] = knn_rows(qdf, store, 2, left_blocks=1, right_blocks=1, score_dtype=dt)
+    index = full_probe_index(spark.createDataFrame(clean, schema), 2, 42)
+    index = index.add(spark.createDataFrame(nan, schema), auto_refit=False)
+    got["ann"] = rows_of(ann_query(index, qdf, top_k=2, nprobe=2))
+    with ResidentGemmStore(store) as rs:
+        got["resident"], got["resident_local"] = resident_rows(rs, qdf, qids, qmat, 2)
+    with ResidentIvfStore(store, centroids=np.eye(2)) as rs:
+        got["ivf"], got["ivf_local"] = resident_rows(rs, qdf, qids, qmat, 2, nprobe=2)
+    assert got == {name: want for name in got}
+
+
+@settings(max_examples=8, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@given(
+    seed=st.integers(0, 2**32 - 1),
+    n=st.integers(1, 30),
+    d=st.sampled_from([2, 3, 8, 33]),
+    n_dup=st.integers(0, 4),
+    n_ulp=st.integers(0, 4),
+    n_edge=st.integers(0, 16),
+    n_zero=st.integers(0, 2),
+    n_tiny=st.integers(0, 1),
+    double=st.booleans(),
+    top_k=st.integers(1, 6),
+    exclude_self=st.booleans(),
+    blocks=st.tuples(st.integers(1, 3), st.integers(1, 3)),
+    max_batch=st.sampled_from(["3", "10000"]),
+)
+def test_every_exact_scorer_equals_brute_force(
+    spark, seed, n, d, n_dup, n_ulp, n_edge, n_zero, n_tiny, double, top_k, exclude_self,
+    blocks, max_batch,
+):
+    """`knn_join_blocked` (with and without `exclude_self`), `ann_query`
+    at full probe and both resident stores' `query` and `query_local`
+    on the adversarial stores: exactly the brute force's rows and
+    scores, with no tolerance."""
+    from picovdb_spark.operators.ann import ann_query
+    from picovdb_spark.operators.resident import ResidentGemmStore, ResidentIvfStore
+
+    q0, vecs = adversarial_store(seed, n, d, n_dup, n_ulp, n_edge, n_zero, n_tiny)
+    if double:
+        vecs = vecs.astype(np.float64) * (1.0 + 1e-9)
+    ids = [f"r{j:03d}" for j in range(len(vecs))]
+    rng = np.random.default_rng(seed + 1)
+    qmat = np.stack([q0, vecs[0], np.zeros(d), rng.standard_normal(d)])
+    qids = ["edge", "r000", "zero", "rand"]  # "r000" is also a store id
+    store = vector_store(spark, ids, vecs, double=double, partitions=2)
+    qdf = query_frame(spark, qids, qmat)
+    want = brute_force(qids, qmat, ids, vecs, top_k)
+    lb, rb = blocks
+    assert knn_rows(
+        qdf, store, top_k, left_blocks=lb, right_blocks=rb, exclude_self=exclude_self
+    ) == brute_force(qids, qmat, ids, vecs, top_k, exclude_self=exclude_self)
+    n_cent = min(3, len(vecs))
+    old = spark.conf.get(MAX_BATCH)
+    spark.conf.set(MAX_BATCH, max_batch)
+    try:
+        index = full_probe_index(store, n_cent, seed % 1000)
+        assert rows_of(ann_query(index, qdf, top_k=top_k, nprobe=n_cent)) == want
+    finally:
+        spark.conf.set(MAX_BATCH, old)
+    with ResidentGemmStore(store) as rs:
+        assert resident_rows(rs, qdf, qids, qmat, top_k) == (want, want)
+    with ResidentIvfStore(store, n_centroids=n_cent, seed=seed % 1000) as rs:
+        assert resident_rows(rs, qdf, qids, qmat, top_k, nprobe=n_cent) == (want, want)
 
 
 def test_prescan_error_within_bound():

@@ -1,18 +1,22 @@
-"""Resident serving mode (operators/resident.py): node-local float32
+"""Resident serving mode (operators/resident.py): node-local store
 shards for repeated query batches — the Spark analog of the reference's
 in-process store matrix (pico_vdb.py:62-75, queried by batch_queries.py
 at ~1000 q/s).
 
-Strategy: result-identity against the standard `batch_query` float32
-path (same kernel semantics, different data residency), plus lifecycle
-(close drops blocks; query-after-close and query-before-materialize
-fail loudly, never silently rescan).
+Strategy: float blocks run the certified top-k kernel, so `query` and
+`query_local` must equal the float64 brute force of
+tests/test_gemm_kernel.py exactly (rows, scores and ranks); int8 blocks
+are approximate and tolerance-banded. Plus lifecycle (close drops
+blocks; query-after-close and query-before-materialize fail loudly,
+never silently rescan).
 """
 
 import os
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
+from test_gemm_kernel import brute_force, local_rows, rows_of
 
 from picovdb_spark.operators.resident import ResidentGemmStore
 from picovdb_spark.operators.similarity import batch_query
@@ -33,20 +37,27 @@ def queries(spark, sf_dir):
     )
 
 
-def _key(rows):
-    return sorted((r["query_id"], r[K_ID], r[K_METRICS], r["rank"]) for r in rows)
+@pytest.fixture(scope="module")
+def exact(store, queries):
+    """float64 brute force of every query against every store row:
+    {top_k: sorted (query_id, _id_, repr(score), rank) rows}."""
+    srows = store.select(K_ID, "_vector_").collect()
+    qrows = queries.collect()
+    ids = [r[K_ID] for r in srows]
+    vecs = np.array([r["_vector_"] for r in srows], dtype=np.float64)
+    qids = [r["query_id"] for r in qrows]
+    qmat = np.array([r["_vector_"] for r in qrows], dtype=np.float64)
+    return {k: brute_force(qids, qmat, ids, vecs, k) for k in (5, 10)}
 
 
-def test_resident_matches_standard_float32_path(store, queries):
+def test_resident_matches_standard_float32_path(store, queries, exact):
     rs = ResidentGemmStore(store.select(K_ID, "_vector_"))
     try:
         rows = rs.materialize()
         assert rows == store.count()
-        a = rs.query(queries, top_k=10).collect()
-        b = batch_query(
-            store, queries, top_k=10, method="gemm", score_dtype="float32"
-        ).select("query_id", K_ID, K_METRICS, "rank").collect()
-        assert _key(a) == _key(b)
+        assert rows_of(rs.query(queries, top_k=10)) == exact[10]
+        b = batch_query(store, queries, top_k=10, method="gemm", score_dtype="float32")
+        assert rows_of(b) == exact[10]
     finally:
         rs.close()
 
@@ -86,35 +97,18 @@ def test_resident_empty_queries(store, queries):
 # ------------------------------------------------------- cluster-routed IVF
 
 
-def test_resident_ivf_full_probe_equals_exact(store, queries):
+def test_resident_ivf_full_probe_equals_exact(store, queries, exact):
     """nprobe >= n_centroids routes every query everywhere: the routed
-    kernel must reproduce the exact float32 GEMM result — identical
-    (query, id, rank) triples, scores equal up to ONE final-rounding
-    quantum.  Why not bit-for-bit: the routed kernel scores per-cluster
-    SEGMENTS while the exact path scores whole partition blocks, and
-    OpenBLAS dispatches different sgemm kernels by matrix shape, so the
-    same float32 dot can differ in the last ulp between the two shapes
-    (measured on this harness: (8,64)@(64,500) vs (1,64)@(64,31) give
-    0.00063222466 vs 0.0006322209 for the same row).  A score whose
-    true value sits within an ulp of a 0.5e-6 boundary then rounds to
-    adjacent 6-decimal values — result-identity holds, the 6th decimal
-    of one score may not.  (The float64 gate entry ann_ivf_resident_topk
-    is immune: f64 ulp ~1e-16 against the same 1e-6 quantum.)"""
+    kernel scores per-cluster segments with the certified top-k, so it
+    returns exactly the float64 brute force — rows, scores and ranks —
+    in both float dtypes, whatever GEMM shapes the segments make."""
     from picovdb_spark.operators.resident import ResidentIvfStore
 
-    with ResidentIvfStore(store.select(K_ID, "_vector_"), n_centroids=16, seed=42) as rs:
-        a = rs.query(queries, top_k=10, nprobe=16).collect()
-    b = batch_query(
-        store, queries, top_k=10, method="gemm", score_dtype="float32"
-    ).select("query_id", K_ID, K_METRICS, "rank").collect()
-    ka = {(r["query_id"], r[K_ID]): (r[K_METRICS], r["rank"]) for r in a}
-    kb = {(r["query_id"], r[K_ID]): (r[K_METRICS], r["rank"]) for r in b}
-    assert sorted(ka) == sorted(kb)
-    quantum = 1.000001e-6  # one round(., 6) step, with float slack
-    for key, (score_a, rank_a) in ka.items():
-        score_b, rank_b = kb[key]
-        assert rank_a == rank_b, (key, rank_a, rank_b)
-        assert abs(score_a - score_b) <= quantum, (key, score_a, score_b)
+    for dtype in ("float32", "float64"):
+        with ResidentIvfStore(
+            store.select(K_ID, "_vector_"), n_centroids=16, seed=42, dtype=dtype
+        ) as rs:
+            assert rows_of(rs.query(queries, top_k=10, nprobe=16)) == exact[10], dtype
 
 
 def test_resident_ivf_partial_probe_recall_band(store, queries):
@@ -141,38 +135,28 @@ def test_resident_ivf_partial_probe_recall_band(store, queries):
     assert all(len(v) <= 10 + 5 for v in got.values())
 
 
-def test_resident_ivf_query_local_matches_distributed(store, queries):
+def test_resident_ivf_query_local_matches_distributed(store, queries, exact):
     """query_local (in-process serving, no Spark job) must return the
     same ids/scores/ranks as the distributed query() for each query —
     full probe AND partial probe — since both read the same blocks with
-    the same kernel semantics. Zero-vector maps to e₀ like everywhere."""
+    the same certified kernel; at full probe both equal the brute force.
+    Zero-vector maps to e₀ like everywhere."""
     from picovdb_spark.operators.resident import ResidentIvfStore
 
     qrows = queries.collect()
-    # query_local scores by float32 GEMV, the distributed kernel by a
-    # batched float32 GEMM: same semantics, but BLAS accumulation order
-    # differs, so a score can wobble one ulp across the 1e-6 rounding
-    # boundary — compare with that tolerance, exact elsewhere
-    tol = 2e-6
     with ResidentIvfStore(store.select(K_ID, "_vector_"), n_centroids=16, seed=42) as rs:
         for npb in (16, 4):
-            dist = rs.query(queries, top_k=10, nprobe=npb).collect()
-            by_q = {}
-            for r in dist:
-                by_q.setdefault(r["query_id"], {})[r[K_ID]] = r[K_METRICS]
-            for qr in qrows:
-                local = rs.query_local(qr["_vector_"], top_k=10, nprobe=npb)
-                lmap = {h[K_ID]: h[K_METRICS] for h in local}
-                dmap = by_q[qr["query_id"]]
-                kth = min(dmap.values())
-                for i in set(lmap) & set(dmap):
-                    assert abs(lmap[i] - dmap[i]) <= tol, (qr["query_id"], npb, i)
-                for i in set(lmap) ^ set(dmap):
-                    s = lmap.get(i, dmap.get(i))
-                    assert abs(s - kth) <= tol, (qr["query_id"], npb, i, s, kth)
-                # ranks strictly follow (score desc, id asc) locally
-                ranked = sorted(lmap.items(), key=lambda kv: (-kv[1], kv[0]))
-                assert [h[K_ID] for h in local] == [i for i, _ in ranked]
+            dist = rows_of(rs.query(queries, top_k=10, nprobe=npb))
+            local = sorted(
+                r
+                for qr in qrows
+                for r in local_rows(
+                    qr["query_id"], rs.query_local(qr["_vector_"], top_k=10, nprobe=npb)
+                )
+            )
+            assert local == dist, npb
+            if npb == 16:
+                assert dist == exact[10]
         # better_than filters identically
         bt = rs.query_local(qrows[0]["_vector_"], top_k=10, nprobe=16, better_than=0.99)
         assert all(h[K_METRICS] >= 0.99 for h in bt)
@@ -356,7 +340,7 @@ def test_resident_fallback_serves_exact_when_block_missing(store, queries):
     want = sorted(
         map(
             tuple,
-            batch_query(base, queries, top_k=5, method="gemm", score_dtype="float32").collect(),
+            batch_query(base, queries, top_k=5, method="gemm").collect(),
         )
     )
     rs = ResidentGemmStore(base, on_missing="fallback")
@@ -392,7 +376,7 @@ def test_resident_ivf_fallback_serves_exact_when_block_missing(store, queries):
     want = sorted(
         map(
             tuple,
-            batch_query(base, queries, top_k=5, method="gemm", score_dtype="float32").collect(),
+            batch_query(base, queries, top_k=5, method="gemm").collect(),
         )
     )
     rs = ResidentIvfStore(base, n_centroids=16, seed=42, on_missing="fallback")
@@ -450,24 +434,19 @@ def test_resident_fallback_honors_query_vector_col_and_partial_loss(store, queri
         rs.close()
 
 
-def test_resident_gemm_query_local_matches_distributed(store, queries):
-    """In-process exact serving == the distributed resident query for
-    the same vector: identical ids/ranks; scores within one float32 ulp
-    (GEMV vs batched GEMM accumulation order), same tolerance rule as
-    the IVF local/distributed pin."""
+def test_resident_gemm_query_local_matches_distributed(store, queries, exact):
+    """In-process exact serving == the distributed resident query ==
+    the float64 brute force, for every query: rows, scores and ranks,
+    with no tolerance."""
     base = store.select(K_ID, "_vector_")
-    qrow = queries.first()
     with ResidentGemmStore(base) as rs:
-        dist = (
-            rs.query(queries.limit(1), top_k=5)
-            .select(K_ID, K_METRICS, "rank")
-            .collect()
+        dist = rows_of(rs.query(queries, top_k=5))
+        local = sorted(
+            r
+            for qr in queries.collect()
+            for r in local_rows(qr["query_id"], rs.query_local(qr["_vector_"], top_k=5))
         )
-        loc = rs.query_local(qrow["_vector_"], top_k=5)
-    dist_by_rank = sorted(dist, key=lambda r: r["rank"])
-    assert [r[K_ID] for r in dist_by_rank] == [d[K_ID] for d in loc]
-    for a, b in zip(dist_by_rank, loc):
-        assert abs(a[K_METRICS] - b[K_METRICS]) <= 2e-6
+    assert dist == local == exact[5]
 
 
 def test_resident_gemm_query_local_int8_and_lifecycle(store, queries):

@@ -8,6 +8,7 @@ driver-generated deterministic testdata.
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
+from test_gemm_kernel import brute_force, rows_of
 
 from picovdb_spark.operators.similarity import batch_query, knn_join, query_one
 from picovdb_spark.schema import K_ID, K_METRICS, load_embeddings_store, load_table
@@ -25,6 +26,17 @@ def queries(spark, sf_dir):
         F.col("vec_id").cast("string").alias("query_id"),
         F.col("embedding").alias("_vector_"),
     )
+
+
+def brute_force_of(left, right, k, **kw):
+    """The float64 brute force of tests/test_gemm_kernel.py over two
+    (id, vector) frames."""
+    lrows, rrows = left.collect(), right.collect()
+    qids = [str(r[0]) for r in lrows]
+    qmat = np.array([r[1] for r in lrows], dtype=np.float64)
+    ids = [str(r[0]) for r in rrows]
+    vecs = np.array([r[1] for r in rrows], dtype=np.float64)
+    return brute_force(qids, qmat, ids, vecs, k, **kw)
 
 
 @pytest.fixture(scope="module")
@@ -281,22 +293,17 @@ def test_boundary_tie_resolution_matches_id_order(spark):
 
 
 def test_float32_path_same_ids_as_float64(store, queries):
-    """The throughput kernel (score_dtype="float32", the reference's own
-    precision, pico_vdb.py:62-75) must return the same neighbor SETS as
-    the float64 oracle path; scores agree to float32 tolerance."""
-    a = batch_query(store, queries, top_k=10, method="gemm")
-    b = batch_query(store, queries, top_k=10, method="gemm", score_dtype="float32")
-    rows_a = {(r["query_id"], r[K_ID]): r[K_METRICS] for r in a.collect()}
-    rows_b = {(r["query_id"], r[K_ID]): r[K_METRICS] for r in b.collect()}
-    assert set(rows_a) == set(rows_b)
-    for key, s64 in rows_a.items():
-        assert rows_b[key] == pytest.approx(s64, abs=1e-4)
+    """score_dtype="float32" is an alias of the certified kernel: both
+    dtypes return exactly the float64 brute force's rows and scores."""
+    want = brute_force_of(queries, store.select(K_ID, "_vector_"), 10)
+    for dtype in ("float64", "float32"):
+        got = batch_query(store, queries, top_k=10, method="gemm", score_dtype=dtype)
+        assert rows_of(got.select("query_id", K_ID, K_METRICS, "rank")) == want, dtype
 
 
 def test_float32_boundary_ties_resolve_by_id(spark):
-    """Tie-complete selection holds in the float32 kernel too: raw-score
-    selection pads by 1.5e-6 so a rounded tie can't drop the id-ordered
-    winner across partitions."""
+    """Tie-complete selection holds under the float32 alias too: a
+    rounded tie can't drop the id-ordered winner across partitions."""
     rows = [(str(i), [1.0, 0.0]) for i in range(6)] + [("x", [0.0, 1.0])]
     store = spark.createDataFrame(
         rows, schema="_id_ string, _vector_ array<float>"
@@ -500,12 +507,9 @@ def test_hard_negatives_validates_method(spark, sf_dir):
 
 
 def test_knn_join_blocked_float32_serving_mode(store, spark, sf_dir):
-    """score_dtype="float32" — the serving form (array<float> shuffle,
-    f64-normalize-then-truncate, sgemm): self-queries must return
-    themselves at exactly 1.0 (the normalize sequence matches
-    collect_normalized_queries bit-for-bit), overlap with the float64
-    oracle form must be near-total (differences only where f32
-    accumulation crosses a 6-decimal rounding edge), and an unknown
+    """score_dtype="float32" is an alias of the certified kernel: both
+    dtypes return exactly the float64 brute force (self-queries first,
+    at exactly 1.0), with and without exclude_self, and an unknown
     dtype raises."""
     from picovdb_spark.operators.similarity import knn_join_blocked
 
@@ -515,22 +519,15 @@ def test_knn_join_blocked_float32_serving_mode(store, spark, sf_dir):
         left_vec="embedding", right_vec="embedding",
         left_blocks=3, right_blocks=4,
     )
-    f32 = knn_join_blocked(emb, emb, k=5, score_dtype="float32", **kw).collect()
-    f64 = knn_join_blocked(emb, emb, k=5, score_dtype="float64", **kw).collect()
-    by_q32, by_q64 = {}, {}
-    for r in f32:
-        by_q32.setdefault(r["query_id"], {})[r["rank"]] = r
-    for r in f64:
-        by_q64.setdefault(r["query_id"], {})[r["rank"]] = r
-    assert set(by_q32) == set(by_q64) and len(by_q32) == 40
-    agree = 0
-    total = 0
-    for q, ranks in by_q32.items():
-        assert ranks[1][K_ID] == q and ranks[1][K_METRICS] == 1.0  # self at 1.0
-        ids32 = {r[K_ID] for r in ranks.values()}
-        ids64 = {r[K_ID] for r in by_q64[q].values()}
-        agree += len(ids32 & ids64)
-        total += len(ids64 | ids32 - ids64)  # union size
-    assert agree / total >= 0.95, f"f32 vs f64 overlap {agree}/{total}"
+    side = emb.select("vec_id", "embedding")
+    for skip in (False, True):
+        want = brute_force_of(side, side, 5, exclude_self=skip)
+        assert len(want) == 200
+        for dtype in ("float32", "float64"):
+            got = knn_join_blocked(emb, emb, k=5, score_dtype=dtype, exclude_self=skip, **kw)
+            assert rows_of(got) == want, (dtype, skip)
+        # self at exactly 1.0 ranks first, unless excluded
+        selves = [(r[2], r[3]) for r in want if r[0] == r[1]]
+        assert selves == ([] if skip else [("1.0", 1)] * 40)
     with pytest.raises(ValueError, match="score_dtype"):
         knn_join_blocked(emb, emb, k=1, score_dtype="float16", **kw)
