@@ -94,9 +94,9 @@ def minhash_signature(shingle_hashes: Column, num_hashes: int = 16) -> list[Colu
     (`transform(sh, md5_hash32)`): mh_i = min over shingles of
     (a_i·h + b_i) mod P. Empty shingle set ⇒ null.
 
-    REFERENCE TWIN: production signatures come from the Arrow kernel in
-    `dedup._sig_bands_from_shingles` (interpreted Catalyst HOFs cost 31 s
-    of a 44 s LSH wall at the 500k-doc tier); this Catalyst form states
+    REFERENCE TWIN: production signatures come from the Arrow kernel
+    `dedup._sig_band_lists_from_hashes` (interpreted Catalyst HOFs cost
+    31 s of a 44 s LSH wall at the 500k-doc tier); this Catalyst form states
     the formula declaratively and pins the kernel bit-identical in
     tests/test_oracle.py::test_minhash_sig_arrow_kernel_matches_catalyst_reference
     — the same identity the DuckDB oracle twins restate in SQL."""

@@ -1,27 +1,32 @@
 """Deduplication operators for large-scale training-data pipelines.
 
 The reference's only dedup is content-hash auto-id on ingest
-(/root/reference/picovdb/pico_vdb.py:54-55,424-426 — identical vectors
-collapse to one id). These operators generalize that to the standard
-LLM-corpus dedup ladder, each designed Spark-first:
+(picovdb's pico_vdb.py:54-55,424-426 — identical vectors collapse to one
+id). These operators generalize that to the standard LLM-corpus dedup
+ladder, each designed Spark-first:
 
-- exact_dedup            — hash-groupBy, one shuffle on the text hash
-- minhash_lsh_pairs      — shingle → minhash → band → bucket-join →
-                           verify: the scalable near-dup path; the
-                           candidate join shuffles on band buckets only
-- ngram_jaccard_pairs    — exact all-pairs Jaccard (the brute-force
-                           oracle/baseline; O(n²), small-n or per-bucket)
-- simhash_pairs          — simhash + pigeonhole block join + Hamming
-                           verify (guaranteed recall at the threshold)
-- embedding_near_dup     — cosine-threshold self-join over embeddings
-                           (GEMM only under BOTH the broadcast byte cap
-                           and the rows²×dim quadratic-compute budget;
-                           RP-LSH bucketed candidates otherwise)
-- connected_components   — pair list → transitive dup clusters with one
-                           canonical doc each (hash-min propagation)
+- exact_dedup             — every doc → smallest id sharing its md5(text)
+- minhash_lsh_pairs       — shingle → minhash → band-bucket join → exact
+                            Jaccard verify (the scalable near-dup path)
+- lsh_bucket_stats        — band-bucket size distribution of that join
+- ngram_jaccard_pairs     — exact all-pairs shingle Jaccard (O(n²) baseline)
+- simhash_fingerprint     — one document's SimHash (shared with streaming)
+- simhash                 — per-doc SimHash column, map-side
+- simhash_pairs           — pigeonhole block join + exact Hamming verify
+- embedding_near_dup      — cosine-threshold self-join (GEMM, RP-LSH or SQL)
+- connected_components    — pair list → transitive dup clusters
+- keep_best_per_component — keep the best-scoring doc per cluster
+- paragraph_dedup         — drop repeated paragraphs corpus-wide
+- window_dedup            — drop repeated token windows corpus-wide
+- minhash_index           — text-free persistable MinHash index
+- minhash_dedup_against   — screen a new batch against that index
+- centroid_affinity       — nearest-centroid cosine/distance per row
+- semantic_dedup_pairs    — SemDeDup: cosine pairs within k-means clusters
 
-All hashes are md5-derived (functions/text.py) so every operator has a
-bit-identical DuckDB oracle.
+Every hash an output depends on is md5-derived (functions/text.py), so
+every operator has a bit-identical DuckDB oracle; `window_dedup`'s
+internal polynomial window keys only decide equality, and the oracle
+checks the text they produce.
 """
 
 from __future__ import annotations
@@ -33,7 +38,6 @@ from picovdb_spark.functions.text import (
     MINHASH_PRIME,
     _minhash_coeffs,
     jaccard,
-    word_shingles,
 )
 from picovdb_spark.functions.vector import dot, l2_normalize
 from picovdb_spark.operators.kernels import prescan_error_bound
@@ -77,27 +81,17 @@ def _shingle_set(toks: list, n: int) -> list:
     return list({" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)})
 
 
-def _shingled(
-    docs: DataFrame, id_col: str, text_col: str, n: int, token_set=None
-) -> DataFrame:
-    """Distinct word n-gram shingles per doc, as an Arrow-batched kernel.
+def _shingled(docs: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
+    """Distinct word n-gram shingles per doc, (id, sh: array<string>), as
+    an Arrow-batched kernel.
 
     Semantics identical to `functions.text.word_shingles` (and its DuckDB
     twin) except element ORDER inside the array, which no consumer
-    observes (min-hash, intersect/union, counts are all order-free). The
-    Catalyst expression chain (sequence→transform→element_at×n→concat_ws→
+    observes (intersect/union and counts are order-free). The Catalyst
+    expression chain (sequence→transform→element_at×n→concat_ws→
     array_distinct) allocates per-position; on long documents the Python
-    set kernel is ~10× faster (bench history: 10.4s → ~1s for 5k docs of
-    ~2k words at sf0.1) and it is embarrassingly parallel — no shuffle.
-
-    `token_set` (optional frozenset): token-overlap prune for screens
-    against a SMALL reference set (decontaminate) — docs whose token
-    set is disjoint emit NO row at all: they can share no n-gram with
-    the reference, so building their gram strings (the dominant kernel
-    cost) and Arrow-shipping them is pure waste. The disjointness check
-    is O(tokens) frozenset lookups on the already-tokenized doc, orders
-    cheaper than gram construction. ONE kernel serves both forms, so
-    tokenization/shingling cannot drift between them."""
+    set kernel is ~10× faster, and it is embarrassingly parallel — no
+    shuffle."""
     from collections.abc import Iterator
 
     from pyspark.sql import types as T
@@ -115,193 +109,16 @@ def _shingled(
         for pdf in batches:
             if pdf.empty:
                 continue
-            if token_set is None:
-                out = [_shingle_set(_tok_list(text), n) for text in pdf[text_col]]
-                yield pd.DataFrame({id_col: pdf[id_col], "sh": out})
-                continue
-            ids, out = [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                toks = _tok_list(text)
-                if token_set.isdisjoint(toks):
-                    continue
-                ids.append(did)
-                out.append(_shingle_set(toks, n))
-            if not ids:
-                # an all-pruned batch must yield NOTHING: an empty
-                # plain-list DataFrame infers float64 columns, which
-                # Arrow cannot cast to (id_type, list<string>)
-                continue
-            yield pd.DataFrame({id_col: ids, "sh": out})
+            out = [_shingle_set(_tok_list(text), n) for text in pdf[text_col]]
+            yield pd.DataFrame({id_col: pdf[id_col], "sh": out})
 
     return docs.select(id_col, text_col).mapInPandas(kernel, schema=out_schema)
-
-
-def _shingled_for_index(docs: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
-    """`_shingled` plus the short-route hash, in ONE Arrow pass:
-    (id, sh, text_hash) where sub-shingle docs (fewer than `n` tokens)
-    get an empty shingle list and the md5 of their normalized token
-    join, and everything else gets its shingles and a NULL hash. One
-    corpus read — the filter-based alternative (build signatures, then
-    re-scan the corpus for short docs) doubles index-build I/O, which
-    is the whole bill at 100 TB. Tokenization and shingling are the
-    SHARED `_tok_list`/`_shingle_set` helpers (structurally impossible
-    to drift from `_shingled`); the hash matches Catalyst
-    ``md5(concat_ws(' ', tokens(coalesce(text, ''))))`` and DuckDB
-    ``md5(coalesce(array_to_string(t, ' '), ''))`` — the coalesces
-    matter: NULL text tokenizes as [] here (`_tok_list`), and DuckDB's
-    array_to_string over an empty list is NULL, so both twins need
-    pinning to the md5('') the zero-token route produces."""
-    import hashlib
-    from collections.abc import Iterator
-
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, docs.schema[id_col].dataType),
-            T.StructField("sh", T.ArrayType(T.StringType())),
-            T.StructField("text_hash", T.StringType()),
-        ]
-    )
-
-    def kernel(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            shingles, short = [], []
-            for text in pdf[text_col]:
-                toks = _tok_list(text)
-                if len(toks) >= n:
-                    shingles.append(_shingle_set(toks, n))
-                    short.append(None)
-                else:
-                    shingles.append([])
-                    short.append(hashlib.md5(" ".join(toks).encode()).hexdigest())
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "sh": shingles, "text_hash": short}
-            )
-
-    return docs.select(id_col, text_col).mapInPandas(kernel, schema=out_schema)
-
-
-def _sig_bands_from_shingles(
-    sh: DataFrame, id_col: str, num_hashes: int, bands: int, *, short_col: str | None = None
-) -> DataFrame:
-    """(id, sig: array<long>, bands: array<string>) from a shingle
-    DataFrame — the ONE signature+banding construction. Every consumer
-    (`minhash_lsh_pairs` self-join, `lsh_bucket_stats` diagnostic,
-    `minhash_index` persistable index, and through it the streaming
-    screen) derives from this projection, so none can drift from the
-    others. One md5 per shingle, materialized as a column so the
-    `num_hashes` permutation mins share it.
-
-    Rows with EMPTY shingle sets (documents shorter than `shingle_n`
-    tokens) are dropped: min-over-empty yields all-null signature
-    coordinates, which (a) can never pass any Jaccard/estimator
-    verification (J(∅,·)=0) and (b) collapse every band to the same
-    md5-of-nulls bucket — one boilerplate bucket of ALL short docs,
-    an O(h²) candidate blow-up at corpus scale. Dropping them is
-    semantics-preserving for every consumer; route sub-shingle docs
-    through `exact_dedup` (content hash) instead.
-
-    `short_col` (the `minhash_index(include_short=True)` form): name of
-    a passthrough column from `_shingled_for_index` — empty-shingle
-    rows are then KEPT with NULL (sig, bands) next to their short-route
-    hash instead of being dropped, in the same single projection (no
-    union, no second corpus pass)."""
-    if num_hashes % bands != 0:
-        # a silent floor here would quietly band only rows*bands of the
-        # num_hashes coordinates — lower recall with no signal (the
-        # simhash_pairs bits/bands guard is the same contract)
-        raise ValueError(
-            f"bands ({bands}) must divide num_hashes ({num_hashes}); "
-            f"got remainder {num_hashes % bands}"
-        )
-    # Arrow kernel, not Catalyst HOFs: the values are EXACTLY the
-    # documented formula — h = int(md5(shingle)[:8 hex], 16), mh_i =
-    # min over shingles of (a_i·h + b_i) mod MINHASH_PRIME (fixed
-    # seeded coeffs, functions/text._minhash_coeffs), band = md5 of the
-    # comma-joined decimal slice — bit-identical to the previous
-    # `transform(sh, md5_hash32)` + num_hashes×array_min(transform(...))
-    # Catalyst form AND to the DuckDB oracle twins (test-pinned). The
-    # HOF form ran INTERPRETED per element; at the 500k-doc tier that
-    # was 31 s of the 44 s LSH wall (r9 profile), vs ~16 vectorized
-    # mul-mod passes + one hashlib pass here. Same r8 lesson as the
-    # shingle kernels: no interpreted HOFs on corpus-sized paths.
-    rows = num_hashes // bands
-    coeffs = _minhash_coeffs(num_hashes)
-    extra = [short_col] if short_col is not None else []
-    if short_col is None:
-        sh = sh.filter(F.size("sh") > 0)
-    src = sh.select(id_col, "sh", *extra)
-
-    import numpy as np
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(
-        [
-            src.schema[id_col],
-            T.StructField("sig", T.ArrayType(T.LongType())),
-            T.StructField("bands", T.ArrayType(T.StringType())),
-            *([src.schema[short_col]] if short_col is not None else []),
-        ]
-    )
-    A = np.array([a for a, _ in coeffs], dtype=np.int64)
-    B = np.array([b for _, b in coeffs], dtype=np.int64)
-
-    def kernel(batches: "Iterator") -> "Iterator":
-        import pandas as pd
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            sig_out, band_out = _sig_band_lists(pdf["sh"], A, B, num_hashes, bands)
-            data = {id_col: pdf[id_col], "sig": sig_out, "bands": band_out}
-            for c in extra:
-                data[c] = pdf[c]
-            yield pd.DataFrame(data)
-
-    return src.mapInPandas(kernel, schema=out_schema)
-
-
-def _sig_band_lists(lists, A, B, num_hashes: int, bands: int):
-    """Per-batch signature+banding math shared by EVERY kernel that
-    computes MinHash signatures (`_sig_bands_from_shingles` and the
-    fused `_shingled_sig_bands`) — one implementation, so the fused
-    LSH path and the index/streaming path cannot drift. Returns
-    (sig_out, band_out) aligned with `lists`; empty shingle lists get
-    (None, None). `A`/`B` are the `_minhash_coeffs` arrays as int64
-    numpy vectors (hoisted by the caller so they're built once per
-    kernel, not per batch)."""
-    # NULL shingle arrays map to (None, None) exactly like empty ones —
-    # today's callers (_shingled / _shingled_for_index) always emit
-    # lists, but this kernel is the shared core for any future caller
-    # and the Catalyst form it replaced degraded NULLs gracefully
-    return _sig_band_lists_from_hashes(
-        _shingle_hash_lists(lists), A, B, num_hashes, bands
-    )
-
-
-def _shingle_hash_lists(lists) -> list:
-    """md5_hash32 int per shingle, per row (NULL rows → []) — one md5
-    per shingle; digest()[:4] big-endian == first 8 hex chars as int,
-    the md5_hash32 contract shared with the Catalyst/DuckDB twins."""
-    import hashlib
-
-    return [
-        [int.from_bytes(hashlib.md5(s.encode()).digest()[:4], "big") for s in lst]
-        if lst is not None
-        else []
-        for lst in lists
-    ]
 
 
 def _hashed_shingle_lists(texts, n: int, *, tokenized: bool = False) -> list:
-    """`_shingle_hash_lists(_shingled-style shingle sets)` fused into one
-    slice-hash pass: per row, the distinct-shingle md5_hash32 int list,
-    WITHOUT ever constructing the per-position shingle strings.
+    """Per row, the md5_hash32 int of every distinct shingle in
+    `_shingle_set(_tok_list(text), n)`, computed WITHOUT constructing the
+    per-position shingle strings.
 
     Equivalence (pinned by test_hashed_shingle_lists_matches_string_form):
     the shingle string for positions i..i+n-1 is ``" ".join(toks[i:i+n])``,
@@ -316,15 +133,13 @@ def _hashed_shingle_lists(texts, n: int, *, tokenized: bool = False) -> list:
     the same multiset of md5_hash32 ints as the string form, in arbitrary
     set order (every consumer is order-insensitive: min-perm signatures,
     array_intersect/array_union verify, and the DuckDB twins all carry
-    set semantics).
+    set semantics). md5_hash32 is the first 4 digest bytes big-endian,
+    i.e. the first 8 hex chars as an int.
 
-    Why: the string form's per-position ``" ".join`` + string-set insert +
-    per-distinct encode dominated the LSH kernel wall (r12 profile:
-    tokenize+shingle ~15 s of an 18.4 s per-partition wall at the 1M
-    tier, the join itself the largest term). Here the per-position work
-    is one C md5 over a borrowed slice + one set insert of the digest —
-    the same allocation-frugal recipe as the window poly kernel's
-    slice scan (no per-position Python string materializes at all).
+    The per-position work is one C md5 over a borrowed slice + one set
+    insert of the digest; the string form's per-position ``" ".join`` +
+    string-set insert + per-distinct encode dominated the LSH kernel wall
+    (~15 s of an 18.4 s per-partition wall at the 1M-doc tier).
 
     `tokenized=True`: `texts` are already `_tok_list`-shaped token
     lists (the pruned decontaminate path, which must tokenize before
@@ -368,13 +183,16 @@ def _hashed_shingle_lists(texts, n: int, *, tokenized: bool = False) -> list:
 def _shingled_hashed(
     docs: DataFrame, id_col: str, text_col: str, n: int, token_set=None
 ) -> DataFrame:
-    """`_shingled` with the hashing fused in: (id, sh: array<long>) of
-    distinct-shingle md5_hash32 ints per doc, via the slice-md5 kernel
-    (`_hashed_shingle_lists`) — for consumers that only ever HASH the
-    gram strings (decontaminate joins on md5_hash32(gram)), shipping the
-    strings JVM→Python→JVM just to re-hash them in Catalyst was pure
-    boundary cost. Same `token_set` prune contract as `_shingled`:
-    docs token-disjoint from the reference set emit NO row."""
+    """(id, sh: array<long>) of distinct-shingle md5_hash32 ints per doc,
+    via the slice-md5 kernel (`_hashed_shingle_lists`) — for consumers
+    that only ever HASH the gram strings (decontaminate joins on
+    md5_hash32(gram)), so no gram string crosses the JVM↔Python boundary.
+
+    `token_set` (optional frozenset): token-overlap prune for screens
+    against a SMALL reference set (decontaminate) — docs whose token
+    set is disjoint emit NO row at all: they can share no n-gram with
+    the reference. The disjointness check is O(tokens) frozenset lookups
+    on the already-tokenized doc, orders cheaper than gram hashing."""
     from collections.abc import Iterator
 
     from pyspark.sql import types as T
@@ -408,8 +226,9 @@ def _shingled_hashed(
                 ids.append(did)
                 toks_kept.append(toks)
             if not ids:
-                # an all-pruned batch must yield NOTHING (empty
-                # plain-list frames infer float64 — the _shingled rule)
+                # an all-pruned batch must yield NOTHING: an empty
+                # plain-list DataFrame infers float64 columns, which
+                # Arrow cannot cast to (id_type, list<long>)
                 continue
             yield pd.DataFrame(
                 {
@@ -421,12 +240,34 @@ def _shingled_hashed(
     return docs.select(id_col, text_col).mapInPandas(kernel, schema=out_schema)
 
 
+def _minhash_coeff_arrays(num_hashes: int, bands: int) -> tuple:
+    """The seeded `_minhash_coeffs` as int64 (A, B) vectors, after
+    checking that `bands` divides `num_hashes` — a silent floor would
+    band only rows·bands of the coordinates: lower recall with no
+    signal (simhash_pairs' bits/bands guard is the same contract)."""
+    import numpy as np
+
+    if num_hashes % bands != 0:
+        raise ValueError(
+            f"bands ({bands}) must divide num_hashes ({num_hashes}); "
+            f"got remainder {num_hashes % bands}"
+        )
+    coeffs = _minhash_coeffs(num_hashes)
+    A = np.array([a for a, _ in coeffs], dtype=np.int64)
+    B = np.array([b for _, b in coeffs], dtype=np.int64)
+    return A, B
+
+
 def _sig_band_lists_from_hashes(hlists: list, A, B, num_hashes: int, bands: int):
-    """`_sig_band_lists` after the hashing step: signature + banding
-    math over PRE-HASHED shingle lists, so a caller that also wants the
-    hash lists themselves (the fused LSH kernel, whose verify join now
-    rides int arrays instead of re-shipping shingle strings) hashes each
-    shingle exactly once."""
+    """THE MinHash signature + banding math, over per-row md5_hash32
+    lists (`_hashed_shingle_lists`): mh_i = min over the row's hashes
+    of (a_i·h + b_i) mod MINHASH_PRIME, band = md5 of the comma-joined
+    decimal slice of `num_hashes // bands` coordinates — bit-identical
+    to the Catalyst `minhash_signature`/`band_value` twins and the
+    DuckDB oracle (test-pinned). Vectorized as `num_hashes` mul-mod
+    passes over the flattened batch, not interpreted per-element HOFs.
+    Returns (sig_out, band_out) aligned with `hlists`; an empty list
+    gets (None, None). `A`/`B` come from `_minhash_coeff_arrays`."""
     import hashlib
 
     import numpy as np
@@ -455,8 +296,7 @@ def _sig_band_lists_from_hashes(hlists: list, A, B, num_hashes: int, bands: int)
     j = 0
     for k in range(n_rows):
         if not nonempty[k]:
-            # empty shingle set ⇒ null (sig, bands) — short_col /
-            # fused routes keep the row, the default route pre-filters
+            # min over an empty shingle set is undefined ⇒ null (sig, bands)
             sig_out.append(None)
             band_out.append(None)
             continue
@@ -484,40 +324,19 @@ def _shingled_sig_bands(
     num_hashes: int,
     bands: int,
 ) -> DataFrame:
-    """(id, shh, bands) in ONE Arrow pass — tokenize, shingle, hash,
-    min-perm, and band without ever materializing the shingle arrays
-    back into the JVM between stages. This is `minhash_lsh_pairs`'
-    fast path: the two-step form (`_shingled` cache → signature kernel)
-    ships the corpus's shingle strings JVM→Python a second time
-    (~hundreds of MB at the 1M tier) purely to hash them; here the
-    signature rides the same kernel that built the shingles, and the
-    one cached frame serves BOTH the banded self-join (posexplode of
-    `bands`, a cheap projection) and the Jaccard verify join.
-
-    `shh` is the md5_hash32 INT per shingle (r10) — the verify computes
-    |∩|/|∪| over distinct hash arrays, not shingle strings: the strings
-    averaged ~6× the bytes of the int64s, so the cached frame, the
-    semi-join, and the two verify joins all shrink, and the
-    intersect/union runs on longs. Values match the string form up to
-    the operator's documented 2^-32 md5_hash32 collision tolerance
-    (the DuckDB oracle twin hashes the same way, so the GATE comparison
-    is exact even when a collision fires). Signature values are the
-    shared `_sig_band_lists_from_hashes` math over the SAME hash lists
-    — identical to `_sig_bands_from_shingles` by construction, and the
-    shingles are hashed exactly once. Empty shingle lists keep their
-    row with bands=NULL (posexplode skips them; they can never be
-    candidates)."""
-    if num_hashes % bands != 0:
-        raise ValueError(
-            f"bands ({bands}) must divide num_hashes ({num_hashes}); "
-            f"got remainder {num_hashes % bands}"
-        )
-    import numpy as np
+    """(id, shh, bands) in ONE Arrow pass — `minhash_lsh_pairs`' kernel:
+    tokenize, hash every distinct shingle once (`_hashed_shingle_lists`),
+    then min-perm and band (`_sig_band_lists_from_hashes`). One cached
+    frame serves both the banded self-join (`bands`) and the Jaccard
+    verify (`shh`, the md5_hash32 int per shingle). The verify's
+    |∩|/|∪| over hash ints matches the string form up to the operator's
+    documented 2^-32 md5_hash32 collision tolerance (the DuckDB oracle
+    twin hashes the same way, so the gate comparison is exact). Empty
+    shingle lists keep their row with bands=NULL (posexplode skips
+    them; they can never be candidates)."""
     from pyspark.sql import types as T
 
-    coeffs = _minhash_coeffs(num_hashes)
-    A = np.array([a for a, _ in coeffs], dtype=np.int64)
-    B = np.array([b for _, b in coeffs], dtype=np.int64)
+    A, B = _minhash_coeff_arrays(num_hashes, bands)
     out_schema = T.StructType(
         [
             docs.schema[id_col],
@@ -532,9 +351,6 @@ def _shingled_sig_bands(
         for pdf in batches:
             if pdf.empty:
                 continue
-            # slice-md5 fused form (r12): same md5_hash32 multiset as
-            # _shingle_hash_lists(_shingle_set(...)) without building a
-            # single shingle string — see _hashed_shingle_lists
             hlists = _hashed_shingle_lists(pdf[text_col], n)
             _, band_out = _sig_band_lists_from_hashes(hlists, A, B, num_hashes, bands)
             yield pd.DataFrame(
@@ -542,18 +358,6 @@ def _shingled_sig_bands(
             )
 
     return docs.select(id_col, text_col).mapInPandas(kernel, schema=out_schema)
-
-
-def _band_rows_from_shingles(
-    sh: DataFrame, id_col: str, num_hashes: int, bands: int
-) -> DataFrame:
-    """(id, band_idx, band) exploded band rows — one posexplode over the
-    shared `_sig_bands_from_shingles` projection, not `bands` unioned
-    selects (a union re-evaluates the signature subtree per branch per
-    consumer)."""
-    return _sig_bands_from_shingles(sh, id_col, num_hashes, bands).select(
-        F.col(id_col), F.posexplode("bands").alias("band_idx", "band")
-    )
 
 
 def minhash_lsh_pairs(
@@ -599,10 +403,9 @@ def minhash_lsh_pairs(
     """
     import time as _time
 
-    # ONE fused Arrow pass builds shingles AND band hashes (values =
-    # the shared _sig_band_lists math); the single cached frame feeds
-    # both the banded self-join and the verify join — the two-step
-    # form re-shipped every shingle string JVM→Python just to hash it
+    # ONE fused Arrow pass builds shingle hashes AND band hashes; the
+    # single cached frame feeds both the banded self-join and the
+    # verify join
     fused = _shingled_sig_bands(
         docs, id_col, text_col, shingle_n, num_hashes, bands
     ).cache()
@@ -691,8 +494,17 @@ def lsh_bucket_stats(
     across scale tiers is the evidence that the bucketed-join claim
     holds past the test SF (this aggregation is one narrow groupBy on
     (band_idx, band) — run it on a sample or the full corpus)."""
-    sh = _shingled(docs, id_col, text_col, shingle_n)
-    band_rows = _band_rows_from_shingles(sh, id_col, num_hashes, bands)
+    # the `minhash_lsh_pairs` band rows: the same signature math, and
+    # sub-shingle docs dropped (include_short=False) — they never join
+    band_rows = minhash_index(
+        docs,
+        id_col=id_col,
+        text_col=text_col,
+        shingle_n=shingle_n,
+        num_hashes=num_hashes,
+        bands=bands,
+        include_short=False,
+    ).select(F.posexplode("bands").alias("band_idx", "band"))
     sizes = band_rows.groupBy("band_idx", "band").agg(F.count("*").alias("n"))
     row = sizes.agg(
         F.count("*").alias("buckets"),
@@ -1249,26 +1061,6 @@ def keep_best_per_component(
     )
 
 
-# Diagnostic hook (interleaved A/B, RUNBOOK): forces the struct-min
-# SortAggregate election even for integral/string ids so old/new plans
-# can be compared running otherwise-identical code. Never set in
-# production.
-_FORCE_STRUCT_ELECTION = False
-
-# String-id election strategy. "struct" (default): one shuffle +
-# per-partition SortAggregate — the ADJUDICATED winner (r12 interleaved
-# A/B at 1M docs, 4 order-balanced pairs each, identical checksums:
-# struct beat the dense-long-surrogate election 1.37x with 15-byte ids
-# and 6x with ~100-byte URL ids; the surrogate's forward join re-
-# shuffles every wide id it was meant to avoid shuffling, then pays a
-# second 30M-row back-join). "surrogate": rank distinct ids to a dense
-# long, elect through the HashAggregate decimal path, map back — kept
-# selectable because its plan shape (all-narrow shuffles, no
-# per-partition sort of wide keys) is the one to prefer if a profile
-# ever shows election SORT SPILL dominating, and for the A/B harness.
-_STRING_ID_ELECTION = "struct"
-
-
 def _min_first_election(
     spans: DataFrame,
     key_cols: list[str],
@@ -1276,79 +1068,34 @@ def _min_first_election(
     pos_col: str,
     *,
     with_count: bool = False,
-    ids_source: DataFrame | None = None,
 ) -> DataFrame:
     """Per key-group winner election — the lexicographically-FIRST
     (id, pos) in each group — shared by `paragraph_dedup` and
-    `window_dedup` so the encoding invariants live in one place (r11
-    advisor). Returns one row per distinct key:
-    (*key_cols, id_col, pos_col[, __c = group count]).
+    `window_dedup`. Returns one row per distinct key:
+    (*key_cols, id_col, pos_col[, __c = group count]). The path is
+    chosen by the id dtype:
 
-    Physical-plan contract (the r11 finding this helper preserves):
-    ``min(struct(id, pos))`` plans SortAggregate on BOTH shuffle sides
-    (struct agg buffers aren't UnsafeRow-mutable) — a full per-partition
-    sort of every shuffled (key, id, pos) triplet by its digest key,
-    measured 15-85 s at 31M spans on first execution. The election is
-    therefore rewritten per id dtype:
-
-    - INTEGRAL ids: encode (id, pos) as ONE decimal id*10^10 + pos —
-      base-10^10 positional, so numeric order IS the lexicographic
-      (id, pos) order (pos in [0, 2^31) which is a subset of
-      [0, 10^10); decimal(33,0) cannot overflow: |id|*10^10 < 10^29).
+    - INTEGRAL ids: encode (id, pos) as ONE decimal id·10¹⁰ + pos, whose
+      numeric order is the lexicographic (id, pos) order (pos ∈ [0, 2³¹)
+      ⊂ [0, 10¹⁰); |id|·10¹⁰ < 10²⁹ cannot overflow decimal(33,0)).
       ``min(decimal)`` plans HashAggregate with a map-side partial.
-      Decode is INTEGRAL (r12, advisor finding): pos = pmod(e, 10^10)
-      — the non-negative remainder, exact for negative ids — and
-      id = (e - pmod(e, 10^10)) / 10^10, a division of an EXACT
-      multiple of the divisor, so Spark's scale-6 decimal-division
-      HALF_UP rounding cannot perturb it. (The former floor(e/K)
-      decode leaned on a subtle rounding-safety bound — pos < 2^31
-      keeps the quotient's fraction <= 0.215, under the 0.5 rounding
-      threshold — correct, but a precondition the code couldn't see.)
-
-    - STRING ids (r11 verdict #1 — URLs/UUIDs/WARC record ids, the
-      common production key type at 100 TB): the struct-min form, BY
-      MEASUREMENT. min(string)-keyed aggregation cannot HashAggregate
-      (variable-length agg buffers aren't UnsafeRow-mutable), so the
-      only hash-agg route is a numeric surrogate — implemented below
-      (rank the distinct ids ascending via ``ordering.global_rank``,
-      hash-join spans -> surrogate, elect through the decimal path,
-      map winners back) and selectable via
-      ``_STRING_ID_ELECTION = "surrogate"`` — but the r12 interleaved
-      A/B at 1M docs (4 order-balanced pairs per width, identical
-      output checksums every rep) read struct 1.37x FASTER with
-      15-byte ids and 6x with ~100-byte URL ids: the surrogate's
-      forward join re-shuffles every wide id it was meant to keep out
-      of the election shuffle, then pays a ~30M-row back-join, while
-      the 16-byte binary digest election keys (r11) already removed
-      most of the sort's width. The struct election is ONE shuffle +
-      per-partition sorts; at cluster scale sorts scale with
-      partitioning while the surrogate's two extra whole-data shuffles
-      scale with network — the same adjudication, documented in
-      ``tests/test_plans.py`` as the package's second reasoned
-      SortAggregate (with asof_join's max_by).
-      When the surrogate path IS selected: the map is frozen with
-      localCheckpoint(eager=True) — bounded, one narrow (id, long) row
-      per distinct id — both because it is consumed twice (forward +
-      back join) and because global_rank's offsets are only stable
-      while its source stays pinned; that path launches the ranking
-      jobs EAGERLY at plan-construction time (global_rank's contract).
-
-    - OTHER id types: the struct-min form — identical values — as an
-      honest fallback (also forced by `_FORCE_STRUCT_ELECTION` for
-      tests and A/B harnesses).
+      Decode is integral: pos = pmod(e, 10¹⁰), the non-negative
+      remainder (exact for negative ids), and id = (e − pos) / 10¹⁰, a
+      division of an exact multiple, so decimal-division rounding
+      cannot perturb it.
+    - every other type: ``min(struct(id, pos))`` — the same values, but
+      planned SortAggregate on both shuffle sides (struct agg buffers
+      aren't UnsafeRow-mutable). For string ids that sort is the
+      cheaper plan; tests/test_plans.py pins it with the reason.
     """
     id_dtype = dict(spans.dtypes)[id_col]
-    integral = id_dtype in ("tinyint", "smallint", "int", "bigint")
     count_cols = ["__c"] if with_count else []
+    count_aggs = [F.count("*").alias("__c")] if with_count else []
 
-    use_surrogate = id_dtype == "string" and _STRING_ID_ELECTION == "surrogate"
-    if _FORCE_STRUCT_ELECTION or not (integral or use_surrogate):
-        aggs = [F.min(F.struct(F.col(id_col), F.col(pos_col))).alias("__w")]
-        if with_count:
-            aggs.append(F.count("*").alias("__c"))
+    if id_dtype not in ("tinyint", "smallint", "int", "bigint"):
         return (
             spans.groupBy(*key_cols)
-            .agg(*aggs)
+            .agg(F.min(F.struct(F.col(id_col), F.col(pos_col))).alias("__w"), *count_aggs)
             .select(
                 *key_cols,
                 F.col(f"__w.{id_col}").alias(id_col),
@@ -1357,38 +1104,14 @@ def _min_first_election(
             )
         )
 
-    if not integral:  # string ids: order-preserving dense-long surrogate
-        from picovdb_spark.operators.ordering import (
-            global_rank,
-            release_global_rank,
-        )
-
-        ids = (ids_source if ids_source is not None else spans).select(id_col)
-        ranked = global_rank(ids.distinct(), [(id_col, "asc")], rank_col="__sid")
-        smap = ranked.localCheckpoint(eager=True)
-        release_global_rank(ranked)
-        elected = _min_first_election(
-            spans.select(*key_cols, id_col, pos_col).join(smap, on=id_col),
-            key_cols,
-            "__sid",
-            pos_col,
-            with_count=with_count,
-        )
-        return elected.join(smap, on="__sid").select(
-            *key_cols, id_col, pos_col, *count_cols
-        )
-
     _K = F.lit(10_000_000_000).cast("decimal(11,0)")
     enc = F.col(id_col).cast("decimal(20,0)") * _K + F.col(pos_col)
-    aggs = [F.min("__e").alias("__e")]
-    if with_count:
-        aggs.append(F.count("*").alias("__c"))
     rem = F.pmod(F.col("__e"), _K)
     dec_id = ((F.col("__e") - rem) / _K).cast("long")
     return (
         spans.select(*key_cols, enc.alias("__e"))
         .groupBy(*key_cols)
-        .agg(*aggs)
+        .agg(F.min("__e").alias("__e"), *count_aggs)
         .select(
             *key_cols,
             dec_id.cast(id_dtype).alias(id_col),
@@ -1431,41 +1154,16 @@ def paragraph_dedup(
     upstream if the input can contain them.
 
     Scale shape — the decision never shuffles text:
-      1. posexplode to (id, pos, para) and hash: map-side only.
-      2. Elect winners: groupBy(md5(para)) ⇒ min over (id, pos) encoded
-         as ONE decimal — id·10¹⁰ + pos, numerically identical to the
-         lexicographic (id, pos) order because pos ∈ [0, 10¹⁰). The
-         encoding matters for the physical plan: min(struct(id, pos))
-         plans as SortAggregate on BOTH sides of the shuffle (struct
-         buffers aren't UnsafeRow-mutable), i.e. a full per-partition
-         sort of every (digest, id, pos) triplet by its md5 string
-         before any combining — measured 15–85 s at 31M spans on first
-         execution. min(decimal) is HashAggregate with a map-side
-         partial (probe: same volume class, 2.6 s fresh). The paragraph
-         BYTES stay put either way. String ids (URLs/UUIDs — the common
-         production key) elect through min(struct) — the r12
-         interleaved A/B adjudicated it over the order-preserving
-         dense-long surrogate (struct won every order-balanced pair:
-         1.37x with 15-byte ids, 6x with ~100-byte URLs; the
-         surrogate's forward join re-shuffles every wide id before the
-         election even starts). The surrogate stays selectable; see
-         `_min_first_election` for all three paths and the full
-         adjudication.
-      3. Collapse winners + ineligible positions to one sorted int
-         array per doc: a second narrow shuffle of (id, pos) only.
+      1. posexplode to (id, pos, para) and key each span: map-side only.
+      2. Elect the first (id, pos) per key (`_min_first_election`); only
+         (key, id, pos) rows shuffle.
+      3. Collapse the winners to one sorted int array per doc: a second
+         narrow shuffle of (id, pos) only.
       4. Reassemble map-side: join the int keep-list back to `docs` on
-         id (the single full-width shuffle, ~= one pass over the corpus;
-         zero if the corpus is bucketed/partitioned by id, and AQE
-         broadcasts the keep-list when it fits) and re-split + filter +
-         join the text in place. The alternative — grouping exploded
-         paragraph text back per doc — shuffles every text byte through
-         the aggregate; this plan moves each doc's text at most once.
-
-    Reassembly is O(kept) per doc: `__keep` is already the sorted kept
-    positions, so each surviving paragraph is one O(1) `element_at`
-    into the once-materialized split array (the former per-element
-    `array_contains` filter probed O(paras × kept) per doc, and the
-    inlined split re-expanded 4× in codegen — r12).
+         id (the single full-width shuffle; zero if the corpus is
+         bucketed by id, and AQE broadcasts the keep-list when it fits)
+         and pick each kept paragraph by one O(1) `element_at` into the
+         once-materialized split array — O(kept) per doc.
 
     Reference contrast: the reference dedups whole payloads only via
     content-hash auto-ids (pico_vdb.py:54-55); sub-document spans are
@@ -1474,12 +1172,9 @@ def paragraph_dedup(
     `stage_times` (optional dict, diagnostic — the minhash_lsh_pairs
     contract): eagerly materializes the narrow (id, keep-positions)
     list via localCheckpoint with its wall recorded under
-    ``election`` (steps 1–3: explode, hash, winner election, keep-list
-    collapse), so the caller's final materialization times only step 4
-    (the text-reassembly join) — record it as the remainder under
-    ``reassembly``. The checkpoint also breaks lineage, so election
-    work never re-runs inside the reassembly action. Off (default):
-    fully lazy, identical values.
+    ``election`` (steps 1–3), so the caller's final materialization
+    times only step 4 — record it as the remainder under
+    ``reassembly``. Off (default): fully lazy, identical values.
     """
     import re as _re
 
@@ -1488,22 +1183,14 @@ def paragraph_dedup(
     # phantom span_empty husk (n_kept 0 with no spans at all)
     arr = F.split(F.coalesce(F.col(text_col), F.lit("")), _re.escape(sep), -1)
     paras = docs.select(F.col(id_col), F.posexplode(arr).alias("pos", "para"))
-    # ONE election pass over ALL spans (r12): the former
-    # eligible/ineligible filter split evaluated the corpus scan +
-    # split + posexplode TWICE (one subtree per branch) before
-    # unioning the kept positions back together. Instead every span
-    # gets a single binary election key with prefix-disjoint domains:
-    #   eligible  → 0x01 ‖ unhex(md5(para))   (17 B; r11's 16-byte
-    #               digest — equality over unhex(md5) ≡ equality over
-    #               the hex string — behind a 1-byte domain tag)
+    # ONE election pass over ALL spans, each with a binary election key
+    # in one of two prefix-disjoint domains:
+    #   eligible  → 0x01 ‖ unhex(md5(para))   (17 B: equality over the
+    #               16-byte digest ≡ equality over the hex string)
     #   ineligible→ 0x00 ‖ utf8(id ':' pos)   (unique per span)
     # An ineligible span is its own singleton group, so it always wins
-    # itself — exactly the old unconditional keep — and the two key
-    # domains can never collide (different first byte), so the kept
-    # set is identical by construction. The paragraph text still never
-    # shuffles; the only new bytes are the tag byte plus the
-    # ineligible rows now riding the election shuffle they previously
-    # bypassed via the second corpus scan.
+    # itself, and the two domains can never collide (different first
+    # byte). The paragraph text never shuffles.
     key = F.when(
         F.length("para") >= min_chars,
         F.concat(F.lit(bytes([1])), F.unhex(F.md5(F.col("para")))),
@@ -1518,19 +1205,11 @@ def paragraph_dedup(
             ),
         )
     )
-    # winner election — HashAggregate-planned (decimal encode) for
-    # integral ids; string ids take the struct-min SortAggregate, the
-    # r12 A/B-adjudicated winner (the surrogate alternative stays
-    # selectable — all invariants and the adjudication live in
-    # `_min_first_election`). `ids_source=docs` keeps the surrogate
-    # path's rank (when selected) off the exploded paragraphs (a
-    # column-pruned scan of doc ids, not a re-run of posexplode+md5).
     keep = _min_first_election(
         paras.select(F.col(id_col), F.col("pos"), key.alias("__h")),
         ["__h"],
         id_col,
         "pos",
-        ids_source=docs.select(id_col),
     ).select(id_col, "pos")
     keeplist = keep.groupBy(id_col).agg(
         F.sort_array(F.collect_list("pos")).alias("__keep")
@@ -1538,22 +1217,18 @@ def paragraph_dedup(
     if stage_times is not None:
         import time as _time
 
-        # eager=True: the wall is the checkpoint statement itself (the
-        # AQE lazy-checkpoint misattribution can't occur), and the
-        # narrow (id, int-array) frame — never text — hits local disk
+        # eager=True: the wall is the checkpoint statement itself, and
+        # the narrow (id, int-array) frame — never text — hits local disk
         _t0 = _time.perf_counter()
         keeplist = keeplist.localCheckpoint(eager=True)
         stage_times["election"] = round(_time.perf_counter() - _t0, 3)
-    # Reassembly (r12): materialize the split ONCE as a named `__arr`
-    # attribute below the join — the inlined form re-evaluated the
-    # split 4x in the generated code (size, filter, array_join all
-    # re-expanded it; the quality_score tokenize-once lesson), and the
-    # per-element array_contains probe was O(paras x kept) per doc.
-    # `__keep` is already the SORTED kept positions, so each kept
-    # paragraph is one O(1) element_at — O(kept) total, same order,
-    # byte-identical text_clean (window_dedup's reassembly shape).
-    # CollapseProject leaves the two-projection form alone because
-    # `__arr` is non-cheap and multiply-referenced.
+    # Reassembly: materialize the split ONCE as a named `__arr`
+    # attribute below the join (an inlined split re-expands in the
+    # generated code once per reference); `__keep` is already the
+    # SORTED kept positions, so each kept paragraph is one O(1)
+    # element_at — O(kept) total, document order. CollapseProject leaves
+    # the two-projection form alone because `__arr` is non-cheap and
+    # multiply-referenced.
     base = docs.join(keeplist, on=id_col, how="left").select(
         F.col(id_col),
         arr.alias("__arr"),
@@ -1570,17 +1245,9 @@ def paragraph_dedup(
     )
 
 
-# Diagnostic hook (parity tests + interleaved A/B, RUNBOOK): forces the
-# per-window Python-md5 compat kernel instead of the vectorized
-# polynomial kernel. Identical GROUPING (and therefore identical
-# window_dedup output) — pinned by
-# test_window_dedup_poly_kernel_matches_md5_kernel. Never set in
-# production.
-_FORCE_MD5_WINDOW_HASH = False
-
 # Two odd 64-bit polynomial bases (odd => invertible mod 2^64) and
-# their modular inverses, module-level so both kernel paths and the
-# tests see one definition.
+# their modular inverses, module-level so the kernel and the tests see
+# one definition.
 _POLY_B1 = 0x9E3779B97F4A7C15
 _POLY_B2 = 0xC2B2AE3D27D4EB4F
 _POLY_INV1 = pow(_POLY_B1, -1, 1 << 64)
@@ -1588,18 +1255,11 @@ _POLY_INV2 = pow(_POLY_B2, -1, 1 << 64)
 
 def _build_pow_tables(m: int) -> tuple:
     """The four geometric power tables (B1^i, B2^i, B1^-i, B2^-i) of
-    length `m`. They depend only on length; rebuilding them per Arrow
-    chunk was 57% of the poly kernel's single-thread wall (r12
-    profile), so callers cache them — but TASK-locally, not
-    per-process: the r12 per-process cache had a 2^20 floor (32 MB per
-    worker, 4 tables x 8 B), grew geometrically on long documents, and
-    was retained for the life of every reused Python worker — 32
-    workers x >=32 MB of permanently-retained state compounded the
-    suite-wide memory pressure the r12 driver bench measured. Built
-    once per task inside the kernel generator (amortized over every
-    chunk the task processes, rebuild cost ~ms vs the multi-second
-    row), sized to the task's actual need, and released when the task
-    ends."""
+    length `m`. They depend only on length, so the window kernel builds
+    them once per TASK (rebuilding per Arrow chunk was over half the
+    kernel's single-thread wall) and drops them when the task ends —
+    a per-process cache would be retained for the life of every reused
+    Python worker."""
     import numpy as np
 
     arrs = []
@@ -1630,50 +1290,38 @@ def _window_hash_rows(
     tokens — exactly the Catalyst/DuckDB-twin tokenization; docs with
     fewer than `window` tokens contribute no rows.
 
-    The window key is a 128-bit NON-CRYPTOGRAPHIC fingerprint (r12,
-    replacing per-window md5): two independent 64-bit polynomial
-    rolling hashes over the window's UTF-8 bytes, carried as two LONG
-    columns. Rationale: the r11 md5 kernel made one Python
-    `hashlib.md5` call per window (~30M at 1M docs, ~10^13 at 100 TB) —
-    after the r11 election fix this interpreter-bound loop WAS the
-    row's whole wall. The polynomial form vectorizes: per Arrow chunk,
-    ONE numpy pass builds prefix sums S[i] = sum(b[j]*B^j) over a
-    single concatenated byte buffer, and every window hash is
+    The window key is a 128-bit NON-CRYPTOGRAPHIC fingerprint: two
+    independent 64-bit polynomial rolling hashes over the window's
+    UTF-8 bytes, carried as two LONG columns. Per Arrow chunk, ONE numpy
+    pass builds prefix sums S[i] = sum(b[j]*B^j) over a single
+    concatenated byte buffer, and every window hash is
     (S[end]-S[start]) * B^{-start} — all uint64 wraparound arithmetic,
-    no per-window Python. Vectorization ALONE is not enough on the
-    target hosts: a first draft that allocated its power tables and
-    prefix buffers fresh per chunk LOST to the md5 loop under 32
-    concurrent workers (interleaved A/B ratio 0.27x) because guest
-    memory is provisioned lazily and first-touch faults on fresh large
-    allocations cost ~100x a warm write; the kernel therefore reuses a
-    per-task scratch arena and per-TASK cached power tables
-    (`_build_pow_tables`; r13 moved the cache from per-process to
-    task-local so worker RSS stays bounded — the build is ~ms, paid
-    once per task, amortized over every chunk), after which the same
-    A/B reads 5.1x in the poly kernel's favor (three order-balanced
-    pairs, n identical). Correctness contract: window_dedup's election
-    needs only hash EQUALITY <=> window-byte equality. Equal windows
-    always collide (the hash is a pure function of the bytes); unequal
-    windows collide with ~2^-128 probability per pair (two independent
-    odd bases). That is a BIRTHDAY bound of ~10^-20 at 10^13 windows —
-    but unlike md5 it is not adversarially collision-resistant (known
-    Thue-Morse-style constructions defeat single mod-2^64 lanes);
-    corpora deliberately crafted to collide could fuse distinct
-    windows. For dedup of natural training data this is the standard
-    trade (MinHash/SimHash upstream are far coarser); the md5 kernel
-    remains behind `_FORCE_MD5_WINDOW_HASH` (same two-long schema, md5
-    digest split into two big-endian int64 lanes) and the DuckDB oracle
-    twin compares reassembled TEXT, so the gate verifies output, not
-    digests.
+    no per-window Python. The kernel reuses a per-task scratch arena
+    and per-task power tables (`_build_pow_tables`): guest memory is
+    provisioned lazily, and first-touch faults on fresh large
+    allocations cost ~100x a warm write.
+
+    Correctness contract: window_dedup's election needs only hash
+    EQUALITY <=> window-byte equality. Equal windows always collide
+    (the hash is a pure function of the bytes); unequal windows collide
+    with ~2^-128 probability per pair (two independent odd bases) — a
+    BIRTHDAY bound of ~10^-20 at 10^13 windows. Unlike md5 it is not
+    adversarially collision-resistant (Thue-Morse-style constructions
+    defeat single mod-2^64 lanes), so corpora crafted to collide could
+    fuse distinct windows; for natural training data this is the
+    standard trade (MinHash/SimHash upstream are far coarser). The
+    DuckDB oracle twin compares reassembled TEXT, and the property tests
+    pin the partition against md5 of the window's token join.
 
     Token offsets are found VECTORIZED too: tokens contain no 0x20
     bytes (split removes them, and UTF-8 multi-byte sequences use only
     bytes >= 0x80), so every space byte in the concatenated buffer is a
     token boundary. Docs are joined with single spaces into one buffer
-    per ~4 MB sub-chunk; window starts never cross doc boundaries
+    per ~1 MB sub-chunk; window starts never cross doc boundaries
     because each doc's window count is bounded by its own token count,
     and the byte before the next token start is always a space (or the
-    end sentinel), reproducing md5-kernel byte ranges exactly."""
+    end sentinel), so each window hashes exactly the bytes of
+    ``" ".join(tokens[s : s + window])``."""
     from pyspark.sql import types as _T
 
     win_schema = _T.StructType(
@@ -1684,49 +1332,8 @@ def _window_hash_rows(
             _T.StructField("__h2", _T.LongType()),
         ]
     )
-    use_md5 = _FORCE_MD5_WINDOW_HASH
 
-    def _md5_kernel(batches):
-        import hashlib
-
-        import pandas as pd
-
-        md5 = hashlib.md5
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids_out: list = []
-            starts: list = []
-            h1: list = []
-            h2: list = []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                tk = ("" if text is None else text).split(" ")
-                nw = len(tk) - window + 1
-                if nw <= 0:
-                    continue
-                enc = " ".join(tk).encode()
-                off = [0]
-                pos = 0
-                for t in tk:
-                    pos += len(t.encode()) + 1
-                    off.append(pos)
-                mv = memoryview(enc)
-                for s in range(nw):
-                    d = md5(mv[off[s] : off[s + window] - 1]).digest()
-                    h1.append(int.from_bytes(d[:8], "big", signed=True))
-                    h2.append(int.from_bytes(d[8:], "big", signed=True))
-                ids_out.extend([did] * nw)
-                starts.extend(range(nw))
-            yield pd.DataFrame(
-                {
-                    id_col: ids_out,
-                    "s": pd.array(starts, dtype="int32"),
-                    "__h1": pd.array(h1, dtype="int64"),
-                    "__h2": pd.array(h2, dtype="int64"),
-                }
-            )
-
-    def _poly_kernel(batches):
+    def kernel(batches):
         import numpy as np
         import pandas as pd
 
@@ -1737,15 +1344,11 @@ def _window_hash_rows(
         CHUNK = 1 << 20  # bytes of encoded text per vector pass
 
         # Reused scratch buffers, allocated ONCE per task and touched
-        # once: on this class of host the dominant kernel cost is not
-        # arithmetic but FIRST-TOUCH page faults on fresh large numpy
-        # allocations (~100x a pre-touched fill in the r12 profile, and
-        # the fault storms serialize across the 32 concurrent workers).
-        # Fresh per-chunk transients made the vectorized kernel LOSE to
-        # the md5 loop, which allocates almost nothing. All of these —
-        # scratch AND the power tables below — are generator-locals, so
-        # the memory is released when the task finishes (r13: bounded
-        # retained state; the r12 per-process power-table cache is gone).
+        # once: the dominant kernel cost on lazily-provisioned hosts is
+        # FIRST-TOUCH page faults on fresh large numpy allocations, and
+        # the fault storms serialize across concurrent workers. These —
+        # and the power tables below — are generator-locals, so the
+        # memory is released when the task finishes.
         u_buf = np.empty(CHUNK + 1, np.uint64)
         t_buf = np.empty(CHUNK + 1, np.uint64)
         S_buf = np.empty(CHUNK + 2, np.uint64)
@@ -1840,7 +1443,6 @@ def _window_hash_rows(
                 )
                 start = end
 
-    kernel = _md5_kernel if use_md5 else _poly_kernel
     return docs.select(id_col, text_col).mapInPandas(kernel, schema=win_schema)
 
 
@@ -1870,18 +1472,13 @@ def window_dedup(
     Scale shape — the same text-moves-once discipline as
     `paragraph_dedup`:
       1. Window fingerprints are built MAP-SIDE in an Arrow kernel
-         (`_window_hash_rows`): since r12 a numpy-vectorized two-lane
-         64-bit polynomial rolling hash — O(n_tokens) wraparound
-         arithmetic per doc with NO per-window Python (the r11 kernel's
-         one `hashlib.md5` call per window was this row's entire wall
-         after the election fix: ~30M interpreter-bound calls at 1M
-         docs, ~10^13 at 100 TB). Collision contract and the md5 compat
-         path are documented on the kernel.
-      2. Winner election shuffles (lane1, lane2, id, start) rows only —
-         window TEXT never leaves the mapper. The election is the
-         shared shape of `_min_first_election`: HashAggregate via
-         decimal encode for integral ids; struct-min for string ids
-         (the r12 A/B-adjudicated default — see the helper).
+         (`_window_hash_rows`): a numpy-vectorized two-lane 64-bit
+         polynomial rolling hash — O(n_tokens) wraparound arithmetic
+         per doc with NO per-window Python. The collision contract is
+         documented on the kernel.
+      2. Winner election (`_min_first_election`) shuffles
+         (lane1, lane2, id, start) rows only — window TEXT never leaves
+         the mapper.
       3. Loser windows explode to covered token positions: O(dup_bytes
          x window) rows, proportional to the duplicated portion of the
          corpus only, then collapse to one sorted int array per doc
@@ -1913,10 +1510,6 @@ def window_dedup(
         # lanes); text stays out of it.
         .localCheckpoint(eager=False)
     )
-    # winner election: the shared `_min_first_election` shape —
-    # HashAggregate via decimal-encoded (id, s) min for integral ids,
-    # struct-min for string ids (r12 A/B-adjudicated). All invariants
-    # live in the helper (shared with paragraph_dedup, r11 advisor).
     agg = (
         _min_first_election(wins, ["__h1", "__h2"], id_col, "s", with_count=True)
         .withColumnRenamed(id_col, "__wid")
@@ -1986,13 +1579,12 @@ def minhash_index(
     to catch a short document re-ingested verbatim (same tokens after
     lowercase/whitespace normalization — the shingle pipeline's own
     normalization, so 'Hi  World' matches 'hi world'). Set
-    `include_short=False` to reproduce the original signature-only
-    3-column (id, sig, bands) schema exactly.
-    Either way a row is ~200 bytes regardless of
-    document size — a 100 TB corpus indexes to ~20 GB, built in ONE
-    corpus pass (shingles and the short-route hash come out of the same
-    Arrow kernel). Signatures use
-    the same seeded permutations as `minhash_lsh_pairs`, so an index
+    `include_short=False` for the signature-only 3-column
+    (id, sig, bands) schema, which drops sub-shingle documents.
+    Either way a row is ~200 bytes regardless of document size — a
+    100 TB corpus indexes to ~20 GB, built in ONE corpus pass (one Arrow
+    kernel emits the signatures and the short-route hash). Signatures
+    use the same seeded permutations as `minhash_lsh_pairs`, so an index
     built today matches batches screened tomorrow (the coefficients are
     a deterministic function of `num_hashes` only).
 
@@ -2006,30 +1598,17 @@ def minhash_index(
     indexed), or read the partitioned layout with
     ``spark.read.option("mergeSchema", "true")``; a read that samples
     only an old file's schema would silently drop the short route."""
-    # ONE fused Arrow pass (r12): tokenize → slice-md5 shingle hashes →
-    # signatures/bands (+ the short-route hash), without materializing
-    # shingle STRINGS into the JVM between two Python kernels — the
-    # two-kernel form (`_shingled_for_index` → `_sig_bands_from_shingles`)
-    # shipped every shingle string JVM→Python→JVM purely to hash it,
-    # exactly the boundary cost §4 of the optimization playbook says to
-    # collapse. Values are unchanged by construction: hashes come from
-    # the shared `_hashed_shingle_lists` (multiset-identical to the
-    # string form), signature/band math is the shared
-    # `_sig_band_lists_from_hashes`, and the short-route hash is the
-    # same md5-of-normalized-token-join.
+    # ONE Arrow pass: tokenize → slice-md5 shingle hashes → signatures
+    # and bands, plus the short-route hash: md5 of the normalized token
+    # join, matching Catalyst ``md5(concat_ws(' ', tokens(coalesce(text,
+    # ''))))`` and DuckDB ``md5(coalesce(array_to_string(t, ' '), ''))``
+    # — NULL text tokenizes as [] (`_tok_list`), so both twins pin it to
+    # md5('').
     import hashlib
 
-    import numpy as np
     from pyspark.sql import types as T
 
-    if num_hashes % bands != 0:
-        raise ValueError(
-            f"bands ({bands}) must divide num_hashes ({num_hashes}); "
-            f"got remainder {num_hashes % bands}"
-        )
-    coeffs = _minhash_coeffs(num_hashes)
-    A = np.array([a for a, _ in coeffs], dtype=np.int64)
-    B = np.array([b for _, b in coeffs], dtype=np.int64)
+    A, B = _minhash_coeff_arrays(num_hashes, bands)
     out_schema = T.StructType(
         [
             docs.schema[id_col],
@@ -2051,42 +1630,21 @@ def minhash_index(
             if pdf.empty:
                 continue
             hlists = _hashed_shingle_lists(pdf[text_col], n)
+            sig, band = _sig_band_lists_from_hashes(hlists, A, B, num_hashes, bands)
+            out = pd.DataFrame({id_col: pdf[id_col], "sig": sig, "bands": band})
             if include_short:
-                sig, band = _sig_band_lists_from_hashes(
-                    hlists, A, B, num_hashes, bands
-                )
-                short = [
+                out["text_hash"] = [
                     None
                     if h
-                    else hashlib.md5(
-                        " ".join(_tok_list(t)).encode()
-                    ).hexdigest()
+                    else hashlib.md5(" ".join(_tok_list(t)).encode()).hexdigest()
                     for h, t in zip(hlists, pdf[text_col])
                 ]
-                yield pd.DataFrame(
-                    {
-                        id_col: pdf[id_col],
-                        "sig": sig,
-                        "bands": band,
-                        "text_hash": short,
-                    }
-                )
-                continue
-            # signature-only schema: sub-shingle docs are dropped (the
-            # `_shingled` route's size>0 filter), not carried as NULLs
-            keep = [i for i, h in enumerate(hlists) if h]
-            if not keep:
-                continue
-            sig, band = _sig_band_lists_from_hashes(
-                [hlists[i] for i in keep], A, B, num_hashes, bands
-            )
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].iloc[keep],
-                    "sig": sig,
-                    "bands": band,
-                }
-            )
+            else:
+                # signature-only schema: sub-shingle docs are dropped,
+                # not carried as NULLs
+                out = out[out["sig"].notna()]
+            if not out.empty:
+                yield out
 
     return docs.select(id_col, text_col).mapInPandas(kernel, schema=out_schema)
 
@@ -2416,7 +1974,7 @@ def semantic_dedup_pairs(
         ids = pdf["id"].to_numpy()
         cl = int(pdf["cluster"].iloc[0])
         chunk_rows = max(1, chunk_elems // s)
-        # float32 prefilter + float64 refine (r12): the full s²·d scan
+        # float32 prefilter + float64 refine: the full s²·d scan
         # runs in SINGLE precision (sgemm ~2× dgemm — knn_join_blocked
         # docstring), and only the sparse candidate set is re-scored
         # exactly in double. No pair can be missed: the float32 dot of

@@ -203,7 +203,7 @@ def stream_minhash_screen(
     from picovdb_spark.operators.dedup import minhash_dedup_against
 
     # delegate to the batch screen wholesale — ONE signature/banding
-    # construction in the whole codebase (dedup._sig_bands_from_shingles),
+    # construction in the whole codebase (dedup._sig_band_lists_from_hashes),
     # candidate pairs deduped before the estimator runs once per pair
     pairs = minhash_dedup_against(
         docs.select(F.col(id_col), F.col(text_col)),

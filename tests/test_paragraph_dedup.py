@@ -236,13 +236,13 @@ def test_window_election_is_hash_aggregated_for_integral_ids(spark):
 
 
 def test_decimal_vs_struct_election_randomized_parity(spark):
-    """Seeded random corpus (mixed-sign ids, heavy paragraph sharing):
-    the decimal-encoded election must reproduce the struct-min form's
-    output row-for-row — same winners under ties on digest, same
-    reassembled text."""
+    """Seeded random corpus (mixed-sign ids, heavy paragraph sharing),
+    run once with `long` ids (the decimal-encoded HashAggregate
+    election) and once with the same ids as decimal(20,0) (a non-
+    integral type, so the min(struct) election): the two must agree
+    row-for-row — same winners under ties on digest, same reassembled
+    text."""
     import random
-
-    from picovdb_spark.operators import dedup as D
 
     rng = random.Random(411)
     vocab = [f"p{j}" for j in range(30)]  # few distinct paragraphs => many collisions
@@ -251,57 +251,20 @@ def test_decimal_vs_struct_election_randomized_parity(spark):
     for did in ids:
         paras = [vocab[rng.randrange(len(vocab))] for _ in range(rng.randrange(1, 6))]
         rows.append((did, "\n\n".join(paras)))
-    df = spark.createDataFrame(rows, "doc_id long, text string")
+    df_long = spark.createDataFrame(rows, "doc_id long, text string")
+    df_dec = df_long.selectExpr("cast(doc_id as decimal(20,0)) as doc_id", "text")
 
-    def run():
-        return {
-            r["doc_id"]: (r["n_paras"], r["n_kept"], r["text_clean"])
-            for r in D.paragraph_dedup(df, sep="\n\n").collect()
+    def run(df):
+        out = paragraph_dedup(df, sep="\n\n")
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        return plan, {
+            int(r["doc_id"]): (r["n_paras"], r["n_kept"], r["text_clean"])
+            for r in out.collect()
         }
 
-    fast = run()
-    old_flag = D._FORCE_STRUCT_ELECTION
-    D._FORCE_STRUCT_ELECTION = True
-    try:
-        ref = run()
-    finally:
-        D._FORCE_STRUCT_ELECTION = old_flag
-    assert fast == ref
-
-
-def test_surrogate_vs_struct_election_randomized_parity_string_ids(spark):
-    """Same seeded corpus keyed by STRING ids (r12, r11 verdict #1 —
-    URLs/UUIDs are the common production key): the dense-long-surrogate
-    election must reproduce the struct-min form row-for-row. The id set
-    deliberately includes keys whose LEXICOGRAPHIC order differs from
-    their numeric order ('u:10' < 'u:9') — a surrogate that ranked by
-    anything but string order would elect different winners here.
-    (Since the r12 A/B adjudication struct-min IS the string-id
-    default; the surrogate stays a selectable strategy, so this parity
-    pin selects it explicitly.)"""
-    import random
-
-    from picovdb_spark.operators import dedup as D
-
-    rng = random.Random(412)
-    vocab = [f"p{j}" for j in range(30)]
-    rows = []
-    for n in rng.sample(range(0, 10**6), 200):
-        paras = [vocab[rng.randrange(len(vocab))] for _ in range(rng.randrange(1, 6))]
-        rows.append((f"u:{n}", "\n\n".join(paras)))
-    df = spark.createDataFrame(rows, "doc_id string, text string")
-
-    def run():
-        return {
-            r["doc_id"]: (r["n_paras"], r["n_kept"], r["text_clean"])
-            for r in D.paragraph_dedup(df, sep="\n\n").collect()
-        }
-
-    prev = D._STRING_ID_ELECTION
-    D._STRING_ID_ELECTION = "surrogate"
-    try:
-        fast = run()
-    finally:
-        D._STRING_ID_ELECTION = prev
-    ref = run()  # default since r12: struct-min
+    plan_long, fast = run(df_long)
+    plan_dec, ref = run(df_dec)
+    assert "SortAggregate" not in plan_long  # decimal-encoded election
+    assert "SortAggregate" in plan_dec  # min(struct) election
+    assert len(fast) == 200
     assert fast == ref

@@ -204,22 +204,35 @@ def test_window_dedup_reassembly_is_hash_set_subtraction(spark):
     assert "array_contains" not in plan, plan
 
 
-def test_minhash_signature_path_is_arrow_not_interpreted_hofs(spark):
-    """r9 structural pin: the signature+banding construction must be the
+def test_minhash_signature_path_is_arrow_not_interpreted_hofs(spark, monkeypatch):
+    """Structural pin: the signature+banding construction must be the
     Arrow kernel (one MapInPandas), with NO interpreted lambda-HOF
     (array_min(transform(...))) left on the corpus-sized path — the
     regression this guards cost 31 s of a 44 s LSH wall at 500k docs.
     The Catalyst twin (functions/text.minhash_signature) remains test-
-    only; if it leaks back into the production plan this fails."""
-    from picovdb_spark.operators.dedup import _band_rows_from_shingles, _shingled
+    only; if it leaks back into the production plan this fails. The
+    plan checked is the one `lsh_bucket_stats` actually collects over
+    its band rows, captured at its collect()."""
+    from picovdb_spark.operators.dedup import lsh_bucket_stats
 
     docs = spark.createDataFrame(
         [(i, f"w{i} w{i+1} w{i+2} w{i+3} w{i+4}") for i in range(8)],
         "doc_id long, text string",
     )
-    plan = explain_str(
-        _band_rows_from_shingles(_shingled(docs, "doc_id", "text", 3), "doc_id", 16, 4)
-    )
+    DataFrame = type(docs)  # the concrete class whose collect() runs
+    plans = []
+    collect = DataFrame.collect
+
+    def capturing_collect(self):
+        plans.append(explain_str(self))
+        return collect(self)
+
+    monkeypatch.setattr(DataFrame, "collect", capturing_collect)
+    stats = lsh_bucket_stats(docs)
+    monkeypatch.undo()
+    assert stats["buckets"] > 0
+    assert len(plans) == 1
+    plan = plans[0]
     assert "MapInPandas" in plan, plan
     assert "array_min(transform(" not in plan, plan
 
@@ -309,15 +322,13 @@ def test_string_id_election_is_the_reasoned_sort_aggregate(spark):
     is the package's second REASONED SortAggregate (with asof_join's
     max_by, joins.py), not an oversight: min(string) can never
     HashAggregate (variable-length agg buffers aren't UnsafeRow-
-    mutable), and the only hash-agg route — the dense-long surrogate
-    election, still selectable via dedup._STRING_ID_ELECTION — LOST the
-    r12 interleaved A/B at 1M docs in every order-balanced pair (struct
-    1.37x faster with 15-byte ids, 6x with ~100-byte URL ids, output
-    checksums identical): its forward join re-shuffles every wide id,
-    then pays a ~30M-row back-join. This test pins BOTH facts: the
-    default string plan is the struct SortAggregate, and the surrogate
-    toggle still produces the HashAggregate shape (so the documented
-    alternative stays real)."""
+    mutable), and the only hash-agg route — a dense-long surrogate id
+    election — LOST an interleaved A/B at 1M docs in every
+    order-balanced pair (struct 1.37x faster with 15-byte ids, 6x with
+    ~100-byte URL ids, output checksums identical): its forward join
+    re-shuffles every wide id, then pays a ~30M-row back-join. The
+    surrogate was deleted; this test pins that string ids plan the
+    struct SortAggregate."""
     from picovdb_spark.operators import dedup as D
 
     sdocs = spark.createDataFrame(
@@ -330,11 +341,3 @@ def test_string_id_election_is_the_reasoned_sort_aggregate(spark):
 
     assert "SortAggregate" in plan(D.paragraph_dedup(sdocs, sep=" "))
     assert "SortAggregate" in plan(D.window_dedup(sdocs, window=4))
-    prev = D._STRING_ID_ELECTION
-    D._STRING_ID_ELECTION = "surrogate"
-    try:
-        p = plan(D.paragraph_dedup(sdocs, sep=" "))
-        assert "SortAggregate" not in p
-        assert "HashAggregate" in p
-    finally:
-        D._STRING_ID_ELECTION = prev

@@ -198,10 +198,11 @@ doc_text = st.one_of(
 @settings(max_examples=10, deadline=None, suppress_health_check=[HealthCheck.too_slow])
 @given(st.lists(doc_text, min_size=1, max_size=12))
 def test_signature_kernel_matches_catalyst_twin_on_arbitrary_text(sess, texts):
-    """Property form of the r9 Arrow-kernel migration pin: on ARBITRARY
-    text (unicode, empty tokens, multi-space runs) the vectorized
-    signature+banding kernel equals the declarative Catalyst twin
-    bit-for-bit — both hash the UTF-8 of the same shingle strings."""
+    """Property form of the Arrow-kernel pin: on ARBITRARY text
+    (unicode, empty tokens, multi-space runs) the vectorized
+    signature+banding kernel (`minhash_index`) equals the declarative
+    Catalyst twin bit-for-bit — both hash the UTF-8 of the same
+    shingle strings."""
     from picovdb_spark.functions.text import band_value, md5_hash32, minhash_signature
     from picovdb_spark.operators import dedup as D
 
@@ -231,23 +232,26 @@ def test_signature_kernel_matches_catalyst_twin_on_arbitrary_text(sess, texts):
     }
     got = {
         r["doc_id"]: (r["sig"], r["bands"])
-        for r in D._sig_bands_from_shingles(sh, "doc_id", num_hashes, bands).collect()
+        for r in D.minhash_index(
+            docs, shingle_n=2, num_hashes=num_hashes, bands=bands, include_short=False
+        ).collect()
     }
     assert ref == got
 
 
 @settings(max_examples=10, deadline=None, suppress_health_check=[HealthCheck.too_slow])
 @given(st.lists(doc_text, min_size=1, max_size=10))
-def test_window_hash_md5_kernel_matches_catalyst_twin_on_arbitrary_text(sess, texts):
-    """The md5 COMPAT window-hash kernel (`_FORCE_MD5_WINDOW_HASH`,
-    executed through mapInPandas) equals the former Catalyst
-    transform/sequence/md5(array_join(slice)) form on arbitrary text —
-    empty-token and UTF-8 semantics must agree exactly. The kernel
-    carries the digest as two big-endian int64 lanes since r12; pack
-    them back to the 16 raw bytes for the comparison. (The production
-    polynomial kernel is pinned against this one by the partition test
-    below and end-to-end by tests/test_window_dedup.py and the
-    dedup_exact:window DuckDB twin.)"""
+def test_window_hash_poly_kernel_partitions_windows_like_md5(sess, texts):
+    """The vectorized polynomial window-hash kernel must emit the same
+    (doc, start) windows as the Catalyst
+    transform/sequence/md5(array_join(slice)) form and induce the SAME
+    hash-equality PARTITION over them — that partition is the only thing
+    the election consumes, so partition equality on arbitrary text
+    (unicode, empty tokens, multi-space runs, doc boundaries inside one
+    Arrow chunk) pins both the byte-offset arithmetic and
+    collision-freedom at test scale."""
+    from collections import defaultdict
+
     from picovdb_spark.operators import dedup as D
 
     window = 3
@@ -257,90 +261,64 @@ def test_window_hash_md5_kernel_matches_catalyst_twin_on_arbitrary_text(sess, te
     n = F.size("__arr")
     hashes = F.transform(
         F.sequence(F.lit(0), n - F.lit(window)),
-        lambda s: F.unhex(
-            F.md5(F.array_join(F.slice(F.col("__arr"), s + 1, window), " "))
-        ),
+        lambda s: F.md5(F.array_join(F.slice(F.col("__arr"), s + 1, window), " ")),
     )
-    ref = sorted(
-        (r["doc_id"], r["s"], r["__h"])
-        for r in toks.filter(n >= window)
+    md5_rows = (
+        toks.filter(n >= window)
         .select(F.col("doc_id"), F.posexplode(hashes).alias("s", "__h"))
         .collect()
     )
-    old = D._FORCE_MD5_WINDOW_HASH
-    D._FORCE_MD5_WINDOW_HASH = True
-    try:
-        got = sorted(
-            (
-                r["doc_id"],
-                r["s"],
-                r["__h1"].to_bytes(8, "big", signed=True)
-                + r["__h2"].to_bytes(8, "big", signed=True),
-            )
-            for r in D._window_hash_rows(docs, "doc_id", "text", window).collect()
-        )
-    finally:
-        D._FORCE_MD5_WINDOW_HASH = old
-    assert ref == got
+    poly_rows = D._window_hash_rows(docs, "doc_id", "text", window).collect()
 
-
-@settings(max_examples=10, deadline=None, suppress_health_check=[HealthCheck.too_slow])
-@given(st.lists(doc_text, min_size=1, max_size=10))
-def test_window_hash_poly_kernel_partitions_windows_like_md5(sess, texts):
-    """The vectorized polynomial kernel (r12) must induce the SAME
-    hash-equality PARTITION over (doc, start) windows as the md5 compat
-    kernel — that partition is the only thing the election consumes, so
-    partition equality on arbitrary text (unicode, empty tokens,
-    multi-space runs, doc boundaries inside one Arrow chunk) pins both
-    the byte-offset arithmetic and collision-freedom at test scale."""
-    from collections import defaultdict
-
-    from picovdb_spark.operators import dedup as D
-
-    window = 3
-    docs = sess.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
-
-    def partition():
+    def partition(keyed):
         groups = defaultdict(set)
-        for r in D._window_hash_rows(docs, "doc_id", "text", window).collect():
-            groups[(r["__h1"], r["__h2"])].add((r["doc_id"], r["s"]))
+        for key, win in keyed:
+            groups[key].add(win)
         return {frozenset(v) for v in groups.values()}
 
-    poly = partition()
-    old = D._FORCE_MD5_WINDOW_HASH
-    D._FORCE_MD5_WINDOW_HASH = True
-    try:
-        md5 = partition()
-    finally:
-        D._FORCE_MD5_WINDOW_HASH = old
+    md5 = partition((r["__h"], (r["doc_id"], r["s"])) for r in md5_rows)
+    poly = partition(((r["__h1"], r["__h2"]), (r["doc_id"], r["s"])) for r in poly_rows)
+    assert len(poly_rows) == len(md5_rows)
     assert poly == md5
 
 
-def test_sig_band_lists_normalizes_null_arrays():
-    """The shared signature kernel maps NULL shingle arrays to
-    (None, None) exactly like empty ones (round-9 advice): today's
-    callers always emit lists, but the kernel is the shared core for
-    any future caller and the Catalyst form it replaced degraded NULLs
-    gracefully rather than raising TypeError('len(None)')."""
-    import numpy as np
+def _shingle_hash_lists(lists) -> list:
+    """String-space reference for `_hashed_shingle_lists`: md5_hash32 of
+    each shingle string (first 4 digest bytes big-endian == first 8 hex
+    chars as an int), per row."""
+    import hashlib
 
-    from picovdb_spark.functions.text import _minhash_coeffs
-    from picovdb_spark.operators.dedup import _sig_band_lists
+    return [
+        [int.from_bytes(hashlib.md5(s.encode()).digest()[:4], "big") for s in lst]
+        for lst in lists
+    ]
 
-    coeffs = _minhash_coeffs(16)
-    A = np.array([a for a, _ in coeffs], dtype=np.int64)
-    B = np.array([b for _, b in coeffs], dtype=np.int64)
-    sig, bands = _sig_band_lists(
-        [["a b c", "b c d"], None, [], ["a b c", "b c d"]], A, B, 16, 4
+
+def test_sig_band_lists_from_hashes_maps_empty_lists_to_null():
+    """The shared signature kernel maps an empty hash list (a sub-shingle
+    doc) to (None, None) without disturbing its neighbours in the batch:
+    min over an empty set is undefined, and the flattened reduceat must
+    keep every other row's offsets aligned."""
+    from picovdb_spark.operators.dedup import (
+        _minhash_coeff_arrays,
+        _sig_band_lists_from_hashes,
     )
-    assert sig[1] is None and bands[1] is None  # NULL == empty
-    assert sig[2] is None and bands[2] is None
-    assert sig[0] == sig[3] and bands[0] == bands[3]  # real rows intact
-    assert len(sig[0]) == 16 and len(bands[0]) == 4
+
+    A, B = _minhash_coeff_arrays(16, 4)
+    sig, bands = _sig_band_lists_from_hashes(
+        [[], [7, 11], [], [], [7, 11], [3]], A, B, 16, 4
+    )
+    for k in (0, 2, 3):
+        assert sig[k] is None and bands[k] is None
+    assert sig[1] == sig[4] and bands[1] == bands[4]  # real rows intact
+    assert len(sig[1]) == 16 and len(bands[1]) == 4
+    assert sig[5] != sig[1]
+    with pytest.raises(ValueError, match="must divide"):
+        _minhash_coeff_arrays(16, 5)
 
 
 def test_hashed_shingle_lists_matches_string_form():
-    """The r12 slice-md5 fused shingle hasher must emit the SAME
+    """The slice-md5 fused shingle hasher must emit the SAME
     md5_hash32 multiset per row as the string-space form
     (`_shingle_hash_lists` over `_shingle_set(_tok_list(...))`) — order
     excepted (both are set-derived; every consumer is order-free). The
@@ -352,7 +330,6 @@ def test_hashed_shingle_lists_matches_string_form():
 
     from picovdb_spark.operators.dedup import (
         _hashed_shingle_lists,
-        _shingle_hash_lists,
         _shingle_set,
         _tok_list,
     )

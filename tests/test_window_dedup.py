@@ -155,10 +155,31 @@ def test_pathological_doc_no_quadratic_reassembly(spark):
     assert wall < 30.0, f"reassembly took {wall:.1f}s — quadratic shape is back"
 
 
-def test_window_dedup_poly_kernel_matches_md5_kernel(spark):
+def _md5_window_rows(docs, id_col, text_col, window):
+    """Catalyst twin of `dedup._window_hash_rows`: one (id, s, __h1, __h2)
+    row per window, keyed by md5 of the window's token join (__h2 is a
+    constant — the election and loser probe only need key equality)."""
+    from pyspark.sql import functions as F
+
+    arr = F.split(F.coalesce(F.col(text_col), F.lit("")), " ", -1)
+    n = F.size("__arr")
+    hashes = F.transform(
+        F.sequence(F.lit(0), n - F.lit(window)),
+        lambda s: F.md5(F.array_join(F.slice(F.col("__arr"), s + 1, window), " ")),
+    )
+    return (
+        docs.select(F.col(id_col), arr.alias("__arr"))
+        .filter(n >= window)
+        .select(F.col(id_col), F.posexplode(hashes).alias("s", "__h1"))
+        .withColumn("__h2", F.lit(0).cast("long"))
+    )
+
+
+def test_window_dedup_poly_kernel_matches_md5_kernel(spark, monkeypatch):
     """Seeded random corpus (heavy window sharing, empty/unicode
-    tokens): window_dedup under the r12 vectorized polynomial kernel
-    must produce output identical to the md5 compat kernel — the
+    tokens): window_dedup under the vectorized polynomial kernel must
+    produce output identical to the same operator keyed by md5 of each
+    window (the Catalyst twin swapped in for `_window_hash_rows`) — the
     end-to-end form of the partition property in test_properties.py."""
     import random
 
@@ -179,42 +200,7 @@ def test_window_dedup_poly_kernel_matches_md5_kernel(spark):
         )
 
     poly = run()
-    old = D._FORCE_MD5_WINDOW_HASH
-    D._FORCE_MD5_WINDOW_HASH = True
-    try:
-        md5 = run()
-    finally:
-        D._FORCE_MD5_WINDOW_HASH = old
+    monkeypatch.setattr(D, "_window_hash_rows", _md5_window_rows)
+    md5 = run()
+    assert any(r[2] for r in md5)  # the corpus really shares windows
     assert poly == md5
-
-
-def test_window_dedup_string_id_surrogate_matches_struct_election(spark):
-    """String-id corpora (r12): the dense-long-surrogate election must
-    reproduce the struct-min form's window_dedup output row-for-row,
-    including ids whose lexicographic order differs from numeric order."""
-    import random
-
-    from picovdb_spark.operators import dedup as D
-
-    rng = random.Random(414)
-    vocab = [f"w{j}" for j in range(10)]
-    rows = []
-    for n in rng.sample(range(0, 10**6), 120):
-        toks = [vocab[rng.randrange(len(vocab))] for _ in range(rng.randrange(0, 12))]
-        rows.append((f"u:{n}", " ".join(toks)))
-    df = spark.createDataFrame(rows, "doc_id string, text string")
-
-    def run():
-        return sorted(
-            (r["doc_id"], r["n_tokens"], r["n_removed"], r["text_clean"])
-            for r in D.window_dedup(df, window=3).collect()
-        )
-
-    prev = D._STRING_ID_ELECTION
-    D._STRING_ID_ELECTION = "surrogate"
-    try:
-        fast = run()
-    finally:
-        D._STRING_ID_ELECTION = prev
-    ref = run()  # default since r12: struct-min
-    assert fast == ref
