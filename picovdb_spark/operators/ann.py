@@ -38,6 +38,7 @@ from pyspark.sql import types as T
 
 from picovdb_spark.operators.kernels import _unit_rows, certified_topk, emit_topk
 from picovdb_spark.schema import K_DELETED, K_ID, K_METRICS, K_VECTOR
+from picovdb_spark.session import coalesce_to_cores
 
 CLUSTER_COL = "__cluster"
 
@@ -240,10 +241,19 @@ class IvfIndex:
         """Persist the full index artifact: store rows partitioned by
         cluster id (so `ann_query`'s probe filter becomes Hive-style
         partition pruning — zero IO for unprobed clusters, pinned by
-        tests/test_ann.py) + the centroid matrix as .npy alongside."""
+        tests/test_ann.py) + the centroid matrix as `_centroids.npy`
+        alongside.
+
+        Rows are hash-partitioned by cluster onto one partition per core
+        before the write, so each cluster is one file. Written straight
+        from the frame, every task would write one file per cluster it
+        holds, and a store that is saved, reopened and changed again
+        would see its file count grow with every save."""
         import os
 
-        self.df.write.mode("overwrite").partitionBy(CLUSTER_COL).parquet(path)
+        cores = self.df.sparkSession.sparkContext.defaultParallelism
+        clustered = self.df.repartition(cores, CLUSTER_COL)
+        clustered.write.mode("overwrite").partitionBy(CLUSTER_COL).parquet(path)
         tmp = os.path.join(path, "_centroids.npy.tmp.npy")
         np.save(tmp, self.centroids)
         os.replace(tmp, os.path.join(path, "_centroids.npy"))
@@ -251,15 +261,24 @@ class IvfIndex:
     @classmethod
     def read(cls, spark, path: str, *, vector_col: str = K_VECTOR) -> "IvfIndex":
         """Load a written index; the DataFrame stays lazy (scans prune by
-        `__cluster` at query time)."""
+        `__cluster` at query time). `base_rows` seeds add()'s drift
+        ratio (without it auto-refit never fires on a reopened index):
+        it is summed from the cluster files' Parquet footers on the
+        driver, so the read runs no count job."""
         import os
+
+        import pyarrow.parquet as pq
 
         cent = np.load(os.path.join(path, "_centroids.npy"))
         df = spark.read.parquet(path)
-        # base_rows seeds add()'s drift ratio — one metadata-only count
-        # (Parquet row-group stats), without it auto-refit never fires
-        # on a reopened index
-        return cls(df=df, centroids=cent, vector_col=vector_col, base_rows=df.count())
+        base_rows = sum(
+            pq.read_metadata(f.path).num_rows
+            for d in os.scandir(path)
+            if d.is_dir() and d.name.startswith(f"{CLUSTER_COL}=")
+            for f in os.scandir(d.path)
+            if f.name.endswith(".parquet") and not f.name.startswith(("_", "."))
+        )
+        return cls(df=df, centroids=cent, vector_col=vector_col, base_rows=base_rows)
 
     def refit(self, *, n_centroids: int | None = None, seed: int = 42) -> "IvfIndex":
         """rebuild_index() parity (pico_vdb.py:855-860)."""
@@ -373,9 +392,10 @@ def ann_query(
     Physical plan: probe sets are computed driver-side from the tiny
     (nq × k_centroids) GEMM; the store scan is filtered to the union of
     probed clusters (partition pruning on a cluster-partitioned store),
-    then one `mapInArrow` task per partition runs the certified top-k
-    kernel (`kernels.certified_topk`) with each query's probe set as its
-    `allowed` mask. Shuffle is O(parts × nq × k). With
+    then one `mapInArrow` task per partition, at most one per core,
+    runs the certified top-k kernel (`kernels.certified_topk`) with
+    each query's probe set as its `allowed` mask. Shuffle is
+    O(parts × nq × k). With
     `include_metadata`, the selected rows leave the scoring task with
     their metadata by Arrow `take` (the FAISS path's result shape,
     pico_vdb.py:732-751), so no second index scan joins it back; a
@@ -441,9 +461,11 @@ def ann_query(
 
         yield from emit_topk(batches, select, emit_cols, b_qids, top_k)
 
-    # Partition pruning: only probed clusters are scanned at all.
+    # Partition pruning: only probed clusters are scanned at all, by at
+    # most one task per core.
     cand = index.df.filter(F.col(CLUSTER_COL).isin(probed_union))
-    local = cand.select(K_ID, vec_col, CLUSTER_COL, *meta).mapInArrow(score, schema=out_schema)
+    cand = coalesce_to_cores(cand.select(K_ID, vec_col, CLUSTER_COL, *meta))
+    local = cand.mapInArrow(score, schema=out_schema)
     out = topk_per_query(local, top_k, rank_col=rank_col)
     if better_than is not None:
         out = out.filter(F.col(K_METRICS) >= F.lit(float(better_than)))

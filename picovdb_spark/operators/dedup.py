@@ -573,7 +573,7 @@ def simhash_fingerprint(text, *, shingle_n: int = 3, bits: int = 48) -> int:
         raise ValueError(f"bits must be in [1, 60], got {bits}")
     hex_chars = (bits + 3) // 4
     shift = hex_chars * 4 - bits  # top `bits` of the hex prefix
-    toks = [t for t in str(text).lower().split(" ") if t]
+    toks = _tok_list(text)  # NULL/NaN text has no tokens, as in the SQL twins
     if len(toks) >= shingle_n:
         shingles = {
             " ".join(toks[i : i + shingle_n]) for i in range(len(toks) - shingle_n + 1)

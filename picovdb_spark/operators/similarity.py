@@ -47,6 +47,7 @@ from pyspark.sql import types as T
 from picovdb_spark.functions.vector import dot, l2_normalize
 from picovdb_spark.operators.kernels import _unit_rows, certified_topk, emit_topk, f32_norm2
 from picovdb_spark.schema import K_DELETED, K_ID, K_METRICS, K_VECTOR
+from picovdb_spark.session import coalesce_to_cores
 
 WhereClause = dict[str, Any] | Column | Callable[[dict], bool] | None
 
@@ -695,7 +696,10 @@ def _gemm_topk(
     Mirrors the reference's vectorized scan (`scores = Q @ V.T` +
     argpartition, pico_vdb.py:680-713) but distributed: each task scores
     its slice of the store and emits only its local top-k per query, so
-    the shuffle carries O(partitions × num_q × k) rows. The query matrix
+    the shuffle carries O(partitions × num_q × k) rows. The scan runs at
+    most one task per core (`coalesce_to_cores`): a store with more
+    partitions than cores has its neighbouring partitions scored by one
+    task, and one with no more is scanned as it is. The query matrix
     goes out as an explicit `sparkContext.broadcast` made on every call,
     so each executor fetches it once, not per task. The task's input is
     (id, vector, *metadata); each Arrow batch is answered by
@@ -750,6 +754,6 @@ def _gemm_topk(
         yield from emit_topk(batches, select, emit_cols, b_qids, top_k)
 
     in_cols = [K_ID, vector_col, *[c for c in meta if c != vector_col]]
-    local = cand.select(*in_cols).mapInArrow(score_batches, schema=out_schema)
+    local = coalesce_to_cores(cand.select(*in_cols)).mapInArrow(score_batches, schema=out_schema)
     # (query_id, _id_, *meta, _metrics_) plus the appended rank column
     return topk_per_query(local, top_k, rank_col=rank_col)

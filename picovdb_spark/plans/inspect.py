@@ -15,8 +15,10 @@ from __future__ import annotations
 import contextlib
 import io
 import re
+import uuid
+from typing import Any, Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 
 def explain_str(df: DataFrame, mode: str = "formatted") -> str:
@@ -86,3 +88,26 @@ def scan_columns(df: DataFrame) -> list[set[str]]:
             names.add(field.split(":", 1)[0].strip())
         cols.append(names)
     return cols
+
+
+def job_tasks(spark: SparkSession, fn: Callable[[], Any]) -> tuple[Any, list[list[int]]]:
+    """Run `fn()`; return its result and, for each Spark job it
+    launched, the tasks each of the job's stages ran. The jobs are found
+    through a job group. A stage skipped because its shuffle output was
+    reused ran 0 tasks. Waits for Spark's listener bus first, so every
+    finished task is counted."""
+    sc = spark.sparkContext
+    group = f"job_tasks-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = []
+    for jid in sorted(tracker.getJobIdsForGroup(group)):
+        info = tracker.getJobInfo(jid)
+        stages = [tracker.getStageInfo(s) for s in info.stageIds]
+        jobs.append([s.numCompletedTasks for s in stages if s is not None])
+    return out, jobs

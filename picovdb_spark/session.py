@@ -10,21 +10,45 @@ from __future__ import annotations
 import os
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+
+def _driver_memory() -> str:
+    """Driver heap: `SPARK_GRAFT_DRIVER_MEM` when set, else half the
+    host's physical memory (MemTotal) in whole GiB, at least 1g and at
+    most 32g. A `spark.driver.memory` passed to `get_spark` wins over
+    both.
+
+    In local mode the driver is also the executor, so the heap holds
+    every cached store: 8g thrashed GC once the bench's scale tier held
+    two ~1 GB columnar caches (2.1 s -> 8.8 s on the same workload). A
+    fixed 32g, though, let the JVM grow past a 15 GB host's memory until
+    the kernel killed it. The other half of the memory is left to the
+    Python workers and the JVM's off-heap memory."""
+    if os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError, AttributeError):
+        return "32g"
+    return f"{min(32, max(1, total // 2 // 2**30))}g"
+
 
 # Defaults chosen for the local[32] test harness; on a real cluster the
 # same confs are what you'd tune (shuffle partitions ≈ 2-3× total cores,
 # AQE coalesces them down at runtime).
 _DEFAULT_CONFS = {
     "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_SHUFFLE", "32"),
-    # local-mode driver == executor: give it real heap (128 GiB box) and
+    "spark.driver.memory": _driver_memory(),
     # silence JVM unified logging, which writes to STDOUT and would break
-    # one-line-JSON output contracts (bench.py). 8g thrashed GC once the
-    # bench's scale tier held two ~1 GB columnar caches simultaneously
-    # (measured 2.1 s -> 8.8 s on the same workload); 32g leaves
-    # headroom for every tier on the 128 GiB harness
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"),
+    # one-line-JSON output contracts (bench.py)
     "spark.driver.extraJavaOptions": "-Xlog:disable",
+    # list partition directories (an IVF artifact holds one per cluster)
+    # on the driver: above the default threshold of 32 directories Spark
+    # lists them in a job of one task per directory, and in a local[N]
+    # session those tasks run in this same JVM, so every index reopen
+    # paid a ~0.7 s job for what a driver-side listing does in ~0.1 s
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": "4096",
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
@@ -178,3 +202,14 @@ def local_df(spark: SparkSession, rows, schema):
         return spark.createDataFrame(pdf, schema=schema)
     except Exception:
         return spark.createDataFrame(rows, schema=schema)
+
+
+def coalesce_to_cores(df: DataFrame) -> DataFrame:
+    """`df` on at most one partition per core (`defaultParallelism`).
+
+    Every Python pass pays a fixed start-up cost per task, and an
+    operator's scan has no use for more tasks than cores. The coalesce
+    is narrow: it joins neighbouring partitions into one task, never
+    raises the partition count and adds no shuffle, so a frame that
+    already has at most one partition per core runs as before."""
+    return df.coalesce(df.sparkSession.sparkContext.defaultParallelism)

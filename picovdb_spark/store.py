@@ -52,7 +52,7 @@ from pyspark.sql import types as T
 
 from picovdb_spark.functions.vector import assert_dim, auto_id, l2_normalize
 from picovdb_spark.schema import K_DELETED, K_ID, K_METRICS, K_VECTOR
-from picovdb_spark.session import local_df
+from picovdb_spark.session import coalesce_to_cores, local_df
 
 _RESERVED = (K_ID, K_VECTOR, K_DELETED)
 
@@ -171,6 +171,12 @@ class VectorStore:
         Upserting an id that was tombstoned revives the slot — the Spark
         analog of free-slot reuse (:434-439).
 
+        The merged store keeps at most one partition per core
+        (`coalesce_to_cores`): the union of the kept rows and the batch
+        would otherwise add the batch's shuffle partitions to the
+        store's on every call, and every later call on the store would
+        run one task per partition.
+
         `report="dict"` (reference parity) COLLECTS the id lists to the
         driver — fine for API-sized batches, not for a 10⁹-row bulk load.
         `report="dataframe"` keeps the report relational: returns a
@@ -232,7 +238,7 @@ class VectorStore:
             .drop("__upd")
             .select(*cols, "__action")
         )
-        merged_tagged = kept.unionByName(tagged_batch)
+        merged_tagged = coalesce_to_cores(kept.unionByName(tagged_batch))
         if self._capacity is not None:
             # slot-reuse semantics (pico_vdb.py:434-442): free slots are
             # reusable, so the binding constraint is the ACTIVE row
@@ -315,7 +321,9 @@ class VectorStore:
             self._ann = None
             self._ann_ntotal = 0
             return None
-        self._ann = IvfIndex.build(self.active(), n_centroids=n_centroids, seed=seed)
+        # the cluster assignment runs at most one task per core
+        active = coalesce_to_cores(self.active())
+        self._ann = IvfIndex.build(active, n_centroids=n_centroids, seed=seed)
         self._ann_ntotal = self._ann.base_rows or self._ann.df.count()
         self._last_ann_rebuild_mode = "full"
         return self._ann
@@ -335,11 +343,15 @@ class VectorStore:
         ratio = len(changed) / float(max(self._ann_ntotal, 1))
         if ratio <= self._ann_threshold:
             idx = self._ann.remove(changed)
-            new_rows = self.active().filter(F.col(K_ID).isin(changed)).drop(K_DELETED)
+            new_rows = coalesce_to_cores(
+                self.active().filter(F.col(K_ID).isin(changed)).drop(K_DELETED)
+            )
             if new_rows.first() is not None:
                 idx = idx.add(new_rows, auto_refit=False)
-            # truncate the union/filter lineage like any other mutation
-            idx.df = idx.df.localCheckpoint(eager=True)
+            # truncate the union/filter lineage like any other mutation,
+            # on at most one partition per core (the union appends the
+            # assigned rows' partitions to the index's own)
+            idx.df = coalesce_to_cores(idx.df).localCheckpoint(eager=True)
             self._ann = idx
             self._ann_ntotal = idx.df.count()
             self._last_ann_rebuild_mode = "incremental"

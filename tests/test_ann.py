@@ -466,3 +466,33 @@ def test_stack_vectors_matches_per_row_loop():
 
     empty = stack_vectors(pd.Series([], dtype=object))
     assert empty.shape == (0, 0) and empty.dtype == np.float64
+
+
+def test_ivf_read_takes_base_rows_from_footers(spark, emb, index, tmp_path):
+    """`read` sums `base_rows` from the cluster files' Parquet footers,
+    listing the directories itself: a path holding glob metacharacters
+    (Spark reads `*` and `?` literally when they match) still counts
+    every row."""
+    for name in ("ivf_rows", "ivf*rows?"):
+        p = str(tmp_path / name)
+        index.write(p)
+        loaded = IvfIndex.read(spark, p)
+        assert loaded.base_rows == emb.count() == loaded.df.count()
+
+
+def test_simhash_null_and_nan_text_have_no_tokens(spark):
+    """NULL and NaN text fingerprint like "" at every shingle size — not
+    as the text "None"/"nan" — so a NULL doc is no near-dup of a doc
+    reading "none"."""
+    from picovdb_spark.operators.dedup import simhash_fingerprint, simhash_pairs
+
+    for n in (1, 3):
+        empty = simhash_fingerprint("", shingle_n=n)
+        assert simhash_fingerprint(None, shingle_n=n) == empty
+        assert simhash_fingerprint(float("nan"), shingle_n=n) == empty
+    assert simhash_fingerprint("none", shingle_n=1) != simhash_fingerprint(None, shingle_n=1)
+    docs = spark.createDataFrame(
+        [(1, None), (2, "none"), (3, "None")], schema="doc_id long, text string"
+    )
+    pairs = {(r["id_a"], r["id_b"]) for r in simhash_pairs(docs, shingle_n=1).collect()}
+    assert pairs == {(2, 3)}

@@ -341,3 +341,43 @@ def test_string_id_election_is_the_reasoned_sort_aggregate(spark):
 
     assert "SortAggregate" in plan(D.paragraph_dedup(sdocs, sep=" "))
     assert "SortAggregate" in plan(D.window_dedup(sdocs, window=4))
+
+
+def _operator_below(df, op: str) -> str:
+    """The physical operator directly below the first `op` in the
+    formatted plan's tree."""
+    tree = explain_str(df).split("\n\n", 1)[0].splitlines()
+    i = next(n for n, line in enumerate(tree) if op in line)
+    return tree[i + 1].split("+-", 1)[-1].strip()
+
+
+def test_scoring_passes_run_at_most_one_task_per_core(spark):
+    """ROADMAP 2(a): the Python scoring pass of `batch_query` and of
+    `ann_query` reads a narrow coalesce to `defaultParallelism`
+    partitions. A cached store with no more partitions than cores is
+    scanned as it is (its scored stage runs exactly one task per
+    partition); one with more runs one task per core."""
+    import numpy as np
+
+    from picovdb_spark.operators.ann import IvfIndex, ann_query
+    from picovdb_spark.plans import job_tasks
+
+    cores = spark.sparkContext.defaultParallelism
+    rng = np.random.default_rng(3)
+    rows = [(f"s{i}", rng.standard_normal(8).tolist(), i % 3) for i in range(120)]
+    base = spark.createDataFrame(rows, f"{K_ID} string, {K_VECTOR} array<float>, label int")
+    q = ([f"q{i}" for i in range(4)], rng.standard_normal((4, 8)))
+    qdf = spark.createDataFrame(
+        [(qid, v.tolist()) for qid, v in zip(*q)], f"query_id string, {K_VECTOR} array<float>"
+    )
+    index = IvfIndex.build(base, n_centroids=4)
+    assert _operator_below(ann_query(index, qdf, top_k=3, nprobe=2), "MapInArrow").startswith("Coalesce")
+
+    for n_parts, tasks in ((max(cores // 2, 1), max(cores // 2, 1)), (3 * cores, cores)):
+        store = base.repartition(n_parts).cache()
+        assert store.count() == 120
+        out = batch_query(store, q, top_k=3)
+        assert _operator_below(out, "MapInArrow").startswith("Coalesce")
+        _, jobs = job_tasks(spark, out.collect)
+        assert max(t for stages in jobs for t in stages) == tasks, jobs
+        store.unpersist()

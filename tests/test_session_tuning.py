@@ -19,3 +19,23 @@ def test_pow_tables_sized_to_need():
         assert (int(t[0][i]) * int(t[2][i])) % (1 << 64) == 1
         assert (int(t[1][i]) * int(t[3][i])) % (1 << 64) == 1
     assert not hasattr(D, "_POLY_POW_TABLES")
+
+
+def test_driver_heap_default_follows_host_memory(monkeypatch):
+    """The driver heap defaults to half the host's memory, between 1g
+    and 32g, so the JVM cannot outgrow a small host; the environment
+    variable still wins."""
+    import os
+
+    from picovdb_spark import session
+
+    page = 4096
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    for total_gib, heap in ((15, "7g"), (128, "32g"), (1, "1g")):
+        pages = total_gib * 2**30 // page
+        monkeypatch.setattr(
+            os, "sysconf", lambda name, p=pages: page if name == "SC_PAGE_SIZE" else p
+        )
+        assert session._driver_memory() == heap
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    assert session._driver_memory() == "3g"

@@ -469,3 +469,104 @@ def test_query_tuple_form_gets_float32_truncation(store):
         map(tuple, store.query([list(row) for row in mat], top_k=3, method="gemm").collect())
     )
     assert got_tuple == got_list
+
+
+def _brute_topk(model, q, k):
+    """(query_id, id, score) of a float64 cosine scan over the stored
+    float32 unit rows, ranked by (rounded score desc, id asc)."""
+    ids = sorted(model)
+    m = np.stack([model[s] for s in ids]).astype(np.float64)
+    m = (m / np.linalg.norm(m, axis=1, keepdims=True)).astype(np.float32).astype(np.float64)
+    m /= np.linalg.norm(m, axis=1, keepdims=True)
+    q = q.astype(np.float32).astype(np.float64)
+    q /= np.linalg.norm(q, axis=1, keepdims=True)
+    scores = np.round(q @ m.T, 6)
+    out = []
+    for qi in range(len(q)):
+        order = sorted(range(len(ids)), key=lambda j: (-scores[qi, j], ids[j]))[:k]
+        out += [(str(qi), ids[j], scores[qi, j]) for j in order]
+    return out
+
+
+def test_upsert_keeps_store_at_most_one_partition_per_core(spark):
+    """The merge appends the batch to the kept rows; without a coalesce
+    the store gained the batch's shuffle partitions on every upsert, and
+    every later call ran one task per partition. Ten upserts without a
+    reopen must leave at most one partition per core, and a query must
+    still equal a brute-force scan of every acknowledged row."""
+    rng = np.random.default_rng(5)
+    cores = spark.sparkContext.defaultParallelism
+    st = VectorStore(spark, DIM)
+    model = {}
+    for j in range(10):
+        ids = [f"u{j}_{i}" for i in range(6)] + sorted(model)[j : j + 3]
+        vecs = rng.standard_normal((len(ids), DIM)).astype(np.float32)
+        st.upsert([{K_ID: s, K_VECTOR: v.tolist()} for s, v in zip(ids, vecs)])
+        model.update(zip(ids, vecs))
+        assert st.df.rdd.getNumPartitions() <= cores
+    q = rng.standard_normal((5, DIM)).astype(np.float32)
+    got = sorted(
+        (r["query_id"], r[K_ID], r[K_METRICS]) for r in st.query(q, top_k=4).collect()
+    )
+    want = sorted(_brute_topk(model, q, 4))
+    assert [g[:2] for g in got] == [w[:2] for w in want]
+    assert [g[2] for g in got] == pytest.approx([w[2] for w in want], abs=1e-6)
+
+
+def _ann_store(spark, n=300, dim=16, n_centroids=48):
+    """A store whose IVF artifact has more cluster directories (≈48)
+    than Spark's default parallel-listing threshold of 32."""
+    rng = np.random.default_rng(11)
+    st = VectorStore(spark, dim)
+    vecs = rng.standard_normal((n, dim))
+    st.upsert([{K_ID: f"r{i}", K_VECTOR: v.tolist()} for i, v in enumerate(vecs)])
+    st.build_ann_index(n_centroids=n_centroids)
+    return st, rng
+
+
+def test_reopen_with_index_runs_no_listing_or_count_job(spark, tmp_path):
+    """Reopening a saved store with an IVF index sums the row count
+    from the artifact's Parquet footers and lists its cluster
+    directories on the driver:
+    the only jobs left are Spark's one-task schema reads of the two
+    Parquet datasets — no job of one task per cluster directory, and no
+    count job."""
+    from picovdb_spark.plans import job_tasks
+
+    st, _ = _ann_store(spark)
+    path = str(tmp_path / "reopen_store")
+    st.save(path)
+    n_dirs = len([d for d in os.listdir(os.path.join(path, "ann_ivf")) if d.startswith("__cluster=")])
+    assert n_dirs > 32  # above the default threshold, so the listing would be a job
+
+    s2, jobs = job_tasks(spark, lambda: VectorStore(spark, 16, storage_path=path))
+    assert len(jobs) <= 2 and all(stages == [1] for stages in jobs), jobs
+    assert s2._ann.base_rows == 300 and s2._ann_ntotal == 300
+
+
+def test_ivf_artifact_is_one_file_per_cluster_across_saves(spark, tmp_path):
+    """Five save/reopen cycles at constant row count, each changing rows
+    through an incremental index update: every cluster directory of the
+    saved artifact holds one Parquet file, so the file count cannot grow
+    with the cycles (it used to: each task wrote one file per cluster it
+    held, and the appended rows spread a cluster over more tasks)."""
+    st, rng = _ann_store(spark)
+    path = str(tmp_path / "files_store")
+    counts = []
+    for j in range(5):
+        upd = [f"r{i}" for i in rng.choice(300, 20, replace=False)]
+        st.upsert([{K_ID: s, K_VECTOR: rng.standard_normal(16).tolist()} for s in upd])
+        st.query([rng.standard_normal(16).tolist()], top_k=3, ann=True).collect()
+        assert st._last_ann_rebuild_mode == "incremental"
+        st.save(path)
+        ivf = os.path.join(path, "ann_ivf")
+        per_dir = [
+            len([f for f in os.listdir(os.path.join(ivf, d)) if f.endswith(".parquet")])
+            for d in os.listdir(ivf)
+            if d.startswith("__cluster=")
+        ]
+        assert per_dir and all(n == 1 for n in per_dir), per_dir
+        counts.append(sum(per_dir))
+        st = VectorStore(spark, 16, storage_path=path)
+        assert st.count() == 300 and st._ann_ntotal == 300
+    assert max(counts) <= 48, counts
