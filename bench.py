@@ -14,9 +14,12 @@ transfer).
 
 from __future__ import annotations
 
+import atexit
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -37,6 +40,8 @@ from picovdb_spark.operators.similarity import batch_query
 from picovdb_spark.operators.textops import quality_score, token_stats
 from picovdb_spark.schema import K_VECTOR, load_embeddings_store, load_table
 from picovdb_spark.session import get_spark, openblas_core_name
+
+from perfbench import eventlog
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 N_BATCH_QUERIES = int(os.environ.get("SPARK_GRAFT_BENCH_NQ", "1000"))
@@ -80,6 +85,28 @@ def _sample_worker_rss() -> dict:
     return out
 
 
+def _layer_records(event_dir: str, windows: dict) -> dict:
+    """One layer record per timed row from Spark's event log: the
+    row's job group folded by `perfbench.eventlog` (task, CPU, GC and
+    Python time, bytes to and from Python, shuffle, spill, peak
+    execution memory, tasks), its job count, and how much of the row's
+    wall its jobs cover. `windows` maps row -> (epoch start, wall s)."""
+    groups = eventlog.fold(eventlog.read_events(event_dir))
+    out = {}
+    for name, (t0, wall) in windows.items():
+        g = groups.get(name) or eventlog.new_group()
+        covered = eventlog.covered_s(g["jobs"], t0, t0 + wall)
+        rec = {k: round(v, 3) for k, v in g.items() if k != "jobs"}
+        rec.update(
+            jobs=len(g["jobs"]),
+            wall_s=round(wall, 3),
+            covered_s=round(covered, 3),
+            covered_frac=round(covered / wall, 3),
+        )
+        out[name] = rec
+    return out
+
+
 def _queries_df(spark, n):
     emb = load_table(spark, SF_DIR, "embeddings")
     return emb.filter(F.col("vec_id") < n).select(
@@ -102,7 +129,6 @@ def bench_queries(spark):
                 _queries_df(spark, N_BATCH_QUERIES),
                 top_k=10,
                 method="gemm",
-                score_dtype="float32",
             )
         )
 
@@ -421,14 +447,11 @@ def bench_queries(spark):
                         top_k=10,
                         method="gemm",
                         normalized=True,
-                        score_dtype="float32",
                     )
                 )
         return ref_state["store"], ref_state["queries"]
 
     def q_ref100k_batch_1000():
-        # float32 scoring — the reference's own precision (its store
-        # matrix is float32); float64 is reserved for oracle entries.
         # Queries enter as the pre-collected (ids, matrix) serving form
         # (see _ref_store) — per-pass work is broadcast + scan + top-k,
         # the same region the reference times.
@@ -440,7 +463,6 @@ def bench_queries(spark):
                 top_k=10,
                 method="gemm",
                 normalized=True,
-                score_dtype="float32",
             )
         )
 
@@ -691,18 +713,13 @@ def bench_queries(spark):
                     top_k=10,
                     method="gemm",
                     normalized=True,
-                    score_dtype="float32",
                 )
             )
         return scale_state["store"], scale_state["queries"]
 
     def q_scale1m_batch_100_exact():
         s, q = _scale1m_store()
-        _force(
-            batch_query(
-                s, q, top_k=10, method="gemm", normalized=True, score_dtype="float32"
-            )
-        )
+        _force(batch_query(s, q, top_k=10, method="gemm", normalized=True))
 
     def q_scale1m_ivfpq_build():
         from picovdb_spark.operators.ivfpq import IvfPqIndex
@@ -814,14 +831,8 @@ def bench_queries(spark):
         EXTRA_STATS["scale1m_dedup_buckets"] = lsh_bucket_stats(scale_state["docs1m"])
 
     def q_scale1m_dedup_minhash():
-        # stage decomposition (r9, same contract as curate's eager
-        # gates): shingle_sig_bands (one fused Arrow pass) /
-        # candidates_verify walls published so a wave reading names
-        # the stage it landed in
-        st: dict = {}
-        scale_state["pairs1m"] = minhash_lsh_pairs(scale_state["docs1m"], stage_times=st)
+        scale_state["pairs1m"] = minhash_lsh_pairs(scale_state["docs1m"])
         scale_state["pairs1m"].count()  # localCheckpointed: count = materialize
-        EXTRA_STATS["scale1m_dedup_minhash_stages"] = st
 
     def q_scale1m_dedup_simhash():
         # scale configuration (simhash_pairs docstring SCALE RULE):
@@ -849,22 +860,10 @@ def bench_queries(spark):
     def q_scale1m_dedup_paragraph():
         # corpus-wide span removal at word granularity over the 1M-doc
         # corpus: ~30M (digest, id, pos) triplets through the winner
-        # election, int keep-lists back, text moved once for reassembly.
-        # 2-stage decomposition (r9 verdict: this row hit regressed_2x
-        # two driver rounds running — a wave reading must name its
-        # stage): election = explode/hash/winner/keep-list collapse
-        # (eagerly checkpointed inside the operator), reassembly = the
-        # remainder (text joined back + rebuilt). The two stages cover
-        # 100% of the row wall by construction.
-        import time as _time
-
+        # election, int keep-lists back, text moved once for reassembly
         from picovdb_spark.operators.dedup import paragraph_dedup
 
-        st: dict = {}
-        _t0 = _time.perf_counter()
-        _force(paragraph_dedup(scale_state["docs1m"], sep=" ", stage_times=st))
-        st["reassembly"] = round(_time.perf_counter() - _t0 - st["election"], 3)
-        EXTRA_STATS["scale1m_dedup_paragraph_stages"] = st
+        _force(paragraph_dedup(scale_state["docs1m"], sep=" "))
 
     def q_scale1m_dedup_window():
         # Lee et al. exact-substring dedup at 1M docs: ~25M sliding
@@ -914,7 +913,7 @@ def bench_queries(spark):
     # paragraph (span removal's bulk
     # work), and ~0.2% embed a benchmark phrase inside otherwise-unique
     # paragraphs (so decontamination, not span removal, must catch it).
-    # Kept volumes + per-stage wall are published next to the timing.
+    # Kept volumes are published next to the timing.
     para500k_state: dict = {}
 
     def _prepare_para500k():
@@ -1004,7 +1003,6 @@ def bench_queries(spark):
     def q_scale500k_curate():
         from picovdb_spark.operators.pipeline import curate_corpus, curation_report
 
-        st: dict = {}
         rep = curate_corpus(
             para500k_state["docs"],
             eval_docs=para500k_state["eval"],
@@ -1013,18 +1011,9 @@ def bench_queries(spark):
             # same calibration (and reasoning) as the pipeline_curate row
             max_dup_word_frac=0.75,
             max_top_bigram_frac=0.1,
-            stage_times=st,
-            # per-gate walls: each gate kernel materializes in its own
-            # timed barrier (r8 finding: 30 s of the row's 67 s wall was
-            # an opaque gates_agg tail), leaving join_residual = the
-            # id-join assembly + report agg only
-            eager_gates=True,
         )
-        t0 = time.perf_counter()
         report = curation_report(rep)
-        st["join_residual"] = round(time.perf_counter() - t0, 3)
         EXTRA_STATS["scale500k_curate_volume"] = report
-        EXTRA_STATS["scale500k_curate_stages"] = st
         # planted-recall, explicit (r8 verdict #3): ids ≡ 2 (mod 40) are
         # mutate-one-word-per-paragraph copies of their base — 12,500
         # planted near-dup pairs; each pair must condemn exactly one
@@ -1059,11 +1048,10 @@ def bench_queries(spark):
         # curate (span removal -> dedup ladder -> gates, leakage-safe
         # component splits) -> per-domain token budgets -> BPE encode ->
         # window chunking -> split-pure greedy packing -> shard dealing,
-        # with per-stage walls (stage_times + eager_gates) and published
-        # token/pack/shard volumes. leakage_report=True rides the
-        # checkpointed near-dup pairs (zero extra sweeps) and is
-        # compared against an id-hash split of the SAME corpus to show
-        # split_by_component makes leakage zero by construction.
+        # with published token/pack/shard volumes. leakage_report=True
+        # rides the checkpointed near-dup pairs (zero extra sweeps) and
+        # is compared against an id-hash split of the SAME corpus to
+        # show split_by_component makes leakage zero by construction.
         from picovdb_spark.operators.ordering import release_global_rank
         from picovdb_spark.operators.pipeline import (
             leakage_from_pairs,
@@ -1074,7 +1062,6 @@ def bench_queries(spark):
         docs = para500k_state["docs"].withColumn(
             "lang", F.when(F.col("doc_id") % 3 < 2, "en").otherwise("de")
         )
-        st: dict = {}
         seqs, curated, leakage = prepare_training_data(
             docs,
             eval_docs=para500k_state["eval"],
@@ -1088,39 +1075,25 @@ def bench_queries(spark):
             n_shards=64,
             split_by_component=True,
             leakage_report=True,
-            stage_times=st,
-            eager_gates=True,
         )
-        # `finalize` = the row's output consumption, sub-decomposed
-        # (r11 verdict #5: the lump doubled to 10.0 s with nothing
-        # naming which read grew). Four independent actions: the volume
-        # agg over the checkpointed sequences, the kept count over the
-        # checkpointed curate output, and the two leakage joins riding
-        # the one checkpointed pair list.
-        t0 = time.perf_counter()
+        # the row's output consumption: the volume agg over the
+        # sequences, the kept count over the curate output, and the two
+        # leakage joins riding the one checkpointed pair list
         row = seqs.agg(
             F.count("*").alias("chunks"),
             F.sum("n_tokens").alias("tokens"),
             F.countDistinct("split", "pack_group", "bin_idx").alias("bins"),
             F.countDistinct("shard").alias("shards"),
         ).collect()[0]
-        st["finalize_seq_agg"] = round(time.perf_counter() - t0, 3)
-        t1 = time.perf_counter()
         kept = curated.filter("keep").count()
-        st["finalize_kept_count"] = round(time.perf_counter() - t1, 3)
         # component-hash splits: leakage empty BY CONSTRUCTION; the
         # id-hash split of the same corpus shows what it prevented
         # (both ride the one checkpointed pair list — no new sweeps)
-        t1 = time.perf_counter()
         leak_component = leakage.count()
-        st["finalize_leak_component"] = round(time.perf_counter() - t1, 3)
-        t1 = time.perf_counter()
         id_split = dataset_split(docs.select("doc_id")).select("doc_id", "split")
         leak_id = leakage_from_pairs(
             curated._near_dup_pairs, id_split, id_col="doc_id"
         ).count()
-        st["finalize_leak_id"] = round(time.perf_counter() - t1, 3)
-        st["finalize"] = round(time.perf_counter() - t0, 3)
         release_global_rank(seqs)
         EXTRA_STATS["scale500k_prepare_volume"] = {
             "kept_docs": int(kept),
@@ -1131,7 +1104,6 @@ def bench_queries(spark):
             "leakage_pairs_component_split": int(leak_component),
             "leakage_pairs_id_split": int(leak_id),
         }
-        EXTRA_STATS["scale500k_prepare_stages"] = st
         assert leak_component == 0, (
             f"component-split leakage must be 0 by construction, got {leak_component}"
         )
@@ -1254,10 +1226,8 @@ def bench_queries(spark):
     def q_scale1m_knn_join_blocked():
         # the 100 TB-critical exact kNN variant: large×large cogrouped
         # block-nested-loop GEMM, neither side collected or broadcast
-        # (the gate checks the float64 oracle form at sf0.01; this row
-        # evidences the scale tier in the float32 SERVING form — the
-        # same convention as every other serving row; sgemm runs ~2×
-        # the dgemm rate). 2k queries × 1M corpus × 128 dims, k=10 ≈
+        # (the certified kernel: float32 prescan, exact float64
+        # rescore of the survivors). 2k queries × 1M corpus × 128 dims, k=10 ≈
         # 5.1·10¹¹ FLOPs; the size-aware grid (lb=1) shuffles the 1M
         # side ONCE (~0.6 GB as array<float>). The row is GEMM-bound
         # (phase-profiled at 10k queries: shuffle+Arrow 3.6 s,
@@ -1274,7 +1244,6 @@ def bench_queries(spark):
             left_vec="embedding",
             right_vec="embedding",
             exclude_self=True,
-            score_dtype="float32",
         )
         EXTRA_STATS["scale1m_knn_join_blocked"] = {"rows": out.count()}
 
@@ -1356,7 +1325,6 @@ def bench_queries(spark):
                 top_k=10,
                 method="gemm",
                 normalized=True,
-                score_dtype="float32",
             )
         )
         _force(
@@ -1374,7 +1342,6 @@ def bench_queries(spark):
                 top_k=10,
                 method="gemm",
                 normalized=True,
-                score_dtype="float32",
             )
         )
 
@@ -1398,7 +1365,6 @@ def bench_queries(spark):
                 top_k=10,
                 method="gemm",
                 normalized=True,
-                score_dtype="float32",
             )
         )
 
@@ -1514,7 +1480,20 @@ def bench_queries(spark):
 
 
 def main() -> None:
-    spark = get_spark("picovdb_spark_bench")
+    # Spark's own event log (uncompressed, one file), folded after the
+    # suite into each timed row's layer record; the directory is ours
+    # and goes when the process exits
+    event_dir = tempfile.mkdtemp(prefix="bench-eventlog-")
+    atexit.register(shutil.rmtree, event_dir, True)
+    spark = get_spark(
+        "picovdb_spark_bench",
+        **{
+            "spark.eventLog.enabled": "true",
+            "spark.eventLog.dir": "file://" + event_dir,
+            "spark.eventLog.compress": "false",
+            "spark.eventLog.rolling.enabled": "false",
+        },
+    )
     # warm the JVM/session AND the Python-UDF workers so the first timed
     # query doesn't pay process startup (measured: ~2s once per executor)
     load_table(spark, SF_DIR, "embeddings").count()
@@ -1617,8 +1596,8 @@ def main() -> None:
         "scale1m_dedup_minhash",
         "scale1m_dedup_incremental",
         # the composed 500k curate/prepare chains are the heaviest rows
-        # in the suite and multi-barrier plans — in-suite residency
-        # effects would drown the stage decomposition they publish
+        # in the suite — in-suite residency effects would drown their
+        # layer records
         "scale500k_curate",
         "scale500k_prepare",
     )
@@ -1848,6 +1827,7 @@ def main() -> None:
         "settled_times", "settled_pass_times", "settled_errors",
         "stage_isolated", "stage_isolated_fallback",
         "stage_isolated_pass_times", "stage_isolated_wall",
+        "layers", "settled_layers",
     }
 
     def _json_lines(text: str) -> list[dict]:
@@ -1861,16 +1841,21 @@ def main() -> None:
                     pass
         return out
 
-    def _run_isolated_child(name: str, passes_key: str = "settled_pass_times"):
+    def _run_isolated_child(
+        name: str,
+        passes_key: str = "settled_pass_times",
+        layers_key: str = "settled_layers",
+    ):
         """One fresh subprocess through the SPARK_GRAFT_BENCH_ONLY subset
         path — identical to a hand-run `SPARK_GRAFT_BENCH_ONLY=<name>
         python bench.py`. Returns (timed value | None, err tail | None)
         and merges the child's row-specific diagnostics (bucket stats,
-        hit counts, per-pass spreads) into EXTRA_STATS so the artifact
-        keeps the same evidence an in-process run would carry.
-        `passes_key` names where the child's per-pass spread lands:
-        settled re-runs keep the settled_* key; stage-isolated PRIMARY
-        numbers record under stage_isolated_pass_times so an audit never
+        hit counts, per-pass spreads, layer record) into EXTRA_STATS so
+        the artifact keeps the same evidence an in-process run would
+        carry. `passes_key` and `layers_key` name where the child's
+        per-pass spread and layer record land: settled re-runs keep the
+        settled_* keys; stage-isolated PRIMARY numbers record under
+        stage_isolated_pass_times and `layers` so an audit never
         mistakes a primary child's variance for a settled re-run."""
         import subprocess
         import sys as _sys
@@ -1895,6 +1880,9 @@ def main() -> None:
             pt = d.get("pass_times", {}).get(name)
             if pt:
                 EXTRA_STATS.setdefault(passes_key, {})[name] = pt
+            layer = d.get("layers", {}).get(name)
+            if layer:
+                EXTRA_STATS.setdefault(layers_key, {})[name] = layer
             for k, v in d.items():
                 if k not in _CHILD_STD_KEYS and k not in EXTRA_STATS:
                     EXTRA_STATS[k] = v
@@ -1918,7 +1906,7 @@ def main() -> None:
                 continue
             print(f"[bench] stage-isolated child {name}", file=sys.stderr, flush=True)
             val, err = _run_isolated_child(
-                name, passes_key="stage_isolated_pass_times"
+                name, passes_key="stage_isolated_pass_times", layers_key="layers"
             )
             if val is not None:
                 timings[name] = val
@@ -1928,6 +1916,8 @@ def main() -> None:
                 EXTRA_STATS.setdefault("stage_isolated_fallback", {})[name] = err
     deferred_cleanups: list = []
     query_fns: dict = {}
+    sc = spark.sparkContext
+    row_windows: dict = {}
     for name, fn in all_queries.items():
         if name.startswith("_"):
             prefixes = setup_deps.get(name)
@@ -1969,10 +1959,18 @@ def main() -> None:
         # the bar metric gets 5 passes: it drifted 1.2-1.9 s across
         # isolated runs at median-of-3 and the comparison bar is 2.0 s
         n_passes = 5 if name == "ref100k_batch_1000" else (3 if name in median3 else 1)
-        for _ in range(n_passes):
-            t0 = time.perf_counter()
-            fn()
-            passes.append(time.perf_counter() - t0)
+        # every job of the row's passes runs under the row's job group
+        sc.setJobGroup(name, name)
+        row_t0 = time.time()
+        try:
+            for _ in range(n_passes):
+                t0 = time.perf_counter()
+                fn()
+                passes.append(time.perf_counter() - t0)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        row_windows[name] = (row_t0, time.time() - row_t0)
         timings[name] = round(sorted(passes)[len(passes) // 2], 3)
         if n_passes > 1:
             # publish every pass so the artifact itself shows in-suite
@@ -1999,6 +1997,10 @@ def main() -> None:
     n_queries = min(
         N_BATCH_QUERIES, load_table(spark, SF_DIR, "embeddings").count()
     )
+    # stopping the session completes its event log; nothing below runs
+    # a Spark job in this process
+    spark.stop()
+    EXTRA_STATS.setdefault("layers", {}).update(_layer_records(event_dir, row_windows))
 
     # Settled re-runs: one FRESH SUBPROCESS per entry through the
     # SPARK_GRAFT_BENCH_ONLY subset path (setup for that entry's tier
@@ -2096,8 +2098,6 @@ def main() -> None:
         if n in query_fns and (n not in iso_done or _iso_flagged(n))
     ] if not only else []
     if settled_targets:
-        spark.stop()
-
         for name in settled_targets:
             print(f"[bench] settled child {name}", file=sys.stderr, flush=True)
             val, err_tail = _run_isolated_child(name)

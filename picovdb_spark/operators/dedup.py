@@ -371,7 +371,6 @@ def minhash_lsh_pairs(
     threshold: float = 0.5,
     round_to: int = 6,
     max_bucket_size: int | None = None,
-    stage_times: dict | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash + LSH banding.
 
@@ -392,34 +391,13 @@ def minhash_lsh_pairs(
     buckets are near-certainly boilerplate, and their members still pair
     via their other, more selective bands). None = uncapped (exact
     oracle parity).
-
-    `stage_times` (optional dict, diagnostic — the curate_corpus
-    contract): eagerly materializes the fused shingle+signature cache
-    with its wall recorded under ``shingle_sig_bands``, so the final
-    pair materialization (recorded under ``candidates_verify``) times
-    only the self-join + Jaccard verify. Off (default): the cache fills
-    lazily inside the one pair-materialization action (identical work,
-    no decomposition).
     """
-    import time as _time
-
     # ONE fused Arrow pass builds shingle hashes AND band hashes; the
     # single cached frame feeds both the banded self-join and the
     # verify join
     fused = _shingled_sig_bands(
         docs, id_col, text_col, shingle_n, num_hashes, bands
     ).cache()
-    if stage_times is not None:
-        _t0 = _time.perf_counter()
-        fused.count()
-        stage_times["shingle_sig_bands"] = round(_time.perf_counter() - _t0, 3)
-    # candidates_verify timing starts HERE, not at the final
-    # materialization: under AQE, localCheckpoint(eager=False) executes
-    # the plan's upstream stages at call time (toRdd materializes AQE
-    # query stages), so the banded self-join below largely runs inside
-    # the "lazy" checkpoint statements — measured 6 s of a 12.6 s call
-    # at the 1M tier misattributed before this timer moved
-    _t_verify = _time.perf_counter()
     sh = fused.select(id_col, "shh")
     band_rows = fused.select(
         F.col(id_col), F.posexplode("bands").alias("band_idx", "band")
@@ -468,8 +446,6 @@ def minhash_lsh_pairs(
     # never auto-evicted in a long-lived session, while the checkpoint
     # RDD is context-cleaned once the result goes out of scope
     out = out.localCheckpoint(eager=True)
-    if stage_times is not None:
-        stage_times["candidates_verify"] = round(_time.perf_counter() - _t_verify, 3)
     band_rows_cached.unpersist()  # the one fused cache (sh + bands)
     return out
 
@@ -1128,7 +1104,6 @@ def paragraph_dedup(
     text_col: str = "text",
     sep: str = "\n\n",
     min_chars: int = 1,
-    stage_times: dict | None = None,
 ) -> DataFrame:
     """Corpus-wide exact paragraph (span) dedup with removal — the
     RefinedWeb/FineWeb curation step the document-level ladder above
@@ -1168,13 +1143,6 @@ def paragraph_dedup(
     Reference contrast: the reference dedups whole payloads only via
     content-hash auto-ids (pico_vdb.py:54-55); sub-document spans are
     out of its model entirely.
-
-    `stage_times` (optional dict, diagnostic — the minhash_lsh_pairs
-    contract): eagerly materializes the narrow (id, keep-positions)
-    list via localCheckpoint with its wall recorded under
-    ``election`` (steps 1–3), so the caller's final materialization
-    times only step 4 — record it as the remainder under
-    ``reassembly``. Off (default): fully lazy, identical values.
     """
     import re as _re
 
@@ -1214,14 +1182,6 @@ def paragraph_dedup(
     keeplist = keep.groupBy(id_col).agg(
         F.sort_array(F.collect_list("pos")).alias("__keep")
     )
-    if stage_times is not None:
-        import time as _time
-
-        # eager=True: the wall is the checkpoint statement itself, and
-        # the narrow (id, int-array) frame — never text — hits local disk
-        _t0 = _time.perf_counter()
-        keeplist = keeplist.localCheckpoint(eager=True)
-        stage_times["election"] = round(_time.perf_counter() - _t0, 3)
     # Reassembly: materialize the split ONCE as a named `__arr`
     # attribute below the join (an inlined split re-expands in the
     # generated code once per reference); `__keep` is already the

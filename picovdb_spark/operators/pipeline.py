@@ -78,8 +78,6 @@ def curate_corpus(
     lm_bits_max: float | None = None,
     return_text: bool = False,
     split_by_component: bool = False,
-    stage_times: dict | None = None,
-    eager_gates: bool = False,
 ) -> DataFrame:
     """One row per input document:
 
@@ -127,32 +125,10 @@ def curate_corpus(
       id-hash fallback); split fractions then hold over clusters, not
       documents (inherent to group splitting).
 
-    - `stage_times` (optional dict, diagnostic): the chain's eager
-      barriers — span-removal checkpoint, LSH pair sweep, component
-      label propagation — run jobs DURING this call; pass a dict and
-      each barrier's wall seconds land in it under ``span_removal`` /
-      ``lsh_pairs`` / ``components`` (keys only for stages that ran).
-      Everything after the barriers (quality/repetition/split joins and
-      the final select) is lazy and lands in the caller's first action,
-      not here — unless `eager_gates` is set. Benchmarks publish this so
-      an end-to-end number comes with its stage decomposition.
-
-    - `eager_gates=True` materializes each gate's NARROW per-id frame
-      (exact-dup flag, quality scalars, repetition scalars, LM bits,
-      decontamination flags, keep-best election) as its own eager
-      localCheckpoint, each barrier timed under its own `stage_times`
-      key (``exact_dedup`` / ``quality`` / ``repetition`` / ``lm_score``
-      / ``decontaminate`` / ``keep_best``). The caller's first action
-      then pays only the id-joins + final select — at 500k docs that
-      turned a 30 s opaque `gates_agg` tail into per-gate walls plus a
-      seconds-scale join residual. Structurally this also pins
-      single-invocation: every Arrow kernel runs inside its own
-      checkpoint barrier, so the assembled plan contains NO Python
-      kernels for a multi-consumer action to re-run (test-pinned via
-      explainString). At corpus scale the checkpointed frames are
-      id + a few scalars (~50 B/doc) — the shape you'd persist to a
-      table anyway. Off (default) keeps the fully lazy single-plan form
-      so Catalyst can collapse stages for small corpora.
+    The span-removal pass, the LSH pair sweep and the component label
+    propagation run jobs during this call (each is materialized once
+    because later stages read it more than once); every gate after them
+    is lazy and runs in the caller's first action over the result.
 
     The returned frame carries two audit handles as attributes (both
     zero-cost — they alias plans the curate pass materialized anyway):
@@ -167,45 +143,14 @@ def curate_corpus(
             "or drop the cap — a silent no-op gate would keep every "
             "gibberish doc the cap was meant to drop"
         )
-    import time as _time
-
-    def _staged(key: str, t0: float) -> None:
-        if stage_times is not None:
-            stage_times[key] = round(_time.perf_counter() - t0, 3)
-
-    def _gate(frame: DataFrame, key: str) -> DataFrame:
-        """eager_gates barrier: materialize a narrow per-id gate frame
-        and record its wall under `key`; identity when off."""
-        if not eager_gates:
-            return frame
-        t0 = _time.perf_counter()
-        frame = frame.localCheckpoint(eager=True)
-        _staged(key, t0)
-        return frame
-
     if paragraph_sep is not None:
-        _t0 = _time.perf_counter()
-        # stage_times mode also decomposes span_removal into its two
-        # halves (r11 verdict #6 — this was curate's largest stage with
-        # no instrument naming which half): `span_election` = explode/
-        # hash/winner/keep-list (paragraph_dedup's own eager checkpoint)
-        # and `span_reassembly` = the remainder (text joined back,
-        # rebuilt, and checkpointed here)
-        _pst: dict | None = {} if stage_times is not None else None
         spans = paragraph_dedup(
             docs,
             id_col=id_col,
             text_col=text_col,
             sep=paragraph_sep,
             min_chars=paragraph_min_chars,
-            stage_times=_pst,
         ).localCheckpoint(eager=True)
-        _staged("span_removal", _t0)
-        if stage_times is not None and "election" in _pst:
-            stage_times["span_election"] = _pst["election"]
-            stage_times["span_reassembly"] = round(
-                stage_times["span_removal"] - _pst["election"], 3
-            )
         span_cols = spans.select(id_col, "n_paras", "n_kept")
         # The output spine keeps EVERY input id (one row per input
         # document), but husks (every span seen earlier, n_kept==0) are
@@ -223,40 +168,28 @@ def curate_corpus(
         span_cols = None
         ids = docs.select(id_col)
 
-    ex = _gate(
-        exact_dedup(docs, id_col=id_col, text_col=text_col).select(
-            id_col, F.col("is_dup").alias("__exact_dup")
-        ),
-        "exact_dedup",
+    ex = exact_dedup(docs, id_col=id_col, text_col=text_col).select(
+        id_col, F.col("is_dup").alias("__exact_dup")
     )
     # quality has TWO consumers (the keep-best election and the output
     # join) — without the lazy checkpoint its full-corpus Arrow kernel
     # runs once per consumer (measured ~2× the quality pass at the 500k
-    # tier); the checkpointed frame is narrow (id + scalars). Under
-    # eager_gates the same checkpoint simply materializes up front with
-    # its wall recorded.
-    if eager_gates:
-        q = _gate(quality_score(docs, id_col=id_col, text_col=text_col), "quality")
-    else:
-        q = quality_score(docs, id_col=id_col, text_col=text_col).localCheckpoint(
-            eager=False
-        )
-    rep = _gate(
-        repetition_stats(
-            docs,
-            id_col=id_col,
-            text_col=text_col,
-            max_dup_word_frac=max_dup_word_frac,
-            max_top_bigram_frac=max_top_bigram_frac,
-        ).select(
-            id_col,
-            "dup_word_frac",
-            "top_bigram_frac",
-            F.col("keep").alias("__rep_keep"),
-        ),
-        "repetition",
+    # tier); the checkpointed frame is narrow (id + scalars)
+    q = quality_score(docs, id_col=id_col, text_col=text_col).localCheckpoint(
+        eager=False
     )
-    _t0 = _time.perf_counter()
+    rep = repetition_stats(
+        docs,
+        id_col=id_col,
+        text_col=text_col,
+        max_dup_word_frac=max_dup_word_frac,
+        max_top_bigram_frac=max_top_bigram_frac,
+    ).select(
+        id_col,
+        "dup_word_frac",
+        "top_bigram_frac",
+        F.col("keep").alias("__rep_keep"),
+    )
     pairs = minhash_lsh_pairs(
         docs,
         id_col=id_col,
@@ -264,15 +197,9 @@ def curate_corpus(
         threshold=jaccard_threshold,
         max_bucket_size=max_bucket_size,
     )
-    _staged("lsh_pairs", _t0)
-    _t0 = _time.perf_counter()
     comps = connected_components(pairs, docs, id_col=id_col)
-    _staged("components", _t0)
-    best = _gate(
-        keep_best_per_component(comps, q, id_col=id_col).select(
-            id_col, "component_id", F.col("keep").alias("__best_in_comp")
-        ),
-        "keep_best",
+    best = keep_best_per_component(comps, q, id_col=id_col).select(
+        id_col, "component_id", F.col("keep").alias("__best_in_comp")
     )
     # split over the FULL id spine (no text needed) so span-empty husks
     # keep their split for audit symmetry; component-grouped when asked.
@@ -303,21 +230,15 @@ def curate_corpus(
             "n_kept", F.lit(None).cast("long")
         )
     if lm is not None:
-        lms = _gate(
-            ngram_lm_score(docs, lm, id_col=id_col, text_col=text_col).select(
-                id_col, "bits_per_token"
-            ),
-            "lm_score",
+        lms = ngram_lm_score(docs, lm, id_col=id_col, text_col=text_col).select(
+            id_col, "bits_per_token"
         )
         out = out.join(lms, id_col, "left")
     else:
         out = out.withColumn("bits_per_token", F.lit(None).cast("double"))
     if eval_docs is not None:
-        cont = _gate(
-            decontaminate(
-                docs, eval_docs, id_col=id_col, text_col=text_col
-            ).select(id_col, F.lit(True).alias("__contaminated")),
-            "decontaminate",
+        cont = decontaminate(docs, eval_docs, id_col=id_col, text_col=text_col).select(
+            id_col, F.lit(True).alias("__contaminated")
         )
         out = out.join(cont, id_col, "left")
     else:
@@ -495,9 +416,6 @@ def prepare_training_data(
     # split strategy + leakage audit
     split_by_component: bool = False,
     leakage_report: bool = False,
-    # diagnostics (see curate_corpus): per-stage walls + eager barriers
-    stage_times: dict | None = None,
-    eager_gates: bool = False,
 ) -> tuple[DataFrame, ...]:
     """Raw corpus → trainer-ready packed sequences, in one composed
     plan — the full pre-training data path:
@@ -543,44 +461,20 @@ def prepare_training_data(
     (split, pack_group) with chunk text riding that same exchange; the
     shard deal ranks the (much smaller) distinct-bin spine and joins
     back on the bin key. Multi-consumer stages are lazily
-    checkpointed (`kept` when sampling/BPE/sharding re-read it,
-    `packed` before the shard join) so the curate ladder and chunk+pack
-    each run ONCE regardless of options. `curated` and `sequences`
-    still share the curate stage — materialize `curated` if both
-    outputs are consumed; at corpus scale you'd write `curated` to a
-    table first.
-
-    `stage_times` (optional dict, diagnostic — same contract as
-    `curate_corpus`): forwards to the curate stage (pass `eager_gates`
-    for per-gate walls there) and adds eager, individually-timed
-    barriers for the back half — ``kept_select`` (curate joins + keep
-    filter), ``budget`` (when sampling), ``bpe_chunk``/``chunk``
-    (tokenize + window), ``pack`` (the one packing shuffle), and
-    ``shard_deal`` (bin ranking + deal join). With it on, the caller's
-    first action over `sequences` pays only the final scan — an
-    end-to-end benchmark number decomposes into its stages. Off
-    (default): the lazy single-plan form documented above.
+    checkpointed (`curated`, read by the sequence side and by the
+    caller, and `packed` before the shard join) so the curate ladder
+    and chunk+pack each run ONCE regardless of options, also when the
+    caller reads both outputs.
 
     Not in the reference (it ingests ready-made vectors); this is the
     SURVEY §7.4 pipeline front-end composed end-to-end.
     """
-    import time as _time
-
     from picovdb_spark.operators.chunking import chunk_documents
     from picovdb_spark.operators.sharding import shard_plan
     from picovdb_spark.operators.textops import pack_sequences, sample_to_budget
     from picovdb_spark.operators.tokenizer import bpe_encode
 
-    def _barrier(frame: DataFrame, key: str) -> DataFrame:
-        """stage_times mode: materialize + record a back-half stage."""
-        if stage_times is None:
-            return frame
-        t0 = _time.perf_counter()
-        frame = frame.localCheckpoint(eager=True)
-        stage_times[key] = round(_time.perf_counter() - t0, 3)
-        return frame
-
-    curated = curate_corpus(
+    audit = curate_corpus(
         docs,
         id_col=id_col,
         text_col=text_col,
@@ -597,23 +491,20 @@ def prepare_training_data(
         lm_bits_max=lm_bits_max,
         return_text=True,
         split_by_component=split_by_component,
-        stage_times=stage_times,
-        eager_gates=eager_gates,
     )
+    # `curated` has two consumers, the `kept` branch below and the
+    # caller: the lazy checkpoint runs the curate gates once for both,
+    # and the stages that re-read `kept` (budget sampling's two passes,
+    # the BPE re-attach join, the shard deal) re-scan it, not the gates
+    curated = audit.localCheckpoint(eager=False)
+    curated._near_dup_pairs = audit._near_dup_pairs  # type: ignore[attr-defined]
+    curated._split_spine = audit._split_spine  # type: ignore[attr-defined]
     kept = curated.filter(F.col("keep")).select(
         F.col(id_col),
         F.col("split"),
         F.col("n_tokens"),
         F.col("text_clean").alias(text_col),
     )
-    if stage_times is not None:
-        kept = _barrier(kept, "kept_select")
-    elif token_budgets is not None or merges is not None or n_shards is not None:
-        # these stages evaluate `kept` more than once (budget sampling's
-        # two driver passes, the BPE re-attach join, the shard deal's
-        # eager rank-count job) — a lazy checkpoint truncates the curate
-        # lineage so the dedup ladder runs ONCE, not once per pass
-        kept = kept.localCheckpoint(eager=False)
 
     if token_budgets is not None:
         kept = kept.join(docs.select(id_col, domain_col), id_col, "left")
@@ -625,7 +516,6 @@ def prepare_training_data(
             tokens_col="n_tokens",
             salt=f"{seed}:budget",
         ).drop("cum_tokens", domain_col)
-        kept = _barrier(kept, "budget")
 
     if merges is not None:
         toks = bpe_encode(kept, merges, id_col=id_col, text_col=text_col)
@@ -650,7 +540,6 @@ def prepare_training_data(
             chunk_tokens=chunk_tokens,
             overlap=overlap,
         )
-    chunks = _barrier(chunks, "bpe_chunk" if merges is not None else "chunk")
 
     packed = pack_sequences(
         chunks,
@@ -663,15 +552,11 @@ def prepare_training_data(
         payload_cols=("chunk_text",),
     )
 
-    packed = _barrier(packed, "pack")
-
     if n_shards is not None:
         # the shard deal reads `packed` twice (the distinct-bin spine
         # feeding shard_plan's eager rank job, then the join back) —
         # checkpoint so chunk+pack run once
-        if stage_times is None:
-            packed = packed.localCheckpoint(eager=False)
-        _t0 = _time.perf_counter()
+        packed = packed.localCheckpoint(eager=False)
         bin_key = F.concat_ws(
             ":",
             F.col("split"),
@@ -685,9 +570,6 @@ def prepare_training_data(
         out = packed.withColumn("__bin_id", bin_key).join(
             plan, "__bin_id"
         ).drop("__bin_id")
-        if stage_times is not None:
-            out = out.localCheckpoint(eager=True)
-            stage_times["shard_deal"] = round(_time.perf_counter() - _t0, 3)
         # shard_plan ranks via a cached source — surface the handle so
         # the caller can release_global_rank(sequences) once written
         out._global_rank_source = plan._global_rank_source  # type: ignore[attr-defined]

@@ -245,7 +245,6 @@ def batch_query(
     ids: Iterable[str] | DataFrame | None = None,
     method: str = "auto",
     normalized: bool = False,
-    score_dtype: str = "float64",
     round_to: int = 6,
     query_id: str = "query_id",
     vector_col: str = K_VECTOR,
@@ -275,8 +274,7 @@ def batch_query(
     (`kernels.certified_topk`): a float32 prescan pruned by the derived
     bound `prescan_error_bound` and an exact float64 rescore of the
     survivors, so the rows and scores equal a float64 scan of every
-    row, under any BLAS kernel set. `score_dtype` accepts "float64"
-    (default) and "float32"; both run that one kernel.
+    row, under any BLAS kernel set.
 
     Broadcast lifetime: each GEMM call broadcasts its query matrix, and
     PySpark keeps that broadcast's pickle file in the driver's temp dir
@@ -292,19 +290,16 @@ def batch_query(
     # metadata with that name, the ranking column yields to `_rank_`.
     rank_col = "_rank_" if "rank" in cand.columns else "rank"
 
-    if not isinstance(queries, DataFrame) and method == "auto":
+    if method == "auto":
+        # GEMM is the scale path: columnar scan, Arrow-batched BLAS,
+        # O(partitions × num_q × k) shuffle. The SQL-expression path is
+        # kept for oracle parity and pure-SQL deployments.
         method = "gemm"
     if not isinstance(queries, DataFrame) and method != "gemm":
         raise TypeError(
             "pre-collected (ids, matrix) queries are only supported by "
             "method='gemm'; build a DataFrame for the SQL path"
         )
-
-    if method == "auto":
-        # GEMM is the scale path: columnar scan, Arrow-batched BLAS,
-        # O(partitions × num_q × k) shuffle. The SQL-expression path is
-        # kept for oracle parity and pure-SQL deployments.
-        method = "gemm"
 
     if method == "gemm":
         out = _gemm_topk(
@@ -315,7 +310,6 @@ def batch_query(
             top_k=top_k,
             round_to=round_to,
             rank_col=rank_col,
-            score_dtype=score_dtype,
             include_vector=include_vector,
         )
     elif method == "sql":
@@ -410,7 +404,6 @@ def knn_join_blocked(
     exclude_self: bool = False,
     left_blocks: int | None = None,
     right_blocks: int | None = None,
-    score_dtype: str = "float64",
 ) -> DataFrame:
     """Exact k-nearest-neighbors join for TWO LARGE SIDES — same
     semantics as `knn_join_exact` (cosine on L2-normalized vectors,
@@ -445,9 +438,6 @@ def knn_join_blocked(
     scales with |L|·|R| while the blocked kernel amortizes it into
     BLAS calls.
 
-    `score_dtype` is "float64" (default) or its alias "float32"; both
-    run the one certified kernel.
-
     Block sizing: with BOTH `left_blocks`/`right_blocks` unspecified,
     auto-sizing runs two `count()` jobs to learn the |L|/|R| ratio —
     cheap on cached/parquet inputs but re-executes the upstream plan on
@@ -464,8 +454,6 @@ def knn_join_blocked(
     for name, v in (("left_blocks", left_blocks), ("right_blocks", right_blocks)):
         if v is not None and v < 1:
             raise ValueError(f"block counts must be >= 1, got {name}={v}")
-    if score_dtype not in ("float32", "float64"):
-        raise ValueError(f"score_dtype must be float64 (or float32), got {score_dtype!r}")
     if left_blocks is None or right_blocks is None:
         # Size-aware grid. Shuffle volume is |L|·rb + |R|·lb rows, so
         # for a fixed cell count lb·rb ≈ P the optimum is
@@ -687,7 +675,6 @@ def _gemm_topk(
     top_k: int,
     round_to: int,
     rank_col: str = "rank",
-    score_dtype: str = "float64",
     include_vector: bool = False,
 ) -> DataFrame:
     """Partition-local top-k scan with metadata, then global top-k:
@@ -708,16 +695,10 @@ def _gemm_topk(
     Arrow `take` (`kernels.emit_topk`), so no second store scan joins it
     back. The global ranking applies the exact (rounded desc, id asc)
     order.
-
-    `score_dtype` is "float64" or its alias "float32"; anything else
-    raises.
     """
     import numpy as np
 
     from picovdb_spark.operators.topk import topk_per_query
-
-    if score_dtype not in ("float64", "f64", "float32", "f32"):
-        raise ValueError(f"unknown score_dtype: {score_dtype!r}")
 
     meta = [
         c for c in cand.columns

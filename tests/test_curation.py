@@ -230,33 +230,3 @@ def test_leakage_from_pairs_rides_any_pair_list(spark):
     assert set(rows) == {(1, 2)}  # 2-3 same split, 5-6 same split
     assert rows[(1, 2)]["cosine"] == 0.98  # score column rides through
     assert rows[(1, 2)]["split_a"] == "train" and rows[(1, 2)]["split_b"] == "test"
-
-
-def test_curate_eager_gates_decomposes_and_matches_lazy(spark, corpus):
-    """eager_gates=True: (a) verdicts are IDENTICAL to the lazy form,
-    (b) every gate that ran has its own stage_times wall, and (c) the
-    assembled result plan contains NO Python/Arrow kernels — each gate
-    kernel ran exactly once inside its own checkpoint barrier, so a
-    multi-consumer action (curation_report + a collect) cannot re-run
-    any full-corpus kernel (the r8 scale500k_curate 30 s opaque-tail
-    finding, closed structurally)."""
-    docs, eval_docs = corpus
-    st: dict = {}
-    eager = curate_corpus(
-        docs, eval_docs=eval_docs, paragraph_sep=" ", eager_gates=True, stage_times=st
-    )
-    lazy = curate_corpus(docs, eval_docs=eval_docs, paragraph_sep=" ")
-    key = lambda rows: sorted(map(tuple, rows))
-    assert key(eager.collect()) == key(lazy.collect())
-    for k in (
-        "span_removal", "lsh_pairs", "components",
-        "exact_dedup", "quality", "repetition", "keep_best", "decontaminate",
-    ):
-        assert k in st and st[k] >= 0.0, (k, st)
-    assert "lm_score" not in st  # lm off → no stage entry
-    plan = eager._jdf.queryExecution().executedPlan().toString()
-    for kernel in ("ArrowEvalPython", "MapInPandas", "FlatMapGroupsInPandas", "BatchEvalPython"):
-        assert kernel not in plan, f"{kernel} leaked past the gate barriers"
-    # the report agg is now a pure join residual over checkpointed gates
-    rep = curation_report(eager)
-    assert rep["total"] == 7

@@ -2,9 +2,9 @@
 certified by `prescan_error_bound`, float64 rescoring of the survivors,
 and the metadata `batch_query`'s scoring task emits with each row.
 
-Every exact scorer built on it — `batch_query` with either score_dtype,
-`knn_join_blocked`, `ann_query` at full probe and both resident stores'
-`query` and `query_local` — must return exactly the rows and scores of a
+Every exact scorer built on it — `batch_query`, `knn_join_blocked`,
+`ann_query` at full probe and both resident stores' `query` and
+`query_local` — must return exactly the rows and scores of a
 brute force that rescores EVERY store row with the same float64 routine
 (`_exact_cosines`), on inputs built to sit on the
 prescan's weak spots: duplicate rows, rows one ulp apart, scores on a
@@ -218,9 +218,8 @@ def test_nan_rows_answer_like_sql_in_every_scorer(spark):
     assert [(r[1], r[2]) for r in want] == [("n0", "nan"), ("n1", "nan")]
 
     got = {}
-    for dt in ("float64", "float32"):
-        got[f"gemm/{dt}"] = rows_of(batch_query(store, qdf, top_k=2, score_dtype=dt))
-        got[f"knn/{dt}"] = knn_rows(qdf, store, 2, left_blocks=1, right_blocks=1, score_dtype=dt)
+    got["gemm"] = rows_of(batch_query(store, qdf, top_k=2))
+    got["knn"] = knn_rows(qdf, store, 2, left_blocks=1, right_blocks=1)
     index = full_probe_index(spark.createDataFrame(clean, schema), 2, 42)
     index = index.add(spark.createDataFrame(nan, schema), auto_refit=False)
     got["ann"] = rows_of(ann_query(index, qdf, top_k=2, nprobe=2))

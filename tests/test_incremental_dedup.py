@@ -306,24 +306,3 @@ def test_null_text_short_route_oracle_parity(spark):
     # and the NULL-text batch doc really is caught against both the
     # NULL-text and the empty-text history docs
     assert (100, 1) in got and (100, 2) in got
-
-
-def test_minhash_lsh_pairs_stage_times_decomposition(spark):
-    """stage_times instrumentation: keys cover the three stages, and the
-    instrumented run returns IDENTICAL pairs to the uninstrumented one
-    (the barriers only force the caches the lazy form fills anyway)."""
-    from picovdb_spark.operators.dedup import minhash_lsh_pairs
-
-    docs = spark.createDataFrame(
-        [(i, " ".join(f"w{(i * 3 + j) % 25}" for j in range(12))) for i in range(60)]
-        + [(1000 + i, " ".join(f"w{(i * 3 + j) % 25}" for j in range(12))) for i in range(5)],
-        "doc_id long, text string",
-    )
-    st: dict = {}
-    inst = sorted(
-        map(tuple, minhash_lsh_pairs(docs, stage_times=st).collect())
-    )
-    plain = sorted(map(tuple, minhash_lsh_pairs(docs).collect()))
-    assert inst == plain and len(inst) > 0
-    assert set(st) == {"shingle_sig_bands", "candidates_verify"}
-    assert all(isinstance(v, float) and v >= 0 for v in st.values())

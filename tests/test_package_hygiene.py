@@ -6,6 +6,7 @@ import re
 
 PACKAGE = pathlib.Path(__file__).resolve().parent.parent / "picovdb_spark"
 FORCE_FLAG = re.compile(r"_FORCE_\w*")
+TIMING_PARAM = re.compile(r"stage_times|eager_gates|timings|\w*_times")
 
 
 def _module_level_targets(tree: ast.Module):
@@ -34,4 +35,25 @@ def test_no_module_level_force_flags():
         for name, lineno in _module_level_targets(ast.parse(path.read_text()))
         if FORCE_FLAG.fullmatch(name)
     ]
+    assert not offenders, offenders
+
+
+def test_no_timing_parameters_in_operator_signatures():
+    """Operators are timed from outside, through Spark's event log; a
+    timing parameter switches an operator to a second plan that exists
+    only to be measured."""
+    modules = sorted(PACKAGE.rglob("*.py"))
+    assert modules
+    offenders = []
+    for path in modules:
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+                continue
+            a = node.args
+            params = [*a.posonlyargs, *a.args, *a.kwonlyargs, a.vararg, a.kwarg]
+            offenders += [
+                f"{path.relative_to(PACKAGE.parent)}:{node.lineno} {p.arg}"
+                for p in params
+                if p is not None and TIMING_PARAM.fullmatch(p.arg)
+            ]
     assert not offenders, offenders

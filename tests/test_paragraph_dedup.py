@@ -130,25 +130,6 @@ def test_word_granularity_matches_driver_configuration(spark, sf_dir):
     assert agg["nk"] <= agg["np"]
 
 
-def test_stage_times_decomposition_identical_values(spark, sf_dir):
-    """stage_times (r9 verdict #3: the row that waved two driver rounds
-    running must name its stage) records an `election` wall and changes
-    NOTHING about the values — the eager keep-list checkpoint is purely
-    a timing/lineage barrier."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(200)
-    st: dict = {}
-    staged = {
-        r["doc_id"]: (r["n_paras"], r["n_kept"], r["text_clean"])
-        for r in paragraph_dedup(docs, sep=" ", stage_times=st).collect()
-    }
-    plain = {
-        r["doc_id"]: (r["n_paras"], r["n_kept"], r["text_clean"])
-        for r in paragraph_dedup(docs, sep=" ").collect()
-    }
-    assert staged == plain
-    assert set(st) == {"election"} and st["election"] > 0
-
-
 def test_election_is_hash_aggregated_for_integral_ids(spark):
     """The winner election must plan as HashAggregate (map-side partial
     combine), never SortAggregate: min(struct(id,pos)) plans sort-based

@@ -169,7 +169,7 @@ def test_knn_join_blocked_plan_no_cartesian(spark, sf_dir):
     FlatMapCoGroupsInArrow over two hash exchanges — never a cartesian
     or broadcast-nested-loop join (the shapes that can't scale past one
     executor), and the vectors must shuffle in their input element type:
-    no cast widens (or narrows) them for either score_dtype."""
+    no cast widens (or narrows) them."""
     from picovdb_spark.operators.similarity import knn_join_blocked
 
     emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 20)
@@ -178,15 +178,14 @@ def test_knn_join_blocked_plan_no_cartesian(spark, sf_dir):
         left_vec="embedding", right_vec="embedding",
         left_blocks=2, right_blocks=2,
     )
-    for dtype in ("float32", "float64"):
-        df = knn_join_blocked(emb, emb, k=3, score_dtype=dtype, **kw)
-        plan = explain_str(df)
-        assert "FlatMapCoGroupsInArrow" in plan, plan
-        assert "CartesianProduct" not in plan
-        assert "BroadcastNestedLoopJoin" not in plan
-        # the analyzed plan would show any cast the grid projection applies
-        analyzed = str(df._jdf.queryExecution().analyzed())
-        assert "embedding#" in analyzed and "as array<" not in analyzed, analyzed[:2000]
+    df = knn_join_blocked(emb, emb, k=3, **kw)
+    plan = explain_str(df)
+    assert "FlatMapCoGroupsInArrow" in plan, plan
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    # the analyzed plan would show any cast the grid projection applies
+    analyzed = str(df._jdf.queryExecution().analyzed())
+    assert "embedding#" in analyzed and "as array<" not in analyzed, analyzed[:2000]
 
 
 def test_window_dedup_reassembly_is_hash_set_subtraction(spark):

@@ -6,6 +6,8 @@ splits, BPE mode re-budgets in model tokens, budget sampling gates the
 chunk volume, and shard dealing deals whole bins ±1.
 """
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -294,39 +296,19 @@ def test_prepare_leakage_report_and_component_split(spark):
         assert sp[a] == sp[b]
 
 
-def test_prepare_stage_times_decomposition_matches_lazy(spark, corpus):
-    """stage_times + eager_gates: the instrumented form (a) produces
-    byte-identical sequences and audit verdicts to the lazy form, (b)
-    records a wall for every back-half stage that ran, and (c) keeps
-    per-gate walls from the curate stage — so a bench row's end-to-end
-    number always decomposes into its stages (r8 verdict: the 30 s
-    opaque gates_agg tail)."""
-    st: dict = {}
-    seqs_i, cur_i = prepare_training_data(
-        corpus,
-        token_budgets={"en": 200, "de": 150},
-        chunk_tokens=32,
-        max_tokens=64,
-        n_shards=2,
-        stage_times=st,
-        eager_gates=True,
+def test_prepare_curated_plan_runs_no_curate_kernel_again(spark, corpus):
+    """`curated` is read by the sequence side and by the caller, so it is
+    checkpointed: its plan holds no Python kernel node for a second
+    action to re-run, while the plain curate_corpus plan over the same
+    corpus does."""
+    kernel = re.compile(
+        r"ArrowEvalPython|BatchEvalPython|MapIn(Pandas|Arrow)|FlatMap\w*In(Pandas|Arrow)"
     )
-    seqs_l, cur_l = prepare_training_data(
-        corpus,
-        token_budgets={"en": 200, "de": 150},
-        chunk_tokens=32,
-        max_tokens=64,
-        n_shards=2,
-    )
-    key = lambda df: sorted(map(tuple, df.collect()))
-    assert key(seqs_i) == key(seqs_l)
-    assert key(cur_i) == key(cur_l)
-    release_global_rank(seqs_i)
-    release_global_rank(seqs_l)
-    for k in (
-        "exact_dedup", "quality", "repetition", "keep_best",  # curate gates
-        "lsh_pairs", "components",                            # curate barriers
-        "kept_select", "budget", "chunk", "pack", "shard_deal",  # back half
-    ):
-        assert k in st and st[k] >= 0.0, (k, st)
-    assert "bpe_chunk" not in st  # no merges → whitespace chunk key
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    assert kernel.search(plan(curate_corpus(corpus)))
+    _, curated = prepare_training_data(corpus, chunk_tokens=32, max_tokens=64)
+    assert not kernel.search(plan(curated)), plan(curated)
+    assert curated.filter("keep").count() == 4

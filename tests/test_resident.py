@@ -56,7 +56,7 @@ def test_resident_matches_standard_float32_path(store, queries, exact):
         rows = rs.materialize()
         assert rows == store.count()
         assert rows_of(rs.query(queries, top_k=10)) == exact[10]
-        b = batch_query(store, queries, top_k=10, method="gemm", score_dtype="float32")
+        b = batch_query(store, queries, top_k=10, method="gemm")
         assert rows_of(b) == exact[10]
     finally:
         rs.close()
@@ -121,7 +121,7 @@ def test_resident_ivf_partial_probe_recall_band(store, queries):
     with ResidentIvfStore(store.select(K_ID, "_vector_"), n_centroids=16, seed=42) as rs:
         ann = rs.query(queries, top_k=10, nprobe=4).collect()
     exact = batch_query(
-        store, queries, top_k=10, method="gemm", score_dtype="float32"
+        store, queries, top_k=10, method="gemm"
     ).select("query_id", K_ID, "rank").collect()
     got = {}
     for r in ann:
@@ -184,7 +184,7 @@ def test_resident_int8_accuracy_and_footprint(store, queries):
     import numpy as np
 
     exact = batch_query(
-        store, queries, top_k=10, method="gemm", score_dtype="float32"
+        store, queries, top_k=10, method="gemm"
     ).select("query_id", K_ID, K_METRICS).collect()
     rs = ResidentGemmStore(store.select(K_ID, "_vector_"), block_dtype="int8")
     try:
@@ -223,7 +223,7 @@ def test_resident_ivf_int8_recall_and_local_parity(store, queries):
     from picovdb_spark.operators.resident import ResidentIvfStore
 
     exact = batch_query(
-        store, queries, top_k=10, method="gemm", score_dtype="float32"
+        store, queries, top_k=10, method="gemm"
     ).select("query_id", K_ID).collect()
     want = {}
     for r in exact:

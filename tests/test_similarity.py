@@ -293,17 +293,16 @@ def test_boundary_tie_resolution_matches_id_order(spark):
 
 
 def test_float32_path_same_ids_as_float64(store, queries):
-    """score_dtype="float32" is an alias of the certified kernel: both
-    dtypes return exactly the float64 brute force's rows and scores."""
+    """The certified kernel's float32 prescan returns exactly the float64
+    brute force's rows and scores."""
     want = brute_force_of(queries, store.select(K_ID, "_vector_"), 10)
-    for dtype in ("float64", "float32"):
-        got = batch_query(store, queries, top_k=10, method="gemm", score_dtype=dtype)
-        assert rows_of(got.select("query_id", K_ID, K_METRICS, "rank")) == want, dtype
+    got = batch_query(store, queries, top_k=10, method="gemm")
+    assert rows_of(got.select("query_id", K_ID, K_METRICS, "rank")) == want
 
 
 def test_float32_boundary_ties_resolve_by_id(spark):
-    """Tie-complete selection holds under the float32 alias too: a
-    rounded tie can't drop the id-ordered winner across partitions."""
+    """Tie-complete selection through the float32 prescan: a rounded
+    tie can't drop the id-ordered winner across partitions."""
     rows = [(str(i), [1.0, 0.0]) for i in range(6)] + [("x", [0.0, 1.0])]
     store = spark.createDataFrame(
         rows, schema="_id_ string, _vector_ array<float>"
@@ -313,7 +312,7 @@ def test_float32_boundary_ties_resolve_by_id(spark):
     )
     got = [
         (r["_id_"], r["rank"])
-        for r in batch_query(store, q, top_k=3, method="gemm", score_dtype="float32")
+        for r in batch_query(store, q, top_k=3, method="gemm")
         .orderBy("rank")
         .collect()
     ]
@@ -335,16 +334,11 @@ def test_float32_normalized_skips_renorm_correctly(spark):
     q = spark.createDataFrame(
         [("q0", [float(x) for x in mat[0]])], schema="query_id string, _vector_ array<float>"
     )
-    a = batch_query(store, q, top_k=5, method="gemm", score_dtype="float32", normalized=True)
-    b = batch_query(store, q, top_k=5, method="gemm", score_dtype="float32", normalized=False)
+    a = batch_query(store, q, top_k=5, method="gemm", normalized=True)
+    b = batch_query(store, q, top_k=5, method="gemm", normalized=False)
     ka = [(r["query_id"], r[K_ID], r[K_METRICS], r["rank"]) for r in a.orderBy("rank").collect()]
     kb = [(r["query_id"], r[K_ID], r[K_METRICS], r["rank"]) for r in b.orderBy("rank").collect()]
     assert ka == kb
-
-
-def test_unknown_score_dtype_raises(store, queries):
-    with pytest.raises(ValueError, match="score_dtype"):
-        batch_query(store, queries, top_k=3, method="gemm", score_dtype="bf16").collect()
 
 
 def test_oversized_query_batch_fails_fast(spark, store, queries, monkeypatch):
@@ -362,21 +356,17 @@ def test_oversized_query_batch_fails_fast(spark, store, queries, monkeypatch):
 def test_gemm_multi_batch_merge_equals_single_batch(spark, store, queries):
     """The GEMM kernel accumulates per-Arrow-batch candidates and emits
     once per task. Shrinking `arrow.maxRecordsPerBatch` so every task
-    spans many batches must not change results in either precision (the
-    merged task-end re-selection keeps the same tie-complete set)."""
-    q32 = batch_query(store, queries, top_k=10, method="gemm", score_dtype="float32")
-    q64 = batch_query(store, queries, top_k=10, method="gemm", score_dtype="float64")
-    b32 = sorted(map(tuple, q32.collect()))
-    b64 = sorted(map(tuple, q64.collect()))
+    spans many batches must not change results (the merged task-end
+    re-selection keeps the same tie-complete set)."""
+    q = batch_query(store, queries, top_k=10, method="gemm")
+    before = sorted(map(tuple, q.collect()))
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
     try:
-        m32 = sorted(map(tuple, q32.collect()))
-        m64 = sorted(map(tuple, q64.collect()))
+        after = sorted(map(tuple, q.collect()))
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-    assert m32 == b32
-    assert m64 == b64
+    assert after == before
 
 
 def test_precollected_query_tuple_equals_dataframe(store, queries):
@@ -389,13 +379,6 @@ def test_precollected_query_tuple_equals_dataframe(store, queries):
     df_res = sorted(map(tuple, batch_query(store, queries, top_k=5, method="gemm").collect()))
     np_res = sorted(map(tuple, batch_query(store, (ids, mat), top_k=5, method="gemm").collect()))
     assert np_res == df_res
-    f32_df = sorted(
-        map(tuple, batch_query(store, queries, top_k=5, method="gemm", score_dtype="float32").collect())
-    )
-    f32_np = sorted(
-        map(tuple, batch_query(store, (ids, mat), top_k=5, method="gemm", score_dtype="float32").collect())
-    )
-    assert f32_np == f32_df
 
 
 def test_precollected_tuple_accepts_non_string_ids(store, queries):
@@ -507,10 +490,9 @@ def test_hard_negatives_validates_method(spark, sf_dir):
 
 
 def test_knn_join_blocked_float32_serving_mode(store, spark, sf_dir):
-    """score_dtype="float32" is an alias of the certified kernel: both
-    dtypes return exactly the float64 brute force (self-queries first,
-    at exactly 1.0), with and without exclude_self, and an unknown
-    dtype raises."""
+    """The blocked join's cells run the certified kernel: it returns
+    exactly the float64 brute force (self-queries first, at exactly
+    1.0), with and without exclude_self."""
     from picovdb_spark.operators.similarity import knn_join_blocked
 
     emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 40)
@@ -523,11 +505,8 @@ def test_knn_join_blocked_float32_serving_mode(store, spark, sf_dir):
     for skip in (False, True):
         want = brute_force_of(side, side, 5, exclude_self=skip)
         assert len(want) == 200
-        for dtype in ("float32", "float64"):
-            got = knn_join_blocked(emb, emb, k=5, score_dtype=dtype, exclude_self=skip, **kw)
-            assert rows_of(got) == want, (dtype, skip)
+        got = knn_join_blocked(emb, emb, k=5, exclude_self=skip, **kw)
+        assert rows_of(got) == want, skip
         # self at exactly 1.0 ranks first, unless excluded
         selves = [(r[2], r[3]) for r in want if r[0] == r[1]]
         assert selves == ([] if skip else [("1.0", 1)] * 40)
-    with pytest.raises(ValueError, match="score_dtype"):
-        knn_join_blocked(emb, emb, k=1, score_dtype="float16", **kw)
