@@ -32,7 +32,7 @@ from typing import Iterator
 
 import numpy as np
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -204,7 +204,9 @@ class IvfIndex:
     vs-full maintenance decision (the reference's changed/ntotal ≤ 0.2
     rule, pico_vdb.py:194-204, :877-881); `last_mode` records which path
     the last maintenance took ("full" | "incremental"), the analog of
-    `_last_faiss_rebuild_mode` (pico_vdb.py:204)."""
+    `_last_faiss_rebuild_mode` (pico_vdb.py:204). `rows` is the row
+    count of `df` when the job that wrote it observed one, and `path`
+    the artifact directory `df` scans when it was `read` from files."""
 
     df: DataFrame
     centroids: np.ndarray
@@ -212,6 +214,8 @@ class IvfIndex:
     base_rows: int | None = None
     added_rows: int = 0
     last_mode: str = "full"
+    rows: int | None = None
+    path: str | None = None
 
     @classmethod
     def build(
@@ -221,21 +225,21 @@ class IvfIndex:
         n_centroids: int = 64,
         vector_col: str = K_VECTOR,
         seed: int = 42,
-        materialize: bool = True,
     ) -> "IvfIndex":
         if K_DELETED in store.columns:
             store = store.filter(~F.col(K_DELETED)).drop(K_DELETED)
         cent = fit_centroids(store, n_centroids, vector_col=vector_col, seed=seed)
-        assigned = assign_clusters(store, cent, vector_col=vector_col)
-        if materialize:
-            # cluster-clustered layout: the write analog of
-            # .write.partitionBy(CLUSTER_COL) — probing prunes whole files
-            assigned = assigned.repartition(max(len(cent) // 4, 1), CLUSTER_COL)
-            assigned = assigned.localCheckpoint(eager=True)
-            base_rows = assigned.count()  # cheap: counts the checkpoint
-        else:
-            base_rows = None
-        return cls(df=assigned, centroids=cent, vector_col=vector_col, base_rows=base_rows)
+        # cluster-clustered layout: the write analog of
+        # .write.partitionBy(CLUSTER_COL) — probing prunes whole files
+        assigned, base_rows = _checkpoint_counted(
+            assign_clusters(store, cent, vector_col=vector_col).repartition(
+                max(len(cent) // 4, 1), CLUSTER_COL
+            )
+        )
+        return cls(
+            df=assigned, centroids=cent, vector_col=vector_col, base_rows=base_rows,
+            rows=base_rows,
+        )
 
     def write(self, path: str) -> None:
         """Persist the full index artifact: store rows partitioned by
@@ -259,26 +263,56 @@ class IvfIndex:
         os.replace(tmp, os.path.join(path, "_centroids.npy"))
 
     @classmethod
-    def read(cls, spark, path: str, *, vector_col: str = K_VECTOR) -> "IvfIndex":
+    def read(
+        cls,
+        spark,
+        path: str,
+        *,
+        vector_col: str = K_VECTOR,
+        schema: T.StructType | None = None,
+    ) -> "IvfIndex":
         """Load a written index; the DataFrame stays lazy (scans prune by
         `__cluster` at query time). `base_rows` seeds add()'s drift
         ratio (without it auto-refit never fires on a reopened index):
         it is summed from the cluster files' Parquet footers on the
-        driver, so the read runs no count job."""
+        driver, so the read runs no count job.
+
+        `schema` is the schema of the store the index was built from.
+        The index's schema is then its fields that the artifact's files
+        hold, in file order, plus `__cluster int`, so the read runs no
+        schema-inference job either. Without it Spark infers the
+        schema."""
         import os
 
         import pyarrow.parquet as pq
 
         cent = np.load(os.path.join(path, "_centroids.npy"))
-        df = spark.read.parquet(path)
-        base_rows = sum(
-            pq.read_metadata(f.path).num_rows
+        footers = [
+            pq.read_metadata(f.path)
             for d in os.scandir(path)
             if d.is_dir() and d.name.startswith(f"{CLUSTER_COL}=")
             for f in os.scandir(d.path)
             if f.name.endswith(".parquet") and not f.name.startswith(("_", "."))
+        ]
+        reader = spark.read
+        if schema is not None:
+            fields = {f.name: f for f in schema.fields}
+            names = (
+                footers[0].schema.to_arrow_schema().names
+                if footers
+                else [c for c in schema.names if c != K_DELETED]
+            )
+            reader = reader.schema(
+                T.StructType(
+                    [fields[c] for c in names]
+                    + [T.StructField(CLUSTER_COL, T.IntegerType())]
+                )
+            )
+        base_rows = sum(md.num_rows for md in footers)
+        return cls(
+            df=reader.parquet(path), centroids=cent, vector_col=vector_col,
+            base_rows=base_rows, rows=base_rows, path=path,
         )
-        return cls(df=df, centroids=cent, vector_col=vector_col, base_rows=base_rows)
 
     def refit(self, *, n_centroids: int | None = None, seed: int = 42) -> "IvfIndex":
         """rebuild_index() parity (pico_vdb.py:855-860)."""
@@ -293,86 +327,86 @@ class IvfIndex:
         self,
         new_rows: DataFrame,
         *,
+        replace=(),
         auto_refit: bool = True,
         threshold: float = 0.2,
         seed: int = 42,
-        materialize: bool = True,
     ) -> "IvfIndex":
-        """Incremental maintenance: assign ONLY the new rows against the
-        frozen centroids and append — the analog of the reference's
-        incremental add path (`_rebuild_faiss` remove_ids+add_with_ids,
-        pico_vdb.py:884-921).
+        """Incremental maintenance: drop the rows of the `replace` ids,
+        assign ONLY the new rows against the frozen centroids and append
+        — the analog of the reference's incremental path
+        (`_rebuild_faiss` remove_ids + add_with_ids, pico_vdb.py:884-921).
+        Removals count toward the caller's change budget, not
+        `added_rows`.
 
         Centroid drift accumulates with appends, so past the reference's
         rebuild threshold (cumulative changed/base > `threshold`, default
         0.2 — pico_vdb.py:194-204, :877-881) the add AUTO-REFITS: a full
         seeded k-means over old+new rows (`last_mode == "full"`); below
         it the append is the cheap path (`last_mode == "incremental"`).
-        `auto_refit=False` restores the always-append round-1 behavior
-        for callers managing their own rebuild policy (VectorStore).
+        Only this rule counts `new_rows` up front. `auto_refit=False`
+        always appends, for callers managing their own rebuild policy
+        (VectorStore).
 
-        `materialize=True` (default) localCheckpoints the assigned DELTA
-        — O(batch), never O(index) — so the appended index stays valid
-        after the caller's source files change (the streaming-ingest
-        loop atomically SWAPS the store parquet between micro-batches;
-        a lazy union over the old files would fail — or silently read
-        stale data — on the next maintenance cycle; pinned by
-        tests/test_streaming.py). The base side is already stable: a
-        materialized build() is checkpointed, a read() index scans its
-        own written files."""
-        n_new = new_rows.count()
-        pending = self.added_rows + n_new
-        if auto_refit and self.base_rows is None:
-            # non-materialized build: price the base once, lazily, so the
-            # drift rule still governs (a silent None would disable
-            # auto-refit forever on this index)
-            self.base_rows = self.df.count()
-        if (
-            auto_refit
-            and self.base_rows
-            and pending / float(self.base_rows) > threshold
-        ):
-            combined = self.df.drop(CLUSTER_COL).unionByName(
-                new_rows.select(*[c for c in self.df.columns if c != CLUSTER_COL])
-            )
-            rebuilt = IvfIndex.build(
-                combined,
-                n_centroids=len(self.centroids),
-                vector_col=self.vector_col,
-                seed=seed,
-            )
-            rebuilt.last_mode = "full"
-            return rebuilt
+        The append is ONE Spark job: the kept and the assigned rows, on
+        at most one partition per core, are localCheckpointed together,
+        and the row counts that set `rows` and `added_rows` are observed
+        on that job. The index then reads neither the caller's source
+        frame nor earlier index files (the streaming-ingest loop
+        atomically SWAPS the store parquet between micro-batches; a lazy
+        union over the old files would fail — or silently read stale
+        data — on the next maintenance cycle; pinned by
+        tests/test_streaming.py), and its lineage stays one checkpoint
+        deep however many adds follow."""
+        ids = [str(i) for i in replace]
+        base = self.df.filter(~F.col(K_ID).isin(ids)) if ids else self.df
+        if auto_refit:
+            n_new = new_rows.count()
+            if self.base_rows is None:
+                # an index constructed without a count: price the base
+                # once, so the drift rule still governs (a silent None
+                # would disable auto-refit forever on this index)
+                self.base_rows = self.df.count()
+            if self.base_rows and (self.added_rows + n_new) / float(self.base_rows) > threshold:
+                combined = base.drop(CLUSTER_COL).unionByName(
+                    new_rows.select(*[c for c in self.df.columns if c != CLUSTER_COL])
+                )
+                rebuilt = IvfIndex.build(
+                    combined,
+                    n_centroids=len(self.centroids),
+                    vector_col=self.vector_col,
+                    seed=seed,
+                )
+                rebuilt.last_mode = "full"
+                return rebuilt
+        appended = Observation()
         assigned = assign_clusters(new_rows, self.centroids, vector_col=self.vector_col)
-        if materialize:
-            assigned = assigned.localCheckpoint(eager=True)
+        assigned = assigned.observe(appended, F.count(F.lit(1)).alias("n"))
+        df, rows = _checkpoint_counted(
+            coalesce_to_cores(base.unionByName(assigned.select(*self.df.columns)))
+        )
         return IvfIndex(
-            df=self.df.unionByName(assigned.select(*self.df.columns)),
+            df=df,
             centroids=self.centroids,
             vector_col=self.vector_col,
             base_rows=self.base_rows,
-            added_rows=pending,
+            added_rows=self.added_rows + appended.get["n"],
             last_mode="incremental",
+            rows=rows,
         )
 
-    def remove(self, ids) -> "IvfIndex":
-        """Drop rows by id from the index without refitting — the analog
-        of `faiss.remove_ids` (pico_vdb.py:884-893). Removals count
-        toward the caller's change budget, not `added_rows`."""
-        id_list = [str(i) for i in ids]
-        return IvfIndex(
-            df=self.df.filter(~F.col(K_ID).isin(id_list)),
-            centroids=self.centroids,
-            vector_col=self.vector_col,
-            base_rows=self.base_rows,
-            added_rows=self.added_rows,
-            last_mode="incremental",
-        )
+
+def _checkpoint_counted(df: DataFrame) -> tuple[DataFrame, int]:
+    """Eager localCheckpoint of `df` and its row count, observed on the
+    checkpoint's own job instead of a count job."""
+    obs = Observation()
+    out = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+    return out, obs.get["n"]
 
 
 def ann_query(
     index: IvfIndex,
-    queries: DataFrame,
+    queries: DataFrame | tuple,
     *,
     top_k: int = 10,
     nprobe: int = 8,
@@ -388,6 +422,12 @@ def ann_query(
     tests/test_task14_faiss_vs_numpy_results.py). At `nprobe >=
     n_centroids` every row is probed and the answer is exactly
     `batch_query`'s.
+
+    `queries` is a DataFrame with columns (`query_id`, `vector_col`), or
+    the pre-collected serving form `batch_query` also takes: an
+    ``(ids, matrix)`` tuple of a sequence of ids and a 2-D array-like.
+    The tuple form runs no Spark job to collect the batch; both forms
+    give the same rows.
 
     Physical plan: probe sets are computed driver-side from the tiny
     (nq × k_centroids) GEMM; the store scan is filtered to the union of
@@ -410,7 +450,10 @@ def ann_query(
     at 100 TB scale, where the per-cluster partition pruning also skips
     IO entirely).
     """
-    from picovdb_spark.operators.similarity import collect_normalized_queries
+    from picovdb_spark.operators.similarity import (
+        collect_normalized_queries,
+        normalize_query_matrix,
+    )
     from picovdb_spark.operators.topk import topk_per_query
 
     spark = index.df.sparkSession
@@ -431,7 +474,10 @@ def ann_query(
             T.StructField(K_METRICS, T.DoubleType()),
         ]
     )
-    qids, qmat = collect_normalized_queries(queries, query_id, vector_col)
+    if isinstance(queries, DataFrame):
+        qids, qmat = collect_normalized_queries(queries, query_id, vector_col)
+    else:
+        qids, qmat = normalize_query_matrix(*queries)
     if qmat.size == 0 or top_k <= 0:
         empty = T.StructType([*out_schema.fields, T.StructField(rank_col, T.IntegerType())])
         return spark.createDataFrame([], schema=empty)

@@ -23,8 +23,16 @@ import os
 import shutil
 import time
 import uuid
-from collections.abc import Iterable
+from collections.abc import Callable, Iterable
 from typing import Any
+
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from picovdb_spark.functions.vector import assert_dim, auto_id, l2_normalize
+from picovdb_spark.schema import K_DELETED, K_ID, K_METRICS, K_VECTOR
+from picovdb_spark.session import coalesce_to_cores, local_df
 
 logger = logging.getLogger("picovdb_spark")
 
@@ -45,16 +53,6 @@ def _timed(name: str):
         return wrapper
 
     return deco
-
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-from picovdb_spark.functions.vector import assert_dim, auto_id, l2_normalize
-from picovdb_spark.schema import K_DELETED, K_ID, K_METRICS, K_VECTOR
-from picovdb_spark.session import coalesce_to_cores, local_df
-
-_RESERVED = (K_ID, K_VECTOR, K_DELETED)
 
 
 class VectorStore:
@@ -124,25 +122,11 @@ class VectorStore:
     def active(self) -> DataFrame:
         return self._df.filter(~F.col(K_DELETED))
 
-    def _set(
-        self,
-        df: DataFrame,
-        changed_ids: Iterable[str] | None = None,
-        *,
-        pre_checkpointed: bool = False,
-    ) -> None:
-        # Truncate lineage after each mutation so chained upsert/delete
-        # don't grow an unbounded plan (the Delta-table analog of commit).
-        # `pre_checkpointed`: the caller already checkpointed this plan
-        # (upsert checkpoints ONCE and derives store + report from it) —
-        # checkpointing again would copy the whole store a second time.
-        if pre_checkpointed or not self._checkpoint:
-            self._df = df
-        else:
-            self._df = df.localCheckpoint(eager=True)
-        # a checkpointed plan lives in block storage — no file dependence;
-        # an unchckpointed mutation still scans the loaded files
-        self._detached = self._checkpoint or pre_checkpointed
+    def _set(self, df: DataFrame, changed_ids: Iterable[str] | None = None) -> None:
+        self._df = df
+        # a checkpointed store lives in block storage, detached from any
+        # files; an unmaterialized mutation still scans the loaded files
+        self._detached = self._checkpoint
         # dirty-flag parity (pico_vdb.py:496-497): mutations don't rebuild
         # eagerly — they accumulate a pending-change set, and the next ANN
         # query picks incremental vs full maintenance by the change ratio
@@ -153,6 +137,31 @@ class VectorStore:
             self._ann_pending.clear()
         elif self._ann is not None:
             self._ann_pending.update(str(i) for i in changed_ids)
+
+    def _materialize(
+        self, src: DataFrame, build: Callable[[DataFrame], DataFrame], **metrics: Column
+    ) -> tuple[DataFrame, dict[str, Any]]:
+        """Run a mutation's one Spark action; return the new store and
+        the values of `metrics`, aggregates over the rows of `src`.
+
+        The metrics ride on the action as an `Observation` attached to
+        `src` below `build`, so a mutation's report costs no collect or
+        count job of its own. The action is the eager `localCheckpoint`
+        of `build(src)` — which truncates the lineage, the Delta-table
+        analog of a commit, so chained mutations never grow an unbounded
+        plan — or, with `checkpoint_mutations=False`, a `noop`-format
+        write of the same plan, after which the store keeps the plan
+        unobserved and unmaterialized. Either way the report is read the
+        same way."""
+        obs = Observation()
+        observed = src.observe(obs, *[m.alias(k) for k, m in metrics.items()]) if metrics else src
+        plan = build(observed)
+        if self._checkpoint:
+            out = plan.localCheckpoint(eager=True)
+        else:
+            plan.write.format("noop").mode("overwrite").save()
+            out = build(src)
+        return out, (obs.get if metrics else {})
 
     # ---------------------------------------------------------------- mutation
 
@@ -171,18 +180,27 @@ class VectorStore:
         Upserting an id that was tombstoned revives the slot — the Spark
         analog of free-slot reuse (:434-439).
 
-        The merged store keeps at most one partition per core
-        (`coalesce_to_cores`): the union of the kept rows and the batch
-        would otherwise add the batch's shuffle partitions to the
-        store's on every call, and every later call on the store would
-        run one task per partition.
+        One plan writes the new store: the store, streamed through a left
+        join against the broadcast batch ids (the store side is never
+        shuffled or broadcast), tags each row the batch supersedes, and
+        the batch rows are appended. The report is observed on that plan
+        (`_materialize`), so the call runs only the batch's last-wins
+        shuffles, the broadcast of its ids and the one write. The batch
+        is not cached: the plan reads it twice, for its ids and for its
+        rows, so it must be deterministic. The merged
+        store keeps at most one partition per core
+        (`coalesce_to_cores`): the union would otherwise add the batch's
+        partitions to the store's on every call, and every later call on
+        the store would run one task per partition.
 
-        `report="dict"` (reference parity) COLLECTS the id lists to the
+        `report="dict"` (reference parity) brings the id lists to the
         driver — fine for API-sized batches, not for a 10⁹-row bulk load.
         `report="dataframe"` keeps the report relational: returns a
-        DataFrame of (_id_, action ∈ {update, insert}) and collects only
-        per-class counts (needed for the capacity check and the ANN
-        incremental-maintenance ratio).
+        DataFrame of (_id_, action ∈ {update, insert}), ships no ids to
+        the driver and drops the ANN index (the pending change-set is a
+        driver-side structure; a bulk change wants a full rebuild
+        anyway). Its checkpoint also holds the superseded rows, which the
+        report is read from, until the next mutation.
         """
         if report not in ("dict", "dataframe"):
             raise ValueError(f"unknown report mode: {report!r}")
@@ -212,101 +230,101 @@ class VectorStore:
                 batch = batch.withColumn(c, F.lit(None).cast(existing.schema[c].dataType))
         cols = existing.columns
 
-        batch = batch.cache()
-        # ONE tagged merge plan produces both the new store AND the
-        # insert/update report (it used to be separate semi+anti report
-        # joins plus the merge — three column-pruned scans of the cached
-        # store; now two: the keep-side anti-join and the batch classify
-        # join, with the report read back from the same checkpoint).
         # Classification is against ACTIVE ids: the reference pops
         # deleted ids from its index (pico_vdb.py:527-531), so
         # re-upserting a tombstoned id is an INSERT (slot revive), not
         # an update.
-        active_ids = existing.filter(~F.col(K_DELETED)).select(K_ID)
-        kept = existing.join(batch.select(K_ID), K_ID, "left_anti").select(*cols).withColumn(
-            "__action", F.lit(None).cast("string")
+        hits = batch.select(K_ID, F.lit(True).alias("__hit"))
+        superseded = (
+            F.when(F.col("__hit").isNull(), F.lit(None).cast("string"))
+            .when(~F.col(K_DELETED), F.lit("update"))
+            .otherwise(F.lit("revive"))
         )
-        tagged_batch = (
-            batch.select(*cols)
-            .join(active_ids.withColumn("__upd", F.lit(1)), K_ID, "left")
-            .withColumn(
-                "__action",
-                F.when(F.col("__upd").isNotNull(), F.lit("update")).otherwise(
-                    F.lit("insert")
-                ),
-            )
-            .drop("__upd")
-            .select(*cols, "__action")
+        tagged = (
+            existing.join(F.broadcast(hits), K_ID, "left")
+            .select(*cols, superseded.alias("__tag"))
+            .unionByName(batch.select(*cols, F.lit("batch").alias("__tag")))
         )
-        merged_tagged = coalesce_to_cores(kept.unionByName(tagged_batch))
+        kept = F.col("__tag").isNull() | (F.col("__tag") == "batch")
+
+        def merged(df: DataFrame) -> DataFrame:
+            return coalesce_to_cores(df.filter(kept).drop("__tag"))
+
         if self._capacity is not None:
             # slot-reuse semantics (pico_vdb.py:434-442): free slots are
             # reusable, so the binding constraint is the ACTIVE row
-            # count. Counted BEFORE the checkpoint so a rejected upsert
-            # never materializes (or pins) the would-be store.
-            active_after = merged_tagged.filter(~F.col(K_DELETED)).count()
+            # count. Counted BEFORE the store is written so a rejected
+            # upsert never materializes (or pins) the would-be store.
+            active_after = merged(tagged).filter(~F.col(K_DELETED)).count()
             if active_after > self._capacity:
-                batch.unpersist()
                 raise RuntimeError(
                     f"capacity exceeded: {active_after} > {self._capacity} "
                     "(fixed-capacity store, pico_vdb.py:440-442)"
                 )
-        if self._checkpoint:
-            merged_tagged = merged_tagged.localCheckpoint(eager=True)
-        report_df = merged_tagged.filter(F.col("__action").isNotNull()).select(
-            K_ID, F.col("__action").alias("action")
-        )
-        if report == "dict":
-            rows = report_df.collect()
-            updated = [r[K_ID] for r in rows if r["action"] == "update"]
-            inserted = [r[K_ID] for r in rows if r["action"] == "insert"]
-        else:
-            # relational report: never ship ids driver-side. The pending
-            # ANN change-set is a driver-side structure, so a bulk load
-            # drops the index instead (full rebuild on next use — the
-            # right maintenance mode for a bulk change anyway). With
-            # checkpointing off, pin the report so later reads don't
-            # re-run the merge against a store that has since mutated.
-            if not self._checkpoint:
-                report_df = report_df.localCheckpoint(eager=True)
-            updated = inserted = None
-        self._set(
-            merged_tagged.drop("__action"),
-            changed_ids=None if updated is None else updated + inserted,
-            pre_checkpointed=self._checkpoint,
-        )
-        batch.unpersist()  # merged is eagerly checkpointed; don't pin the batch
         if report == "dataframe":
+            out, _ = self._materialize(tagged, coalesce_to_cores)
+            report_df = (
+                out.filter(F.col("__tag").isin("update", "batch"))
+                .groupBy(K_ID)
+                .agg(F.max((F.col("__tag") == "update").cast("int")).alias("__upd"))
+                .select(
+                    K_ID,
+                    F.when(F.col("__upd") == 1, F.lit("update"))
+                    .otherwise(F.lit("insert"))
+                    .alias("action"),
+                )
+            )
+            if not self._checkpoint:
+                # pin the report so later reads don't re-run the merge
+                # against a store that has since mutated
+                report_df = report_df.localCheckpoint(eager=True)
+            self._set(out.filter(kept).drop("__tag"), changed_ids=None)
             return report_df
-        return {"update": sorted(updated), "insert": sorted(inserted)}
+        store, m = self._materialize(
+            tagged,
+            merged,
+            update=F.collect_list(F.when(F.col("__tag") == "update", F.col(K_ID))),
+            batch=F.collect_list(F.when(F.col("__tag") == "batch", F.col(K_ID))),
+        )
+        updated = sorted(m["update"])
+        inserted = sorted(set(m["batch"]) - set(updated))
+        self._set(store, changed_ids=updated + inserted)
+        return {"update": updated, "insert": inserted}
 
     @_timed("delete")
     def delete(self, ids: Iterable[str]) -> list[str]:
         """Tombstone rows by id; returns ids actually removed
-        (pico_vdb.py:514-537). Rows stay until `vacuum()`."""
+        (pico_vdb.py:514-537) — the active rows among `ids`, observed
+        on the one job that writes the new store. Rows stay until
+        `vacuum()`."""
         id_list = [str(i) for i in ids]
-        removed = [
-            r[0]
-            for r in self.active().filter(F.col(K_ID).isin(id_list)).select(K_ID).collect()
-        ]
-        self._set(
-            self._df.withColumn(
-                K_DELETED,
-                F.when(F.col(K_ID).isin(id_list), F.lit(True)).otherwise(F.col(K_DELETED)),
+        if not id_list:
+            return []
+        hit = F.col(K_ID).isin(id_list)
+        store, m = self._materialize(
+            self._df,
+            lambda df: df.withColumn(
+                K_DELETED, F.when(hit, F.lit(True)).otherwise(F.col(K_DELETED))
             ),
-            changed_ids=removed,
+            removed=F.collect_list(F.when(hit & ~F.col(K_DELETED), F.col(K_ID))),
         )
-        return sorted(removed)
+        self._set(store, changed_ids=m["removed"])
+        return sorted(m["removed"])
 
     @_timed("vacuum")
     def vacuum(self) -> int:
         """Physically drop tombstones (pico_vdb.py:831-853); returns the
-        number of rows compacted away."""
-        n = self._df.filter(F.col(K_DELETED)).count()
+        number of rows compacted away, observed on the one job that
+        writes the compacted store."""
+        store, m = self._materialize(
+            self._df,
+            lambda df: df.filter(~F.col(K_DELETED)),
+            tombstones=F.sum(F.col(K_DELETED).cast("long")),
+        )
         # the ACTIVE set is unchanged (tombstones were already pulled out
         # of the index when delete() recorded them) — keep the index
-        self._set(self._df.filter(~F.col(K_DELETED)), changed_ids=())
-        return n
+        self._set(store, changed_ids=())
+        return m["tombstones"] or 0
 
     # ------------------------------------------------------------------- index
 
@@ -324,17 +342,19 @@ class VectorStore:
         # the cluster assignment runs at most one task per core
         active = coalesce_to_cores(self.active())
         self._ann = IvfIndex.build(active, n_centroids=n_centroids, seed=seed)
-        self._ann_ntotal = self._ann.base_rows or self._ann.df.count()
+        self._ann_ntotal = self._ann.rows
         self._last_ann_rebuild_mode = "full"
         return self._ann
 
     def _ensure_ann(self):
         """Lazy index maintenance at query time (the reference rebuilds
         lazily in query/save, pico_vdb.py:658-664): with pending changes,
-        pick incremental (drop changed rows + assign against frozen
-        centroids) when changed/ntotal <= threshold, else a full seeded
-        refit — `_rebuild_faiss`'s change-ratio rule (pico_vdb.py:877-881)
-        with the same default 0.2."""
+        pick incremental (`IvfIndex.add` with the changed ids as
+        `replace`: drop their old rows, assign their active rows against
+        the frozen centroids, one Spark job) when changed/ntotal <=
+        threshold, else a full seeded refit — `_rebuild_faiss`'s
+        change-ratio rule (pico_vdb.py:877-881) with the same default
+        0.2. Returns the index, or None for an empty store."""
         if self._ann is None:
             return self.build_ann_index()
         if not self._ann_pending:
@@ -342,18 +362,12 @@ class VectorStore:
         changed = sorted(self._ann_pending)
         ratio = len(changed) / float(max(self._ann_ntotal, 1))
         if ratio <= self._ann_threshold:
-            idx = self._ann.remove(changed)
-            new_rows = coalesce_to_cores(
+            # the cluster assignment runs at most one task per core
+            changed_rows = coalesce_to_cores(
                 self.active().filter(F.col(K_ID).isin(changed)).drop(K_DELETED)
             )
-            if new_rows.first() is not None:
-                idx = idx.add(new_rows, auto_refit=False)
-            # truncate the union/filter lineage like any other mutation,
-            # on at most one partition per core (the union appends the
-            # assigned rows' partitions to the index's own)
-            idx.df = coalesce_to_cores(idx.df).localCheckpoint(eager=True)
-            self._ann = idx
-            self._ann_ntotal = idx.df.count()
+            self._ann = self._ann.add(changed_rows, replace=changed, auto_refit=False)
+            self._ann_ntotal = self._ann.rows
             self._last_ann_rebuild_mode = "incremental"
             self._ann_pending.clear()
             return self._ann
@@ -370,12 +384,20 @@ class VectorStore:
         `ann=True` routes through the IVF index (built lazily on first
         use) — but ONLY for unfiltered whole-store queries; any
         `where`/`ids` filter falls back to the exact path, exactly the
-        reference's faiss_ok rule (pico_vdb.py:667-668).
+        reference's faiss_ok rule (pico_vdb.py:667-668). An empty store
+        has no index and takes the exact path too.
         """
         from picovdb_spark.operators.similarity import batch_query
 
-        use_ann = kwargs.pop("ann", False)
+        # `is None`, not truthiness: a Spark Column where-clause raises
+        # on bool(); ANY filter routes to the exact path (pico_vdb.py:667)
+        use_ann = (
+            kwargs.pop("ann", False)
+            and kwargs.get("where") is None
+            and kwargs.get("ids") is None
+        )
         nprobe = kwargs.pop("nprobe", 8)
+        index = self._ensure_ann() if use_ann else None
         import numpy as np
 
         # the pre-collected serving form is (ids, 2-D matrix); a tuple of
@@ -406,10 +428,12 @@ class VectorStore:
                     f"queries must be a 2-D batch of vectors; got shape {arr.shape}"
                 )
             qids = [str(i) for i in range(len(arr))]
-            if len(arr) and not use_ann and kwargs.get("method", "auto") in ("auto", "gemm"):
-                # GEMM path: hand the batch straight to the kernel as the
-                # pre-collected serving form — skips building + collecting
-                # a one-shot LocalRelation per query batch
+            if len(arr) and (
+                index is not None or kwargs.get("method", "auto") in ("auto", "gemm")
+            ):
+                # the IVF and GEMM kernels take the batch as the
+                # pre-collected serving form — no one-shot LocalRelation
+                # to build and collect per query batch
                 queries = (qids, arr)
             else:
                 queries = local_df(
@@ -422,36 +446,11 @@ class VectorStore:
                         ]
                     ),
                 )
-        if (
-            use_ann
-            # `is None`, not truthiness: a Spark Column where-clause raises
-            # on bool(); ANY filter routes to the exact path (pico_vdb.py:667)
-            and kwargs.get("where") is None
-            and kwargs.get("ids") is None
-            and self.active().first() is not None  # empty store ⇒ exact path
-        ):
+        if index is not None:
             from picovdb_spark.operators.ann import ann_query
 
-            if not isinstance(queries, DataFrame):
-                # the ANN index kernel takes a DataFrame; lift a
-                # user-passed (ids, matrix) tuple into a LocalRelation
-                qids_t, qmat_t = queries
-                queries = local_df(
-                    self.spark,
-                    [
-                        (str(qids_t[i]), [float(x) for x in qmat_t[i]])
-                        for i in range(len(qids_t))
-                    ],
-                    T.StructType(
-                        [
-                            T.StructField("query_id", T.StringType()),
-                            T.StructField(K_VECTOR, T.ArrayType(T.FloatType())),
-                        ]
-                    ),
-                )
-            self._ensure_ann()
             return ann_query(
-                self._ann,
+                index,
                 queries,
                 top_k=kwargs.get("top_k", 10),
                 nprobe=nprobe,
@@ -622,13 +621,16 @@ class VectorStore:
         except BaseException:
             shutil.rmtree(staging, ignore_errors=True)
             raise
-        if idx is not None:
-            # re-point the in-memory index at the files that now live
-            # under `path` (the staging scan it was written from is gone)
+        if idx is not None and idx.path is not None:
+            # an index read from files may scan the artifact the swap
+            # just replaced: re-point it at the files now under `path`.
+            # A checkpointed index depends on no files and stays as is.
             from picovdb_spark.operators.ann import IvfIndex
 
-            self._ann = IvfIndex.read(self.spark, os.path.join(path, "ann_ivf"))
-            self._ann_ntotal = self._ann.base_rows or 0
+            self._ann = IvfIndex.read(
+                self.spark, os.path.join(path, "ann_ivf"), schema=self._df.schema
+            )
+            self._ann_ntotal = self._ann.rows
         self.storage_path = path
         return path
 
@@ -640,7 +642,10 @@ class VectorStore:
             # reference rebuilds its index instead, pico_vdb.py:265-280)
             self.dim = int(meta["embedding_dim"])
         self._additional = meta.get("additional_data", {})
-        self._df = self.spark.read.parquet(os.path.join(path, "vectors.parquet"))
+        # the saved schema is passed, so the reopen runs no schema-
+        # inference job over the Parquet footers
+        schema = T.StructType.fromJson(json.loads(meta["schema"]))
+        self._df = self.spark.read.schema(schema).parquet(os.path.join(path, "vectors.parquet"))
         self._detached = False  # lazy scan of the files under `path`
         ann_dir = os.path.join(path, "ann_ivf")
         if os.path.isdir(ann_dir):
@@ -648,8 +653,8 @@ class VectorStore:
             # reference's load-or-rebuild rule (pico_vdb.py:265-280)
             from picovdb_spark.operators.ann import IvfIndex
 
-            self._ann = IvfIndex.read(self.spark, ann_dir)
-            self._ann_ntotal = self._ann.base_rows or 0
+            self._ann = IvfIndex.read(self.spark, ann_dir, schema=schema)
+            self._ann_ntotal = self._ann.rows
 
     def flush(self) -> None:
         """No-op for parity (memmap flush, pico_vdb.py:395-401)."""

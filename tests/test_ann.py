@@ -218,6 +218,23 @@ def test_ivf_write_read_partition_pruning(spark, emb, queries, index, tmp_path):
     assert "PartitionFilters" in plan and "__cluster" in plan.split("PartitionFilters", 1)[1][:200]
 
 
+def test_ann_query_serving_form_equals_dataframe_form(queries, index):
+    """`ann_query` takes the pre-collected `(ids, matrix)` serving form,
+    as `batch_query` does, and answers it row for row like the same
+    batch passed as a DataFrame."""
+    rows = queries.collect()
+    ids = [r["query_id"] for r in rows]
+    mat = np.asarray([r[K_VECTOR] for r in rows], dtype=np.float32)
+
+    def ordered(df):
+        return sorted(map(tuple, df.collect()), key=lambda t: (t[0], t[-1]))
+
+    for meta in (False, True):
+        want = ordered(ann_query(index, queries, top_k=5, nprobe=4, include_metadata=meta))
+        got = ordered(ann_query(index, (ids, mat), top_k=5, nprobe=4, include_metadata=meta))
+        assert got == want and len(got) == 5 * len(ids)
+
+
 def test_minhash_bucket_cap(spark):
     """max_bucket_size drops boilerplate buckets: identical docs beyond
     the cap produce no candidate pairs from that bucket, while distinct

@@ -291,16 +291,22 @@ def test_build_ann_index_empty_store_noop(spark):
 
 def test_save_after_load_keeps_instance_live(spark, tmp_path):
     """ADVICE (medium): saving a freshly-LOADED store to its own path
-    replaces the parquet dir the instance's lazy scan points at; save()
-    must rebind so later actions don't hit FILE_NOT_EXIST."""
+    replaces the parquet dirs the instance's lazy scans point at — the
+    vectors' and the IVF index's; save() must rebind both so later
+    actions don't hit FILE_NOT_EXIST."""
     path = str(tmp_path / "live_store")
     st = VectorStore(spark, DIM)
     st.upsert([{K_ID: f"v{i}", K_VECTOR: basis(i)} for i in range(4)])
+    st.build_ann_index(n_centroids=2)
     st.save(path)
-    re = VectorStore(spark, DIM, storage_path=path)  # lazy scan of path
+    re = VectorStore(spark, DIM, storage_path=path)  # lazy scans of path
+    assert re._ann.path is not None  # the index reads the saved files
+    want = re.query_one(basis(1), top_k=2, ann=True, nprobe=2).collect()
     re.save()  # overwrite in place
     assert re.count() == 4  # would throw FAILED_READ_FILE before the fix
     assert re.query_one(basis(1), top_k=1).collect()[0][K_ID] == "v1"
+    assert re.query_one(basis(1), top_k=2, ann=True, nprobe=2).collect() == want
+    assert re._ann_ntotal == 4
 
 
 def test_vectors_without_meta_is_corruption(spark, tmp_path):
@@ -570,3 +576,149 @@ def test_ivf_artifact_is_one_file_per_cluster_across_saves(spark, tmp_path):
         st = VectorStore(spark, 16, storage_path=path)
         assert st.count() == 300 and st._ann_ntotal == 300
     assert max(counts) <= 48, counts
+
+
+def test_store_calls_run_within_their_job_budget(spark, tmp_path):
+    """Each mutation runs the one Spark action that writes the new store
+    and reads its report (removed ids, vacuum count, update/insert
+    lists) off that action; incremental IVF upkeep is one checkpoint
+    job; a reopen passes the saved schemas and runs no job at all."""
+    from picovdb_spark.plans import job_tasks
+
+    st, rng = _ann_store(spark)
+    path = str(tmp_path / "budget_store")
+    st.save(path)
+    st, jobs = job_tasks(spark, lambda: VectorStore(spark, 16, storage_path=path))
+    assert jobs == [], jobs
+
+    upd = [f"r{i}" for i in rng.choice(300, 10, replace=False)]
+    new = [f"n{i}" for i in range(10)]
+    items = [{K_ID: s, K_VECTOR: rng.standard_normal(16).tolist()} for s in upd + new]
+    rep, jobs = job_tasks(spark, lambda: st.upsert(items))
+    assert rep == {"update": sorted(upd), "insert": sorted(new)}
+    assert len(jobs) <= 5, jobs
+
+    gone = sorted(set(upd[:3]) | {"r299", "missing"})
+    removed, jobs = job_tasks(spark, lambda: st.delete(gone))
+    assert removed == [g for g in gone if g != "missing"]
+    assert len(jobs) == 1, jobs
+
+    q = rng.standard_normal((3, 16))
+    rows, jobs = job_tasks(spark, lambda: st.query(q, top_k=3, ann=True).collect())
+    assert st._last_ann_rebuild_mode == "incremental" and len(rows) == 9
+    assert len(jobs) <= 3, jobs
+    assert st._ann_ntotal == 310 - len(removed)
+
+    n, jobs = job_tasks(spark, st.vacuum)
+    assert n == len(removed)
+    assert len(jobs) == 1, jobs
+
+
+def _crud_sequence(spark, checkpoint: bool) -> list:
+    """Every call's return value over one sequence of mutations."""
+    out = []
+    st = VectorStore(spark, DIM, checkpoint_mutations=checkpoint)
+    out.append(st.vacuum())  # empty store: 0
+    out.append(st.delete(["a"]))  # empty store: nothing removed
+    out.append(  # duplicate id in one batch: the last row wins
+        st.upsert(
+            [
+                {K_ID: "a", K_VECTOR: basis(0), "n": 1},
+                {K_ID: "b", K_VECTOR: basis(1), "n": 2},
+                {K_ID: "a", K_VECTOR: basis(2), "n": 3},
+            ]
+        )
+    )
+    out.append(  # content-hash ids beside an update
+        st.upsert(
+            [
+                {K_VECTOR: basis(3), "n": 4},
+                {K_VECTOR: basis(4), "n": 5},
+                {K_ID: "b", K_VECTOR: basis(5), "n": 6},
+            ]
+        )
+    )
+    out.append(st.delete(["a"]))
+    out.append(st.upsert([{K_ID: "a", K_VECTOR: basis(6), "n": 7}]))  # revive: insert
+    out.append(st.delete(["b", "missing"]))
+    out.append(st.delete(["b", "missing"]))  # already deleted: nothing removed
+    out.append(st.delete([]))
+    out.append(st.vacuum())  # one tombstone
+    out.append(st.vacuum())  # clean store: 0
+    out.append(
+        sorted(
+            (r[K_ID], tuple(r[K_VECTOR]), r["n"])
+            for r in st.get_all(include_vector=True).collect()
+        )
+    )
+    out.append((st.count(), st.capacity()))
+    return out
+
+
+def test_mutation_reports_match_with_and_without_checkpoints(spark):
+    """With `checkpoint_mutations=False` the mutation's one action is a
+    `noop` write of the same plan, and the report is read off it the
+    same way: the two modes return identical results, and no call
+    blocks waiting on an observation that no action fulfils."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(1) as pool:
+        runs = [pool.submit(_crud_sequence, spark, cp).result(timeout=300) for cp in (True, False)]
+    assert runs[0] == runs[1]
+    out = runs[0]
+    hashes = sorted(out[3]["insert"])
+    assert out[:3] == [0, [], {"update": [], "insert": ["a", "b"]}]
+    assert out[3] == {"update": ["b"], "insert": hashes} and len(hashes) == 2
+    assert out[4:11] == [["a"], {"update": [], "insert": ["a"]}, ["b"], [], [], 1, 0]
+    assert sorted(i for i, _, _ in out[11]) == sorted(["a", *hashes])
+    assert ("a", tuple(basis(6)), 7) in out[11]
+    assert sorted(n for _, _, n in out[11]) == [4, 5, 7]
+    assert out[12] == (3, 3)
+
+
+def _answers(st, q) -> tuple:
+    return (
+        sorted((r[K_ID], tuple(r[K_VECTOR])) for r in st.get_all(include_vector=True).collect()),
+        st.count(),
+        st._ann_ntotal,
+        sorted(
+            (r["query_id"], r[K_ID], r[K_METRICS], r["rank"])
+            for r in st.query(q, top_k=5, ann=True).collect()
+        ),
+    )
+
+
+def test_save_keeps_a_checkpointed_index(spark, tmp_path, monkeypatch):
+    """An index that incremental upkeep left as a checkpoint depends on
+    no files: save writes it and keeps it, without re-reading the
+    artifact, and every answer is the same after the swap. A reopened
+    index, which does scan the files, is re-read after its own save."""
+    from picovdb_spark.operators.ann import IvfIndex
+
+    reads = []
+    read = IvfIndex.read.__func__
+
+    def counted_read(cls, *args, **kwargs):
+        reads.append(args)
+        return read(cls, *args, **kwargs)
+
+    monkeypatch.setattr(IvfIndex, "read", classmethod(counted_read))
+    st, rng = _ann_store(spark)
+    upd = [f"r{i}" for i in rng.choice(300, 10, replace=False)]
+    st.upsert([{K_ID: s, K_VECTOR: rng.standard_normal(16).tolist()} for s in upd])
+    q = rng.standard_normal((4, 16))
+    want = _answers(st, q)
+    assert st._last_ann_rebuild_mode == "incremental"
+    idx = st._ann
+    path = str(tmp_path / "cp_index_store")
+    for _ in range(2):  # the second save swaps out the first's files
+        st.save(path)
+        assert st._ann is idx and reads == []
+        assert _answers(st, q) == want
+
+    s2 = VectorStore(spark, 16, storage_path=path)
+    assert len(reads) == 1 and s2._ann.path is not None
+    assert _answers(s2, q) == want
+    s2.save()
+    assert len(reads) == 2
+    assert _answers(s2, q) == want
