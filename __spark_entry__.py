@@ -3237,22 +3237,20 @@ def _docs_top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ann_ivf_resident(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster-routed resident IVF serving at FULL probe width: the
     routed kernel (driver probe routing + per-cluster-segment certified
-    top-k; operators/resident.py:ResidentIvfStore)
+    top-k; operators/resident.py:ResidentStore with routing on)
     degenerates to exact top-k when every cluster is probed, so the
     whole serving path is hash-checked against the exact SQL oracle.
     The pruning regime (nprobe << n_centroids) is benchmarked as
     ref100k_ivf_resident_query_1000 and recall-banded in
     tests/test_resident.py. The result is checkpointed eagerly so the
     node-local shm blocks can be dropped before returning."""
-    from picovdb_spark.operators.resident import ResidentIvfStore
+    from picovdb_spark.operators.resident import ResidentStore
 
     store = load_embeddings_store(spark, sf_dir)
     meta = load_table(spark, sf_dir, "embeddings").select(
         F.col("vec_id").cast("string").alias(K_ID), "label"
     )
-    with ResidentIvfStore(
-        store.select(K_ID, K_VECTOR), n_centroids=16, seed=42, dtype="float64"
-    ) as rs:
+    with ResidentStore(store.select(K_ID, K_VECTOR), n_centroids=16, seed=42) as rs:
         hits = rs.query(_queries_df(spark, sf_dir), top_k=10, nprobe=16)
         # Q14 assembly: broadcast the tiny hit set against the metadata scan
         out = (

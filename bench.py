@@ -469,11 +469,11 @@ def bench_queries(spark):
     def _prepare_resident():
         # serving mode setup: pin node-local float32 shards + one warm
         # pass — one-time costs, excluded like the corpus build
-        from picovdb_spark.operators.resident import ResidentGemmStore
+        from picovdb_spark.operators.resident import ResidentStore
 
         s, q = _ref_store()
         if "resident" not in ref_state:
-            rs = ResidentGemmStore(s, normalized=True)
+            rs = ResidentStore(s)
             rs.materialize()
             _force(rs.query(q, top_k=10))
             # warm the in-process serving path too: first call pays the
@@ -489,7 +489,7 @@ def bench_queries(spark):
 
     def q_ref100k_exact_local_100():
         # 100 sequential single queries through the in-process EXACT
-        # scan (ResidentGemmStore.query_local) — the reference's own
+        # scan (ResidentStore.query_local, routing off) — the reference's own
         # "100 single queries, exact" regime (0.8 s M3 / 1.5 s i7 ⇒
         # 8-15 ms/query, BASELINE.md) served the same way: no Spark
         # job, one GEMV over node-resident blocks per query.
@@ -504,11 +504,11 @@ def bench_queries(spark):
                 rs.query_local(qmat[i], top_k=10)
 
     def _prepare_resident_int8():
-        from picovdb_spark.operators.resident import ResidentGemmStore
+        from picovdb_spark.operators.resident import ResidentStore
 
         s, q = _ref_store()
         if "resident_int8" not in ref_state:
-            rs = ResidentGemmStore(s, normalized=True, block_dtype="int8")
+            rs = ResidentStore(s, dtype="int8")
             rs.materialize()
             _force(rs.query(q, top_k=10))
             ref_state["resident_int8"] = rs
@@ -523,11 +523,11 @@ def bench_queries(spark):
     def _prepare_resident_ivf():
         # cluster-routed serving setup: fit 256 centroids, repartition by
         # cluster, pin inverted-list blocks node-local, one warm pass
-        from picovdb_spark.operators.resident import ResidentIvfStore
+        from picovdb_spark.operators.resident import ResidentStore
 
         s, q = _ref_store()
         if "resident_ivf" not in ref_state:
-            rs = ResidentIvfStore(s, n_centroids=256, seed=42)
+            rs = ResidentStore(s, n_centroids=256, seed=42)
             rs.materialize()
             _force(rs.query(q, top_k=10, nprobe=8))
             ref_state["resident_ivf"] = rs
@@ -557,11 +557,11 @@ def bench_queries(spark):
     def _prepare_resident_ivf_int8():
         # max-density serving point: int8 inverted lists (4x store per
         # node) + cluster routing + in-process reads
-        from picovdb_spark.operators.resident import ResidentIvfStore
+        from picovdb_spark.operators.resident import ResidentStore
 
         s, q = _ref_store()
         if "resident_ivf_int8" not in ref_state:
-            rs = ResidentIvfStore(s, n_centroids=256, seed=42, dtype="int8")
+            rs = ResidentStore(s, n_centroids=256, seed=42, dtype="int8")
             rs.materialize()
             # full untimed warm pass: fills the hot-segment float32 cache
             # so the timed passes measure STEADY-STATE serving (the cast

@@ -49,7 +49,7 @@ from picovdb_spark.schema import (
     load_embeddings_store,
 )
 from picovdb_spark.compat import PicoVectorDB
-from picovdb_spark.operators.resident import ResidentGemmStore, ResidentIvfStore
+from picovdb_spark.operators.resident import ResidentStore
 from picovdb_spark.operators.similarity import batch_query
 from picovdb_spark.session import get_spark
 from picovdb_spark.sources import read_picovdb_store, write_picovdb_store
@@ -62,8 +62,7 @@ __all__ = [
     "K_VECTOR",
     "K_METRICS",
     "PicoVectorDB",
-    "ResidentGemmStore",
-    "ResidentIvfStore",
+    "ResidentStore",
     "VectorStore",
     "batch_query",
     "get_spark",

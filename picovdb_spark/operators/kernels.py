@@ -1,7 +1,7 @@
 """The certified top-k kernel behind every exact cosine scorer.
 
 `batch_query`'s GEMM path, `knn_join_blocked`'s cell kernel,
-`ann_query`'s probed-list scoring and both resident stores answer a
+`ann_query`'s probed-list scoring and the resident store answer a
 top-k the same way (filter-and-refine, as in *Incremental Based
 Framework for Efficient Top-K Similarity Search*, EDBT 2020): a float32
 GEMM prescans the rows, a derived bound on |prescan − exact| keeps every

@@ -48,13 +48,6 @@ from picovdb_spark.operators.ann import stack_vectors
 from picovdb_spark.operators.kernels import _exact_scores, _unit_rows
 from picovdb_spark.schema import K_ID, K_METRICS, K_VECTOR
 
-# Diagnostic toggle for the encode kernel's float32 prescan (below).
-# False forces the pure-float64 per-subspace argmin; the parity test
-# (tests/test_pq.py::test_pq_encode_prescan_matches_f64) monkeypatches
-# it to pin both paths code-identical. Never set in production.
-_PRESCAN_F32 = True
-
-
 def _subspace_codes_f32(
     v: np.ndarray,
     v32: np.ndarray,
@@ -64,7 +57,8 @@ def _subspace_codes_f32(
     margins: list[np.float32],
 ) -> np.ndarray:
     """Per-subspace argmin codes via a float32 prescan, equal to the
-    pure-float64 form (`_subspace_codes_f64`) row for row.
+    pure-float64 argmin over the full codebook row for row (its twin is
+    `tests/test_pq.py::subspace_codes_f64`).
 
     Why: the per-subspace distance GEMMs and their (n, k) elementwise
     expansion were the encode kernel's wall, and they ran in float64
@@ -108,23 +102,6 @@ def _subspace_codes_f32(
                 + (cent * cent).sum(axis=1)[None, :]
             )
             codes[amb, s] = np.argmin(d2, axis=1)
-    return codes
-
-
-def _subspace_codes_f64(v: np.ndarray, books: np.ndarray) -> np.ndarray:
-    """The reference pure-float64 per-subspace argmin (the pre-r12 form;
-    kept as the prescan's diagnostic/parity twin)."""
-    m, _, dsub = books.shape
-    codes = np.empty((len(v), m), dtype=np.int32)
-    for s in range(m):
-        xs = v[:, s * dsub : (s + 1) * dsub]
-        cent = books[s]
-        d2 = (
-            (xs * xs).sum(axis=1)[:, None]
-            - 2.0 * (xs @ cent.T)
-            + (cent * cent).sum(axis=1)[None, :]
-        )
-        codes[:, s] = np.argmin(d2, axis=1)
     return codes
 
 
@@ -224,30 +201,22 @@ def pq_encode(
         + [T.StructField("codes", T.ArrayType(T.IntegerType()))]
     )
 
-    prescan = _PRESCAN_F32  # snapshot at plan time: the closure ships the value
-
     def kernel(batches: Iterator) -> Iterator:
         import pandas as pd
 
         books, cent_mat = bc.value
         m, _, dsub = books.shape
-        if prescan:
-            # once per task: f32 codebook views for the prescan (the ×2
-            # folded into the matrix is an exact power-of-two scale)
-            books32 = books.astype(np.float32)
-            neg2bT = [np.ascontiguousarray((-2.0 * books32[s]).T) for s in range(m)]
-            cnorm2 = [(books32[s] * books32[s]).sum(axis=1) for s in range(m)]
-            margins = [np.float32(8.0 * (dsub + 8) * 2.0**-24)] * m
+        # once per task: f32 codebook views for the prescan (the ×2
+        # folded into the matrix is an exact power-of-two scale)
+        books32 = books.astype(np.float32)
+        neg2bT = [np.ascontiguousarray((-2.0 * books32[s]).T) for s in range(m)]
+        cnorm2 = [(books32[s] * books32[s]).sum(axis=1) for s in range(m)]
+        margins = [np.float32(8.0 * (dsub + 8) * 2.0**-24)] * m
         for pdf in batches:
             if pdf.empty:
                 continue
             v = _unit_rows(stack_vectors(pdf[vector_col]))
-            if prescan:
-                codes = _subspace_codes_f32(
-                    v, v.astype(np.float32), books, neg2bT, cnorm2, margins
-                )
-            else:
-                codes = _subspace_codes_f64(v, books)
+            codes = _subspace_codes_f32(v, v.astype(np.float32), books, neg2bT, cnorm2, margins)
             out = {id_col: pdf[id_col]}
             for c in extra:
                 out[c] = pdf[c]

@@ -3,7 +3,7 @@ certified by `prescan_error_bound`, float64 rescoring of the survivors,
 and the metadata `batch_query`'s scoring task emits with each row.
 
 Every exact scorer built on it — `batch_query`, `knn_join_blocked`,
-`ann_query` at full probe and both resident stores' `query` and
+`ann_query` at full probe and the resident store's `query` and
 `query_local` — must return exactly the rows and scores of a
 brute force that rescores EVERY store row with the same float64 routine
 (`_exact_cosines`), on inputs built to sit on the
@@ -206,7 +206,7 @@ def test_nan_rows_answer_like_sql_in_every_scorer(spark):
     full-matrix selection rules returned no rows at all. Every scorer
     now gives `method="sql"`'s answer: the NaN rows first, by id."""
     from picovdb_spark.operators.ann import ann_query
-    from picovdb_spark.operators.resident import ResidentGemmStore, ResidentIvfStore
+    from picovdb_spark.operators.resident import ResidentStore
 
     clean = [("a", [1.0, 0.0]), ("b", [0.9, 0.1]), ("c", [0.0, 1.0])]
     nan = [(f"n{i}", [float("nan"), 1.0]) for i in range(3)]
@@ -223,9 +223,9 @@ def test_nan_rows_answer_like_sql_in_every_scorer(spark):
     index = full_probe_index(spark.createDataFrame(clean, schema), 2, 42)
     index = index.add(spark.createDataFrame(nan, schema), auto_refit=False)
     got["ann"] = rows_of(ann_query(index, qdf, top_k=2, nprobe=2))
-    with ResidentGemmStore(store) as rs:
+    with ResidentStore(store) as rs:
         got["resident"], got["resident_local"] = resident_rows(rs, qdf, qids, qmat, 2)
-    with ResidentIvfStore(store, centroids=np.eye(2)) as rs:
+    with ResidentStore(store, centroids=np.eye(2)) as rs:
         got["ivf"], got["ivf_local"] = resident_rows(rs, qdf, qids, qmat, 2, nprobe=2)
     assert got == {name: want for name in got}
 
@@ -251,11 +251,12 @@ def test_every_exact_scorer_equals_brute_force(
     blocks, max_batch,
 ):
     """`knn_join_blocked` (with and without `exclude_self`), `ann_query`
-    at full probe and both resident stores' `query` and `query_local`
+    at full probe and the resident store's `query` and `query_local`,
+    with routing off and at full probe,
     on the adversarial stores: exactly the brute force's rows and
     scores, with no tolerance."""
     from picovdb_spark.operators.ann import ann_query
-    from picovdb_spark.operators.resident import ResidentGemmStore, ResidentIvfStore
+    from picovdb_spark.operators.resident import ResidentStore
 
     q0, vecs = adversarial_store(seed, n, d, n_dup, n_ulp, n_edge, n_zero, n_tiny)
     if double:
@@ -279,9 +280,9 @@ def test_every_exact_scorer_equals_brute_force(
         assert rows_of(ann_query(index, qdf, top_k=top_k, nprobe=n_cent)) == want
     finally:
         spark.conf.set(MAX_BATCH, old)
-    with ResidentGemmStore(store) as rs:
+    with ResidentStore(store) as rs:
         assert resident_rows(rs, qdf, qids, qmat, top_k) == (want, want)
-    with ResidentIvfStore(store, n_centroids=n_cent, seed=seed % 1000) as rs:
+    with ResidentStore(store, n_centroids=n_cent, seed=seed % 1000) as rs:
         assert resident_rows(rs, qdf, qids, qmat, top_k, nprobe=n_cent) == (want, want)
 
 

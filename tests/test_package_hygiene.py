@@ -38,6 +38,24 @@ def test_no_module_level_force_flags():
     assert not offenders, offenders
 
 
+def test_no_module_level_boolean_toggles():
+    """A module-level `NAME = True` / `False` is a switch between two
+    code paths whatever its name; production modules keep one path, and
+    a test compares against its reference twin instead of flipping a
+    flag."""
+    modules = sorted(PACKAGE.rglob("*.py"))
+    assert modules
+    offenders = [
+        f"{path.relative_to(PACKAGE.parent)}:{node.lineno}"
+        for path in modules
+        for node in ast.parse(path.read_text()).body
+        if isinstance(node, (ast.Assign, ast.AnnAssign))
+        and isinstance(node.value, ast.Constant)
+        and isinstance(node.value.value, bool)
+    ]
+    assert not offenders, offenders
+
+
 def test_no_timing_parameters_in_operator_signatures():
     """Operators are timed from outside, through Spark's event log; a
     timing parameter switches an operator to a second plan that exists

@@ -138,12 +138,29 @@ def test_oversized_adc_tables_fail_fast(spark, emb, queries, index, monkeypatch)
         index.query(queries, top_k=3)
 
 
+def subspace_codes_f64(v: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """The pure-float64 per-subspace argmin over the full codebook: the
+    reference twin of `pq._subspace_codes_f32`'s float32 prescan."""
+    m, _, dsub = books.shape
+    codes = np.empty((len(v), m), dtype=np.int32)
+    for s in range(m):
+        xs = v[:, s * dsub : (s + 1) * dsub]
+        cent = books[s]
+        d2 = (
+            (xs * xs).sum(axis=1)[:, None]
+            - 2.0 * (xs @ cent.T)
+            + (cent * cent).sum(axis=1)[None, :]
+        )
+        codes[:, s] = np.argmin(d2, axis=1)
+    return codes
+
+
 def test_pq_encode_prescan_matches_f64(spark, emb):
-    """The r12 float32-prescan encode path must produce codes identical
-    to the pure-float64 argmin — on the real store AND on adversarial
+    """`pq_encode`'s float32-prescan codes must equal the pure-float64
+    argmin of the same unit rows — on the real store AND on adversarial
     tie data (duplicate centroids, centroids a last-f32-bit apart, zero
     vectors). The margin math is in _subspace_codes_f32's docstring."""
-    from picovdb_spark.operators import pq as pq_mod
+    from picovdb_spark.operators.kernels import _unit_rows
 
     books = fit_pq(emb, m=8, k=16, sample_size=500, seed=7)
     # adversarial codebook: duplicate centroid (exact tie -> first-index
@@ -159,13 +176,9 @@ def test_pq_encode_prescan_matches_f64(spark, emb):
         schema=f"{K_ID} string, {K_VECTOR} array<double>",
     )
     cases = [(books, rows), (adv, rows), (adv, zero)]
-    orig = pq_mod._PRESCAN_F32
-    try:
-        for bk, df in cases:
-            pq_mod._PRESCAN_F32 = True
-            fast = {r[K_ID]: r["codes"] for r in pq_encode(df, bk).collect()}
-            pq_mod._PRESCAN_F32 = False
-            slow = {r[K_ID]: r["codes"] for r in pq_encode(df, bk).collect()}
-            assert fast == slow
-    finally:
-        pq_mod._PRESCAN_F32 = orig
+    for bk, df in cases:
+        got = {r[K_ID]: r["codes"] for r in pq_encode(df, bk).collect()}
+        src = df.select(K_ID, K_VECTOR).collect()
+        unit = _unit_rows(np.array([r[K_VECTOR] for r in src], dtype=np.float64))
+        want = {r[K_ID]: c.tolist() for r, c in zip(src, subspace_codes_f64(unit, bk))}
+        assert got == want

@@ -5,10 +5,11 @@ at ~1000 q/s).
 
 Strategy: float blocks run the certified top-k kernel, so `query` and
 `query_local` must equal the float64 brute force of
-tests/test_gemm_kernel.py exactly (rows, scores and ranks); int8 blocks
-are approximate and tolerance-banded. Plus lifecycle (close drops
-blocks; query-after-close and query-before-materialize fail loudly,
-never silently rescan).
+tests/test_gemm_kernel.py exactly (rows, scores and ranks), with routing
+off and at full probe; int8 blocks are approximate and tolerance-banded.
+Plus lifecycle (close drops blocks and query broadcasts; a lost block,
+query-after-close and query-before-materialize fail loudly, never
+silently rescan) and the task budget of one query.
 """
 
 import os
@@ -18,7 +19,7 @@ import pytest
 from pyspark.sql import functions as F
 from test_gemm_kernel import brute_force, local_rows, rows_of
 
-from picovdb_spark.operators.resident import ResidentGemmStore
+from picovdb_spark.operators.resident import ResidentStore
 from picovdb_spark.operators.similarity import batch_query
 from picovdb_spark.schema import K_ID, K_METRICS, load_embeddings_store, load_table
 
@@ -51,31 +52,34 @@ def exact(store, queries):
 
 
 def test_resident_matches_standard_float32_path(store, queries, exact):
-    rs = ResidentGemmStore(store.select(K_ID, "_vector_"))
-    try:
-        rows = rs.materialize()
-        assert rows == store.count()
-        assert rows_of(rs.query(queries, top_k=10)) == exact[10]
-        b = batch_query(store, queries, top_k=10, method="gemm")
-        assert rows_of(b) == exact[10]
-    finally:
-        rs.close()
+    """Routing off, and routing on at full probe: `query` returns
+    exactly the brute force, as `batch_query` does."""
+    for routing in ({}, {"n_centroids": 16}):
+        rs = ResidentStore(store.select(K_ID, "_vector_"), **routing)
+        try:
+            rows = rs.materialize()
+            assert rows == store.count()
+            assert rows_of(rs.query(queries, top_k=10, nprobe=16)) == exact[10], routing
+        finally:
+            rs.close()
+    b = batch_query(store, queries, top_k=10, method="gemm")
+    assert rows_of(b) == exact[10]
 
 
 def test_resident_better_than_threshold(store, queries):
-    with ResidentGemmStore(store.select(K_ID, "_vector_")) as rs:
+    with ResidentStore(store.select(K_ID, "_vector_")) as rs:
         res = rs.query(queries, top_k=10, better_than=0.5).collect()
         assert res and all(r[K_METRICS] >= 0.5 for r in res)
 
 
 def test_resident_query_before_materialize_raises(store, queries):
-    rs = ResidentGemmStore(store.select(K_ID, "_vector_"))
+    rs = ResidentStore(store.select(K_ID, "_vector_"))
     with pytest.raises(RuntimeError, match="not materialized"):
         rs.query(queries, top_k=5)
 
 
 def test_resident_close_removes_blocks_and_fails_loudly(store, queries):
-    rs = ResidentGemmStore(store.select(K_ID, "_vector_"))
+    rs = ResidentStore(store.select(K_ID, "_vector_"))
     rs.materialize()
     assert os.path.isdir(rs.dir)
     rs.close()
@@ -89,7 +93,7 @@ def test_resident_close_removes_blocks_and_fails_loudly(store, queries):
 
 
 def test_resident_empty_queries(store, queries):
-    with ResidentGemmStore(store.select(K_ID, "_vector_")) as rs:
+    with ResidentStore(store.select(K_ID, "_vector_")) as rs:
         out = rs.query(queries.filter(F.col("query_id") == "no-such"), top_k=5)
         assert out.count() == 0
 
@@ -101,14 +105,9 @@ def test_resident_ivf_full_probe_equals_exact(store, queries, exact):
     """nprobe >= n_centroids routes every query everywhere: the routed
     kernel scores per-cluster segments with the certified top-k, so it
     returns exactly the float64 brute force — rows, scores and ranks —
-    in both float dtypes, whatever GEMM shapes the segments make."""
-    from picovdb_spark.operators.resident import ResidentIvfStore
-
-    for dtype in ("float32", "float64"):
-        with ResidentIvfStore(
-            store.select(K_ID, "_vector_"), n_centroids=16, seed=42, dtype=dtype
-        ) as rs:
-            assert rows_of(rs.query(queries, top_k=10, nprobe=16)) == exact[10], dtype
+    whatever GEMM shapes the segments make."""
+    with ResidentStore(store.select(K_ID, "_vector_"), n_centroids=16, seed=42) as rs:
+        assert rows_of(rs.query(queries, top_k=10, nprobe=16)) == exact[10]
 
 
 def test_resident_ivf_partial_probe_recall_band(store, queries):
@@ -116,9 +115,7 @@ def test_resident_ivf_partial_probe_recall_band(store, queries):
     keep recall@10 >= 0.6 vs exact on this corpus — the same band as
     test_ann.py::test_ivf_recall_band (mirrors the reference's
     FAISS-vs-numpy recall assertions, tests/test_task14)."""
-    from picovdb_spark.operators.resident import ResidentIvfStore
-
-    with ResidentIvfStore(store.select(K_ID, "_vector_"), n_centroids=16, seed=42) as rs:
+    with ResidentStore(store.select(K_ID, "_vector_"), n_centroids=16, seed=42) as rs:
         ann = rs.query(queries, top_k=10, nprobe=4).collect()
     exact = batch_query(
         store, queries, top_k=10, method="gemm"
@@ -141,10 +138,8 @@ def test_resident_ivf_query_local_matches_distributed(store, queries, exact):
     full probe AND partial probe — since both read the same blocks with
     the same certified kernel; at full probe both equal the brute force.
     Zero-vector maps to e₀ like everywhere."""
-    from picovdb_spark.operators.resident import ResidentIvfStore
-
     qrows = queries.collect()
-    with ResidentIvfStore(store.select(K_ID, "_vector_"), n_centroids=16, seed=42) as rs:
+    with ResidentStore(store.select(K_ID, "_vector_"), n_centroids=16, seed=42) as rs:
         for npb in (16, 4):
             dist = rows_of(rs.query(queries, top_k=10, nprobe=npb))
             local = sorted(
@@ -166,9 +161,7 @@ def test_resident_ivf_query_local_matches_distributed(store, queries, exact):
 
 
 def test_resident_ivf_lifecycle(store, queries):
-    from picovdb_spark.operators.resident import ResidentIvfStore
-
-    rs = ResidentIvfStore(store.select(K_ID, "_vector_"), n_centroids=8)
+    rs = ResidentStore(store.select(K_ID, "_vector_"), n_centroids=8)
     with pytest.raises(RuntimeError, match="not materialized"):
         rs.query(queries)
     rs.materialize()
@@ -186,7 +179,7 @@ def test_resident_int8_accuracy_and_footprint(store, queries):
     exact = batch_query(
         store, queries, top_k=10, method="gemm"
     ).select("query_id", K_ID, K_METRICS).collect()
-    rs = ResidentGemmStore(store.select(K_ID, "_vector_"), block_dtype="int8")
+    rs = ResidentStore(store.select(K_ID, "_vector_"), dtype="int8")
     try:
         rs.materialize()
         got = rs.query(queries, top_k=10).collect()
@@ -220,8 +213,6 @@ def test_resident_ivf_int8_recall_and_local_parity(store, queries):
     result within the float32-ulp tolerance."""
     import numpy as np
 
-    from picovdb_spark.operators.resident import ResidentIvfStore
-
     exact = batch_query(
         store, queries, top_k=10, method="gemm"
     ).select("query_id", K_ID).collect()
@@ -229,7 +220,7 @@ def test_resident_ivf_int8_recall_and_local_parity(store, queries):
     for r in exact:
         want.setdefault(r["query_id"], set()).add(r[K_ID])
 
-    with ResidentIvfStore(
+    with ResidentStore(
         store.select(K_ID, "_vector_"), n_centroids=16, seed=42, dtype="int8"
     ) as rs:
         got_rows = rs.query(queries, top_k=10, nprobe=16).collect()
@@ -260,8 +251,10 @@ def test_resident_ivf_int8_recall_and_local_parity(store, queries):
 
 
 def test_resident_bad_dtype_rejected(store):
-    with pytest.raises(ValueError, match="block_dtype"):
-        ResidentGemmStore(store.select(K_ID, "_vector_"), block_dtype="int4")
+    with pytest.raises(ValueError, match="dtype"):
+        ResidentStore(store.select(K_ID, "_vector_"), dtype="int4")
+    with pytest.raises(ValueError, match="dtype"):
+        ResidentStore(store.select(K_ID, "_vector_"), dtype="float64")
 
 
 def test_resident_ivf_int8_partial_probe_routes_on_float_centroids(store, queries):
@@ -272,9 +265,7 @@ def test_resident_ivf_int8_partial_probe_routes_on_float_centroids(store, querie
     same neighborhoods as the distributed int8 query (small float
     reorderings between GEMV and GEMM routing allow a 1-2 id fringe;
     the broken cast overlapped 0-2 of 10)."""
-    from picovdb_spark.operators.resident import ResidentIvfStore
-
-    with ResidentIvfStore(
+    with ResidentStore(
         store.select(K_ID, "_vector_"), n_centroids=16, seed=42, dtype="int8"
     ) as rs:
         dist_rows = rs.query(queries, top_k=10, nprobe=4).collect()
@@ -291,9 +282,7 @@ def test_resident_ivf_query_local_after_close_raises(store, queries):
     """close() must drop the query_local mmap cache: unlinked files stay
     readable through live mmaps, so a stale cache would keep serving a
     closed store's data silently."""
-    from picovdb_spark.operators.resident import ResidentIvfStore
-
-    rs = ResidentIvfStore(store.select(K_ID, "_vector_"), n_centroids=8, seed=1)
+    rs = ResidentStore(store.select(K_ID, "_vector_"), n_centroids=8, seed=1)
     rs.materialize()
     qr = queries.collect()[0]
     assert rs.query_local(qr["_vector_"], top_k=5, nprobe=8)  # populate cache
@@ -307,11 +296,9 @@ def test_resident_ivf_int8_hot_segment_cache_identical(store, queries):
     cached and cache-disabled query_local agree exactly (the cast and
     the scale-after-dot order are identical; only WHEN the cast happens
     differs)."""
-    from picovdb_spark.operators.resident import ResidentIvfStore
-
-    with ResidentIvfStore(
+    with ResidentStore(
         store.select(K_ID, "_vector_"), n_centroids=16, seed=3, dtype="int8"
-    ) as cached, ResidentIvfStore(
+    ) as cached, ResidentStore(
         cached.store,
         n_centroids=16,
         seed=3,
@@ -343,7 +330,7 @@ def test_resident_fallback_serves_exact_when_block_missing(store, queries):
             batch_query(base, queries, top_k=5, method="gemm").collect(),
         )
     )
-    rs = ResidentGemmStore(base, on_missing="fallback")
+    rs = ResidentStore(base, on_missing="fallback")
     try:
         rs.materialize()
         victim = sorted(glob.glob(os.path.join(rs.dir, "mat_*.npy")))[0]
@@ -369,7 +356,6 @@ def test_resident_ivf_fallback_serves_exact_when_block_missing(store, queries):
     import os
     import warnings
 
-    from picovdb_spark.operators.resident import ResidentIvfStore
     from picovdb_spark.operators.similarity import batch_query
 
     base = store.select(K_ID, "_vector_")
@@ -379,7 +365,7 @@ def test_resident_ivf_fallback_serves_exact_when_block_missing(store, queries):
             batch_query(base, queries, top_k=5, method="gemm").collect(),
         )
     )
-    rs = ResidentIvfStore(base, n_centroids=16, seed=42, on_missing="fallback")
+    rs = ResidentStore(base, n_centroids=16, seed=42, on_missing="fallback")
     try:
         rs.materialize()
         victim = sorted(glob.glob(os.path.join(rs.dir, "mat_*.npy")))[0]
@@ -395,7 +381,7 @@ def test_resident_ivf_fallback_serves_exact_when_block_missing(store, queries):
 
 def test_resident_on_missing_validation(store):
     with pytest.raises(ValueError, match="on_missing"):
-        ResidentGemmStore(store.select(K_ID, "_vector_"), on_missing="ignore")
+        ResidentStore(store.select(K_ID, "_vector_"), on_missing="ignore")
 
 
 def test_resident_fallback_honors_query_vector_col_and_partial_loss(store, queries):
@@ -412,7 +398,7 @@ def test_resident_fallback_honors_query_vector_col_and_partial_loss(store, queri
 
     base = store.select(K_ID, "_vector_")
     q2 = queries.withColumnRenamed("_vector_", "qvec")
-    rs = ResidentGemmStore(base, on_missing="fallback")
+    rs = ResidentStore(base, on_missing="fallback")
     try:
         rs.materialize()
         assert rs._probe_ok is False  # re-armed by materialize
@@ -437,16 +423,19 @@ def test_resident_fallback_honors_query_vector_col_and_partial_loss(store, queri
 def test_resident_gemm_query_local_matches_distributed(store, queries, exact):
     """In-process exact serving == the distributed resident query ==
     the float64 brute force, for every query: rows, scores and ranks,
-    with no tolerance."""
+    with no tolerance — routing off, and routing on at full probe."""
     base = store.select(K_ID, "_vector_")
-    with ResidentGemmStore(base) as rs:
-        dist = rows_of(rs.query(queries, top_k=5))
-        local = sorted(
-            r
-            for qr in queries.collect()
-            for r in local_rows(qr["query_id"], rs.query_local(qr["_vector_"], top_k=5))
-        )
-    assert dist == local == exact[5]
+    for routing in ({}, {"n_centroids": 16}):
+        with ResidentStore(base, **routing) as rs:
+            dist = rows_of(rs.query(queries, top_k=5, nprobe=16))
+            local = sorted(
+                r
+                for qr in queries.collect()
+                for r in local_rows(
+                    qr["query_id"], rs.query_local(qr["_vector_"], top_k=5, nprobe=16)
+                )
+            )
+        assert dist == local == exact[5], routing
 
 
 def test_resident_gemm_query_local_int8_and_lifecycle(store, queries):
@@ -454,7 +443,7 @@ def test_resident_gemm_query_local_int8_and_lifecycle(store, queries):
 
     base = store.select(K_ID, "_vector_")
     qrow = queries.first()
-    rs = ResidentGemmStore(base, block_dtype="int8")
+    rs = ResidentStore(base, dtype="int8")
     with _pytest.raises(RuntimeError, match="materialize"):
         rs.query_local(qrow["_vector_"])
     rs.materialize()
@@ -474,39 +463,37 @@ def test_resident_rematerialize_refreshes_local_cache(store, queries):
     would silently serve the previous materialization."""
     base = store.select(K_ID, "_vector_")
     qrow = queries.first()
-    rs = ResidentGemmStore(base)
+    rs = ResidentStore(base)
     try:
         rs.materialize()
         before = rs.query_local(qrow["_vector_"], top_k=3)
-        old_mats, _ = rs._local_cache
+        old_blocks = rs._local_cache[0]
         rs.materialize()
         assert rs._local_cache is None  # cache dropped until next load
         after = rs.query_local(qrow["_vector_"], top_k=3)
         assert after == before  # same data -> same answers, fresh mmaps
-        assert rs._local_cache[0][0] is not old_mats[0]
+        assert rs._local_cache[0][0] is not old_blocks[0]
     finally:
         rs.close()
 
 
 def test_resident_fallback_auto_rearms_after_healthy_probe(store, queries):
-    """Round-6 verdict item: a block lost AFTER a healthy cached probe
-    must not fail-fast until a manual invalidate_probe() — query()
+    """A block lost AFTER a healthy cached probe must not fail-fast
+    until a manual invalidate_probe() — query()
     executes eagerly on the cached-probe path, catches the kernel's
     missing-block error, re-arms the probe, and retries ONCE via the
-    degraded exact path. Both store kinds, plus a sidecar-only loss
+    degraded exact path. Routing off and on, plus a sidecar-only loss
     (ids file), which must take the same path as a lost mat block."""
     import glob
     import os
     import warnings
 
-    from picovdb_spark.operators.resident import ResidentIvfStore
-
     base = store.select(K_ID, "_vector_")
     for make, kill in (
-        (lambda: ResidentGemmStore(base, on_missing="fallback"), "mat"),
-        (lambda: ResidentGemmStore(base, on_missing="fallback"), "ids"),
+        (lambda: ResidentStore(base, on_missing="fallback"), "mat"),
+        (lambda: ResidentStore(base, on_missing="fallback"), "ids"),
         (
-            lambda: ResidentIvfStore(
+            lambda: ResidentStore(
                 base, n_centroids=16, seed=42, on_missing="fallback"
             ),
             "mat",
@@ -515,12 +502,12 @@ def test_resident_fallback_auto_rearms_after_healthy_probe(store, queries):
         rs = make()
         try:
             rs.materialize()
-            kw = {"nprobe": 16} if isinstance(rs, ResidentIvfStore) else {}
+            kw = {"nprobe": 16} if rs.routed else {}
             want = sorted(map(tuple, rs.query(queries, top_k=3, **kw).collect()))
             assert rs._probe_ok is True  # healthy probe cached
             victim = sorted(glob.glob(os.path.join(rs.dir, f"{kill}_*.npy")))[0]
             os.remove(victim)
-            # NO invalidate_probe() here — the old behavior fail-fasted
+            # no invalidate_probe() here: the query re-arms by itself
             with warnings.catch_warnings(record=True) as caught:
                 warnings.simplefilter("always")
                 got = sorted(map(tuple, rs.query(queries, top_k=3, **kw).collect()))
@@ -530,3 +517,72 @@ def test_resident_fallback_auto_rearms_after_healthy_probe(store, queries):
             assert rs._probe_ok is False  # loss re-armed the probe
         finally:
             rs.close()
+
+
+@pytest.mark.parametrize("lost", ["mat", "norm2"])
+def test_resident_fail_fast_names_the_lost_block(store, queries, lost):
+    """Default `on_missing="fail"`: a block file deleted after
+    materialize makes `query` fail with the missing-block marker and the
+    file's name, with routing off and on, and `query_local` fail as not
+    visible — never a silent answer without those rows."""
+    import glob
+
+    for routing in ({}, {"n_centroids": 16, "seed": 42}):
+        with ResidentStore(store.select(K_ID, "_vector_"), **routing) as rs:
+            victim = sorted(glob.glob(os.path.join(rs.dir, f"{lost}_*.npy")))[0]
+            os.remove(victim)
+            with pytest.raises(Exception) as err:
+                rs.query(queries, top_k=5, nprobe=16).collect()
+            msg = str(err.value)
+            assert "[resident-block-missing]" in msg and os.path.basename(victim) in msg, routing
+            with pytest.raises(RuntimeError, match="not visible"):
+                rs.query_local(queries.first()["_vector_"], top_k=5, nprobe=16)
+
+
+def test_resident_close_destroys_query_broadcasts(spark, store, queries):
+    """Each `query` broadcasts its query matrix, and the store owns
+    those broadcasts: after `close()` no pickle file of them is left in
+    the driver's broadcast temp dir."""
+    tmp = spark.sparkContext._temp_dir
+    for routing in ({}, {"n_centroids": 8}):
+        rs = ResidentStore(store.select(K_ID, "_vector_"), **routing)
+        rs.materialize()
+        before = set(os.listdir(tmp))
+        rs.query(queries, top_k=3).collect()
+        rs.query(queries, top_k=3, better_than=0.5).collect()
+        assert set(os.listdir(tmp)) - before, "a query leaves a broadcast file"
+        rs.close()
+        assert set(os.listdir(tmp)) - before == set(), routing
+
+
+def test_resident_query_runs_one_task_per_core(spark):
+    """A store cached on more partitions than cores: every stage of one
+    `query` — the scoring scan and the top-k merge — runs at most
+    `defaultParallelism` tasks, with routing off and on, and the answer
+    stays the brute force."""
+    from picovdb_spark.plans import job_tasks
+
+    cores = spark.sparkContext.defaultParallelism
+    rng = np.random.default_rng(5)
+    vecs = rng.standard_normal((240, 8)).astype(np.float32)
+    ids = [f"s{i:03d}" for i in range(len(vecs))]
+    base = spark.createDataFrame(
+        [(i, v.tolist()) for i, v in zip(ids, vecs)], f"{K_ID} string, _vector_ array<float>"
+    ).repartition(3 * cores).cache()
+    assert base.count() == len(vecs) and base.rdd.getNumPartitions() == 3 * cores
+    qmat = rng.standard_normal((4, 8))
+    qids = [f"q{i}" for i in range(len(qmat))]
+    qdf = spark.createDataFrame(
+        [(q, v.tolist()) for q, v in zip(qids, qmat)], "query_id string, _vector_ array<double>"
+    )
+    try:
+        for routing in ({}, {"n_centroids": 4}):
+            with ResidentStore(base, **routing) as rs:
+                rows, jobs = job_tasks(spark, rs.query(qdf, top_k=3, nprobe=4).collect)
+                assert jobs and max(t for stages in jobs for t in stages) <= cores, (routing, jobs)
+                got = sorted(
+                    (r["query_id"], r[K_ID], repr(r[K_METRICS]), r["rank"]) for r in rows
+                )
+                assert got == brute_force(qids, qmat, ids, vecs, 3), routing
+    finally:
+        base.unpersist()
